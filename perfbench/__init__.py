@@ -1,0 +1,1 @@
+"""Lake benchmark: seeded workloads, output checks and a traced per-layer run."""
