@@ -6,15 +6,18 @@ from __future__ import annotations
 
 import statistics
 
-#: A run measures 10-30 ops, so only the median has the ten samples
-#: beyond it that a latency percentile needs; throughput is the mean view.
+#: Op cost is CPU time (driver + JVM), not wall time: on a shared VM the
+#: wall time of the same op drifted by a quarter between runs. A run
+#: measures 10-20 ops, so only the median has the ten samples beyond it
+#: that a percentile needs. Throughput is ops per CPU-second of the
+#: median whole cycle of the op mix.
 #: Memory is the driver's resident set plus the JVM heap live after a
 #: full GC: the JVM's own resident set depends on when its heap last grew
 #: and varied by up to a third between runs.
 END_TO_END = {
     "setup_s": "s",
-    "op_p50_s": "s",
-    "ops_per_s": "1/s",
+    "op_cpu_p50_s": "s",
+    "ops_per_cpu_s": "1/s",
     "silver_bytes_per_input_byte": "ratio",
     "mem_mb": "MB",
 }
@@ -61,6 +64,21 @@ PER_LAYER = {
 
 def p50(xs) -> float:
     return float(statistics.median(xs))
+
+
+def mix_p50(kinds: list[str], xs: list[float], period: int) -> float:
+    """Each op kind's median, averaged over one cycle of the op mix: the
+    median of a mix of ops that cost 0.3-1.5 s each jumps between kinds
+    from run to run. With one kind it is the plain median."""
+    by_kind: dict[str, list[float]] = {}
+    for k, x in zip(kinds, xs):
+        by_kind.setdefault(k, []).append(x)
+    return sum(p50(by_kind[k]) for k in kinds[:period]) / period
+
+
+def cycles(lat: list[float], period: int) -> list[float]:
+    """Time of each whole cycle of ``period`` consecutive ops."""
+    return [sum(lat[j:j + period]) for j in range(0, len(lat) - period + 1, period)]
 
 
 def mean(xs) -> float:

@@ -24,6 +24,16 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SETUP_ROUNDS = 3
+#: whole cycles of the op mix, at least this many ops, run unmeasured
+#: after set-up: the CPU an op takes halves over the first eight or so
+#: ops while the JIT compiles.
+#: A count, not a time, so a slow host does not get a shorter warm-up.
+PRIME_OPS = 10
+#: Spark task threads and the JVM's parallel GC threads: with the Python
+#: driver and the JIT beside them, about as many busy threads as a 4-core
+#: box has cores, so a run measures the lake and not the scheduler
+SPARK_THREADS = 2
+JVM_THREADS = 2
 
 
 def parse_args(argv=None) -> argparse.Namespace:
@@ -70,7 +80,9 @@ class Bench:
             "spark.local.dir": os.path.join(self.work, "spark-local"),
             "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
             # no /tmp/hsperfdata_<user>: the run writes only inside the checkout
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+            "spark.driver.extraJavaOptions": (
+                f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
+                f"-XX:ParallelGCThreads={JVM_THREADS}"),
             "spark.hadoop.hadoop.tmp.dir": tmp,
             "spark.ui.showConsoleProgress": "false",
         }
@@ -112,20 +124,22 @@ class Bench:
         return rounds
 
     def loop(self):
-        """Closed loop, one client. One cycle of the workload's op mix
-        runs unmeasured first; then whole cycles run until ``--seconds``
-        have passed. With tracing, cycles alternate untraced and traced,
-        at least one of each. Returns (primed ops, measured ops)."""
+        """Closed loop, one client. Whole cycles of the workload's op mix
+        run unmeasured for ``PRIME_OPS``; then whole cycles run until
+        ``--seconds`` have passed, at least two. With tracing, cycles
+        alternate untraced and traced. Returns (primed ops, measured
+        ops)."""
         from perfbench.workloads import Op
 
         period = self.wl.period
         self.tracer.enabled = False
-        primed = [self.wl.op(i) for i in range(period)]
+        primed = []
+        while len(primed) < PRIME_OPS or len(primed) % period:
+            primed.append(self.wl.op(len(primed)))
         ops: list[tuple[Op, bool]] = []
         deadline = time.perf_counter() + self.args.seconds
-        i = period
-        while (time.perf_counter() < deadline or i % period
-               or (self.args.trace and i < 3 * period)):
+        first = i = len(primed)
+        while time.perf_counter() < deadline or i % period or i < first + 2 * period:
             traced = bool(self.args.trace) and (i // period) % 2 == 0
             self.tracer.enabled = traced
             self.tracer.op = i
@@ -133,7 +147,7 @@ class Bench:
             try:
                 op = self.wl.op(i)
             except Exception as e:  # a failed op is counted, not fatal
-                op = Op("error", time.perf_counter() - t0, [f"{type(e).__name__}: {e}"])
+                op = Op("error", time.perf_counter() - t0, 0.0, [f"{type(e).__name__}: {e}"])
             ops.append((op, traced))
             i += 1
         self.tracer.enabled = bool(self.args.trace)
@@ -168,6 +182,7 @@ class Bench:
         try:
             setups = self.setup()
             primed, ops = self.loop()
+            lat = [op.latency_s for op, _ in ops]
             problems = [p for op, _ in ops for p in op.problems]
             failed = sum(1 for op, _ in ops if op.problems)
             end_problems = [p for op in primed for p in op.problems] + wl.finish()
@@ -180,11 +195,11 @@ class Bench:
                     f"trace-{wl.name}-{self.args.seed}.jsonl"))
                 units = M.PER_LAYER
             else:
-                lat = [op.latency_s for op, _ in ops]
+                cpu = [op.cpu_s for op, _ in ops]
                 values = {
                     "setup_s": M.p50(setups),
-                    "op_p50_s": M.p50(lat),
-                    "ops_per_s": len(ops) / sum(lat),
+                    "op_cpu_p50_s": M.mix_p50([op.kind for op, _ in ops], cpu, wl.period),
+                    "ops_per_cpu_s": wl.period / M.p50(M.cycles(cpu, wl.period)),
                     "silver_bytes_per_input_byte": wl.silver_bytes_per_input_byte(),
                     "mem_mb": mem_mb(self.spark),
                 }
@@ -197,7 +212,10 @@ class Bench:
         print(
             f"perfbench: {wl.name} seed={self.args.seed} inputs={json.dumps(wl.info)} "
             f"generate_s={gen_s:.3f} setup_rounds_s={[round(s, 3) for s in setups]} "
-            f"ops={len(ops)}", file=sys.stderr)
+            f"primed={len(primed)} ops={len(ops)} op_p50_s={M.p50(lat):.3f} "
+            f"ops_per_s={wl.period / M.p50(M.cycles(lat, wl.period)):.3f} "
+            f"op_s={[round(x, 3) for x in lat]} "
+            f"op_cpu_s={[round(op.cpu_s, 2) for op, _ in ops]}", file=sys.stderr)
         return {
             "correct": failed == 0 and not end_problems,
             "attempted": len(ops),
@@ -215,6 +233,7 @@ def main(argv=None) -> int:
     # SPARK_LOCAL_DIRS, when set, overrides spark.local.dir
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
+    os.environ["SPARK_GRAFT_CPUS"] = str(SPARK_THREADS)
     tempfile.tempdir = None
     # import the package (and perfbench) from the checkout root, not from
     # this script's directory

@@ -40,12 +40,15 @@ LANDMARK_TRUTH = {
 STAR_QUERIES = ("q01_pricing_summary", "q03_shipping_priority",
                 "q05_local_supplier_volume", "q10_returned_items")
 GEOM_SAMPLE = 32
+CLK_TCK = os.sysconf("SC_CLK_TCK")
 
 
 @dataclass
 class Op:
     kind: str
     latency_s: float
+    #: CPU time of the Python driver and the JVM, all threads, over the op
+    cpu_s: float
     problems: list[str] = field(default_factory=list)
 
 
@@ -61,6 +64,8 @@ class Lake:
 
     def bind(self, spark) -> None:
         self.spark = spark
+        # the launcher script execs the JVM, so this is the JVM's pid
+        self.jvm_pid = spark.sparkContext._gateway.proc.pid
         if self.tracer.enabled:
             self.jobs = JobCounter(spark.sparkContext)
 
@@ -76,21 +81,31 @@ class Lake:
                 s.attrs["n"] = len(out)
         return out
 
+    def cpu_s(self) -> float:
+        """CPU seconds used so far by this process and the JVM."""
+        t = os.times()
+        with open(f"/proc/{self.jvm_pid}/stat") as f:
+            utime, stime = f.read().rsplit(")", 1)[1].split()[11:13]
+        return t.user + t.system + (int(utime) + int(stime)) / CLK_TCK
+
     @contextmanager
     def timed(self, kind: str):
         """Time an op's measured region; traced, it is the ``op`` span
-        and its own job group. Yields a dict that gets ``"s"``."""
+        and its own job group. Yields a dict that gets ``"s"`` (wall)
+        and ``"cpu"``."""
         out: dict[str, float] = {}
         if not self.tracer.enabled:
-            t0 = time.perf_counter()
+            c0, t0 = self.cpu_s(), time.perf_counter()
             yield out
             out["s"] = time.perf_counter() - t0
+            out["cpu"] = self.cpu_s() - c0
             return
         with self.tracer.span("op", kind=kind) as s:
             with self.jobs.group("op") as counts:
-                t0 = time.perf_counter()
+                c0, t0 = self.cpu_s(), time.perf_counter()
                 yield out
                 out["s"] = time.perf_counter() - t0
+                out["cpu"] = self.cpu_s() - c0
             s.attrs.update(counts)
 
     def count_last(self, name: str, **attrs) -> None:
@@ -338,7 +353,7 @@ class BulkBackfill(Workload):
             self.lake.ingest(csv_path, dest)
         self.in_bytes += size
         self.out_bytes += tree_bytes(dest, ".parquet")[1]
-        return Op("ingest", t["s"], check_silver(dest, rows, self.seed + i))
+        return Op("ingest", t["s"], t["cpu"], check_silver(dest, rows, self.seed + i))
 
     def silver_bytes_per_input_byte(self) -> float:
         return self.out_bytes / self.in_bytes
@@ -391,7 +406,7 @@ class EventTrickle(Workload):
             lake.merge(self.table(), dest)
             if (i + 1) % self.VACUUM_EVERY == 0:
                 lake.call("txtable.vacuum", txtable.vacuum, self.table(), keep_versions=2)
-        return Op("event", t["s"], check_silver(dest, batch, self.seed + i))
+        return Op("event", t["s"], t["cpu"], check_silver(dest, batch, self.seed + i))
 
     def finish(self) -> list[str]:
         return check_snapshot(self.table(), self.universe)
@@ -448,15 +463,16 @@ class SilverReadMostly(Workload):
             gen.write_silver_parquet(upd, batch)
             with lake.timed(kind) as t:
                 lake.merge(self.table(), upd)
-            return Op(kind, t["s"])
+            return Op(kind, t["s"], t["cpu"])
         if kind in LANDMARK_QUERIES:
             with lake.timed(kind) as t:
                 got = lake.landmark_query(kind, self.table())
             want = LANDMARK_TRUTH[kind](self.universe.latest.values())
-            return Op(kind, t["s"], [] if got == want else [f"{kind}: {got[:3]} != {want[:3]}"])
+            return Op(kind, t["s"], t["cpu"],
+                      [] if got == want else [f"{kind}: {got[:3]} != {want[:3]}"])
         with lake.timed(kind) as t:
             got = lake.star_query(kind, self.star)
-        return Op(kind, t["s"], compare_frames(got, self.oracle[kind], kind))
+        return Op(kind, t["s"], t["cpu"], compare_frames(got, self.oracle[kind], kind))
 
     def finish(self) -> list[str]:
         return check_snapshot(self.table(), self.universe)
