@@ -86,7 +86,8 @@ REVERIFY: frozenset[str] = frozenset(
         "q_dedup_apply",
         # …and capped_bucket_pairs computes the bucket count and the
         # chain lead in ONE window pass, touching every LSH pair
-        # consumer.
+        # consumer (q_image_phash_dedup reaches it through
+        # banded_hamming_pairs).
         "q_dedup_minhash_lsh",
         "q_minhash_calibration",
         "q_lsh_recall_census",
@@ -95,6 +96,7 @@ REVERIFY: frozenset[str] = frozenset(
         "q_semantic_dedup",
         "q_embedding_neardup",
         "q_curation_pipeline_e2e",
+        "q_image_phash_dedup",
     }
 )
 

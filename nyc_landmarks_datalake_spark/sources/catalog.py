@@ -5,6 +5,16 @@ schema files (CSVIngest.java:88-100, :232-234). Here the analytics-zone
 catalog is simply parquet-with-embedded-schema per table; the sidecar
 machinery lives in :mod:`nyc_landmarks_datalake_spark.schema.sidecar`
 and is used by the ingest tier.
+
+Schema memo: inferring a schema is a footer-read Spark job, so each
+table's inferred schema (and its scan partition count, once
+:func:`compute_table` probed it) is memoized in ``_SCANS`` and handed
+to the reader. An entry holds for one file identity: (path, inode,
+size, mtime_ns) of the table's file, or of each parquet file under a
+directory table; a rewrite in place changes it and the schema is
+inferred again. The key is not the directory or its mtime: rewriting
+``events.parquet`` or a part file in place leaves both unchanged, and a
+stale schema or partition count is a wrong answer, not a cache miss.
 """
 
 from __future__ import annotations
@@ -12,6 +22,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -36,9 +47,9 @@ BROADCAST_DIMS = frozenset({"region", "nation"})
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
-    if name == "events":
-        return _events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(_scan(spark, path)["schema"]).parquet(path)
+    return _events_ts(df) if name == "events" else df
 
 
 #: for compute-bound pipelines, aim for ~this much scan input per task —
@@ -46,11 +57,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: input byte many times over, so partitions sized for plain scans are
 #: far too coarse.
 _COMPUTE_CHUNK_BYTES = 256 << 10
-
-#: (sf_dir, name) → scan partition count; probing via df.rdd builds a
-#: JavaRDD each call, so repeated compute_table calls memoize it (the
-#: test parquet inputs are immutable).
-_SCAN_PARTS: dict[tuple[str, str], int] = {}
 
 
 def compute_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -63,72 +69,64 @@ def compute_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     no-op. The repartition shuffles only raw rows (cheap) and is paid
     once before the expensive projection."""
     df = table(spark, sf_dir, name)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            nbytes = sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(path)
-                for f in fs
-            )
-        else:
-            nbytes = os.path.getsize(path)
-    except OSError:
-        return df
-    target = max(
-        1,
-        min(
-            spark.sparkContext.defaultParallelism,
-            nbytes // _COMPUTE_CHUNK_BYTES,
-        ),
-    )
-    key = (sf_dir, name)
-    if key not in _SCAN_PARTS:
-        _SCAN_PARTS[key] = df.rdd.getNumPartitions()
-    if target > 1 and _SCAN_PARTS[key] < target:
-        df = df.repartition(target)
-    return df
+    scan = _scan(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    nbytes = sum(size for _, _, size, _ in scan["identity"])
+    target = min(spark.sparkContext.defaultParallelism, nbytes // _COMPUTE_CHUNK_BYTES)
+    if "parts" not in scan:  # df.rdd builds a JavaRDD: probe once per identity
+        scan["parts"] = df.rdd.getNumPartitions()
+    return df.repartition(target) if target > 1 and scan["parts"] < target else df
 
 
-#: (sf_dir) → inferred events schema; inference runs a footer-read job
-#: under the legacy-nanos flag, so memoize it per directory.
-_EVENTS_SCHEMA: dict[str, object] = {}
+#: table path → {"identity", "schema"[, "parts"]}; see the module docstring
+_SCANS: dict[str, dict] = {}
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet stores ts as TIMESTAMP(NANOS), which Spark's parquet
-    reader rejects; read nanos as long and truncate to microseconds (the
-    same truncation DuckDB applies when casting ns→µs timestamps).
+def _identity(path: str) -> tuple:
+    files = [path]
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(dp, f) for dp, _, fs in os.walk(path) for f in fs
+            if f.endswith(".parquet")
+        )
+    stats = [(f, os.stat(f)) for f in files]
+    return tuple((f, st.st_ino, st.st_size, st.st_mtime_ns) for f, st in stats)
 
-    The legacy ``nanosAsLong`` flag is needed only while INFERRING the
-    schema (a footer-read job), so it is set and restored around that
-    step alone; the actual scan uses an explicit schema and leaves
-    session config untouched — a reader must not permanently mutate
-    shared session state."""
-    from pyspark.sql import functions as F
 
-    path = os.path.join(sf_dir, "events.parquet")
-    if sf_dir not in _EVENTS_SCHEMA:
+def _scan(spark: SparkSession, path: str) -> dict:
+    """The memo entry for ``path``, inferred afresh if its identity moved.
+
+    events.parquet stores ts as TIMESTAMP(NANOS), which Spark's parquet
+    reader rejects, so inference runs under the legacy ``nanosAsLong``
+    flag (no other table has a nanos column; :func:`_events_ts` converts
+    the long). The scan takes the inferred schema, so the flag is set
+    only around inference: a reader must not mutate session state."""
+    ident = _identity(path)
+    scan = _SCANS.get(path)
+    if scan is None or scan["identity"] != ident:
         key = "spark.sql.legacy.parquet.nanosAsLong"
         prev = spark.conf.get(key, None)
         spark.conf.set(key, "true")
         try:
-            _EVENTS_SCHEMA[sf_dir] = spark.read.parquet(path).schema
+            schema = spark.read.parquet(path).schema
         finally:
             if prev is None:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, prev)
-    df = spark.read.schema(_EVENTS_SCHEMA[sf_dir]).parquet(path)
-    if dict(df.dtypes).get("ts") in ("bigint", "long"):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(df.dtypes).get("ts") == "timestamp_ntz":
-        # Parquet timestamp[us] WITHOUT a timezone loads as TIMESTAMP_NTZ
-        # on Spark >= 3.4 inference paths; NTZ rejects unix_micros and
-        # withWatermark. The session timezone is pinned UTC
-        # (session.py), so reinterpreting NTZ wall-clock values as UTC
-        # instants is lossless and matches DuckDB's epoch_us semantics.
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        scan = _SCANS[path] = {"identity": ident, "schema": schema}
+    return scan
+
+
+def _events_ts(df: DataFrame) -> DataFrame:
+    """ts as a µs timestamp, nanos truncated (as DuckDB's ns→µs cast does)."""
+    ts = dict(df.dtypes).get("ts")
+    if ts in ("bigint", "long"):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts == "timestamp_ntz":
+        # Parquet timestamp[us] without a timezone infers as TIMESTAMP_NTZ,
+        # which rejects unix_micros and withWatermark; the session timezone
+        # is UTC (session.py), so reading it as a UTC instant is lossless.
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

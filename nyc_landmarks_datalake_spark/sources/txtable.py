@@ -22,6 +22,16 @@ writers can both stage, but only one publishes; the loser gets
 :class:`CommitConflict` and must rebase (optimistic concurrency, the
 same protocol Delta uses on HDFS-like stores).
 
+Reads trust the manifest schema: a reader is built with
+``spark.read.schema(<manifest schema>)`` and never infers one from the
+data files' footers (Delta keeps its schema in the log's metadata action
+for the same reason). That is safe because a version's data files are
+immutable: they are written once under a fresh directory before the
+manifest that names them is published, and nothing rewrites them
+afterwards, so the schema recorded at commit is the schema of every
+file the manifest lists. It also saves the footer-read job that
+inference costs on every read.
+
 Crash safety: a writer dying before publish leaves orphaned data files
 referenced by no manifest — invisible to every reader; ``vacuum``
 removes them. A writer dying during publish leaves either no manifest
@@ -49,6 +59,7 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 class CommitConflict(RuntimeError):
@@ -150,16 +161,16 @@ def read_snapshot(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
     """Read the table at ``version`` (default: latest). Time travel is
-    free: every manifest is a full snapshot."""
+    free: every manifest is a full snapshot. The reader takes the
+    manifest's schema, so building it starts no Spark job (see the
+    module docstring); an empty file list reads as zero rows."""
     v = current_version(path) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed version at {path}")
     m = _read_manifest(path, v)
-    if not m["files"]:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame([], T.StructType.fromJson(m["schema"]))
-    return spark.read.parquet(*[os.path.join(path, f) for f in m["files"]])
+    return spark.read.schema(T.StructType.fromJson(m["schema"])).parquet(
+        *[os.path.join(path, f) for f in m["files"]]
+    )
 
 
 def merge_upsert_tx(

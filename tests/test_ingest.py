@@ -1,8 +1,9 @@
 """Golden ingest tests (SURVEY §5.2.1): sidecar parsing, header
 validation, geometry modes, partitioned writes, and the byte-compat
-massage path — run against a synthetic landmarks-style fixture, plus the
-reference's own fixture when available (golden counts: 144 records,
-28 columns, ragged-row quote survival)."""
+massage path — run against a synthetic landmarks-style fixture, the
+committed generated fixture (``tests/fixtures``, golden counts from its
+generator's truth) and the reference's own fixture when available
+(golden counts: 144 records, 28 columns, ragged-row quote survival)."""
 
 from __future__ import annotations
 
@@ -32,6 +33,7 @@ from nyc_landmarks_datalake_spark.schema.sidecar import (
 
 REF_CSV = "/root/reference/src/test/resources/testData.csv"
 REF_SCHEMA = "/root/reference/src/test/resources/testSchema.json"
+GEN_DIR = os.path.join(os.path.dirname(__file__), "fixtures")
 
 SIDECAR = [
     {"key": "OBJECTID", "type": "bigint", "partition_key": "false", "comment": "id"},
@@ -142,21 +144,40 @@ def test_massage_compat(spark, tmp_path):
     assert got[1] == "plain,line,no,geometry"
 
 
-@pytest.mark.skipif(not os.path.exists(REF_CSV), reason="reference fixture absent")
-def test_reference_fixture_golden(spark, tmp_path):
-    out = tmp_path / "ref_silver"
+@pytest.fixture(params=["generated", "reference"])
+def landmarks_src(request):
+    """(csv, sidecar, rows, rows whose OTHER_NOTE has a comma or None)
+    per landmarks fixture: the committed generated one (golden values
+    from its generator's truth) and the reference's own."""
+    if request.param == "reference":
+        if not os.path.exists(REF_CSV):
+            pytest.skip("reference fixture absent")
+        return REF_CSV, REF_SCHEMA, 144, None
+    with open(os.path.join(GEN_DIR, "landmarks_truth.json")) as f:
+        truth = json.load(f)
+    return (
+        os.path.join(GEN_DIR, "landmarks.csv"),
+        os.path.join(GEN_DIR, "schemas", "landmarks.json"),
+        truth["rows"],
+        truth["other_note_with_commas"],
+    )
+
+
+def test_landmarks_fixture_golden(spark, tmp_path, landmarks_src):
+    csv, sidecar, n_rows, n_commas = landmarks_src
+    out = tmp_path / "silver"
     df = ingest_csv(
         spark,
-        REF_CSV,
-        REF_SCHEMA,
+        csv,
+        sidecar,
         str(out),
         geometry_mode="encode",
         strict=False,
     )
     assert len(df.columns) == 28
-    assert df.count() == 144
+    assert df.count() == n_rows
     back = spark.read.parquet(str(out))
-    assert back.count() == 144
+    assert back.count() == n_rows
     # every encoded geometry is colon-separated coords: no spaces, commas,
     # parens, or WKT tokens remain
     bad = back.filter(
@@ -167,19 +188,21 @@ def test_reference_fixture_golden(spark, tmp_path):
     ).count()
     assert bad == 0
     encoded = back.filter(F.col("the_geom").contains("::")).count()
-    assert encoded == 144
+    assert encoded == n_rows
     # quoted fields with embedded commas parse into their own column (the
     # reference's quote-strip-then-split explodes such rows to 28-38
     # fields, SURVEY §1.4.2)
     with_commas = back.filter(F.col("OTHER_NOTE").contains(",")).count()
     assert with_commas > 0
+    if n_commas is not None:
+        assert with_commas == n_commas
 
 
-@pytest.mark.skipif(not os.path.exists(REF_CSV), reason="reference fixture absent")
-def test_reference_compat_massage_golden(spark, tmp_path):
+def test_landmarks_compat_massage_golden(spark, tmp_path, landmarks_src):
+    csv, _, n_rows, _ = landmarks_src
     out = tmp_path / "compat"
-    massaged = ingest_compat(spark, REF_CSV, str(out))
+    massaged = ingest_compat(spark, csv, str(out))
     vals = [r["value"] for r in massaged.collect()]
-    assert len(vals) == 145  # header + 144
+    assert len(vals) == n_rows + 1  # header + rows
     assert not any("MULTIPOLYGON" in v for v in vals)
     assert not any('"' in v for v in vals)

@@ -1,7 +1,10 @@
-"""End-to-end landmarks pipeline over the reference's own fixture."""
+"""End-to-end landmarks pipeline over a committed generated fixture
+(``tests/fixtures``, written by ``tools/gen_lake_fixture.py``) and, when
+present, the reference's own fixture."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -15,42 +18,60 @@ from nyc_landmarks_datalake_spark.pipelines import (
 
 REF_CSV = "/root/reference/src/test/resources/testData.csv"
 REF_SCHEMA = "/root/reference/src/test/resources/testSchema.json"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(REF_CSV), reason="reference fixture absent"
-)
+GEN_DIR = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
-@pytest.fixture(scope="module")
-def silver(spark, tmp_path_factory):
+@pytest.fixture(scope="module", params=["generated", "reference"])
+def silver(request, spark, tmp_path_factory):
+    """(silver DataFrame, golden values) per landmarks fixture; the
+    generated fixture's golden values are its generator's truth."""
+    if request.param == "reference":
+        if not os.path.exists(REF_CSV):
+            pytest.skip("reference fixture absent")
+        csv, sidecar, golden = REF_CSV, REF_SCHEMA, {"rows": 144}
+    else:
+        csv = os.path.join(GEN_DIR, "landmarks.csv")
+        sidecar = os.path.join(GEN_DIR, "schemas", "landmarks.json")
+        with open(os.path.join(GEN_DIR, "landmarks_truth.json")) as f:
+            golden = json.load(f)
     d = tmp_path_factory.mktemp("landmarks_silver")
-    return ingest_landmarks(spark, REF_CSV, REF_SCHEMA, str(d / "silver"))
+    return ingest_landmarks(spark, csv, sidecar, str(d / "silver")), golden
 
 
 def test_per_borough_counts(silver):
+    silver, golden = silver
     rows = landmarks_per_borough(silver).collect()
-    assert sum(r["n_landmarks"] for r in rows) == 144
+    assert sum(r["n_landmarks"] for r in rows) == golden["rows"]
     boroughs = {r["BOROUGH"] for r in rows}
     assert boroughs <= {"MN", "BK", "QN", "BX", "SI"}
     # ordered descending
     counts = [r["n_landmarks"] for r in rows]
     assert counts == sorted(counts, reverse=True)
+    if "per_borough" in golden:
+        assert [list(r) for r in rows] == golden["per_borough"]
 
 
 def test_designation_years_parse(silver):
+    silver, golden = silver
     rows = designations_per_year(silver).collect()
     assert rows, "no DESIG_DATE parsed — date format regression"
     years = [r["desig_year"] for r in rows]
-    assert all(1960 <= y <= 2020 for y in years), years
     assert years == sorted(years)
+    if "designations_per_year" in golden:
+        assert [list(r) for r in rows] == golden["designations_per_year"]
+    else:
+        assert all(1960 <= y <= 2020 for y in years), years
 
 
 def test_largest_landmarks(silver):
+    silver, golden = silver
     rows = largest_landmarks(silver, k=5).collect()
     assert len(rows) == 5
     areas = [r["shape_area"] for r in rows]
     assert areas == sorted(areas, reverse=True)
     assert all(a > 0 for a in areas)
+    if "largest_5" in golden:
+        assert [list(r) for r in rows] == golden["largest_5"]
 
 
 def test_merge_upsert_edge_cases(spark):

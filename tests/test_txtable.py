@@ -173,3 +173,74 @@ def test_stream_mv_upsert_versions_and_idempotence(spark, tmp_path):
     # simulate the crash-replay: the sink skips when its op exists
     assert "mv_delta_b1" in _committed_ops(tbl)
     assert txtable.current_version(tbl) == before
+
+
+def _inferred(spark, path, version):
+    """The table at ``version`` as schema inference over its files reads it."""
+    files = txtable._read_manifest(path, version)["files"]
+    return spark.read.parquet(*[os.path.join(path, f) for f in files])
+
+
+def _rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def _typed(spark, n, tag):
+    """Non-nullable, nested and temporal columns: the cases where a
+    written schema and the one read back could differ."""
+    return spark.range(n).select(
+        F.col("id").alias("k"),
+        F.lit(tag).alias("tag"),
+        (F.col("id") / 3).cast("decimal(12,4)").alias("amount"),
+        F.timestamp_seconds(F.col("id") * 86400).alias("ts"),
+        F.array(F.col("id"), F.lit(None).cast("long")).alias("arr"),
+        F.struct(F.col("id").alias("a"), F.lit(tag).alias("b")).alias("st"),
+        F.create_map(F.lit(tag), F.col("id").cast("double")).alias("m"),
+    )
+
+
+def test_snapshot_schema_matches_inference(spark, tmp_path):
+    """Every version — create, merge, optimize, each read by time travel
+    — reads back with the column order, types and rows that schema
+    inference over the same files gives."""
+    path = str(tmp_path / "t")
+    txtable.commit(spark, path, _typed(spark, 20, "a").repartition(3), "create", None)
+    upd = _typed(spark, 30, "b").filter(F.col("k") >= 15)
+    assert txtable.merge_upsert_tx(spark, path, upd, ["k"]) == 1
+    assert txtable.optimize(spark, path, target_files=2) == 2
+    for v in txtable._versions(path):
+        got, want = txtable.read_snapshot(spark, path, v), _inferred(spark, path, v)
+        assert got.schema == want.schema, v
+        assert _rows(got) == _rows(want), v
+    assert txtable.read_snapshot(spark, path).count() == 30
+
+
+def test_empty_manifest_reads_empty_with_schema(spark, tmp_path):
+    path = str(tmp_path / "t")
+    txtable.commit(spark, path, _typed(spark, 5, "a"), "create", None)
+    m = txtable._read_manifest(path, 0)
+    txtable._publish(
+        path, 1, {**m, "version": 1, "parent": 0, "operation": "delete", "files": []}
+    )
+    got = txtable.read_snapshot(spark, path, 1)
+    assert got.schema == _inferred(spark, path, 0).schema
+    assert got.collect() == []
+
+
+def test_read_snapshot_starts_no_job(spark, tmp_path):
+    """Building a snapshot's DataFrame (before any action) runs no Spark
+    job; schema inference over the same files does, which shows the
+    job check can see one."""
+    from nyc_landmarks_datalake_spark.plans.observe import job_group
+
+    path = str(tmp_path / "t")
+    txtable.commit(spark, path, _typed(spark, 20, "a").repartition(3), "create", None)
+    txtable.merge_upsert_tx(spark, path, _typed(spark, 5, "b"), ["k"])
+    tracker = spark.sparkContext.statusTracker()
+    with job_group(spark, "build_snapshots", "read_snapshot, no action"):
+        for v in (0, 1, None):
+            txtable.read_snapshot(spark, path, v)
+    with job_group(spark, "infer_snapshot", "schema inference, no action"):
+        _inferred(spark, path, 1)
+    assert tracker.getJobIdsForGroup("build_snapshots") == []
+    assert tracker.getJobIdsForGroup("infer_snapshot") != []
