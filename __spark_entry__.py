@@ -97,6 +97,9 @@ REVERIFY: frozenset[str] = frozenset(
         "q_embedding_neardup",
         "q_curation_pipeline_e2e",
         "q_image_phash_dedup",
+        # compaction now commits through the txtable log (optimize +
+        # vacuum) instead of a directory swap.
+        "q_compaction_census",
     }
 )
 

@@ -22,7 +22,6 @@ as sources/layout.py.
 from __future__ import annotations
 
 import os
-import shutil
 
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
 
@@ -156,26 +155,24 @@ def q_schema_evolution_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Compaction maintenance under the oracle gate: a many-small-files zone
-# (streaming-ingest shape: one file per micro-batch) is rewritten by
-# layout.compact() to target-sized files; the query returns the file
-# census BEFORE/AFTER plus content aggregates over the compacted zone.
-# A green row proves compaction is metadata-only (bit-identical
-# content) AND that the file count actually dropped — the maintenance
-# op's whole contract.
+# Compaction maintenance under the oracle gate: a many-small-files
+# snapshot (streaming-ingest shape: one file per micro-batch) is
+# rewritten by txtable.optimize() to target-sized files; the query
+# returns the file census BEFORE/AFTER, taken from the two versions'
+# manifests, plus content aggregates over the optimized snapshot. A
+# green row proves compaction is metadata-only (bit-identical content)
+# AND that the file count actually dropped — the maintenance op's whole
+# contract.
 # ---------------------------------------------------------------------------
-#: session-scoped compaction staging ROOTS, one per sf_dir — bench
-#: loops invoke the query repeatedly and a mkdtemp per call leaks a
-#: temp root per invocation (r7 ADVICE). Each invocation stages into a
-#: fresh VERSIONED subdir of the shared root (docs_v0, docs_v1, ...):
-#: the rebuild+compact side effect runs every call (it is the thing
-#: under test), while earlier invocations' lazy DataFrames keep
-#: reading their own untouched subdir — overwriting one shared path
-#: would delete the part-files backing a still-held result. Growth is
-#: bounded (r8 ADVICE): each invocation deletes every version older
-#: than its predecessor, so at most two versions exist at a time and
-#: the root dies with the session temp dir.
-_COMPACT_ZONES: dict[str, tuple[str, int]] = {}
+#: one commit-log table per sf_dir for the session — bench loops invoke
+#: the query repeatedly and a mkdtemp per call leaks a temp root per
+#: invocation (r7 ADVICE). Each invocation commits a fresh fragmented
+#: version and optimizes it; earlier invocations' lazy DataFrames keep
+#: reading their own immutable version. Growth is bounded (r8 ADVICE):
+#: vacuum keeps the newest three versions — this call's two and the
+#: previous call's optimized one, the newest result a caller can still
+#: be holding (bench consumes each result before re-invoking).
+_COMPACT_TABLES: dict[str, str] = {}
 
 COMPACT_FILES_BEFORE = 24
 COMPACT_FILES_AFTER = 4
@@ -196,41 +193,31 @@ def q_compaction_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction: 24 micro-batch files → 4 target files.
 
     files_before/files_after are literal expectations in the oracle —
-    the Spark side computes them from the real directory listings, so
-    the driver hash fails if compaction ever stops consolidating (or
+    the Spark side computes them from the committed manifests, so the
+    oracle hash fails if compaction ever stops consolidating (or
     starts losing rows; the content aggregates pin that half).
     """
-    from pyspark.sql import functions as F
-
-    from nyc_landmarks_datalake_spark.sources.layout import compact
+    from nyc_landmarks_datalake_spark.sources import txtable
 
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    root, version = _COMPACT_ZONES.get(sf_dir) or (
-        scratch_dir(prefix="compact_zone_"),
-        0,
-    )
-    _COMPACT_ZONES[sf_dir] = (root, version + 1)
-    zone = os.path.join(root, f"docs_v{version}")
-    docs.repartition(COMPACT_FILES_BEFORE).write.parquet(zone)
-    # Bound temp-disk growth under bench loops (r8 ADVICE): keep only
-    # this version and its predecessor (the newest result a caller can
-    # still be holding lazily — bench consumes each result before
-    # re-invoking); everything older is deleted.
-    for stale in range(version - 1):
-        shutil.rmtree(os.path.join(root, f"docs_v{stale}"), ignore_errors=True)
-
-    def _count_parts(p: str) -> int:
-        return sum(
-            1
-            for f in os.listdir(p)
-            if f.startswith("part-") and f.endswith(".parquet")
+    tbl = _COMPACT_TABLES.get(sf_dir)
+    if tbl is None:
+        tbl = _COMPACT_TABLES[sf_dir] = os.path.join(
+            scratch_dir(prefix="compact_table_"), "docs"
         )
-
-    before = _count_parts(zone)
-    compact(spark, zone, target_files=COMPACT_FILES_AFTER)
-    after = _count_parts(zone)
+    v_fragmented = txtable.commit(
+        spark,
+        tbl,
+        docs.repartition(COMPACT_FILES_BEFORE),
+        "write",
+        txtable.current_version(tbl),
+    )
+    v_optimized = txtable.optimize(spark, tbl, target_files=COMPACT_FILES_AFTER)
+    n_files = {m["version"]: len(m["files"]) for m in txtable.history(tbl)}
+    before, after = n_files[v_fragmented], n_files[v_optimized]
+    txtable.vacuum(tbl, keep_versions=3)
     # fail in-plan, not just at the oracle compare: the literals in the
     # oracle SQL are expectations, and a silent drift there would make
     # both engines agree on wrong numbers
@@ -241,7 +228,7 @@ def q_compaction_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"(want {COMPACT_FILES_AFTER})"
         )
 
-    back = spark.read.parquet(zone)
+    back = txtable.read_snapshot(spark, tbl, v_optimized)
     return back.agg(
         F.count("*").alias("n_rows"),
         F.sum(F.col("n_chars").cast("long")).alias("sum_chars"),

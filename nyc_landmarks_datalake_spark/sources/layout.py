@@ -1,4 +1,4 @@
-"""Physical layout control: partitioned + bucketed writes, compaction.
+"""Physical layout control: partitioned + bucketed writes.
 
 These are the levers that matter most at 100 TB:
 
@@ -8,17 +8,15 @@ These are the levers that matter most at 100 TB:
   there);
 - **bucketBy** on join/agg keys → co-located joins with NO exchange on
   either side (verified in tests by asserting the absence of shuffle
-  exchanges in the physical plan);
-- **compaction** — streaming ingest produces one file per micro-batch
-  per partition; compact() rewrites a zone to target-sized files so
-  scans stay at maxPartitionBytes-sized splits instead of millions of
-  tiny reads.
+  exchanges in the physical plan).
+
+Compaction is not a layout write: it replaces a table, so it is
+``txtable.optimize``, a commit like any other.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(
@@ -43,42 +41,3 @@ def write_bucketed(
         w = w.sortBy(sort_col)
     w.format("parquet").saveAsTable(table_name)
 
-
-def compact(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-    partition_cols: list[str] | None = None,
-) -> None:
-    """Rewrite a parquet zone into ~target_files well-sized files
-    (per partition-value slice when partitioned)."""
-    import os as _os
-    import shutil as _shutil
-
-    # crash recovery: a previous compact may have died between its two
-    # swap renames (zone renamed aside, new zone never moved in) —
-    # restore the old zone before doing anything else
-    base = path.rstrip("/")
-    old = base + "__replaced"
-    if not _os.path.isdir(base) and _os.path.isdir(old):
-        _os.rename(old, base)
-
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compacting"
-    writer = (
-        df.repartition(target_files, *[F.col(c) for c in partition_cols])
-        if partition_cols
-        else df.repartition(target_files)
-    )
-    w = writer.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(tmp)
-    # swap keeping the old zone on disk until the new one is fully
-    # committed (same protocol as the streaming upsert sink, including
-    # the recovery above): a crash mid-swap leaves the data in either
-    # the zone or its __replaced sibling, and the next compact restores
-    _shutil.rmtree(old, ignore_errors=True)
-    _os.rename(base, old)
-    _os.rename(tmp, base)
-    _shutil.rmtree(old, ignore_errors=True)

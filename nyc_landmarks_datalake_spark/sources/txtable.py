@@ -1,10 +1,12 @@
 """Minimal transactional table format: a file-based commit log giving
 parquet zones ACID semantics without a lakehouse library.
 
-The sandbox has no delta-spark/iceberg (documented in SCALING.md), and
-the previous MERGE story was an atomic directory swap. This module
-implements the actual transactional core those formats provide, from
-first principles, on any POSIX-rename filesystem:
+The sandbox has no delta-spark/iceberg (documented in SCALING.md). This
+module implements the transactional core those formats provide, from
+first principles, on any POSIX-rename filesystem. It is the lake's one
+way to replace a table: batch MERGE, streaming upserts and compaction
+are all commits here, as in Delta Lake, where streaming writes and
+OPTIMIZE are ordinary log commits:
 
 Layout::
 
@@ -219,30 +221,46 @@ def optimize(
     raise CommitConflict(f"gave up after {max_retries} rebases at {path}")
 
 
-def streaming_upsert_sink(spark: SparkSession, path: str, keys: list[str]):
-    """foreachBatch sink that MERGEs each micro-batch into the table
-    through the commit log — the transactional upgrade of the
-    directory-swap sink in streaming/pipeline.py. Each micro-batch is
-    one commit; a crash between batches leaves the last committed
-    version intact, and the streaming checkpoint replays the batch
-    (the merge is idempotent per key, so replay converges).
+def streaming_upsert_sink(
+    spark: SparkSession, path: str, keys: list[str], order_cols: list[str]
+):
+    """foreachBatch sink that upserts each micro-batch into the table
+    through the commit log. The batch is first collapsed to its newest
+    row per key (descending ``order_cols``); the first batch creates
+    the table as version 0, and every later one is a ``merge_upsert_tx``
+    commit, so updates win across batches. A crash mid-batch leaves the
+    last committed version intact (staged files are orphans until
+    ``vacuum``), and the streaming checkpoint replays the batch; the
+    merge replaces rows per key, so a replay converges.
 
     Use: ``df.writeStream.foreachBatch(streaming_upsert_sink(spark,
-    path, ["k"]))``. The table must exist (commit version 0 first)."""
+    path, ["k"], ["ts"]))``."""
+    from nyc_landmarks_datalake_spark.operators.merge import keep_latest
 
     def sink(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        merge_upsert_tx(spark, path, batch_df, keys)
+        latest = keep_latest(batch_df, keys, order_cols)
+        if current_version(path) is None:
+            try:
+                commit(spark, path, latest, "create", None)
+                return
+            except CommitConflict:
+                pass  # another writer created it first: merge into theirs
+        merge_upsert_tx(spark, path, latest, keys)
 
     return sink
 
 
+def history(path: str) -> list[dict]:
+    """Every manifest of the table, in version order (the read side of
+    Delta's DESCRIBE HISTORY): version, parent, operation, schema and
+    data files of each commit that ``vacuum`` has not dropped."""
+    return [_read_manifest(path, v) for v in _versions(path)]
+
+
 def referenced_files(path: str) -> set[str]:
-    out: set[str] = set()
-    for v in _versions(path):
-        out.update(_read_manifest(path, v)["files"])
-    return out
+    return {f for m in history(path) for f in m["files"]}
 
 
 def vacuum(path: str, keep_versions: int = 1) -> list[str]:

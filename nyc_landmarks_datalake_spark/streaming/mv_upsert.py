@@ -18,9 +18,9 @@ Correctness properties exercised:
     the manifest operation (``mv_delta_b{id}``); a replayed batch
     (crash between the commit and the checkpoint write) finds its op
     already present and skips, so the read-modify-write add never
-    double-counts. This is the piece ``streaming_upsert_sink``'s
-    replace-semantics merge gets for free but an ADDITIVE merge must
-    implement;
+    double-counts. ``txtable.streaming_upsert_sink`` needs no such
+    guard (its merge replaces rows per key, so a replay converges),
+    but an ADDITIVE merge must implement it;
   * snapshot isolation — mid-stream readers see a committed version,
     never a half-merged state (inherited from sources/txtable.py).
 
@@ -46,10 +46,7 @@ MV_SCHEMA = "user_id BIGINT, n_events BIGINT, sum_event_ids BIGINT"
 
 def _committed_ops(path: str) -> set[str]:
     # manifest scan: versions are O(batches), each manifest O(1)
-    return {
-        txtable._read_manifest(path, v)["operation"]
-        for v in txtable._versions(path)
-    }
+    return {m["operation"] for m in txtable.history(path)}
 
 
 def replay_stream_mv_upsert(

@@ -173,92 +173,3 @@ def stream_stream_purchase_attribution(
         "purchase_ts",
         "purchase_value",
     )
-
-
-def stream_upsert_sink(
-    stream: DataFrame,
-    dest_dir: str,
-    checkpoint_dir: str,
-    keys: list[str],
-    order_cols: list[str],
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming CDC upsert via foreachBatch: each micro-batch is first
-    compacted to its newest row per key, then SCD1-merged into the
-    parquet silver table. This is the Delta-less form of
-    ``MERGE INTO silver USING batch`` — the same two primitives
-    (keep_latest + merge_upsert) the batch tier exposes, driven by the
-    streaming engine with exactly-once batch IDs from the checkpoint.
-
-    The full-table rewrite per batch is the parquet limitation (no
-    transactional row updates); with a table format the merge would
-    target only matched files. Keyed layout (bucketing) bounds the
-    rewrite at scale.
-
-    Durability: the merged table is written to a sibling temp directory
-    and swapped in with directory renames, so the previous silver table
-    stays intact on disk until the new one is fully committed — a
-    mid-write executor loss fails the batch for retry with the old table
-    untouched (no reliance on cached lineage blocks). On a local/HDFS
-    filesystem the rename is atomic; on S3-like stores the real fix is a
-    transactional table format (see SCALING.md) — this sink is the
-    filesystem form of that commit protocol."""
-    from nyc_landmarks_datalake_spark.operators.merge import (
-        keep_latest,
-        merge_upsert,
-    )
-
-    spark = stream.sparkSession
-
-    def _merge_batch(batch: DataFrame, batch_id: int) -> None:
-        import glob as _glob
-        import os as _os
-        import shutil as _shutil
-
-        # crash recovery: a previous batch may have died between the two
-        # renames below (dest gone, .replaced-* still holding the data).
-        # When dest_dir EXISTS it is authoritative and every scratch dir
-        # is garbage from an interrupted batch — sweep them, or a
-        # replayed batch id would hit ENOTEMPTY renaming onto its own
-        # leftover, and a stale higher-id .replaced dir could shadow
-        # real data in a later recovery.
-        if not _os.path.isdir(dest_dir):
-            leftovers = sorted(_glob.glob(f"{dest_dir}.replaced-*"))
-            if leftovers:
-                _os.rename(leftovers[-1], dest_dir)
-        else:
-            for stale in _glob.glob(f"{dest_dir}.replaced-*") + _glob.glob(
-                f"{dest_dir}.inprogress-*"
-            ):
-                _shutil.rmtree(stale, ignore_errors=True)
-
-        compacted = keep_latest(batch, keys, order_cols)
-        # explicit existence check, NOT try/except around the read: a
-        # transient read or merge failure on a populated table must
-        # propagate (and fail the batch for retry) — swallowing it here
-        # would overwrite the silver table with just this micro-batch.
-        if _os.path.isdir(dest_dir) and _glob.glob(
-            _os.path.join(dest_dir, "*.parquet")
-        ):
-            base = spark.read.parquet(dest_dir)
-            merged = merge_upsert(base, compacted, keys)
-        else:
-            merged = compacted  # first batch: no silver table yet
-
-        tmp_dir = f"{dest_dir}.inprogress-{batch_id:020d}"
-        old_dir = f"{dest_dir}.replaced-{batch_id:020d}"
-        merged.write.mode("overwrite").parquet(tmp_dir)
-        # swap only after the new table is fully on disk
-        if _os.path.isdir(dest_dir):
-            _os.rename(dest_dir, old_dir)
-        _os.rename(tmp_dir, dest_dir)
-        _shutil.rmtree(old_dir, ignore_errors=True)
-
-    writer = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

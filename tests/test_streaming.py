@@ -194,82 +194,6 @@ def test_stream_stream_interval_join(spark, sf_small, tmp_path):
     assert 0 < len(got) <= expected
 
 
-def test_stream_upsert_sink(spark, tmp_path):
-    from nyc_landmarks_datalake_spark.streaming.pipeline import stream_upsert_sink
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    src = tmp_path / "cdc_src"
-    src.mkdir()
-    dest, ckpt = str(tmp_path / "silver"), str(tmp_path / "ckpt")
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, ["user_id", "ts_str", "value"]).select(
-            "user_id", F.col("ts_str").cast("timestamp").alias("ts"), "value"
-        ).write.mode("overwrite").parquet(str(src / name))
-
-    write_batch("b1", [(1, "2024-01-01 00:00:00", 1.0), (2, "2024-01-01 00:01:00", 2.0)])
-    q = stream_upsert_sink(
-        spark.readStream.schema(schema).parquet(str(src / "*")),
-        dest, ckpt, keys=["user_id"], order_cols=["ts"],
-    )
-    q.awaitTermination(120)
-    got = {r["user_id"]: r["value"] for r in spark.read.parquet(dest).collect()}
-    assert got == {1: 1.0, 2: 2.0}
-
-    # second batch updates user 1 (newer ts) and inserts user 3; the
-    # stale ts for user 2 must NOT win (keep_latest inside the batch,
-    # updates-win across batches).
-    write_batch("b2", [(1, "2024-01-01 01:00:00", 10.0), (3, "2024-01-01 00:05:00", 3.0)])
-    q2 = stream_upsert_sink(
-        spark.readStream.schema(schema).parquet(str(src / "*")),
-        dest, ckpt, keys=["user_id"], order_cols=["ts"],
-    )
-    q2.awaitTermination(120)
-    got = {r["user_id"]: r["value"] for r in spark.read.parquet(dest).collect()}
-    assert got == {1: 10.0, 2: 2.0, 3: 3.0}
-
-    # the swap must leave no in-progress/replaced scratch dirs behind
-    assert not list(tmp_path.glob("silver.inprogress-*"))
-    assert not list(tmp_path.glob("silver.replaced-*"))
-
-    # crash recovery: simulate dying between the two swap renames (dest
-    # renamed away, new table never moved in). The next batch must
-    # restore the old table instead of rebuilding silver from one batch.
-    import os
-
-    os.rename(dest, f"{dest}.replaced-{0:020d}")
-    write_batch("b3", [(4, "2024-01-01 02:00:00", 4.0)])
-    q3 = stream_upsert_sink(
-        spark.readStream.schema(schema).parquet(str(src / "*")),
-        dest, ckpt, keys=["user_id"], order_cols=["ts"],
-    )
-    q3.awaitTermination(120)
-    got = {r["user_id"]: r["value"] for r in spark.read.parquet(dest).collect()}
-    assert got == {1: 10.0, 2: 2.0, 3: 3.0, 4: 4.0}
-
-    # replayed-batch recovery: a batch that swapped but died before
-    # cleanup leaves dest_dir AND a stale .replaced-{id} dir; the
-    # replay must clear the stale dir instead of wedging on ENOTEMPTY.
-    stale = f"{dest}.replaced-{99:020d}"
-    os.makedirs(stale)
-    with open(os.path.join(stale, "junk.parquet"), "w") as f:
-        f.write("stale")
-    write_batch("b4", [(5, "2024-01-01 03:00:00", 5.0)])
-    q4 = stream_upsert_sink(
-        spark.readStream.schema(schema).parquet(str(src / "*")),
-        dest, ckpt, keys=["user_id"], order_cols=["ts"],
-    )
-    q4.awaitTermination(120)
-    got = {r["user_id"]: r["value"] for r in spark.read.parquet(dest).collect()}
-    assert got == {1: 10.0, 2: 2.0, 3: 3.0, 4: 4.0, 5: 5.0}
-
-
 def test_replay_windowed_counts_equals_oracle_checked_twin(spark, sf_small, tmp_path):
     """Full-value replay: the streaming engine over a file-dropped copy
     of events must reproduce the oracle-checked batch twin

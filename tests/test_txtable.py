@@ -97,34 +97,65 @@ def test_optimize_compacts_transactionally(spark, tmp_path):
 
 
 def test_streaming_upsert_sink_commits_per_batch(spark, tmp_path):
-    path = str(tmp_path / "t")
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    base = spark.createDataFrame([(1, "old"), (2, "old")], ["k", "tag"])
-    txtable.commit(spark, path, base, "create", None)
+    """One commit per micro-batch: the first batch creates the table,
+    the newest row per key wins inside a batch (by ``order_cols``) and
+    the update wins across batches, a crashed writer's staged files
+    stay invisible until vacuumed, and a replayed batch leaves the
+    snapshot's rows unchanged."""
+    path, src, ckpt = (str(tmp_path / n) for n in ("t", "src", "ckpt"))
+    schema = "k BIGINT, ts BIGINT, tag STRING"
 
-    updates = spark.createDataFrame(
-        [(2, "new"), (3, "new"), (4, "new"), (5, "new")], ["k", "tag"]
-    )
-    updates.repartition(2).write.parquet(src)
-    stream = (
-        spark.readStream.schema(updates.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            txtable.streaming_upsert_sink(spark, path, ["k"])
+    def run_batch(name, rows):
+        if rows:
+            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+                os.path.join(src, name)
+            )
+        q = (
+            spark.readStream.schema(schema)
+            .parquet(os.path.join(src, "*"))
+            .writeStream.foreachBatch(
+                txtable.streaming_upsert_sink(spark, path, ["k"], ["ts"])
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        assert q.awaitTermination(180)
+        return {r["k"]: r["tag"] for r in txtable.read_snapshot(spark, path).collect()}
+
+    # (a) the first batch creates the table; (b) key 1 arrives twice in
+    # one batch and only its newest row is committed
+    got = run_batch("b0", [(1, 2, "newest"), (1, 1, "older"), (2, 1, "old")])
+    assert got == {1: "newest", 2: "old"}
+    assert txtable.read_snapshot(spark, path).count() == 2
+    assert [m["operation"] for m in txtable.history(path)] == ["create"]
+
+    # (c) across batches the update wins
+    got = run_batch("b1", [(2, 0, "new"), (3, 0, "new")])
+    assert got == {1: "newest", 2: "new", 3: "new"}
+
+    # (d) a writer staged the next version and died before publishing:
+    # invisible, the next batch publishes past it, vacuum reaps it
+    orphan = txtable._stage_data(
+        spark.createDataFrame([(9, 9, "crash")], schema), path, 2
     )
-    q.awaitTermination(180)
-    got = {r["k"]: r["tag"] for r in txtable.read_snapshot(spark, path).collect()}
-    assert got == {1: "old", 2: "new", 3: "new", 4: "new", 5: "new"}
-    # one commit per non-empty micro-batch on top of v0
-    assert txtable.current_version(path) >= 2
+    got = run_batch("b2", [(4, 0, "new")])
+    assert got == {1: "newest", 2: "new", 3: "new", 4: "new"}
+    assert [m["operation"] for m in txtable.history(path)] == [
+        "create", "merge_upsert", "merge_upsert",
+    ]
+    assert sorted(txtable.vacuum(path, keep_versions=3)) == sorted(orphan)
+
+    # (e) crash between the commit and the checkpoint write: the batch
+    # replays and commits again, with identical rows
+    before = _rows(txtable.read_snapshot(spark, path))
+    commits = os.path.join(ckpt, "commits")
+    last = max((n for n in os.listdir(commits) if n.isdigit()), key=int)
+    for n in (last, f".{last}.crc"):
+        os.remove(os.path.join(commits, n))
+    run_batch("b3", [])
+    assert txtable.current_version(path) == 3
+    assert _rows(txtable.read_snapshot(spark, path)) == before
 
 
 def test_stream_mv_upsert_versions_and_idempotence(spark, tmp_path):

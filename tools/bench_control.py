@@ -64,7 +64,7 @@ def _bench(tree: str, label: str) -> dict:
         ln for ln in proc.stdout.splitlines() if ln.strip().startswith("{")
     ]
     # r17: bench.py additionally re-emits the per-query map in bounded
-    # chunk lines AFTER the headline (tail-survivability for the
+    # chunk lines before the summary (tail-survivability for the
     # driver's capture); those carry "queries" but no "value", so
     # select on both keys to keep taking the one full contract line.
     full = [ln for ln in lines if '"queries"' in ln and '"value"' in ln]
