@@ -12,6 +12,8 @@ from __future__ import annotations
 import argparse
 import sys
 
+from nyc_landmarks_datalake_spark.ingest.csv_ingest import GEOMETRY_MODES, ingest_csv
+
 
 def _spark(shuffle_partitions: int | None):
     from nyc_landmarks_datalake_spark.session import get_spark
@@ -37,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
     ing.add_argument("sidecar_path")
     ing.add_argument("dest_path")
     ing.add_argument("--geometry-mode", default="encode",
-                     choices=("blank", "encode", "parse", "keep"))
+                     choices=GEOMETRY_MODES)
     ing.add_argument("--strict", action="store_true")
 
     args = ap.parse_args(argv)
@@ -65,8 +67,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "ingest":
-        from nyc_landmarks_datalake_spark.ingest.csv_ingest import ingest_csv
-
         spark = _spark(None)
         out = ingest_csv(
             spark,

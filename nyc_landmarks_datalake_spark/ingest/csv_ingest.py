@@ -4,8 +4,9 @@ declarative Spark pipeline.
 
 Reference stage → here:
 
-- S3 event trigger + GET (R1/R3)        → batch: spark.read.csv; stream:
-  streaming.stream_ingest (file-source discovery replaces the trigger)
+- S3 event trigger + GET (R1/R3)        → batch: ``ingest_csv``; stream:
+  ``stream_ingest`` (file-source discovery replaces the trigger); both
+  share one CSV dialect and one silver projection
 - tag lookup + schema fetch (R4/R5)     → sidecar path convention
   (schemas/<table>.json), schema/sidecar.py
 - header validation (R8)                → validate_header, strict or
@@ -21,10 +22,8 @@ Reference stage → here:
 reference's de-facto line transform (R9-R11) for consumers that expect
 its exact output, ragged rows and all.
 
-Scale: the whole pipeline is a scan → project → partitioned write; no
-shuffle at all unless the writer repartitions by partition key (exposed
-as ``repartition_output`` — at 100 TB you want one task per output
-partition slice, not 32 writers × N partitions of small files).
+Scale: the whole pipeline is a scan → project → partitioned write with
+no shuffle: each task writes its slice of every partition it holds.
 """
 
 from __future__ import annotations
@@ -34,8 +33,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from nyc_landmarks_datalake_spark.functions.geometry import (
+    _BLOCK,
     wkt_blank,
     wkt_colon_encode,
     wkt_parse,
@@ -47,6 +48,9 @@ from nyc_landmarks_datalake_spark.schema.sidecar import (
 )
 
 GEOMETRY_MODES = ("blank", "encode", "parse", "keep")
+_GEOMETRY_COL = "the_geom"
+#: proper CSV quoting: a quoted field keeps its commas (SURVEY §1.4.2)
+_CSV_DIALECT = {"header": True, "quote": '"', "escape": '"'}
 
 
 def read_csv_with_sidecar(
@@ -54,8 +58,21 @@ def read_csv_with_sidecar(
 ) -> tuple[DataFrame, T.StructType]:
     """Read CSV with proper quote handling, all columns typed per sidecar."""
     schema = load_sidecar(sidecar_path)
-    df = spark.read.csv(csv_path, header=True, schema=schema, quote='"', escape='"')
+    df = spark.read.options(**_CSV_DIALECT).schema(schema).csv(csv_path)
     return df, schema
+
+
+def _silver(
+    df: DataFrame, schema: T.StructType, geometry_mode: str
+) -> tuple[DataFrame, list[str]]:
+    """The silver projection, batch or stream: the geometry column in
+    ``geometry_mode``, plus the sidecar's partition keys to write by."""
+    if _GEOMETRY_COL in df.columns and geometry_mode != "keep":
+        fn = {"blank": wkt_blank, "encode": wkt_colon_encode, "parse": wkt_parse}[
+            geometry_mode
+        ]
+        df = df.withColumn(_GEOMETRY_COL, fn(F.col(_GEOMETRY_COL)))
+    return df, [k for k in partition_keys(schema) if k in df.columns]
 
 
 def ingest_csv(
@@ -64,31 +81,45 @@ def ingest_csv(
     sidecar_path: str,
     dest_path: str,
     geometry_mode: str = "encode",
-    geometry_col: str = "the_geom",
     strict: bool = False,
-    repartition_output: int | None = None,
 ) -> DataFrame:
     """Full bronze→silver ingest; returns the written DataFrame."""
     if geometry_mode not in GEOMETRY_MODES:
         raise ValueError(f"geometry_mode must be one of {GEOMETRY_MODES}")
     df, schema = read_csv_with_sidecar(spark, csv_path, sidecar_path)
     validate_header(list(df.columns), schema, strict=strict)
-
-    if geometry_col in df.columns and geometry_mode != "keep":
-        fn = {"blank": wkt_blank, "encode": wkt_colon_encode, "parse": wkt_parse}[
-            geometry_mode
-        ]
-        df = df.withColumn(geometry_col, fn(F.col(geometry_col)))
-
-    pkeys = [k for k in partition_keys(schema) if k in df.columns]
-    writer = df
-    if repartition_output and pkeys:
-        writer = df.repartition(repartition_output, *[F.col(k) for k in pkeys])
-    w = writer.write.mode("overwrite")
-    if pkeys:
-        w = w.partitionBy(*pkeys)
-    w.parquet(dest_path)
+    df, pkeys = _silver(df, schema, geometry_mode)
+    df.write.mode("overwrite").partitionBy(*pkeys).parquet(dest_path)
     return df
+
+
+def stream_ingest(
+    spark: SparkSession,
+    raw_dir: str,
+    sidecar_path: str,
+    dest_dir: str,
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """File-source twin of ``ingest_csv`` — the reference's S3-event
+    trigger (CSVIngest.java:28, :210-211) without its one-record-per-
+    event loss: every CSV that has landed in ``raw_dir`` and is not yet
+    in the checkpoint is read once with the sidecar schema, given the
+    same silver projection (encoded geometry, sidecar partition keys)
+    and appended to ``dest_dir`` as parquet. Runs with ``availableNow``,
+    so each call drains the backlog and stops. Headers are not
+    validated: the stream reader drops each file's header line."""
+    schema = load_sidecar(sidecar_path)
+    stream = spark.readStream.options(**_CSV_DIALECT).schema(schema).csv(raw_dir)
+    df, pkeys = _silver(stream, schema, "encode")
+    return (
+        df.writeStream.format("parquet")
+        .option("path", dest_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .partitionBy(*pkeys)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def massage_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
@@ -102,7 +133,7 @@ def massage_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     c = F.col(value_col)
     c = F.regexp_replace(c, '"', "")
     c = F.trim(F.regexp_replace(c, "MULTIPOLYGON ", ""))
-    c = F.regexp_replace(c, r"\(\(\([0-9\-\., ()]+\)\)\)", "")
+    c = F.regexp_replace(c, _BLOCK, "")
     return lines.withColumn(value_col, c)
 
 

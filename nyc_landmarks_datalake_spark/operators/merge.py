@@ -17,12 +17,13 @@ shuffles (what Delta/Iceberg MERGE compiles to under the hood):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.functions.numeric import dsum, dsum_sql
 from nyc_landmarks_datalake_spark.registry import query
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
+from nyc_landmarks_datalake_spark.sources import txtable
 from nyc_landmarks_datalake_spark.sources.catalog import table
 
 ORDER_COLS = [
@@ -56,41 +57,82 @@ def keep_latest(
 
 
 # ---------------------------------------------------------------------------
-# MERGE/upsert census: open orders get a derived update (status 'P',
-# +10% price); the merged table's per-status census proves which version
-# of each key survived.
+# The orders MERGE scenario every query below checks, defined once: open
+# orders get a derived update (status 'P', +10% price); with inserts,
+# every 97th key also arrives again as a new key (+1e9, status 'N').
+# ``_merged_sql`` is its oracle twin, the ``updates``/``merged`` CTEs.
 # ---------------------------------------------------------------------------
-@query(
-    "q_merge_upsert",
-    sql=f"""
+def _orders_updates(base: DataFrame, inserts: bool) -> DataFrame:
+    updates = (
+        base.filter(F.col("o_orderstatus") == "O")
+        .withColumn("o_orderstatus", F.lit("P"))
+        .withColumn("o_totalprice", F.col("o_totalprice") * 1.1)
+    )
+    if not inserts:
+        return updates
+    return updates.unionByName(
+        base.filter(F.col("o_orderkey") % 97 == 0)
+        .withColumn("o_orderkey", F.col("o_orderkey") + 1_000_000_000)
+        .withColumn("o_orderstatus", F.lit("N"))
+    )
+
+
+def _orders_txtable(spark: SparkSession, sf_dir: str, inserts: bool) -> str:
+    """A scratch commit-log table holding orders as v0 and the scenario's
+    MERGE as v1 (stage → publish → snapshot read-back); returns its path."""
+    base = table(spark, sf_dir, "orders").select(*ORDER_COLS)
+    path = scratch_dir(prefix="txlog_orders_")
+    txtable.commit(spark, path, base, "create", expected_version=None)
+    txtable.merge_upsert_tx(
+        spark, path, _orders_updates(base, inserts), ["o_orderkey"]
+    )
+    return path
+
+
+def _census(df: DataFrame, by: str | Column) -> DataFrame:
+    """Row count and exact price sum per ``by``."""
+    return df.groupBy(by).agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        dsum(F.col("o_totalprice")).alias("total_price"),
+    )
+
+
+def _merged_sql(inserts: bool) -> str:
+    new_keys = """
+        UNION ALL
+        SELECT o_orderkey + 1000000000, o_custkey, 'N' AS o_orderstatus,
+               o_totalprice, o_orderdate, o_orderpriority
+        FROM orders WHERE o_orderkey % 97 = 0""" if inserts else ""
+    return f"""
     WITH updates AS (
         SELECT o_orderkey, o_custkey, 'P' AS o_orderstatus,
                o_totalprice * 1.1 AS o_totalprice, o_orderdate, o_orderpriority
-        FROM orders WHERE o_orderstatus = 'O'
+        FROM orders WHERE o_orderstatus = 'O'{new_keys}
     ),
     merged AS (
         SELECT * FROM updates
         UNION ALL
         SELECT {', '.join(ORDER_COLS)} FROM orders
         WHERE o_orderkey NOT IN (SELECT o_orderkey FROM updates)
-    )
+    )"""
+
+
+_STATUS_CENSUS_SQL = f"""
     SELECT o_orderstatus, COUNT(*) AS n_orders,
            {dsum_sql('o_totalprice')} AS total_price
     FROM merged GROUP BY 1
-    """,
-)
+    """
+
+
+# ---------------------------------------------------------------------------
+# MERGE/upsert census: the merged table's per-status census proves which
+# version of each key survived.
+# ---------------------------------------------------------------------------
+@query("q_merge_upsert", sql=_merged_sql(False) + _STATUS_CENSUS_SQL)
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    updates = (
-        base.filter(F.col("o_orderstatus") == "O")
-        .withColumn("o_orderstatus", F.lit("P"))
-        .withColumn("o_totalprice", F.col("o_totalprice") * 1.1)
-    )
-    merged = merge_upsert(base, updates, ["o_orderkey"])
-    return merged.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        dsum(F.col("o_totalprice")).alias("total_price"),
-    )
+    merged = merge_upsert(base, _orders_updates(base, False), ["o_orderkey"])
+    return _census(merged, "o_orderstatus")
 
 
 # ---------------------------------------------------------------------------
@@ -120,50 +162,16 @@ def q_cdc_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Transactional MERGE through the commit-log table format
-# (sources/txtable.py): create the table at v0 from orders, run the
-# same SCD1 upsert as q_merge_upsert THROUGH merge_upsert_tx (stage →
-# publish v1 → snapshot read-back), and census the result. The oracle
-# is identical to q_merge_upsert's — so a broken commit protocol,
+# (sources/txtable.py): the same SCD1 upsert as q_merge_upsert THROUGH
+# merge_upsert_tx, censused from the v1 snapshot. The oracle is
+# identical to q_merge_upsert's — so a broken commit protocol,
 # manifest, or snapshot reader shows up as a red driver row, not just
 # a unit-test failure.
 # ---------------------------------------------------------------------------
-@query(
-    "q_txlog_merge",
-    sql=f"""
-    WITH updates AS (
-        SELECT o_orderkey, o_custkey, 'P' AS o_orderstatus,
-               o_totalprice * 1.1 AS o_totalprice, o_orderdate, o_orderpriority
-        FROM orders WHERE o_orderstatus = 'O'
-    ),
-    merged AS (
-        SELECT * FROM updates
-        UNION ALL
-        SELECT {', '.join(ORDER_COLS)} FROM orders
-        WHERE o_orderkey NOT IN (SELECT o_orderkey FROM updates)
-    )
-    SELECT o_orderstatus, COUNT(*) AS n_orders,
-           {dsum_sql('o_totalprice')} AS total_price
-    FROM merged GROUP BY 1
-    """,
-)
+@query("q_txlog_merge", sql=_merged_sql(False) + _STATUS_CENSUS_SQL)
 def q_txlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    from nyc_landmarks_datalake_spark.sources import txtable
-
-    base = table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    updates = (
-        base.filter(F.col("o_orderstatus") == "O")
-        .withColumn("o_orderstatus", F.lit("P"))
-        .withColumn("o_totalprice", F.col("o_totalprice") * 1.1)
-    )
-    path = scratch_dir(prefix="txlog_orders_")
-    txtable.commit(spark, path, base, "create", expected_version=None)
-    txtable.merge_upsert_tx(spark, path, updates, ["o_orderkey"])
-    merged = txtable.read_snapshot(spark, path)  # latest = v1
-    return merged.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        dsum(F.col("o_totalprice")).alias("total_price"),
-    )
+    path = _orders_txtable(spark, sf_dir, inserts=False)
+    return _census(txtable.read_snapshot(spark, path), "o_orderstatus")
 
 
 # ---------------------------------------------------------------------------
@@ -174,18 +182,7 @@ def q_txlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "q_txlog_time_travel",
-    sql=f"""
-    WITH updates AS (
-        SELECT o_orderkey, o_custkey, 'P' AS o_orderstatus,
-               o_totalprice * 1.1 AS o_totalprice, o_orderdate, o_orderpriority
-        FROM orders WHERE o_orderstatus = 'O'
-    ),
-    merged AS (
-        SELECT * FROM updates
-        UNION ALL
-        SELECT {', '.join(ORDER_COLS)} FROM orders
-        WHERE o_orderkey NOT IN (SELECT o_orderkey FROM updates)
-    )
+    sql=_merged_sql(False) + f"""
     SELECT 0 AS version, o_orderstatus, COUNT(*) AS n_orders,
            {dsum_sql('o_totalprice')} AS total_price
     FROM orders GROUP BY 1, 2
@@ -196,28 +193,15 @@ def q_txlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    path = _orders_txtable(spark, sf_dir, inserts=False)
 
-    from nyc_landmarks_datalake_spark.sources import txtable
+    def census(version: int) -> DataFrame:
+        snap = txtable.read_snapshot(spark, path, version=version)
+        return _census(snap, "o_orderstatus").select(
+            F.lit(version).cast("int").alias("version"), "*"
+        )
 
-    base = table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    updates = (
-        base.filter(F.col("o_orderstatus") == "O")
-        .withColumn("o_orderstatus", F.lit("P"))
-        .withColumn("o_totalprice", F.col("o_totalprice") * 1.1)
-    )
-    path = scratch_dir(prefix="txlog_tt_")
-    txtable.commit(spark, path, base, "create", expected_version=None)
-    txtable.merge_upsert_tx(spark, path, updates, ["o_orderkey"])
-
-    def census(df: DataFrame, version: int) -> DataFrame:
-        return df.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum(F.col("o_totalprice")).alias("total_price"),
-        ).select(F.lit(version).cast("int").alias("version"), "*")
-
-    v0 = txtable.read_snapshot(spark, path, version=0)
-    v1 = txtable.read_snapshot(spark, path)  # latest = v1
-    return census(v0, 0).unionByName(census(v1, 1))
+    return census(0).unionByName(census(1))
 
 
 # ---------------------------------------------------------------------------
@@ -231,22 +215,7 @@ def q_txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "q_txlog_changes",
-    sql=f"""
-    WITH updates AS (
-        SELECT o_orderkey, o_custkey, 'P' AS o_orderstatus,
-               o_totalprice * 1.1 AS o_totalprice, o_orderdate, o_orderpriority
-        FROM orders WHERE o_orderstatus = 'O'
-        UNION ALL
-        SELECT o_orderkey + 1000000000, o_custkey, 'N' AS o_orderstatus,
-               o_totalprice, o_orderdate, o_orderpriority
-        FROM orders WHERE o_orderkey % 97 = 0
-    ),
-    merged AS (
-        SELECT * FROM updates
-        UNION ALL
-        SELECT {', '.join(ORDER_COLS)} FROM orders
-        WHERE o_orderkey NOT IN (SELECT o_orderkey FROM updates)
-    )
+    sql=_merged_sql(True) + f"""
     SELECT CASE WHEN v0.o_orderkey IS NULL THEN 'insert'
                 WHEN v1.o_orderstatus <> v0.o_orderstatus THEN 'update'
                 ELSE 'unchanged' END AS change_type,
@@ -258,24 +227,7 @@ def q_txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_txlog_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    from nyc_landmarks_datalake_spark.sources import txtable
-
-    base = table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    modified = (
-        base.filter(F.col("o_orderstatus") == "O")
-        .withColumn("o_orderstatus", F.lit("P"))
-        .withColumn("o_totalprice", F.col("o_totalprice") * 1.1)
-    )
-    inserted = (
-        base.filter(F.col("o_orderkey") % 97 == 0)
-        .withColumn("o_orderkey", F.col("o_orderkey") + 1_000_000_000)
-        .withColumn("o_orderstatus", F.lit("N"))
-    )
-    path = scratch_dir(prefix="txlog_cdf_")
-    txtable.commit(spark, path, base, "create", expected_version=None)
-    txtable.merge_upsert_tx(spark, path, modified.unionByName(inserted), ["o_orderkey"])
-
+    path = _orders_txtable(spark, sf_dir, inserts=True)
     v0 = txtable.read_snapshot(spark, path, version=0).select(
         F.col("o_orderkey").alias("k0"), F.col("o_orderstatus").alias("status0")
     )
@@ -285,14 +237,9 @@ def q_txlog_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("o_orderstatus") != F.col("status0"), "update")
         .otherwise("unchanged")
     )
-    return (
-        v1.join(v0, v1.o_orderkey == v0.k0, "left")
-        .groupBy(change.alias("change_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            dsum(F.col("o_totalprice")).alias("new_total"),
-        )
-    )
+    return _census(
+        v1.join(v0, v1.o_orderkey == v0.k0, "left"), change.alias("change_type")
+    ).toDF("change_type", "n_rows", "new_total")
 
 
 # ---------------------------------------------------------------------------
@@ -313,48 +260,14 @@ def q_txlog_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "q_incremental_mv_refresh",
-    sql=f"""
-    WITH updates AS (
-        SELECT o_orderkey, o_custkey, 'P' AS o_orderstatus,
-               o_totalprice * 1.1 AS o_totalprice, o_orderdate, o_orderpriority
-        FROM orders WHERE o_orderstatus = 'O'
-        UNION ALL
-        SELECT o_orderkey + 1000000000, o_custkey, 'N' AS o_orderstatus,
-               o_totalprice, o_orderdate, o_orderpriority
-        FROM orders WHERE o_orderkey % 97 = 0
-    ),
-    merged AS (
-        SELECT * FROM updates
-        UNION ALL
-        SELECT {', '.join(ORDER_COLS)} FROM orders
-        WHERE o_orderkey NOT IN (SELECT o_orderkey FROM updates)
-    )
+    sql=_merged_sql(True) + f"""
     SELECT o_orderpriority, COUNT(*) AS n_orders,
            {dsum_sql('o_totalprice')} AS total_price
     FROM merged GROUP BY 1
     """,
 )
 def q_incremental_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    from nyc_landmarks_datalake_spark.sources import txtable
-
-    base = table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    modified = (
-        base.filter(F.col("o_orderstatus") == "O")
-        .withColumn("o_orderstatus", F.lit("P"))
-        .withColumn("o_totalprice", F.col("o_totalprice") * 1.1)
-    )
-    inserted = (
-        base.filter(F.col("o_orderkey") % 97 == 0)
-        .withColumn("o_orderkey", F.col("o_orderkey") + 1_000_000_000)
-        .withColumn("o_orderstatus", F.lit("N"))
-    )
-    path = scratch_dir(prefix="txlog_mv_")
-    txtable.commit(spark, path, base, "create", expected_version=None)
-    txtable.merge_upsert_tx(
-        spark, path, modified.unionByName(inserted), ["o_orderkey"]
-    )
-
+    path = _orders_txtable(spark, sf_dir, inserts=True)
     dec = "decimal(30,6)"
     v0 = txtable.read_snapshot(spark, path, version=0)
     v1 = txtable.read_snapshot(spark, path)

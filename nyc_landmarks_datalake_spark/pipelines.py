@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nyc_landmarks_datalake_spark.ingest.csv_ingest import ingest_csv
-from nyc_landmarks_datalake_spark.schema.sidecar import load_sidecar, partition_keys
+from nyc_landmarks_datalake_spark.schema.sidecar import partition_keys
 
 #: the reference fixture's date format (FIXTURES.md §1)
 LANDMARKS_DATE_FMT = "M/d/yyyy h:mm:ss a Z"
@@ -31,13 +31,13 @@ def ingest_landmarks(
 ) -> DataFrame:
     """Ingest the CSV into ``silver_dir`` and read it back with the schema
     just written, partition keys last (the order a partitioned read
-    gives), so the read-back infers nothing from the files."""
+    gives), so the read-back infers nothing from the files. The written
+    schema carries the sidecar's ``partition_key`` flags as field
+    metadata, so the sidecar is not loaded twice."""
     written = ingest_csv(
         spark, csv_path, sidecar_path, silver_dir, geometry_mode=geometry_mode
     )
-    pkeys = [
-        k for k in partition_keys(load_sidecar(sidecar_path)) if k in written.columns
-    ]
+    pkeys = partition_keys(written.schema)
     fields = [f for f in written.schema if f.name not in pkeys]
     schema = T.StructType(fields + [written.schema[k] for k in pkeys])
     return spark.read.schema(schema).parquet(silver_dir)

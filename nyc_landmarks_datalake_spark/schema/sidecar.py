@@ -78,41 +78,33 @@ def parse_type(type_str: str) -> T.DataType:
     if low.startswith("array<") and s.endswith(">"):
         return T.ArrayType(parse_type(s[6:-1]))
     if low.startswith("map<") and s.endswith(">"):
-        k, v = _split_top_level(s[4:-1])
-        return T.MapType(parse_type(k), parse_type(v))
+        parts = _split_top_level(s[4:-1])
+        if len(parts) != 2:
+            raise ValueError(f"map type needs a key and a value type: {type_str!r}")
+        return T.MapType(parse_type(parts[0]), parse_type(parts[1]))
     if low.startswith("struct<") and s.endswith(">"):
         fields = []
-        for part in _split_struct_fields(s[7:-1]):
-            name, t = part.split(":", 1)
-            fields.append(T.StructField(name.strip(), parse_type(t)))
+        for part in _split_top_level(s[7:-1]):
+            if part.strip():
+                name, t = part.split(":", 1)
+                fields.append(T.StructField(name.strip(), parse_type(t)))
         return T.StructType(fields)
     raise ValueError(f"unsupported sidecar type: {type_str!r}")
 
 
-def _split_top_level(s: str) -> tuple[str, str]:
-    depth = 0
+def _split_top_level(s: str) -> list[str]:
+    """Split ``s`` at the commas outside any <...> or (...) nesting."""
+    parts, depth, start = [], 0, 0
     for i, ch in enumerate(s):
         if ch in "<(":
             depth += 1
         elif ch in ">)":
             depth -= 1
         elif ch == "," and depth == 0:
-            return s[:i], s[i + 1 :]
-    raise ValueError(f"cannot split {s!r}")
-
-
-def _split_struct_fields(s: str) -> list[str]:
-    out, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(s[start:i])
+            parts.append(s[start:i])
             start = i + 1
-    out.append(s[start:])
-    return [p for p in out if p.strip()]
+    parts.append(s[start:])
+    return parts
 
 
 def parse_sidecar(text: str) -> T.StructType:

@@ -63,6 +63,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+#: attempts a merge or optimize makes before giving up on a racing writer
+MAX_ATTEMPTS = 3
+
 
 class CommitConflict(RuntimeError):
     """Another writer published this version first; rebase and retry."""
@@ -180,14 +183,14 @@ def merge_upsert_tx(
     path: str,
     updates: DataFrame,
     keys: list[str],
-    max_retries: int = 3,
 ) -> int:
     """Transactional SCD1 MERGE: read latest snapshot, anti-join the
     bases that collide on ``keys``, union the updates, commit as the
-    next version. Retries on conflict by rebasing on the new latest."""
+    next version. On conflict it rebases on the new latest, up to
+    ``MAX_ATTEMPTS`` attempts in all."""
     from nyc_landmarks_datalake_spark.operators.merge import merge_upsert
 
-    for _ in range(max_retries):
+    for _ in range(MAX_ATTEMPTS):
         base_v = current_version(path)
         if base_v is None:
             raise FileNotFoundError(f"no committed version at {path}")
@@ -197,19 +200,17 @@ def merge_upsert_tx(
             return commit(spark, path, merged, "merge_upsert", base_v)
         except CommitConflict:
             continue
-    raise CommitConflict(f"gave up after {max_retries} rebases at {path}")
+    raise CommitConflict(f"gave up after {MAX_ATTEMPTS} attempts at {path}")
 
 
-def optimize(
-    spark: SparkSession, path: str, target_files: int, max_retries: int = 3
-) -> int:
+def optimize(spark: SparkSession, path: str, target_files: int) -> int:
     """Transactional compaction (the OPTIMIZE maintenance op): rewrite
     the latest snapshot into ~target_files well-sized files and commit
     the rewrite as the next version. Readers on the old version are
     untouched (its files stay until vacuumed); a racing writer wins via
     the usual conflict/rebase loop. Row content is unchanged, so a
     conflict simply rebases onto the racer's snapshot."""
-    for _ in range(max_retries):
+    for _ in range(MAX_ATTEMPTS):
         base_v = current_version(path)
         if base_v is None:
             raise FileNotFoundError(f"no committed version at {path}")
@@ -218,7 +219,7 @@ def optimize(
             return commit(spark, path, snap, "optimize", base_v)
         except CommitConflict:
             continue
-    raise CommitConflict(f"gave up after {max_retries} rebases at {path}")
+    raise CommitConflict(f"gave up after {MAX_ATTEMPTS} attempts at {path}")
 
 
 def streaming_upsert_sink(

@@ -1,12 +1,10 @@
 from nyc_landmarks_datalake_spark.streaming.pipeline import (
     sessionized_stream,
     stream_dedup,
-    stream_ingest,
     windowed_counts,
 )
 
 __all__ = [
-    "stream_ingest",
     "windowed_counts",
     "sessionized_stream",
     "stream_dedup",

@@ -1,65 +1,21 @@
-"""Structured Streaming tier.
+"""Structured Streaming tier (ABSENT in the reference, SURVEY §2.B):
+event-time watermarks, tumbling/session windows, streaming dedup and
+stream joins. The batch twins of the window aggregations are
+oracle-checked in operators/events.py; here the same expressions run
+under the streaming engine with late-data drops. The file-source ingest
+that stands in for the reference's S3-event trigger is
+``ingest.csv_ingest.stream_ingest``, beside the batch ingest it shares
+its CSV dialect and silver projection with.
 
-The reference's unit of streaming is a *file-arrival event*: one S3
-ObjectCreated notification → one Lambda invocation → one object massaged
-(CSVIngest.java:28, :211, :217 — note it silently drops all but the
-first record of a batched event). Spark's file source does the same
-discovery natively — new files in the raw/ zone are picked up exactly
-once per micro-batch, checkpointed — so ``stream_ingest`` IS the
-reference's production path, minus the Lambda plumbing and the
-one-record-per-event bug.
-
-On top (ABSENT in the reference, SURVEY §2.B): event-time watermarks,
-tumbling/session windows, and streaming dedup. The batch twins of the
-window aggregations are oracle-checked in operators/events.py; here the
-same expressions run under the streaming engine with late-data drops.
-
-Scale: file-source ingest is embarrassingly parallel (one task per
-file split); windowed aggs shuffle on (key, window) with state in the
+Scale: windowed aggs shuffle on (key, window) with state in the
 state store — watermarks bound state size, which is what makes a
 100 TB/day stream feasible.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
-
-
-def stream_ingest(
-    spark: SparkSession,
-    raw_dir: str,
-    schema: T.StructType,
-    dest_dir: str,
-    checkpoint_dir: str,
-    partition_cols: list[str] | None = None,
-    transform=None,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """File-source CSV ingest into checkpointed parquet (R1→R14)."""
-    stream = (
-        spark.readStream.format("csv")
-        .option("header", True)
-        .option("quote", '"')
-        .option("escape", '"')
-        .schema(schema)
-        .load(raw_dir)
-    )
-    if transform is not None:
-        stream = transform(stream)
-    writer = (
-        stream.writeStream.format("parquet")
-        .option("path", dest_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_counts(

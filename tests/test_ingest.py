@@ -12,6 +12,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nyc_landmarks_datalake_spark.functions.geometry import (
     wkt_blank,
@@ -27,6 +28,7 @@ from nyc_landmarks_datalake_spark.ingest.csv_ingest import (
 from nyc_landmarks_datalake_spark.schema.sidecar import (
     SchemaValidationError,
     parse_sidecar,
+    parse_type,
     partition_keys,
     validate_header,
 )
@@ -77,6 +79,37 @@ def test_sidecar_grammars():
         assert partition_keys(s) == ["BOROUGH"]
     assert parse_sidecar(bare)["OBJECTID"].dataType.typeName() == "long"
     assert parse_sidecar(bare)["Shape_area"].dataType.typeName() == "double"
+
+
+@pytest.mark.parametrize(
+    "text, want",
+    [
+        ("decimal(12, 2)", T.DecimalType(12, 2)),
+        ("array<map<string,bigint>>",
+         T.ArrayType(T.MapType(T.StringType(), T.LongType()))),
+        ("map<string,struct<a:int,b:array<decimal(10,2)>>>",
+         T.MapType(T.StringType(), T.StructType([
+             T.StructField("a", T.IntegerType()),
+             T.StructField("b", T.ArrayType(T.DecimalType(10, 2))),
+         ]))),
+        ("struct<m:map<string,int>, s:struct<d:date,p:decimal(5,1)>>",
+         T.StructType([
+             T.StructField("m", T.MapType(T.StringType(), T.IntegerType())),
+             T.StructField("s", T.StructType([
+                 T.StructField("d", T.DateType()),
+                 T.StructField("p", T.DecimalType(5, 1)),
+             ])),
+         ])),
+    ],
+)
+def test_parse_type_nested(text, want):
+    assert parse_type(text) == want
+
+
+@pytest.mark.parametrize("text", ["map<string>", "map<string,int,double>"])
+def test_parse_type_malformed_map(text):
+    with pytest.raises(ValueError, match="map type needs a key and a value"):
+        parse_type(text)
 
 
 def test_validate_header_modes():

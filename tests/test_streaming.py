@@ -11,49 +11,48 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nyc_landmarks_datalake_spark.schema.sidecar import parse_sidecar
+from nyc_landmarks_datalake_spark.ingest.csv_ingest import stream_ingest
 from nyc_landmarks_datalake_spark.sources.catalog import table
 from nyc_landmarks_datalake_spark.streaming.pipeline import (
     sessionized_stream,
     stream_dedup,
-    stream_ingest,
     windowed_counts,
 )
 
 SIDECAR = [
     {"key": "id", "type": "bigint", "partition_key": "false", "comment": ""},
     {"key": "name", "type": "string", "partition_key": "false", "comment": ""},
+    {"key": "the_geom", "type": "string", "partition_key": "false", "comment": ""},
     {"key": "zone", "type": "string", "partition_key": "true", "comment": ""},
 ]
+GEOM = '"MULTIPOLYGON (((-73.78 40.79, -73.79 40.80, -73.78 40.79)))"'
 
 
 def test_stream_ingest_file_source(spark, tmp_path):
+    """The file-source ingest takes its schema and partition key from
+    the sidecar and colon-encodes the geometry, as the batch ingest does."""
     raw = tmp_path / "raw"
     raw.mkdir()
-    (raw / "a.csv").write_text("id,name,zone\n1,alpha,QN\n2,beta,BK\n")
-    (raw / "b.csv").write_text('id,name,zone\n3,"gamma, g",QN\n')
-    schema = parse_sidecar(json.dumps(SIDECAR))
+    header = "id,name,the_geom,zone\n"
+    (raw / "a.csv").write_text(header + f"1,alpha,{GEOM},QN\n2,beta,,BK\n")
+    (raw / "b.csv").write_text(header + f'3,"gamma, g",{GEOM},QN\n')
+    sidecar = tmp_path / "sidecar.json"
+    sidecar.write_text(json.dumps(SIDECAR))
     dest = tmp_path / "silver"
-    q = stream_ingest(
-        spark,
-        str(raw),
-        schema,
-        str(dest),
-        str(tmp_path / "ckpt"),
-        partition_cols=["zone"],
-    )
+    args = (spark, str(raw), str(sidecar), str(dest), str(tmp_path / "ckpt"))
+    q = stream_ingest(*args)
     q.awaitTermination(120)
     back = spark.read.parquet(str(dest))
     assert back.count() == 3
     assert {r["name"] for r in back.collect()} == {"alpha", "beta", "gamma, g"}
-    assert (dest / "zone=QN").exists()
+    assert sorted(p.name for p in dest.glob("zone=*")) == ["zone=BK", "zone=QN"]
+    geoms = {r["id"]: r["the_geom"] for r in back.collect()}
+    assert geoms[1] == geoms[3] == "-73.78:40.79::-73.79:40.80::-73.78:40.79"
+    assert geoms[2] in (None, "")
 
     # a newly arrived file is picked up exactly once on the next trigger
-    (raw / "c.csv").write_text("id,name,zone\n4,delta,SI\n")
-    q2 = stream_ingest(
-        spark, str(raw), schema, str(dest), str(tmp_path / "ckpt"),
-        partition_cols=["zone"],
-    )
+    (raw / "c.csv").write_text(header + "4,delta,,SI\n")
+    q2 = stream_ingest(*args)
     q2.awaitTermination(120)
     assert spark.read.parquet(str(dest)).count() == 4
 

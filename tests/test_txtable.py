@@ -96,6 +96,75 @@ def test_optimize_compacts_transactionally(spark, tmp_path):
     assert txtable.read_snapshot(spark, path, 0).count() == 1000
 
 
+def _race_after_read(monkeypatch, spark, path, races):
+    """Wrap ``read_snapshot`` so that on each of the first ``races``
+    reads a racer commits one new key on top of the latest version,
+    after the writer read its base and before it publishes. Returns the
+    racers' keys."""
+    read = txtable.read_snapshot
+    keys: list[int] = []
+
+    def read_then_race(spark_, path_, version=None):
+        snap = read(spark_, path_, version)
+        if len(keys) < races:
+            v = txtable.current_version(path)
+            keys.append(100 + len(keys))
+            row = spark.createDataFrame([(keys[-1], "racer")], "k BIGINT, tag STRING")
+            txtable.commit(spark, path, read(spark, path, v).unionByName(row), "racer", v)
+        return snap
+
+    monkeypatch.setattr(txtable, "read_snapshot", read_then_race)
+    return keys
+
+
+@pytest.mark.parametrize("op", ["merge_upsert", "optimize"])
+def test_rebase_on_racing_writer(spark, tmp_path, monkeypatch, op):
+    """A merge or optimize that loses its publish to a racer rebases on
+    the racer's version and keeps its rows; one that loses every attempt
+    raises CommitConflict after ``MAX_ATTEMPTS``, leaving the racer's
+    version latest and its own staged files as orphans for vacuum."""
+    def run(path):
+        if op == "optimize":
+            return txtable.optimize(spark, path, target_files=1)
+        upd = spark.createDataFrame([(1, "new")], "k BIGINT, tag STRING")
+        return txtable.merge_upsert_tx(spark, path, upd, ["k"])
+
+    read = txtable.read_snapshot  # unwrapped: checking must not race
+
+    def tags(path):
+        return {r["k"]: r["tag"] for r in read(spark, path).collect()}
+
+    base = {0: "a", 1: "a", 2: "a", 3: "a"}
+    once, always = str(tmp_path / "once"), str(tmp_path / "always")
+    for path in (once, always):
+        txtable.commit(spark, path, _mk(spark, 4, "a"), "create", None)
+
+    raced = _race_after_read(monkeypatch, spark, once, races=1)
+    assert run(once) == 2
+    assert [m["operation"] for m in txtable.history(once)] == ["create", "racer", op]
+    want = {**base, raced[0]: "racer"}
+    if op == "merge_upsert":
+        want[1] = "new"
+    assert tags(once) == want
+
+    monkeypatch.undo()
+    raced = _race_after_read(monkeypatch, spark, always, races=10)
+    with pytest.raises(txtable.CommitConflict):
+        run(always)
+    assert len(raced) == txtable.MAX_ATTEMPTS
+    assert txtable.current_version(always) == txtable.MAX_ATTEMPTS
+    assert {m["operation"] for m in txtable.history(always)[1:]} == {"racer"}
+    assert tags(always) == {**base, **{k: "racer" for k in raced}}
+    live = {os.path.dirname(f) for f in txtable.referenced_files(always)}
+    staged = {os.path.join("data", d) for d in os.listdir(os.path.join(always, "data"))}
+    orphans = staged - live
+    assert len(orphans) == txtable.MAX_ATTEMPTS
+    deleted = txtable.vacuum(always, keep_versions=txtable.MAX_ATTEMPTS + 1)
+    assert deleted and {os.path.dirname(f) for f in deleted} == orphans
+    assert {os.path.join("data", d) for d in os.listdir(os.path.join(always, "data"))} == live
+    assert tags(always) == {**base, **{k: "racer" for k in raced}}
+
+
 def test_streaming_upsert_sink_commits_per_batch(spark, tmp_path):
     """One commit per micro-batch: the first batch creates the table,
     the newest row per key wins inside a batch (by ``order_cols``) and
