@@ -108,6 +108,23 @@ REVERIFY: frozenset[str] = frozenset(
         "q_txlog_time_travel",
         "q_txlog_changes",
         "q_incremental_mv_refresh",
+        # every finite streaming replay now runs through the one
+        # stage/file_stream/replay protocol in streaming/guard.py
+        # (hash-identical at sf0.001 and sf0.01).
+        "q_stream_dedup",
+        "q_stream_dedup_watermarked",
+        "q_stateful_user_profiles",
+        "q_stream_tumbling_replay",
+        "q_stream_sliding_replay",
+        "q_stream_session_replay",
+        "q_stream_interval_join",
+        "q_stream_static_join",
+        "q_stream_semi_join",
+        "q_stream_outer_join",
+        "q_stream_full_outer_join",
+        "q_stream_join_windowed",
+        "q_stream_ingest_dedup",
+        "q_stream_mv_upsert",
     }
 )
 

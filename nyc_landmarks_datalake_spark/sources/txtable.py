@@ -21,8 +21,9 @@ because nothing references it (snapshot isolation). Writers stage data
 files first, then publish the manifest with ``os.link`` (hard-link
 then unlink), which FAILS if the version already exists — two racing
 writers can both stage, but only one publishes; the loser gets
-:class:`CommitConflict` and must rebase (optimistic concurrency, the
-same protocol Delta uses on HDFS-like stores).
+:class:`CommitConflict` and must rebase — :func:`rewrite` re-runs its
+transform on the winner's snapshot (optimistic concurrency, the same
+protocol Delta uses on HDFS-like stores).
 
 Reads trust the manifest schema: a reader is built with
 ``spark.read.schema(<manifest schema>)`` and never infers one from the
@@ -63,7 +64,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-#: attempts a merge or optimize makes before giving up on a racing writer
+#: attempts a :func:`rewrite` makes before giving up on a racing writer
 MAX_ATTEMPTS = 3
 
 
@@ -178,48 +179,47 @@ def read_snapshot(
     )
 
 
+def rewrite(spark: SparkSession, path: str, operation: str, fn) -> int:
+    """Commit ``fn(latest snapshot)`` as the next version. When a racer
+    publishes that version first, re-run ``fn`` on the racer's snapshot
+    and try again (Delta's rebase), up to ``MAX_ATTEMPTS`` attempts in
+    all. Staged files of a lost attempt are orphans until vacuumed."""
+    for _ in range(MAX_ATTEMPTS):
+        base_v = current_version(path)
+        if base_v is None:
+            raise FileNotFoundError(f"no committed version at {path}")
+        snap = fn(read_snapshot(spark, path, base_v))
+        try:
+            return commit(spark, path, snap, operation, base_v)
+        except CommitConflict:
+            continue
+    raise CommitConflict(f"gave up after {MAX_ATTEMPTS} attempts at {path}")
+
+
 def merge_upsert_tx(
     spark: SparkSession,
     path: str,
     updates: DataFrame,
     keys: list[str],
 ) -> int:
-    """Transactional SCD1 MERGE: read latest snapshot, anti-join the
-    bases that collide on ``keys``, union the updates, commit as the
-    next version. On conflict it rebases on the new latest, up to
-    ``MAX_ATTEMPTS`` attempts in all."""
+    """Transactional SCD1 MERGE: the latest snapshot minus the rows
+    whose ``keys`` collide with ``updates``, plus ``updates``, committed
+    through :func:`rewrite`."""
     from nyc_landmarks_datalake_spark.operators.merge import merge_upsert
 
-    for _ in range(MAX_ATTEMPTS):
-        base_v = current_version(path)
-        if base_v is None:
-            raise FileNotFoundError(f"no committed version at {path}")
-        base = read_snapshot(spark, path, base_v)
-        merged = merge_upsert(base, updates, keys)
-        try:
-            return commit(spark, path, merged, "merge_upsert", base_v)
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"gave up after {MAX_ATTEMPTS} attempts at {path}")
+    return rewrite(
+        spark, path, "merge_upsert", lambda base: merge_upsert(base, updates, keys)
+    )
 
 
 def optimize(spark: SparkSession, path: str, target_files: int) -> int:
     """Transactional compaction (the OPTIMIZE maintenance op): rewrite
     the latest snapshot into ~target_files well-sized files and commit
-    the rewrite as the next version. Readers on the old version are
-    untouched (its files stay until vacuumed); a racing writer wins via
-    the usual conflict/rebase loop. Row content is unchanged, so a
-    conflict simply rebases onto the racer's snapshot."""
-    for _ in range(MAX_ATTEMPTS):
-        base_v = current_version(path)
-        if base_v is None:
-            raise FileNotFoundError(f"no committed version at {path}")
-        snap = read_snapshot(spark, path, base_v).repartition(target_files)
-        try:
-            return commit(spark, path, snap, "optimize", base_v)
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"gave up after {MAX_ATTEMPTS} attempts at {path}")
+    the rewrite through :func:`rewrite`. Readers on the old version are
+    untouched (its files stay until vacuumed)."""
+    return rewrite(
+        spark, path, "optimize", lambda snap: snap.repartition(target_files)
+    )
 
 
 def streaming_upsert_sink(

@@ -6,8 +6,7 @@ once, at first sight, across ALL micro-batches. This is the dedup half
 of at-least-once ingestion: upstream retries/replays collapse to one
 row downstream.
 
-Replay harness mirrors streaming/stateful.py: the batch table is staged
-to files and streamed with ``maxFilesPerTrigger=1``, so the no-re-emit
+Replayed through the protocol in streaming/guard.py, so the no-re-emit
 guarantee is exercised across REAL micro-batch boundaries (a key seen
 in batch 0 must stay suppressed in batch 3 via recovered state, not
 within-batch distinct).
@@ -27,55 +26,28 @@ replay here omits the watermark because the staged table is finite
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
-from nyc_landmarks_datalake_spark.streaming.guard import finish_replay, replay_session
+from nyc_landmarks_datalake_spark.streaming.guard import (
+    file_stream,
+    replay,
+    replay_session,
+    stage,
+)
 
 
 def replay_stream_dedup(
-    spark,
-    rows: DataFrame,
-    keys: list[str],
-    n_source_files: int = 4,
-    timeout_s: int = 300,
+    spark, rows: DataFrame, keys: list[str], n_source_files: int = 4
 ) -> DataFrame:
-    """Stage ``rows`` and replay them file-by-file through streaming
-    ``dropDuplicates(keys)``; return everything emitted. The temp dir
-    must outlive the returned lazy DataFrame (OS tmp reaper cleans it —
-    never clean up inside a registered query callable)."""
-    import os
-
+    """Replay ``rows`` file-by-file through streaming
+    ``dropDuplicates(keys)``; return everything emitted."""
     base = scratch_dir(prefix="stream_dedup_")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    rows.repartition(n_source_files).write.mode("overwrite").parquet(src)
-
-    # low-state-partition replay clone (stream_join.py discipline):
-    # one state-store instance per shuffle partition per stateful
-    # operator per micro-batch makes the parent session's 32
-    # partitions pure store overhead at replay scale
-    sess = replay_session(spark)
-    stream = (
-        sess.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        stream.dropDuplicates(keys)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_dedup")
-    return spark.read.parquet(out)
+    src = stage(rows, os.path.join(base, "src"), n_source_files)
+    stream = file_stream(replay_session(spark), src, rows.schema)
+    return replay(spark, stream.dropDuplicates(keys), base, "stream_dedup")
 
 
 def replay_stream_dedup_watermarked(
@@ -85,7 +57,6 @@ def replay_stream_dedup_watermarked(
     ts_col: str = "ts",
     delay: str = "3650 days",
     n_source_files: int = 4,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Replay through ``withWatermark + dropDuplicatesWithinWatermark``
     — the bounded-state production form of streaming dedup (state for a
@@ -102,39 +73,11 @@ def replay_stream_dedup_watermarked(
     the event-time column: first-seen rows carry arbitrary non-key
     columns under arrival-order nondeterminism (same reasoning as
     replay_stream_dedup's key-only projection)."""
-    import os
-
     base = scratch_dir(prefix="stream_dedup_wm_")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    rows.repartition(n_source_files).write.mode("overwrite").parquet(src)
-
-    # low-state-partition replay clone (stream_join.py discipline):
-    # one state-store instance per shuffle partition per stateful
-    # operator per micro-batch makes the parent session's 32
-    # partitions pure store overhead at replay scale
-    sess = replay_session(spark)
-    stream = (
-        sess.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        stream.withWatermark(ts_col, delay)
-        .dropDuplicatesWithinWatermark(keys)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_dedup")
-    return spark.read.parquet(out)
+    src = stage(rows, os.path.join(base, "src"), n_source_files)
+    stream = file_stream(replay_session(spark), src, rows.schema)
+    deduped = stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(keys)
+    return replay(spark, deduped, base, "stream_dedup")
 
 
 def _register_queries() -> None:

@@ -1,50 +1,64 @@
-"""Fail-loud completion guard for finite streaming replays.
+"""The finite streaming replay protocol.
 
-``awaitTermination(timeout)`` returns ``False`` on timeout with the
-query still RUNNING — reading the sink then would return a partial
-mid-replay result (or nothing), a silently-wrong answer. Every replay
-in this package funnels through :func:`finish_replay` so a hung replay
-raises instead.
+A replay runs a batch table through the REAL streaming engine so an
+operator's state has to carry across micro-batch boundaries, and then
+compares the result with a batch oracle. Every replay in this package
+takes the same steps:
+
+1. :func:`stage` writes the input as parquet files;
+2. :func:`file_stream` reads them back as a stream, one file per
+   micro-batch (``maxFilesPerTrigger=1``);
+3. :func:`replay` runs a ``foreachBatch`` sink with its checkpoint
+   under the replay's base dir and an ``availableNow`` trigger, waits
+   in :func:`finish_replay`, and reads the sink's output (``<base>/out``)
+   back with the caller's session.
+
+``finish_replay`` fails loud: ``awaitTermination(timeout)`` returns
+``False`` on timeout with the query still RUNNING, and reading the sink
+then would return a partial result (or nothing), a silently wrong
+answer. A hung replay is stopped and raises instead.
+
+Stateful replays stream on :func:`replay_session`, a clone with few
+shuffle partitions. A streaming query keeps one state-store instance
+per shuffle partition per stateful operator per micro-batch, so at
+replay scale (a few thousand rows) the parent session's 32 partitions
+are pure store-provider overhead (the stream-stream outer join spent
+~9% of the whole bench on it). The clone shares the SparkContext but
+has its own SessionState, so the shared session's conf is never
+mutated mid-query. The sink writes plain parquet, so the caller's
+session reads the result back with its own conf. The base dir must
+outlive the returned lazy DataFrame: callers take it from
+``scratch.scratch_dir``, which cleans up at interpreter exit.
 """
 
 from __future__ import annotations
 
-#: one cached clone per (application, partition count) — replays used
-#: to call ``newSession()`` per invocation, leaking a SessionState (and
-#: its listener/conf machinery) each time a replay query ran. Keyed on
-#: applicationId (not ``id(sparkContext)``: CPython reuses id() after
-#: GC, so a restarted context could collide with a dead clone's key)
-#: and validated for liveness before reuse.
-_REPLAY_SESSIONS: dict[tuple[str, int], object] = {}
+import os
+
+from pyspark.sql import DataFrame
+
+#: shuffle partitions of the replay clone; on a real cluster size this
+#: to executor count × state volume instead
+REPLAY_SHUFFLE_PARTITIONS = 8
+
+#: seconds a replay may run before :func:`finish_replay` gives up
+REPLAY_TIMEOUT_S = 300
+
+#: one cached clone per application — a ``newSession()`` per replay
+#: leaked a SessionState (and its listener/conf machinery) each time.
+#: Keyed on applicationId (not ``id(sparkContext)``: CPython reuses id()
+#: after GC, so a restarted context could collide with a dead clone's
+#: key) and validated for liveness before reuse.
+_REPLAY_SESSIONS: dict[str, object] = {}
 
 
-def replay_session(spark, shuffle_partitions: int = 8):
-    """A cloned session with a low shuffle-partition count for finite
-    replays.
-
-    A stateful streaming query materializes one state-store instance
-    per shuffle partition per stateful operator per micro-batch — at
-    local replay scale (a few thousand rows) the parent session's 32
-    partitions are pure store-provider overhead (the stream-stream
-    outer join spent ~9% of the whole bench on it). Cloning
-    (``newSession``: shared SparkContext, own SessionState) lets the
-    replay run with few state partitions WITHOUT mutating the shared
-    session's conf mid-query (the r9 rule). On a real cluster the
-    caller passes a partition count sized to executor count × state
-    volume instead.
-
-    The replay's sink writes plain parquet, so the caller's session
-    reads the result back with its own conf — cross-session handoff
-    through the filesystem, no session-state coupling.
-
-    The clone is CACHED per (SparkContext, partition count) and reused
-    across replays: each replay runs to completion before the next
-    starts (finish_replay blocks) and leaves no state behind — sinks
-    are per-call tmp dirs and no temp views are registered — so a
-    fresh SessionState per invocation bought nothing and accumulated
-    one leaked clone per replayed query for the life of the JVM.
-    """
-    key = (spark.sparkContext.applicationId, shuffle_partitions)
+def replay_session(spark):
+    """The cached low-shuffle-partition clone of ``spark`` for stateful
+    replays. Reuse is safe: each replay runs to completion before the
+    next starts (finish_replay blocks), sinks are per-call dirs and no
+    temp views are registered, so a clone carries nothing between
+    replays."""
+    key = spark.sparkContext.applicationId
     sess = _REPLAY_SESSIONS.get(key)
     if sess is not None:
         # a cached clone can outlive its context (stop() + new session
@@ -62,13 +76,62 @@ def replay_session(spark, shuffle_partitions: int = 8):
             sess = None
     if sess is None:
         sess = spark.newSession()
-        sess.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        sess.conf.set(
+            "spark.sql.shuffle.partitions", str(REPLAY_SHUFFLE_PARTITIONS)
+        )
         _REPLAY_SESSIONS[key] = sess
     return sess
 
 
+def stage(rows: DataFrame, path: str, n_files: int) -> str:
+    """Write ``rows`` as ``n_files`` parquet files under ``path``."""
+    rows.repartition(n_files).write.mode("overwrite").parquet(path)
+    return path
+
+
+def file_stream(sess, path: str, schema) -> DataFrame:
+    """The staged files under ``path`` as a stream, one file per
+    micro-batch."""
+    return sess.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
+
+
+def replay(
+    spark,
+    query: DataFrame,
+    base: str,
+    zone: str,
+    mode: str = "append",
+    sink=None,
+    timeout_s: int = REPLAY_TIMEOUT_S,
+) -> DataFrame | None:
+    """Run the streaming ``query`` to completion (checkpoint under
+    ``base``, ``availableNow``) and return its output read back with
+    ``spark``. The default sink appends each micro-batch to
+    ``<base>/out``, or overwrites it in complete mode, so the last
+    complete snapshot survives. A caller-supplied ``sink`` writes where
+    it likes, and the caller reads it back: ``replay`` returns None."""
+    out = os.path.join(base, "out")
+    own_sink = sink is None
+    if own_sink:
+        write_mode = "overwrite" if mode == "complete" else "append"
+
+        def sink(batch_df: DataFrame, _batch_id: int) -> None:
+            batch_df.write.mode(write_mode).parquet(out)
+
+    q = (
+        query.writeStream.foreachBatch(sink)
+        .outputMode(mode)
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    finish_replay(q, timeout_s, zone)
+    return spark.read.parquet(out) if own_sink else None
+
+
 def finish_replay(q, timeout_s: int, zone: str) -> None:
-    """Block until the streaming query ``q`` terminates; raise on timeout."""
+    """Block until the streaming query ``q`` terminates; stop it and
+    raise on timeout."""
     if not q.awaitTermination(timeout_s):
         q.stop()
         raise RuntimeError(

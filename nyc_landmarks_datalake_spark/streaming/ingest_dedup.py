@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
-from nyc_landmarks_datalake_spark.streaming.guard import finish_replay
+from nyc_landmarks_datalake_spark.streaming.guard import file_stream, replay
 
 
 def _band_keys(docs: DataFrame) -> DataFrame:
@@ -75,7 +75,6 @@ def replay_stream_ingest_dedup(
     spark,
     docs: DataFrame,
     n_source_files: int = 3,
-    timeout_s: int = 600,
 ) -> DataFrame:
     """Stage ``docs`` (doc_id, source, text) and replay them micro-batch
     by micro-batch through the ingest-dedup loop; return one row per
@@ -94,7 +93,6 @@ def replay_stream_ingest_dedup(
     """
     base = scratch_dir(prefix="stream_ingest_dedup_")
     src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
     store = os.path.join(base, "store")
     out = os.path.join(base, "out")
     staged = docs.select("doc_id", "source", "text")
@@ -158,23 +156,11 @@ def replay_stream_ingest_dedup(
             "band_id", "band_hash", F.col("bmin_batch").alias("bmin")
         ).write.mode("append").parquet(store)
 
-    # NOTE: deliberately NOT on the replay_session clone — this replay
-    # has no stateful streaming operator (dedup state lives in the
-    # parquet side-store), so there is no per-partition state-store
-    # overhead to save; the 8-partition clone only throttled the real
-    # per-batch minhash/join compute (measured +2.4 s at sf0.1 r16)
-    stream = (
-        spark.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(tick)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_ingest_dedup")
+    # on the caller's session: no stateful operator (dedup state lives
+    # in the parquet side-store), so the replay clone would only
+    # throttle the per-batch minhash/join compute (+2.4 s at sf0.1)
+    stream = file_stream(spark, src, staged.schema)
+    replay(spark, stream, base, "stream_ingest_dedup", sink=tick, timeout_s=600)
     return spark.read.parquet(out)
 
 

@@ -22,7 +22,10 @@ Correctness properties exercised:
     guard (its merge replaces rows per key, so a replay converges),
     but an ADDITIVE merge must implement it;
   * snapshot isolation — mid-stream readers see a committed version,
-    never a half-merged state (inherited from sources/txtable.py).
+    never a half-merged state (inherited from sources/txtable.py);
+  * rebase — the add is the ``fn`` of ``txtable.rewrite``, so a batch
+    that loses its publish to a racing writer re-adds its delta onto
+    the racer's snapshot instead of failing or overwriting it.
 
 At 100 TB: each micro-batch shuffles only its delta (map-side
 combinable hash agg); the snapshot read + merge is bounded by the MV
@@ -31,14 +34,18 @@ size (distinct users), not the feed; version manifests are O(1) each.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
 from nyc_landmarks_datalake_spark.sources import txtable
 from nyc_landmarks_datalake_spark.streaming.guard import (
-    finish_replay,
+    file_stream,
+    replay,
     replay_session,
+    stage,
 )
 
 MV_SCHEMA = "user_id BIGINT, n_events BIGINT, sum_event_ids BIGINT"
@@ -50,22 +57,15 @@ def _committed_ops(path: str) -> set[str]:
 
 
 def replay_stream_mv_upsert(
-    spark,
-    events: DataFrame,
-    n_source_files: int = 3,
-    timeout_s: int = 300,
+    spark, events: DataFrame, n_source_files: int = 3
 ) -> DataFrame:
-    """Stage the feed as ``n_source_files`` parquet files, replay it
-    through the per-batch delta→read→add→commit loop, return the final
-    MV snapshot (read with the CALLER's session)."""
-    import os
+    """Replay the feed through the per-batch delta→read→add→commit loop
+    and return the final MV snapshot (read with the CALLER's session)."""
+    from nyc_landmarks_datalake_spark.operators.merge import merge_upsert
 
     base = scratch_dir(prefix="stream_mv_")
-    src = os.path.join(base, "events")
+    src = stage(events, os.path.join(base, "events"), n_source_files)
     tbl = os.path.join(base, "mv")
-    ckpt = os.path.join(base, "ckpt")
-    events.repartition(n_source_files).write.mode("overwrite").parquet(src)
-
     sess = replay_session(spark)
     empty = sess.createDataFrame([], MV_SCHEMA)
     txtable.commit(sess, tbl, empty, "create", expected_version=None)
@@ -80,11 +80,9 @@ def replay_stream_mv_upsert(
             F.count(F.lit(1)).cast("long").alias("d_n"),
             F.sum("event_id").cast("long").alias("d_sum"),
         )
-        base_v = txtable.current_version(tbl)
-        cur = txtable.read_snapshot(sess, tbl, base_v)
-        updated = (
-            delta.join(cur, "user_id", "left")
-            .select(
+
+        def add(cur: DataFrame) -> DataFrame:
+            updated = delta.join(cur, "user_id", "left").select(
                 "user_id",
                 (F.col("d_n") + F.coalesce(F.col("n_events"), F.lit(0)))
                 .cast("long")
@@ -93,22 +91,12 @@ def replay_stream_mv_upsert(
                 .cast("long")
                 .alias("sum_event_ids"),
             )
-        )
-        from nyc_landmarks_datalake_spark.operators.merge import merge_upsert
+            return merge_upsert(cur, updated, ["user_id"])
 
-        merged = merge_upsert(cur, updated, ["user_id"])
-        txtable.commit(sess, tbl, merged, op, base_v)
+        txtable.rewrite(sess, tbl, op, add)
 
-    q = (
-        sess.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_mv_upsert")
+    stream = file_stream(sess, src, events.schema)
+    replay(spark, stream, base, "stream_mv_upsert", sink=sink)
     return txtable.read_snapshot(spark, tbl)
 
 

@@ -14,6 +14,7 @@ windows feasible on unbounded streams.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -22,7 +23,12 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
-from nyc_landmarks_datalake_spark.streaming.guard import finish_replay, replay_session
+from nyc_landmarks_datalake_spark.streaming.guard import (
+    file_stream,
+    replay,
+    replay_session,
+    stage,
+)
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -150,58 +156,21 @@ def user_profiles_exact(events: DataFrame) -> DataFrame:
 
 
 def replay_user_profiles(
-    spark, events: DataFrame, n_source_files: int = 4, timeout_s: int = 300
+    spark, events: DataFrame, n_source_files: int = 4
 ) -> DataFrame:
-    """Run :func:`user_profiles_exact` as a REAL streaming query
-    (availableNow, ``maxFilesPerTrigger=1`` so state genuinely carries
-    across micro-batches) and return the final per-user profiles.
-
-    The batch source is staged to a temp dir and replayed file-by-file;
-    in update mode a user re-emits with strictly growing ``n_events``
-    whenever a batch touches it, so the final profile is the max-count
-    row per user. The temp dir must outlive the returned (lazy)
-    DataFrame, so it is left for the OS tmp reaper."""
-    import os
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    """Replay :func:`user_profiles_exact` over ``events`` and return the
+    final per-user profiles. In update mode a user re-emits with
+    strictly growing ``n_events`` whenever a batch touches it, so the
+    final profile is the max-count row per user."""
+    from nyc_landmarks_datalake_spark.operators.merge import keep_latest
 
     base = scratch_dir(prefix="stateful_profiles_")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    events.repartition(n_source_files).write.mode("overwrite").parquet(src)
-
-    # low-state-partition replay clone (stream_join.py discipline):
-    # one state-store instance per shuffle partition per stateful
-    # operator per micro-batch makes the parent session's 32
-    # partitions pure store overhead at replay scale
-    sess = replay_session(spark)
-    stream = (
-        sess.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    src = stage(events, os.path.join(base, "src"), n_source_files)
+    stream = file_stream(replay_session(spark), src, events.schema)
+    emitted = replay(
+        spark, user_profiles_exact(stream), base, "stateful_profiles", mode="update"
     )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        user_profiles_exact(stream)
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stateful_profiles")
-    emitted = spark.read.parquet(out)
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        emitted.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return keep_latest(emitted, ["user_id"], ["n_events"])
 
 
 def _register_queries() -> None:

@@ -24,51 +24,73 @@ predicate prunes state by event time.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
 from nyc_landmarks_datalake_spark.streaming.guard import (
-    finish_replay,
+    file_stream,
+    replay,
     replay_session,
+    stage,
 )
 
 JOIN_WINDOW_HOURS = 6
 
+#: watermark delay of both feeds: beyond the staged data's full
+#: event-time span, so no real row is ever late
+WM_DELAY = "90 days"
 
-def replay_stream_interval_join(
-    spark,
+#: the click and purchase feeds and the join predicate, as oracle SQL
+_FEEDS_SQL = """
+        a AS (
+            SELECT event_id AS click_id, user_id AS click_user, ts AS click_ts
+            FROM events WHERE event_type = 'click'
+        ),
+        b AS (
+            SELECT event_id AS purchase_id, user_id AS purchase_user,
+                   ts AS purchase_ts
+            FROM events WHERE event_type = 'purchase'
+        )"""
+_ON_SQL = f"""a.click_user = b.purchase_user
+         AND a.click_ts BETWEEN
+             b.purchase_ts - INTERVAL {JOIN_WINDOW_HOURS} HOURS AND b.purchase_ts"""
+
+
+def _feeds(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The events table split into the click and the purchase feed."""
+    from nyc_landmarks_datalake_spark.sources.catalog import table
+
+    ev = table(spark, sf_dir, "events")
+
+    def feed(kind: str) -> DataFrame:
+        return ev.filter(F.col("event_type") == kind).select(
+            F.col("event_id").alias(f"{kind}_id"),
+            F.col("user_id").alias(f"{kind}_user"),
+            F.col("ts").alias(f"{kind}_ts"),
+        )
+
+    return feed("click"), feed("purchase")
+
+
+def _interval_join(
+    sess,
     clicks: DataFrame,
+    src_a: str,
     purchases: DataFrame,
-    n_source_files: int = 2,
-    timeout_s: int = 300,
+    src_b: str,
+    how: str,
 ) -> DataFrame:
-    """Stage both inputs and replay them through a watermarked
-    stream-stream interval join; return every emitted pair. Temp dirs
-    must outlive the returned lazy DataFrame (OS reaper cleans them)."""
-    import os
-
-    base = scratch_dir(prefix="stream_join_")
-    src_a = os.path.join(base, "clicks")
-    src_b = os.path.join(base, "purchases")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    clicks.repartition(n_source_files).write.mode("overwrite").parquet(src_a)
-    purchases.repartition(n_source_files).write.mode("overwrite").parquet(src_b)
-
-    a = (
-        spark.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_a)
-        .withWatermark("click_ts", "90 days")
+    """The staged click and purchase feeds streamed on ``sess`` with
+    watermarks and joined on user, each click to the purchases in the
+    ``JOIN_WINDOW_HOURS`` after it."""
+    a = file_stream(sess, src_a, clicks.schema).withWatermark("click_ts", WM_DELAY)
+    b = file_stream(sess, src_b, purchases.schema).withWatermark(
+        "purchase_ts", WM_DELAY
     )
-    b = (
-        spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_b)
-        .withWatermark("purchase_ts", "90 days")
-    )
-    joined = a.join(
+    return a.join(
         b,
         (a.click_user == b.purchase_user)
         & (
@@ -77,62 +99,45 @@ def replay_stream_interval_join(
                 F.col("purchase_ts"),
             )
         ),
+        how,
     )
 
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
 
-    q = (
-        joined.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+def replay_stream_interval_join(
+    spark,
+    clicks: DataFrame,
+    purchases: DataFrame,
+    n_source_files: int = 2,
+) -> DataFrame:
+    """Replay both inputs through the watermarked stream-stream interval
+    join; return every emitted pair."""
+    base = scratch_dir(prefix="stream_join_")
+    src_a = stage(clicks, os.path.join(base, "clicks"), n_source_files)
+    src_b = stage(purchases, os.path.join(base, "purchases"), n_source_files)
+    joined = _interval_join(
+        replay_session(spark), clicks, src_a, purchases, src_b, "inner"
     )
-    finish_replay(q, timeout_s, "stream_join")
-    return spark.read.parquet(out)
+    return replay(spark, joined, base, "stream_join")
 
 
 def _register_queries() -> None:
     from nyc_landmarks_datalake_spark.registry import query
-    from nyc_landmarks_datalake_spark.sources.catalog import table
 
     @query(
         "q_stream_interval_join",
         sql=f"""
-        WITH a AS (
-            SELECT event_id AS click_id, user_id AS click_user, ts AS click_ts
-            FROM events WHERE event_type = 'click'
-        ),
-        b AS (
-            SELECT event_id AS purchase_id, user_id AS purchase_user,
-                   ts AS purchase_ts
-            FROM events WHERE event_type = 'purchase'
-        )
+        WITH {_FEEDS_SQL}
         SELECT a.click_user AS user_id,
                COUNT(*) AS n_pairs,
                CAST(SUM(a.click_id) AS BIGINT) AS sum_click_ids,
                CAST(SUM(b.purchase_id) AS BIGINT) AS sum_purchase_ids
         FROM a JOIN b
-          ON a.click_user = b.purchase_user
-         AND a.click_ts BETWEEN
-             b.purchase_ts - INTERVAL {JOIN_WINDOW_HOURS} HOURS AND b.purchase_ts
+          ON {_ON_SQL}
         GROUP BY 1
         """,
     )
     def q_stream_interval_join(spark, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("purchase_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        pairs = replay_stream_interval_join(spark, clicks, purchases)
+        pairs = replay_stream_interval_join(spark, *_feeds(spark, sf_dir))
         return pairs.groupBy(F.col("click_user").alias("user_id")).agg(
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum("click_id").alias("sum_click_ids"),
@@ -149,41 +154,17 @@ def replay_stream_static_join(
     static_dim: DataFrame,
     on,
     n_source_files: int = 3,
-    timeout_s: int = 300,
 ) -> DataFrame:
-    """Stage ``stream_rows`` and replay file-by-file joined against the
-    static (batch) dimension — the per-micro-batch enrichment pattern.
-    The static side is planned fresh each micro-batch (broadcast at dim
-    scale); an inner equi-join emits each enriched row exactly once
-    regardless of arrival order, which is what makes the replay
-    oracle-checkable."""
-    import os
-
+    """Replay ``stream_rows`` joined against the static (batch)
+    dimension — the per-micro-batch enrichment pattern. The static side
+    is planned fresh each micro-batch (broadcast at dim scale); an inner
+    equi-join emits each enriched row exactly once regardless of arrival
+    order, which is what makes the replay oracle-checkable. It keeps no
+    streaming state, so it streams on the caller's session."""
     base = scratch_dir(prefix="stream_static_")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    stream_rows.repartition(n_source_files).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema(stream_rows.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    joined = stream.join(static_dim, on)
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        joined.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_static")
-    return spark.read.parquet(out)
+    src = stage(stream_rows, os.path.join(base, "src"), n_source_files)
+    joined = file_stream(spark, src, stream_rows.schema).join(static_dim, on)
+    return replay(spark, joined, base, "stream_static")
 
 
 def _register_static_join() -> None:
@@ -239,8 +220,7 @@ _register_static_join()
 
 #: beyond every real ts + watermark delay + join window at any sf
 #: (events span a fixed 30-day window from 2024-01-01 at every scale)
-OUTER_FLUSH_TS = "2025-06-01 00:00:00"
-OUTER_WM_DELAY = "90 days"
+FLUSH_TS = "2025-06-01 00:00:00"
 
 
 def _stage_feeds_with_flush(
@@ -270,17 +250,14 @@ def _stage_feeds_with_flush(
     snapshot — a max-mtime pick can tie with a data part on
     coarse-granularity filesystems and bump the wrong file.
     """
-    import os
     import time as _time
 
-    src_a = os.path.join(base, "clicks")
-    src_b = os.path.join(base, "purchases")
-    clicks.repartition(n_source_files).write.mode("overwrite").parquet(src_a)
-    purchases.repartition(n_source_files).write.mode("overwrite").parquet(src_b)
+    src_a = stage(clicks, os.path.join(base, "clicks"), n_source_files)
+    src_b = stage(purchases, os.path.join(base, "purchases"), n_source_files)
 
     data_cutoff = _time.time()
     for k in range(n_flush_files):
-        flush = F.to_timestamp(F.lit(OUTER_FLUSH_TS)) + F.expr(
+        flush = F.to_timestamp(F.lit(FLUSH_TS)) + F.expr(
             f"INTERVAL {k} DAYS"
         )
         sent_a = spark.range(1).select(
@@ -312,12 +289,13 @@ def _stage_feeds_with_flush(
     return src_a, src_b
 
 
+
+
 def replay_stream_outer_join(
     spark,
     clicks: DataFrame,
     purchases: DataFrame,
     n_source_files: int = 1,
-    timeout_s: int = 300,
     how: str = "leftOuter",
 ) -> DataFrame:
     """Stage both feeds plus a last-arriving flush sentinel each, replay
@@ -343,56 +321,14 @@ def replay_stream_outer_join(
     timestamp, so they match EACH OTHER and never surface as null
     rows; the sentinel filter drops matched and null-side sentinel
     rows alike."""
-    import os
-
     base = scratch_dir(prefix="stream_ojoin_")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
     src_a, src_b = _stage_feeds_with_flush(
         spark, base, clicks, purchases, n_source_files
     )
-
-    # run the stateful replay in a dedicated low-partition session:
-    # two state stores x 32 partitions of store-provider overhead was
-    # ~9% of the whole sf0.1 bench for a few thousand rows; the staged
-    # parquet handoff keeps the caller's session untouched
-    sess = replay_session(spark)
-    a = (
-        sess.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_a)
-        .withWatermark("click_ts", OUTER_WM_DELAY)
+    joined = _interval_join(
+        replay_session(spark), clicks, src_a, purchases, src_b, how
     )
-    b = (
-        sess.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_b)
-        .withWatermark("purchase_ts", OUTER_WM_DELAY)
-    )
-    joined = a.join(
-        b,
-        (a.click_user == b.purchase_user)
-        & (
-            F.col("click_ts").between(
-                F.col("purchase_ts") - F.expr(f"INTERVAL {JOIN_WINDOW_HOURS} HOURS"),
-                F.col("purchase_ts"),
-            )
-        ),
-        how,
-    )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        joined.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_outer_join")
-    rows = spark.read.parquet(out)
+    rows = replay(spark, joined, base, "stream_outer_join")
     if how == "fullOuter":
         return rows.filter(
             (F.col("click_id").isNull() | (F.col("click_id") != -1))
@@ -404,30 +340,18 @@ def replay_stream_outer_join(
 
 def _register_semi_join() -> None:
     from nyc_landmarks_datalake_spark.registry import query
-    from nyc_landmarks_datalake_spark.sources.catalog import table
 
     @query(
         "q_stream_semi_join",
         sql=f"""
-        WITH a AS (
-            SELECT event_id AS click_id, user_id AS click_user, ts AS click_ts
-            FROM events WHERE event_type = 'click'
-        ),
-        b AS (
-            SELECT event_id AS purchase_id, user_id AS purchase_user,
-                   ts AS purchase_ts
-            FROM events WHERE event_type = 'purchase'
-        )
+        WITH {_FEEDS_SQL}
         SELECT a.click_user AS user_id,
                CAST(COUNT(*) AS BIGINT) AS n_converting_clicks,
                CAST(SUM(a.click_id) AS BIGINT) AS sum_click_ids
         FROM a
         WHERE EXISTS (
             SELECT 1 FROM b
-            WHERE a.click_user = b.purchase_user
-              AND a.click_ts BETWEEN
-                  b.purchase_ts - INTERVAL {JOIN_WINDOW_HOURS} HOURS
-                  AND b.purchase_ts
+            WHERE {_ON_SQL}
         )
         GROUP BY 1
         """,
@@ -439,20 +363,7 @@ def _register_semi_join() -> None:
         deduplicating multi-match emissions. Same replay machinery and
         flush sentinel as the outer joins; emission set equals the
         batch semi join (delay > data span)."""
-        ev = table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("purchase_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        rows = replay_stream_outer_join(
-            spark, clicks, purchases, how="leftSemi"
-        )
+        rows = replay_stream_outer_join(spark, *_feeds(spark, sf_dir), how="leftSemi")
         return rows.groupBy(F.col("click_user").alias("user_id")).agg(
             F.count(F.lit(1)).cast("long").alias("n_converting_clicks"),
             F.sum("click_id").cast("long").alias("sum_click_ids"),
@@ -464,20 +375,11 @@ _register_semi_join()
 
 def _register_outer_join() -> None:
     from nyc_landmarks_datalake_spark.registry import query
-    from nyc_landmarks_datalake_spark.sources.catalog import table
 
     @query(
         "q_stream_outer_join",
         sql=f"""
-        WITH a AS (
-            SELECT event_id AS click_id, user_id AS click_user, ts AS click_ts
-            FROM events WHERE event_type = 'click'
-        ),
-        b AS (
-            SELECT event_id AS purchase_id, user_id AS purchase_user,
-                   ts AS purchase_ts
-            FROM events WHERE event_type = 'purchase'
-        )
+        WITH {_FEEDS_SQL}
         SELECT a.click_user AS user_id,
                CAST(COUNT(*) AS BIGINT) AS n_rows,
                CAST(COUNT(b.purchase_id) AS BIGINT) AS n_matched,
@@ -486,25 +388,12 @@ def _register_outer_join() -> None:
                CAST(COALESCE(SUM(b.purchase_id), 0) AS BIGINT)
                    AS sum_purchase_ids
         FROM a LEFT JOIN b
-          ON a.click_user = b.purchase_user
-         AND a.click_ts BETWEEN
-             b.purchase_ts - INTERVAL {JOIN_WINDOW_HOURS} HOURS AND b.purchase_ts
+          ON {_ON_SQL}
         GROUP BY 1
         """,
     )
     def q_stream_outer_join(spark, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("purchase_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        rows = replay_stream_outer_join(spark, clicks, purchases)
+        rows = replay_stream_outer_join(spark, *_feeds(spark, sf_dir))
         return rows.groupBy(F.col("click_user").alias("user_id")).agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.count("purchase_id").cast("long").alias("n_matched"),
@@ -523,20 +412,11 @@ _register_outer_join()
 
 def _register_full_outer_join() -> None:
     from nyc_landmarks_datalake_spark.registry import query
-    from nyc_landmarks_datalake_spark.sources.catalog import table
 
     @query(
         "q_stream_full_outer_join",
         sql=f"""
-        WITH a AS (
-            SELECT event_id AS click_id, user_id AS click_user, ts AS click_ts
-            FROM events WHERE event_type = 'click'
-        ),
-        b AS (
-            SELECT event_id AS purchase_id, user_id AS purchase_user,
-                   ts AS purchase_ts
-            FROM events WHERE event_type = 'purchase'
-        )
+        WITH {_FEEDS_SQL}
         SELECT COALESCE(a.click_user, b.purchase_user) AS user_id,
                CAST(COUNT(*) AS BIGINT) AS n_rows,
                CAST(COUNT(CASE WHEN a.click_id IS NOT NULL
@@ -550,10 +430,7 @@ def _register_full_outer_join() -> None:
                CAST(COALESCE(SUM(b.purchase_id), 0) AS BIGINT)
                    AS sum_purchase_ids
         FROM a FULL JOIN b
-          ON a.click_user = b.purchase_user
-         AND a.click_ts BETWEEN
-             b.purchase_ts - INTERVAL {JOIN_WINDOW_HOURS} HOURS
-             AND b.purchase_ts
+          ON {_ON_SQL}
         GROUP BY 1
         """,
     )
@@ -561,23 +438,11 @@ def _register_full_outer_join() -> None:
         """FULL OUTER stream-stream interval join: both sides' unmatched
         rows are emitted with opposite-side NULLs as the respective
         watermark passes their join window — the symmetric completion of
-        `q_stream_outer_join`, sharing its replay machinery, flush
-        sentinel, and dedicated low-partition session. The emission set
-        of the finite replay equals the batch FULL JOIN exactly (delay >
-        data span, so nothing drops late)."""
-        ev = table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("purchase_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
+        `q_stream_outer_join`, sharing its replay machinery and flush
+        sentinel. The emission set of the finite replay equals the batch
+        FULL JOIN exactly (delay > data span, so nothing drops late)."""
         rows = replay_stream_outer_join(
-            spark, clicks, purchases, how="fullOuter"
+            spark, *_feeds(spark, sf_dir), how="fullOuter"
         )
         return rows.groupBy(
             F.coalesce(F.col("click_user"), F.col("purchase_user")).alias(
@@ -634,7 +499,6 @@ def replay_stream_join_windowed(
     clicks: DataFrame,
     purchases: DataFrame,
     n_source_files: int = 1,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Replay both feeds through join→window-agg (two state stores in
     one query) and return every finalized window row.
@@ -650,11 +514,7 @@ def replay_stream_join_windowed(
     withholding every trailing window (found empirically; the
     single-operator outer-join replay is immune because it filters
     sentinels AFTER the replay)."""
-    import os
-
     base = scratch_dir(prefix="stream_jwin_")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
     # two flush sentinels per feed: the first drains the JOIN's state,
     # the second batch carries the advanced watermark down to the
     # WINDOW operator (each stateful level sees the watermark as of
@@ -662,32 +522,8 @@ def replay_stream_join_windowed(
     src_a, src_b = _stage_feeds_with_flush(
         spark, base, clicks, purchases, n_source_files, n_flush_files=2
     )
-
-    sess = replay_session(spark)
-    a = (
-        sess.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_a)
-        .withWatermark("click_ts", OUTER_WM_DELAY)
-    )
-    b = (
-        sess.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_b)
-        .withWatermark("purchase_ts", OUTER_WM_DELAY)
-    )
     agged = (
-        a.join(
-            b,
-            (a.click_user == b.purchase_user)
-            & (
-                F.col("click_ts").between(
-                    F.col("purchase_ts")
-                    - F.expr(f"INTERVAL {JOIN_WINDOW_HOURS} HOURS"),
-                    F.col("purchase_ts"),
-                )
-            ),
-        )
+        _interval_join(replay_session(spark), clicks, src_a, purchases, src_b, "inner")
         .groupBy(F.window("purchase_ts", "1 day").alias("w"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
@@ -695,44 +531,20 @@ def replay_stream_join_windowed(
             F.sum("purchase_id").cast("long").alias("sum_purchase_ids"),
         )
     )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        agged.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, "stream_join_windowed")
-    return spark.read.parquet(out)
+    return replay(spark, agged, base, "stream_join_windowed")
 
 
 def _register_join_windowed() -> None:
     from nyc_landmarks_datalake_spark.registry import query
-    from nyc_landmarks_datalake_spark.sources.catalog import table
 
     @query(
         "q_stream_join_windowed",
         sql=f"""
-        WITH a AS (
-            SELECT event_id AS click_id, user_id AS click_user, ts AS click_ts
-            FROM events WHERE event_type = 'click'
-        ),
-        b AS (
-            SELECT event_id AS purchase_id, user_id AS purchase_user,
-                   ts AS purchase_ts
-            FROM events WHERE event_type = 'purchase'
-        ),
+        WITH {_FEEDS_SQL},
         j AS (
             SELECT a.click_id, b.purchase_id, b.purchase_ts
             FROM a JOIN b
-              ON a.click_user = b.purchase_user
-             AND a.click_ts BETWEEN
-                 b.purchase_ts - INTERVAL {JOIN_WINDOW_HOURS} HOURS
-                 AND b.purchase_ts
+              ON {_ON_SQL}
         )
         SELECT time_bucket(INTERVAL '1 day', purchase_ts) AS window_start,
                CAST(COUNT(*) AS BIGINT) AS n_pairs,
@@ -742,18 +554,7 @@ def _register_join_windowed() -> None:
         """,
     )
     def q_stream_join_windowed(spark, sf_dir: str) -> DataFrame:
-        ev = table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("purchase_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        rows = replay_stream_join_windowed(spark, clicks, purchases)
+        rows = replay_stream_join_windowed(spark, *_feeds(spark, sf_dir))
         return rows.select(
             F.col("w.start").alias("window_start"),
             "n_pairs",

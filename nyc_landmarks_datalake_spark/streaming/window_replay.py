@@ -25,7 +25,12 @@ import os
 import shutil
 
 from nyc_landmarks_datalake_spark.scratch import scratch_dir
-from nyc_landmarks_datalake_spark.streaming.guard import replay_session
+from nyc_landmarks_datalake_spark.streaming.guard import (
+    file_stream,
+    replay,
+    replay_session,
+    stage,
+)
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -49,70 +54,31 @@ def replay_stream_agg(
     group_cols: list[Column],
     zone: str,
     n_source_files: int = 3,
-    timeout_s: int = 300,
 ) -> DataFrame:
-    """Stage ``rows`` (must carry ``value``) and replay them file-by-file
-    through a streaming ``groupBy(*group_cols)`` count + decimal-sum
-    aggregate; return the final complete-mode snapshot.
-
-    One replay protocol for every streaming-replay query (tumbling,
-    sliding, session): readStream with maxFilesPerTrigger=1 so each
-    staged file is its own micro-batch, complete-mode foreachBatch
-    overwrite sink, availableNow trigger. The returned snapshot is
-    EAGERLY materialized (``localCheckpoint``) so it stays readable no
-    matter how many later invocations rotate the two-version staging
-    retention underneath it — snapshots are tiny aggregates, so pinning
-    their blocks costs nothing next to the replay itself.
-    """
+    """Replay ``rows`` (must carry ``value``) through a streaming
+    ``groupBy(*group_cols)`` count + decimal-sum aggregate; return the
+    final complete-mode snapshot, eagerly materialized
+    (``localCheckpoint``) so it stays readable however many later
+    invocations rotate the two-version staging underneath it —
+    snapshots are tiny aggregates, so pinning their blocks costs
+    nothing next to the replay itself."""
     root, version = _REPLAY_ZONES.get(zone) or (
         scratch_dir(prefix=f"{zone}_"),
         0,
     )
     _REPLAY_ZONES[zone] = (root, version + 1)
     base = os.path.join(root, f"v{version}")
-    src = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    out = os.path.join(base, "out")
-    rows.repartition(n_source_files).write.mode("overwrite").parquet(src)
+    src = stage(rows, os.path.join(base, "src"), n_source_files)
     for stale in range(version - 1):
         shutil.rmtree(os.path.join(root, f"v{stale}"), ignore_errors=True)
 
-    # run the replay on the low-state-partition session clone: one
-    # state-store instance per shuffle partition per micro-batch, so
-    # the parent's 32 partitions are pure store-provider overhead at
-    # replay scale (the stream_join.py discipline, completed r16)
-    sess = replay_session(spark)
-    stream = (
-        sess.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = file_stream(replay_session(spark), src, rows.schema)
     agg = stream.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(30,6)")).alias("dec_total"),
     )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out)
-
-    q = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination(timeout) returns False on timeout with the query
-    # still RUNNING — reading ``out`` then would return a partial
-    # mid-replay snapshot (or nothing), a silently-wrong result. Fail
-    # loudly instead; stop() so the orphan doesn't keep writing.
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(
-            f"streaming replay ({zone}) did not finish within "
-            f"{timeout_s}s; refusing to read a partial snapshot"
-        )
-    return spark.read.parquet(out).localCheckpoint(eager=True)
+    snap = replay(spark, agg, base, zone, mode="complete")
+    return snap.localCheckpoint(eager=True)
 
 
 def replay_stream_tumbling_agg(
@@ -121,7 +87,6 @@ def replay_stream_tumbling_agg(
     window: str = "1 hour",
     slide: str | None = None,
     n_source_files: int = 3,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Replay ``rows`` (ts, event_type, value) through a streaming
     (sliding-)window aggregate; returns the final complete snapshot."""
@@ -134,7 +99,6 @@ def replay_stream_tumbling_agg(
         ],
         zone="stream_window",
         n_source_files=n_source_files,
-        timeout_s=timeout_s,
     )
 
 

@@ -623,12 +623,76 @@ def test_replay_session_cache_revalidates(monkeypatch):
     monkeypatch.setattr(guard, "_REPLAY_SESSIONS", {})
     ctx = FakeContext("app-1")
     parent = FakeSession(ctx)
-    s1 = guard.replay_session(parent, 8)
-    assert guard.replay_session(parent, 8) is s1  # live clone reused
+    s1 = guard.replay_session(parent)
+    assert guard.replay_session(parent) is s1  # live clone reused
     # same key, context restarted (the id()-reuse analogue): the dead
     # clone must be evicted and a clone of the CALLER's context handed
     ctx.stopped = True
     ctx2 = FakeContext("app-1")
-    s2 = guard.replay_session(FakeSession(ctx2), 8)
+    s2 = guard.replay_session(FakeSession(ctx2))
     assert s2 is not s1
     assert s2.sparkContext is ctx2
+
+
+def test_finish_replay_stops_a_hung_query_and_names_its_zone():
+    """A replay that outlives its timeout is stopped and raises, naming
+    the zone, instead of letting the caller read a partial sink; one
+    that finishes in time is left alone."""
+    from nyc_landmarks_datalake_spark.streaming.guard import finish_replay
+
+    class FakeQuery:
+        def __init__(self, finishes):
+            self.finishes, self.stopped, self.waited = finishes, False, None
+
+        def awaitTermination(self, timeout):
+            self.waited = timeout
+            return self.finishes
+
+        def stop(self):
+            self.stopped = True
+
+    hung = FakeQuery(finishes=False)
+    with pytest.raises(RuntimeError, match=r"stream_dedup.*within 5s"):
+        finish_replay(hung, 5, "stream_dedup")
+    assert hung.stopped and hung.waited == 5
+    done = FakeQuery(finishes=True)
+    finish_replay(done, 5, "stream_dedup")
+    assert not done.stopped
+
+
+def test_interval_join_replay_streams_on_replay_session(spark, monkeypatch):
+    """The stateful stream-stream interval join streams on the
+    low-partition replay clone, as every stateful replay does, and
+    pairs each click with the same user's purchases within
+    JOIN_WINDOW_HOURS after it."""
+    from nyc_landmarks_datalake_spark.streaming import stream_join
+
+    real, calls = stream_join.replay_session, []
+
+    def counting(spark_):
+        calls.append(spark_)
+        return real(spark_)
+
+    monkeypatch.setattr(stream_join, "replay_session", counting)
+
+    def feed(kind, rows):
+        return spark.createDataFrame(
+            rows, f"{kind}_id BIGINT, {kind}_user BIGINT, ts STRING"
+        ).select(
+            f"{kind}_id", f"{kind}_user", F.to_timestamp("ts").alias(f"{kind}_ts")
+        )
+
+    clicks = feed(
+        "click",
+        [
+            (1, 7, "2024-01-01 10:00:00"),  # 2 h before purchase 10
+            (2, 7, "2024-01-01 01:00:00"),  # 11 h before: outside
+            (3, 8, "2024-01-01 10:00:00"),  # no purchase by user 8
+        ],
+    )
+    purchases = feed(
+        "purchase", [(10, 7, "2024-01-01 12:00:00"), (11, 9, "2024-01-01 12:00:00")]
+    )
+    pairs = stream_join.replay_stream_interval_join(spark, clicks, purchases)
+    assert {(r["click_id"], r["purchase_id"]) for r in pairs.collect()} == {(1, 10)}
+    assert calls == [spark]

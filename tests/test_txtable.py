@@ -117,15 +117,22 @@ def _race_after_read(monkeypatch, spark, path, races):
     return keys
 
 
-@pytest.mark.parametrize("op", ["merge_upsert", "optimize"])
+@pytest.mark.parametrize("op", ["merge_upsert", "optimize", "rewrite"])
 def test_rebase_on_racing_writer(spark, tmp_path, monkeypatch, op):
-    """A merge or optimize that loses its publish to a racer rebases on
-    the racer's version and keeps its rows; one that loses every attempt
-    raises CommitConflict after ``MAX_ATTEMPTS``, leaving the racer's
-    version latest and its own staged files as orphans for vacuum."""
+    """A merge, an optimize or a bare ``rewrite`` that loses its publish
+    to a racer rebases on the racer's version and keeps its rows; one
+    that loses every attempt raises CommitConflict after
+    ``MAX_ATTEMPTS``, leaving the racer's version latest and its own
+    staged files as orphans for vacuum."""
+    added = spark.createDataFrame([(50, "added")], "k BIGINT, tag STRING")
+
     def run(path):
         if op == "optimize":
             return txtable.optimize(spark, path, target_files=1)
+        if op == "rewrite":
+            return txtable.rewrite(
+                spark, path, "rewrite", lambda snap: snap.unionByName(added)
+            )
         upd = spark.createDataFrame([(1, "new")], "k BIGINT, tag STRING")
         return txtable.merge_upsert_tx(spark, path, upd, ["k"])
 
@@ -145,6 +152,8 @@ def test_rebase_on_racing_writer(spark, tmp_path, monkeypatch, op):
     want = {**base, raced[0]: "racer"}
     if op == "merge_upsert":
         want[1] = "new"
+    if op == "rewrite":
+        want[50] = "added"  # the additive fn re-ran on the racer's rows
     assert tags(once) == want
 
     monkeypatch.undo()
