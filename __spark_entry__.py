@@ -110,7 +110,9 @@ REVERIFY: frozenset[str] = frozenset(
         "q_incremental_mv_refresh",
         # every finite streaming replay now runs through the one
         # stage/file_stream/replay protocol in streaming/guard.py
-        # (hash-identical at sf0.001 and sf0.01).
+        # (hash-identical at sf0.001 and sf0.01); replay then also
+        # materializes the result and removes its staging dir before
+        # it returns (hash-identical at sf0.001 and sf0.01 again).
         "q_stream_dedup",
         "q_stream_dedup_watermarked",
         "q_stateful_user_profiles",

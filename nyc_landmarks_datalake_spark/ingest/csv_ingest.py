@@ -28,6 +28,7 @@ no shuffle: each task writes its slice of every partition it holds.
 
 from __future__ import annotations
 
+import csv
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,11 +84,17 @@ def ingest_csv(
     geometry_mode: str = "encode",
     strict: bool = False,
 ) -> DataFrame:
-    """Full bronze→silver ingest; returns the written DataFrame."""
+    """Full bronze→silver ingest of the CSV file at ``csv_path``; returns
+    the written DataFrame. In ``strict`` mode a header that does not
+    match the sidecar raises before ``dest_path`` is touched."""
     if geometry_mode not in GEOMETRY_MODES:
         raise ValueError(f"geometry_mode must be one of {GEOMETRY_MODES}")
     df, schema = read_csv_with_sidecar(spark, csv_path, sidecar_path)
-    validate_header(list(df.columns), schema, strict=strict)
+    # the file's own first record: the reader names its columns after
+    # the sidecar, whatever the file says
+    with open(csv_path, newline="", encoding="utf-8-sig") as f:
+        header = next(csv.reader(f, quotechar=_CSV_DIALECT["quote"]), [])
+    validate_header(header, schema, strict=strict)
     df, pkeys = _silver(df, schema, geometry_mode)
     df.write.mode("overwrite").partitionBy(*pkeys).parquet(dest_path)
     return df

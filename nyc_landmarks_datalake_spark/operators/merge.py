@@ -9,7 +9,7 @@ shuffles (what Delta/Iceberg MERGE compiles to under the hood):
 - **upsert** (SCD1): new version of a key replaces the old; implemented
   as updates ∪ (base ⟕̸ updates) — one anti join keyed by the merge key.
   At 100 TB the win is bucketing base AND updates by the key
-  (sources/layout.py) so the anti join is shuffle-free.
+  (operators/bucketing.py) so the anti join is shuffle-free.
 - **keep-latest** (CDC compaction): collapse a change log to the newest
   row per key — one row_number window per key, the shape every
   streaming-CDC sink compacts with.

@@ -16,7 +16,7 @@ Scale posture: these are format-conformance probes, deliberately tiny.
 The production scan path is the same ``spark.read.<format>`` with
 pushdown (csv/json are row formats — only (path, length) prune; orc
 prunes like parquet), and the sink path is the same partitioned write
-as sources/layout.py.
+as ``ingest_csv``'s.
 """
 
 from __future__ import annotations

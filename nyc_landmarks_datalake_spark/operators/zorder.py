@@ -128,7 +128,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Partition-pruned scan under the oracle gate. write_partitioned +
+# Partition-pruned scan under the oracle gate. A partitionBy write +
 # pruning already carry a plan-level test (tests/test_layout.py); this
 # query makes the END RESULT driver-checked: events land partitioned
 # by day, the read filters one day, and the aggregate must equal the

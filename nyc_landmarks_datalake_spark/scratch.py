@@ -1,14 +1,14 @@
-"""Process-lifetime scratch directories for staging zones.
+"""Process-lifetime scratch directories for zones that outlive a call.
 
-Replay, compaction, bucketed-join, transaction-log, and DPP queries all
-stage data under ``tempfile.mkdtemp`` roots that must OUTLIVE the lazy
-DataFrames read back from them (never per-call cleanup — the returned
-snapshot is collected later by the caller). ``mkdtemp`` dirs do not die
-at process exit though, so a long-lived host would leak one staging
-copy per zone per run. This module is the middle ground: every zone
-root is registered here and removed by ONE ``atexit`` hook — after all
-in-process reads, before the OS would have to care.
-"""
+The census table, the partitioned and DPP zones, the bucketed tables,
+the transaction-log scenario, the source round-trip dirs and the
+transformWithState replay stage data under ``tempfile.mkdtemp`` roots
+that must OUTLIVE the lazy DataFrames read back from them (the caller
+collects the result later). ``mkdtemp`` dirs do not die at process exit
+though, so this module registers every such root and removes them all
+in ONE ``atexit`` hook. The other streaming replays do not need it:
+``streaming.guard.replay`` materializes their result and removes their
+staging itself."""
 
 from __future__ import annotations
 

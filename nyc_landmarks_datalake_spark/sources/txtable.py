@@ -37,10 +37,11 @@ inference costs on every read.
 
 Crash safety: a writer dying before publish leaves orphaned data files
 referenced by no manifest — invisible to every reader; ``vacuum``
-removes them. A writer dying during publish leaves either no manifest
-(nothing happened) or a complete one (commit happened): ``link`` is
-atomic, and manifests are staged write-fsync-rename so a torn JSON is
-never visible under ``_txlog``.
+removes them once another commit has taken their version. A writer
+dying during publish leaves either no manifest (nothing happened) or a
+complete one (commit happened): ``link`` is atomic, and manifests are
+staged write-fsync-rename so a torn JSON is never visible under
+``_txlog``.
 
 Scale posture: commits are O(1) driver-side metadata (one small JSON);
 data stays distributed parquet with normal pushdown/pruning. The
@@ -271,10 +272,16 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
     units, so liveness is decided per-dir — a dir is live iff some
     manifest references a file inside it; within a live dir every
     parquet is referenced by construction (writer sidecars like
-    _SUCCESS ride along untouched). Returns deleted parquet paths."""
+    _SUCCESS ride along untouched). A dir staged for a version past the
+    latest one seen on entry may belong to a writer in flight, which
+    could still publish it, so it is kept (Delta's VACUUM likewise
+    spares files a running writer may commit); once that version is
+    taken, a dir nothing references is an orphan. Returns deleted
+    parquet paths."""
     import shutil
 
     vs = _versions(path)
+    latest = vs[-1] if vs else -1
     for v in vs[:-keep_versions] if keep_versions else vs:
         os.unlink(_manifest_path(path, v))
     live_dirs = {os.path.dirname(f) for f in referenced_files(path)}
@@ -282,7 +289,7 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
     data_root = os.path.join(path, "data")
     for sub in sorted(os.listdir(data_root)) if os.path.isdir(data_root) else []:
         rel_dir = os.path.join("data", sub)
-        if rel_dir in live_dirs:
+        if rel_dir in live_dirs or int(sub.split("-")[0]) > latest:
             continue
         full_dir = os.path.join(data_root, sub)
         deleted.extend(

@@ -27,10 +27,10 @@ replay here omits the watermark because the staged table is finite
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame
 
-from nyc_landmarks_datalake_spark.scratch import scratch_dir
 from nyc_landmarks_datalake_spark.streaming.guard import (
     file_stream,
     replay,
@@ -44,7 +44,7 @@ def replay_stream_dedup(
 ) -> DataFrame:
     """Replay ``rows`` file-by-file through streaming
     ``dropDuplicates(keys)``; return everything emitted."""
-    base = scratch_dir(prefix="stream_dedup_")
+    base = tempfile.mkdtemp(prefix="stream_dedup_")
     src = stage(rows, os.path.join(base, "src"), n_source_files)
     stream = file_stream(replay_session(spark), src, rows.schema)
     return replay(spark, stream.dropDuplicates(keys), base, "stream_dedup")
@@ -73,7 +73,7 @@ def replay_stream_dedup_watermarked(
     the event-time column: first-seen rows carry arbitrary non-key
     columns under arrival-order nondeterminism (same reasoning as
     replay_stream_dedup's key-only projection)."""
-    base = scratch_dir(prefix="stream_dedup_wm_")
+    base = tempfile.mkdtemp(prefix="stream_dedup_wm_")
     src = stage(rows, os.path.join(base, "src"), n_source_files)
     stream = file_stream(replay_session(spark), src, rows.schema)
     deduped = stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(keys)

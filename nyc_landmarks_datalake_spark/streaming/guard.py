@@ -10,8 +10,12 @@ takes the same steps:
    micro-batch (``maxFilesPerTrigger=1``);
 3. :func:`replay` runs a ``foreachBatch`` sink with its checkpoint
    under the replay's base dir and an ``availableNow`` trigger, waits
-   in :func:`finish_replay`, and reads the sink's output (``<base>/out``)
-   back with the caller's session.
+   in :func:`finish_replay`, reads the sink's output with the caller's
+   session and materializes it (eager ``localCheckpoint``).
+
+A replay owns its base dir: callers make it with ``tempfile.mkdtemp``,
+and ``replay`` removes it before returning, on success or failure. The
+result reads no files, so a caller may hold it as long as it likes.
 
 ``finish_replay`` fails loud: ``awaitTermination(timeout)`` returns
 ``False`` on timeout with the query still RUNNING, and reading the sink
@@ -26,14 +30,13 @@ are pure store-provider overhead (the stream-stream outer join spent
 ~9% of the whole bench on it). The clone shares the SparkContext but
 has its own SessionState, so the shared session's conf is never
 mutated mid-query. The sink writes plain parquet, so the caller's
-session reads the result back with its own conf. The base dir must
-outlive the returned lazy DataFrame: callers take it from
-``scratch.scratch_dir``, which cleans up at interpreter exit.
+session reads the result back with its own conf.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 
@@ -102,31 +105,36 @@ def replay(
     zone: str,
     mode: str = "append",
     sink=None,
+    read=None,
     timeout_s: int = REPLAY_TIMEOUT_S,
-) -> DataFrame | None:
+) -> DataFrame:
     """Run the streaming ``query`` to completion (checkpoint under
-    ``base``, ``availableNow``) and return its output read back with
-    ``spark``. The default sink appends each micro-batch to
+    ``base``, ``availableNow``) and return its output materialized, then
+    remove ``base``. The default sink appends each micro-batch to
     ``<base>/out``, or overwrites it in complete mode, so the last
-    complete snapshot survives. A caller-supplied ``sink`` writes where
-    it likes, and the caller reads it back: ``replay`` returns None."""
+    complete snapshot survives. The output is ``read()``, by default
+    the parquet under ``<base>/out`` read with ``spark``; a
+    caller-supplied ``sink`` writes there or passes its own ``read``."""
     out = os.path.join(base, "out")
-    own_sink = sink is None
-    if own_sink:
+    if sink is None:
         write_mode = "overwrite" if mode == "complete" else "append"
 
         def sink(batch_df: DataFrame, _batch_id: int) -> None:
             batch_df.write.mode(write_mode).parquet(out)
 
-    q = (
-        query.writeStream.foreachBatch(sink)
-        .outputMode(mode)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_replay(q, timeout_s, zone)
-    return spark.read.parquet(out) if own_sink else None
+    try:
+        q = (
+            query.writeStream.foreachBatch(sink)
+            .outputMode(mode)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        finish_replay(q, timeout_s, zone)
+        result = read() if read else spark.read.parquet(out)
+        return result.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def finish_replay(q, timeout_s: int, zone: str) -> None:

@@ -33,11 +33,11 @@ engine-capability extension of that ingest loop for LLM-corpus work.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nyc_landmarks_datalake_spark.scratch import scratch_dir
 from nyc_landmarks_datalake_spark.streaming.guard import file_stream, replay
 
 
@@ -91,7 +91,7 @@ def replay_stream_ingest_dedup(
     production sink would key the decision write by batch_id (overwrite
     a per-batch subdir) to make the whole tick idempotent.
     """
-    base = scratch_dir(prefix="stream_ingest_dedup_")
+    base = tempfile.mkdtemp(prefix="stream_ingest_dedup_")
     src = os.path.join(base, "src")
     store = os.path.join(base, "store")
     out = os.path.join(base, "out")
@@ -160,8 +160,9 @@ def replay_stream_ingest_dedup(
     # in the parquet side-store), so the replay clone would only
     # throttle the per-batch minhash/join compute (+2.4 s at sf0.1)
     stream = file_stream(spark, src, staged.schema)
-    replay(spark, stream, base, "stream_ingest_dedup", sink=tick, timeout_s=600)
-    return spark.read.parquet(out)
+    return replay(
+        spark, stream, base, "stream_ingest_dedup", sink=tick, timeout_s=600
+    )
 
 
 def _register() -> None:

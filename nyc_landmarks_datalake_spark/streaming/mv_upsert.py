@@ -35,11 +35,11 @@ size (distinct users), not the feed; version manifests are O(1) each.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nyc_landmarks_datalake_spark.scratch import scratch_dir
 from nyc_landmarks_datalake_spark.sources import txtable
 from nyc_landmarks_datalake_spark.streaming.guard import (
     file_stream,
@@ -56,19 +56,12 @@ def _committed_ops(path: str) -> set[str]:
     return {m["operation"] for m in txtable.history(path)}
 
 
-def replay_stream_mv_upsert(
-    spark, events: DataFrame, n_source_files: int = 3
-) -> DataFrame:
-    """Replay the feed through the per-batch delta→read→add→commit loop
-    and return the final MV snapshot (read with the CALLER's session)."""
+def mv_sink(sess, tbl: str):
+    """Create the empty MV at ``tbl`` and return its per-batch sink:
+    add the batch's delta and commit it as ``mv_delta_b{batch_id}``."""
     from nyc_landmarks_datalake_spark.operators.merge import merge_upsert
 
-    base = scratch_dir(prefix="stream_mv_")
-    src = stage(events, os.path.join(base, "events"), n_source_files)
-    tbl = os.path.join(base, "mv")
-    sess = replay_session(spark)
-    empty = sess.createDataFrame([], MV_SCHEMA)
-    txtable.commit(sess, tbl, empty, "create", expected_version=None)
+    txtable.commit(sess, tbl, sess.createDataFrame([], MV_SCHEMA), "create", None)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -95,9 +88,27 @@ def replay_stream_mv_upsert(
 
         txtable.rewrite(sess, tbl, op, add)
 
+    return sink
+
+
+def replay_stream_mv_upsert(
+    spark, events: DataFrame, n_source_files: int = 3
+) -> DataFrame:
+    """Replay the feed through the per-batch delta→read→add→commit loop
+    and return the final MV snapshot (read with the CALLER's session)."""
+    base = tempfile.mkdtemp(prefix="stream_mv_")
+    src = stage(events, os.path.join(base, "events"), n_source_files)
+    tbl = os.path.join(base, "mv")
+    sess = replay_session(spark)
     stream = file_stream(sess, src, events.schema)
-    replay(spark, stream, base, "stream_mv_upsert", sink=sink)
-    return txtable.read_snapshot(spark, tbl)
+    return replay(
+        spark,
+        stream,
+        base,
+        "stream_mv_upsert",
+        sink=mv_sink(sess, tbl),
+        read=lambda: txtable.read_snapshot(spark, tbl),
+    )
 
 
 def _register() -> None:

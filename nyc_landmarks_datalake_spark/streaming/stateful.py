@@ -15,6 +15,7 @@ windows feasible on unbounded streams.
 from __future__ import annotations
 
 import os
+import tempfile
 from collections.abc import Iterator
 
 import pandas as pd
@@ -22,7 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from nyc_landmarks_datalake_spark.scratch import scratch_dir
 from nyc_landmarks_datalake_spark.streaming.guard import (
     file_stream,
     replay,
@@ -164,7 +164,7 @@ def replay_user_profiles(
     final profile is the max-count row per user."""
     from nyc_landmarks_datalake_spark.operators.merge import keep_latest
 
-    base = scratch_dir(prefix="stateful_profiles_")
+    base = tempfile.mkdtemp(prefix="stateful_profiles_")
     src = stage(events, os.path.join(base, "src"), n_source_files)
     stream = file_stream(replay_session(spark), src, events.schema)
     emitted = replay(

@@ -25,11 +25,11 @@ predicate prunes state by event time.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nyc_landmarks_datalake_spark.scratch import scratch_dir
 from nyc_landmarks_datalake_spark.streaming.guard import (
     file_stream,
     replay,
@@ -111,7 +111,7 @@ def replay_stream_interval_join(
 ) -> DataFrame:
     """Replay both inputs through the watermarked stream-stream interval
     join; return every emitted pair."""
-    base = scratch_dir(prefix="stream_join_")
+    base = tempfile.mkdtemp(prefix="stream_join_")
     src_a = stage(clicks, os.path.join(base, "clicks"), n_source_files)
     src_b = stage(purchases, os.path.join(base, "purchases"), n_source_files)
     joined = _interval_join(
@@ -161,7 +161,7 @@ def replay_stream_static_join(
     equi-join emits each enriched row exactly once regardless of arrival
     order, which is what makes the replay oracle-checkable. It keeps no
     streaming state, so it streams on the caller's session."""
-    base = scratch_dir(prefix="stream_static_")
+    base = tempfile.mkdtemp(prefix="stream_static_")
     src = stage(stream_rows, os.path.join(base, "src"), n_source_files)
     joined = file_stream(spark, src, stream_rows.schema).join(static_dim, on)
     return replay(spark, joined, base, "stream_static")
@@ -321,7 +321,7 @@ def replay_stream_outer_join(
     timestamp, so they match EACH OTHER and never surface as null
     rows; the sentinel filter drops matched and null-side sentinel
     rows alike."""
-    base = scratch_dir(prefix="stream_ojoin_")
+    base = tempfile.mkdtemp(prefix="stream_ojoin_")
     src_a, src_b = _stage_feeds_with_flush(
         spark, base, clicks, purchases, n_source_files
     )
@@ -514,7 +514,7 @@ def replay_stream_join_windowed(
     withholding every trailing window (found empirically; the
     single-operator outer-join replay is immune because it filters
     sentinels AFTER the replay)."""
-    base = scratch_dir(prefix="stream_jwin_")
+    base = tempfile.mkdtemp(prefix="stream_jwin_")
     # two flush sentinels per feed: the first drains the JOIN's state,
     # the second batch carries the advanced watermark down to the
     # WINDOW operator (each stateful level sees the watermark as of

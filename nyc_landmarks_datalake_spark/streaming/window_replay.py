@@ -22,9 +22,8 @@ tests/test_streaming.py).
 from __future__ import annotations
 
 import os
-import shutil
+import tempfile
 
-from nyc_landmarks_datalake_spark.scratch import scratch_dir
 from nyc_landmarks_datalake_spark.streaming.guard import (
     file_stream,
     replay,
@@ -34,18 +33,6 @@ from nyc_landmarks_datalake_spark.streaming.guard import (
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-#: session-scoped replay staging ROOTS, one per (zone, sf-ish) key —
-#: bench loops invoke replay queries repeatedly and a mkdtemp per call
-#: leaks a full events copy + checkpoint + output per invocation (the
-#: r8-ADVICE leak class fixed for q_compaction_census). Each invocation
-#: stages into a fresh VERSIONED subdir (v0, v1, ...) of the shared
-#: root: the checkpoint MUST be fresh per replay (a reused complete-mode
-#: checkpoint would skip the micro-batch walk under test) and earlier
-#: invocations' lazy DataFrames keep reading their own untouched output
-#: subdir. Growth is bounded: each invocation deletes every version
-#: older than its predecessor, so at most two versions exist at a time.
-_REPLAY_ZONES: dict[str, tuple[str, int]] = {}
 
 
 def replay_stream_agg(
@@ -57,28 +44,15 @@ def replay_stream_agg(
 ) -> DataFrame:
     """Replay ``rows`` (must carry ``value``) through a streaming
     ``groupBy(*group_cols)`` count + decimal-sum aggregate; return the
-    final complete-mode snapshot, eagerly materialized
-    (``localCheckpoint``) so it stays readable however many later
-    invocations rotate the two-version staging underneath it —
-    snapshots are tiny aggregates, so pinning their blocks costs
-    nothing next to the replay itself."""
-    root, version = _REPLAY_ZONES.get(zone) or (
-        scratch_dir(prefix=f"{zone}_"),
-        0,
-    )
-    _REPLAY_ZONES[zone] = (root, version + 1)
-    base = os.path.join(root, f"v{version}")
+    final complete-mode snapshot."""
+    base = tempfile.mkdtemp(prefix=f"{zone}_")
     src = stage(rows, os.path.join(base, "src"), n_source_files)
-    for stale in range(version - 1):
-        shutil.rmtree(os.path.join(root, f"v{stale}"), ignore_errors=True)
-
     stream = file_stream(replay_session(spark), src, rows.schema)
     agg = stream.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(30,6)")).alias("dec_total"),
     )
-    snap = replay(spark, agg, base, zone, mode="complete")
-    return snap.localCheckpoint(eager=True)
+    return replay(spark, agg, base, zone, mode="complete")
 
 
 def replay_stream_tumbling_agg(

@@ -124,6 +124,32 @@ def test_validate_header_modes():
     assert validate_header(good[:-1], s)  # arity mismatch reported
 
 
+def test_strict_ingest_checks_the_file_header(spark, tmp_path):
+    """Strict ingest compares the header the CSV file actually has (not
+    the column names the sidecar gives the reader) and, on a mismatch,
+    raises before the destination is touched; a quoted header that
+    matches is accepted."""
+    sidecar = tmp_path / "abc.json"
+    sidecar.write_text(json.dumps(
+        [{"key": k, "type": "string", "partition_key": "false", "comment": ""}
+         for k in ("A", "B", "C")]
+    ))
+    dest = tmp_path / "silver"
+    dest.mkdir()
+    (dest / "marker").write_text("kept")
+    wrong = tmp_path / "wrong.csv"
+    wrong.write_text("WRONG_A,WRONG_B,WRONG_C\n1,2,3\n")
+    with pytest.raises(SchemaValidationError, match="WRONG_A"):
+        ingest_csv(spark, str(wrong), str(sidecar), str(dest), strict=True)
+    assert os.listdir(dest) == ["marker"]
+
+    quoted = tmp_path / "quoted.csv"
+    quoted.write_text('"A",B,"C"\n1,"2, two",3\n')
+    ingest_csv(spark, str(quoted), str(sidecar), str(dest), strict=True)
+    back = spark.read.parquet(str(dest)).collect()
+    assert [tuple(r) for r in back] == [("1", "2, two", "3")]
+
+
 def test_ingest_quoted_commas_survive(spark, fixture_dir, tmp_path):
     out = tmp_path / "silver"
     ingest_csv(

@@ -8,11 +8,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from nyc_landmarks_datalake_spark.operators.bucketing import bucketed_write
 from nyc_landmarks_datalake_spark.sources.catalog import table
-from nyc_landmarks_datalake_spark.sources.layout import (
-    write_bucketed,
-    write_partitioned,
-)
 
 
 def test_partition_pruning(spark, sf_small, tmp_path):
@@ -20,7 +17,7 @@ def test_partition_pruning(spark, sf_small, tmp_path):
         "order_year", F.year("o_orderdate")
     )
     path = str(tmp_path / "orders_by_year")
-    write_partitioned(orders, path, ["order_year"])
+    orders.write.mode("overwrite").partitionBy("order_year").parquet(path)
     pruned = spark.read.parquet(path).filter(F.col("order_year") == 1997)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "order_year" in plan
@@ -32,17 +29,17 @@ def test_partition_pruning(spark, sf_small, tmp_path):
 
 
 def test_bucketed_join_no_exchange(spark, sf_small, tmp_path):
-    # warehouse dir is a static conf; managed tables land in the default
-    # ./spark-warehouse (gitignored) and are dropped in the finally block
+    # the bucketed tables live under tmp_path; their catalog entries are
+    # dropped in the finally block
     cust = table(spark, sf_small, "customer")
     orders = table(spark, sf_small, "orders")
-    write_bucketed(cust, "b_customer", "c_custkey", 8, sort_col="c_custkey")
-    write_bucketed(
+    bucketed_write(cust, "b_customer", "c_custkey", str(tmp_path / "bc"), 8)
+    bucketed_write(
         orders.withColumnRenamed("o_custkey", "c_custkey"),
         "b_orders",
         "c_custkey",
+        str(tmp_path / "bo"),
         8,
-        sort_col="c_custkey",
     )
     # disable broadcast so the join would otherwise shuffle both sides
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -68,7 +65,7 @@ def test_dynamic_partition_pruning(spark, sf_small, tmp_path):
         "ship_year", F.year("l_shipdate")
     )
     path = str(tmp_path / "li_by_year")
-    write_partitioned(li, path, ["ship_year"])
+    li.write.mode("overwrite").partitionBy("ship_year").parquet(path)
     fact = spark.read.parquet(path)
     # the dim's filter is on a NON-join column, so the surviving year
     # set is only known at runtime — a literal year filter would instead
@@ -102,7 +99,7 @@ def test_schema_evolution_mergeschema(spark, sf_small, tmp_path):
     assert back.filter(F.col("ingest_round").isNull()).count() == 100
 
 
-def test_bucketed_fact_fact_q03_shape(spark, sf_small):
+def test_bucketed_fact_fact_q03_shape(spark, sf_small, tmp_path):
     """The q03/q10/q21-class join (lineitem JOIN orders ON orderkey) run
     end-to-end over bucketed silver variants: with both fact tables
     bucketed on the join key, the join plans ZERO hash exchanges — the
@@ -112,8 +109,8 @@ def test_bucketed_fact_fact_q03_shape(spark, sf_small):
         "l_orderkey", "o_orderkey"
     )
     orders = table(spark, sf_small, "orders")
-    write_bucketed(li, "b_lineitem", "o_orderkey", 8, sort_col="o_orderkey")
-    write_bucketed(orders, "b_orders2", "o_orderkey", 8, sort_col="o_orderkey")
+    bucketed_write(li, "b_lineitem", "o_orderkey", str(tmp_path / "bl"), 8)
+    bucketed_write(orders, "b_orders2", "o_orderkey", str(tmp_path / "bo"), 8)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         from pyspark.sql import functions as F

@@ -34,8 +34,9 @@ PYTHON_ALLOWED = {
 }
 # q_stateful_user_profiles is Python-path too (applyInPandasWithState),
 # but its Python stage runs inside the eager streaming replay; the
-# RETURNED plan is the JVM-only read-back of the replay output, which is
-# what audit() sees — so it takes the default JVM-only branch below.
+# RETURNED plan starts from the replay's materialized output (a
+# localCheckpoint scan, JVM-only), which is what audit() sees — so it
+# takes the default JVM-only branch below.
 # q_image_phash_dedup likewise: its mapInPandas decode sits behind the
 # anti-GenerateExec localCheckpoint boundary, so the audited plan shows
 # only the JVM banded join over the checkpointed signatures.

@@ -5,7 +5,9 @@ streaming dedup — all via availableNow triggers into tmp sinks."""
 from __future__ import annotations
 
 import json
+import os
 import shutil
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -696,3 +698,31 @@ def test_interval_join_replay_streams_on_replay_session(spark, monkeypatch):
     pairs = stream_join.replay_stream_interval_join(spark, clicks, purchases)
     assert {(r["click_id"], r["purchase_id"]) for r in pairs.collect()} == {(1, 10)}
     assert calls == [spark]
+
+
+def test_replay_owns_its_base_dir(spark, tmp_path, monkeypatch):
+    """``replay`` returns a materialized result that reads no files and
+    removes its base dir before returning, whether the replay succeeds
+    or its sink fails."""
+    from nyc_landmarks_datalake_spark.streaming import guard
+    from nyc_landmarks_datalake_spark.streaming.dedup import replay_stream_dedup
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = spark.range(20).select((F.col("id") % 5).alias("g"))
+    got = replay_stream_dedup(spark, rows, ["g"])
+    assert os.listdir(tmp_path) == []
+    assert got.inputFiles() == []
+    assert sorted(r["g"] for r in got.collect()) == [0, 1, 2, 3, 4]
+
+    base = tempfile.mkdtemp(prefix="failing_")
+    src = guard.stage(rows, os.path.join(base, "src"), 2)
+
+    def failing_sink(_batch_df, _batch_id):
+        raise ValueError("sink failed")
+
+    with pytest.raises(Exception, match="sink failed"):
+        guard.replay(
+            spark, guard.file_stream(spark, src, rows.schema), base, "failing",
+            sink=failing_sink,
+        )
+    assert os.listdir(tmp_path) == []

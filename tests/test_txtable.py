@@ -55,12 +55,35 @@ def test_crashed_writer_invisible_and_vacuumed(spark, tmp_path):
     # simulate a crash: data staged but manifest never published
     orphaned = txtable._stage_data(_mk(spark, 9, "crash"), path, 1)
     assert txtable.read_snapshot(spark, path).count() == 4  # invisible
-    deleted = txtable.vacuum(path, keep_versions=1)
+    # version 1 is still free, so the stager may be in flight: kept
+    assert txtable.vacuum(path, keep_versions=1) == []
+    # another writer takes version 1: the staged dir is now an orphan
+    txtable.commit(spark, path, _mk(spark, 4, "b"), "rewrite", 0)
+    deleted = txtable.vacuum(path, keep_versions=2)
     assert sorted(deleted) == sorted(orphaned)
     assert txtable.read_snapshot(spark, path).count() == 4
     # live files survived vacuum
     live = txtable.referenced_files(path)
     assert all(os.path.exists(os.path.join(path, f)) for f in live)
+
+
+def test_vacuum_spares_a_writer_in_flight(spark, tmp_path):
+    """A writer that staged the next version and has not published yet
+    survives a vacuum that runs in between: its publish then yields a
+    readable latest snapshot, not a manifest naming deleted files."""
+    path = str(tmp_path / "t")
+    txtable.commit(spark, path, _mk(spark, 4, "a"), "create", None)
+    df = _mk(spark, 6, "inflight")
+    files = txtable._stage_data(df, path, 1)
+    deleted = txtable.vacuum(path, keep_versions=1)
+    txtable._publish(
+        path,
+        1,
+        {"version": 1, "parent": 0, "operation": "rewrite",
+         "schema": df.schema.jsonValue(), "files": files},
+    )
+    assert _rows(txtable.read_snapshot(spark, path)) == _rows(df)
+    assert deleted == []
 
 
 def test_merge_upsert_tx_roundtrip(spark, tmp_path):
@@ -236,52 +259,53 @@ def test_streaming_upsert_sink_commits_per_batch(spark, tmp_path):
     assert _rows(txtable.read_snapshot(spark, path)) == before
 
 
-def test_stream_mv_upsert_versions_and_idempotence(spark, tmp_path):
-    """The additive streaming MV: one commit per micro-batch with the
-    batch id in the manifest op; a replayed batch id is a NO-OP (the
-    read-modify-write add must never double-count); intermediate
-    versions are readable snapshots of the partial MV."""
+def test_stream_mv_upsert_versions_and_idempotence(spark, sf_small, tmp_path):
+    """The additive streaming MV: the replay equals the batch GROUP BY;
+    its sink commits one version per micro-batch with the batch id in
+    the manifest op, intermediate versions are readable snapshots of
+    the partial MV, and a re-sent batch id is a NO-OP (the
+    read-modify-write add must never double-count)."""
     from nyc_landmarks_datalake_spark.sources.catalog import table as cat
     from nyc_landmarks_datalake_spark.streaming.mv_upsert import (
         _committed_ops,
+        mv_sink,
         replay_stream_mv_upsert,
     )
 
-    ev = cat(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "user_id"
-    )
-    got = replay_stream_mv_upsert(spark, ev, n_source_files=3)
+    ev = cat(spark, sf_small, "events").select("event_id", "user_id")
     want = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum("event_id").cast("long").alias("sum_event_ids"),
     )
-    g = {r.user_id: (r.n_events, r.sum_event_ids) for r in got.collect()}
-    w = {r.user_id: (r.n_events, r.sum_event_ids) for r in want.collect()}
-    assert g == w
-    # table location: recover it from the returned plan's input files
-    files = got.inputFiles()
-    assert files
-    tbl = os.path.dirname(files[0].replace("file:", ""))
-    while tbl != "/" and not os.path.isdir(os.path.join(tbl, "_txlog")):
-        tbl = os.path.dirname(tbl)
-    assert tbl != "/", "commit-log root not found above the data files"
-    # one create + one commit per staged file, each op tagged by batch id
-    ops = _committed_ops(tbl)
-    assert ops == {"create", "mv_delta_b0", "mv_delta_b1", "mv_delta_b2"}
+
+    def by_user(df):
+        return {r.user_id: (r.n_events, r.sum_event_ids) for r in df.collect()}
+
+    w = by_user(want)
+    assert by_user(replay_stream_mv_upsert(spark, ev, n_source_files=3)) == w
+
+    tbl = str(tmp_path / "mv")
+    sink = mv_sink(spark, tbl)
+    batches = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    for batch_id, batch in enumerate(batches):
+        sink(batch, batch_id)
+    # one create + one commit per batch, each op tagged by batch id
+    assert _committed_ops(tbl) == {
+        "create", "mv_delta_b0", "mv_delta_b1", "mv_delta_b2",
+    }
     assert txtable.current_version(tbl) == 3
+    final = txtable.read_snapshot(spark, tbl)
+    assert by_user(final) == w
     # intermediate snapshot: a strict subset of the final event mass
     mid = txtable.read_snapshot(spark, tbl, 1)
     assert (
         mid.agg(F.sum("n_events")).collect()[0][0]
-        < got.agg(F.sum("n_events")).collect()[0][0]
+        < final.agg(F.sum("n_events")).collect()[0][0]
     )
-    # idempotence: replaying an already-committed batch id is a no-op
-    from nyc_landmarks_datalake_spark.streaming.mv_upsert import MV_SCHEMA  # noqa: F401
-
-    before = txtable.current_version(tbl)
-    # simulate the crash-replay: the sink skips when its op exists
-    assert "mv_delta_b1" in _committed_ops(tbl)
-    assert txtable.current_version(tbl) == before
+    # crash-replay: batch 1 arrives again after its commit
+    sink(batches[1], 1)
+    assert txtable.current_version(tbl) == 3
+    assert by_user(txtable.read_snapshot(spark, tbl)) == w
 
 
 def _inferred(spark, path, version):
