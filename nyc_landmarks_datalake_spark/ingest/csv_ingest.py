@@ -10,7 +10,8 @@ Reference stage → here:
 - tag lookup + schema fetch (R4/R5)     → sidecar path convention
   (schemas/<table>.json), schema/sidecar.py
 - header validation (R8)                → validate_header, strict or
-  permissive mode (the reference *discards* the result, §1.4.4)
+  permissive mode (the reference *discards* the result, §1.4.4); a
+  strict ingest also rejects ragged rows (Spark's FAILFAST CSV mode)
 - quote-strip + geometry massage (R9-12)→ parse-then-transform: proper
   CSV quoting (fixes the ragged-row corruption of §1.4.2), then a
   geometry Column expression (functions/geometry.py)
@@ -55,11 +56,16 @@ _CSV_DIALECT = {"header": True, "quote": '"', "escape": '"'}
 
 
 def read_csv_with_sidecar(
-    spark: SparkSession, csv_path: str, sidecar_path: str
+    spark: SparkSession, csv_path: str, sidecar_path: str, strict: bool = False
 ) -> tuple[DataFrame, T.StructType]:
-    """Read CSV with proper quote handling, all columns typed per sidecar."""
+    """Read CSV with proper quote handling, all columns typed per sidecar.
+    A ``strict`` reader fails its job on the first record whose field
+    count or types do not fit the sidecar (``FAILFAST``); otherwise such
+    a record's missing or unparsable fields read as null and extra
+    fields are dropped (``PERMISSIVE``)."""
     schema = load_sidecar(sidecar_path)
-    df = spark.read.options(**_CSV_DIALECT).schema(schema).csv(csv_path)
+    mode = "FAILFAST" if strict else "PERMISSIVE"
+    df = spark.read.options(**_CSV_DIALECT, mode=mode).schema(schema).csv(csv_path)
     return df, schema
 
 
@@ -86,10 +92,14 @@ def ingest_csv(
 ) -> DataFrame:
     """Full bronze→silver ingest of the CSV file at ``csv_path``; returns
     the written DataFrame. In ``strict`` mode a header that does not
-    match the sidecar raises before ``dest_path`` is touched."""
+    match the sidecar raises before ``dest_path`` is touched, and a
+    ragged or mistyped row fails the write job (``MALFORMED_RECORD``).
+    That error surfaces only once Spark's overwrite has already cleared
+    ``dest_path``, so a strict ingest that fails on a row leaves no
+    silver output behind, not the previous one."""
     if geometry_mode not in GEOMETRY_MODES:
         raise ValueError(f"geometry_mode must be one of {GEOMETRY_MODES}")
-    df, schema = read_csv_with_sidecar(spark, csv_path, sidecar_path)
+    df, schema = read_csv_with_sidecar(spark, csv_path, sidecar_path, strict)
     # the file's own first record: the reader names its columns after
     # the sidecar, whatever the file says
     with open(csv_path, newline="", encoding="utf-8-sig") as f:

@@ -10,6 +10,7 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -124,16 +125,22 @@ def test_validate_header_modes():
     assert validate_header(good[:-1], s)  # arity mismatch reported
 
 
-def test_strict_ingest_checks_the_file_header(spark, tmp_path):
-    """Strict ingest compares the header the CSV file actually has (not
-    the column names the sidecar gives the reader) and, on a mismatch,
-    raises before the destination is touched; a quoted header that
-    matches is accepted."""
+def _abc_sidecar(tmp_path):
+    """Sidecar of three unpartitioned string columns A, B, C."""
     sidecar = tmp_path / "abc.json"
     sidecar.write_text(json.dumps(
         [{"key": k, "type": "string", "partition_key": "false", "comment": ""}
          for k in ("A", "B", "C")]
     ))
+    return sidecar
+
+
+def test_strict_ingest_checks_the_file_header(spark, tmp_path):
+    """Strict ingest compares the header the CSV file actually has (not
+    the column names the sidecar gives the reader) and, on a mismatch,
+    raises before the destination is touched; a quoted header that
+    matches is accepted."""
+    sidecar = _abc_sidecar(tmp_path)
     dest = tmp_path / "silver"
     dest.mkdir()
     (dest / "marker").write_text("kept")
@@ -148,6 +155,37 @@ def test_strict_ingest_checks_the_file_header(spark, tmp_path):
     ingest_csv(spark, str(quoted), str(sidecar), str(dest), strict=True)
     back = spark.read.parquet(str(dest)).collect()
     assert [tuple(r) for r in back] == [("1", "2, two", "3")]
+
+
+def test_strict_ingest_rejects_ragged_rows(spark, tmp_path):
+    """A row with too few or too many fields fails a strict ingest
+    (Spark's FAILFAST CSV mode); a permissive ingest still pads the
+    short row with null and drops the long row's extra field."""
+    sidecar = _abc_sidecar(tmp_path)
+    ragged = tmp_path / "ragged.csv"
+    ragged.write_text("A,B,C\n1,2,3\n4,5\n6,7,8,9\n")
+    dest = tmp_path / "silver"
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        ingest_csv(spark, str(ragged), str(sidecar), str(dest), strict=True)
+
+    ingest_csv(spark, str(ragged), str(sidecar), str(dest))
+    back = sorted(tuple(r) for r in spark.read.parquet(str(dest)).collect())
+    assert back == [("1", "2", "3"), ("4", "5", None), ("6", "7", "8")]
+
+
+def test_ingest_output_is_zstd(spark, tmp_path):
+    sidecar = _abc_sidecar(tmp_path)
+    src = tmp_path / "abc.csv"
+    src.write_text("A,B,C\n1,2,3\n4,5,6\n")
+    dest = tmp_path / "silver"
+    ingest_csv(spark, str(src), str(sidecar), str(dest))
+    files = [f for f in os.listdir(dest) if f.endswith(".parquet")]
+    assert files
+    for f in files:
+        md = pq.read_metadata(dest / f)
+        assert {md.row_group(g).column(c).compression
+                for g in range(md.num_row_groups)
+                for c in range(md.num_columns)} == {"ZSTD"}
 
 
 def test_ingest_quoted_commas_survive(spark, fixture_dir, tmp_path):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -92,9 +93,13 @@ def test_merge_upsert_tx_roundtrip(spark, tmp_path):
         [(1, "old"), (2, "old"), (3, "old")], ["k", "tag"]
     )
     updates = spark.createDataFrame([(2, "new"), (4, "new")], ["k", "tag"])
-    txtable.commit(spark, path, base, "create", None)
+    # an explicit commit keeps the caller's layout: several files
+    txtable.commit(spark, path, base.repartition(16), "create", None)
+    assert len(txtable._read_manifest(path, 0)["files"]) > 1
     v = txtable.merge_upsert_tx(spark, path, updates, ["k"])
     assert v == 1
+    # the MERGE is right-sized: a few bytes of input make one file
+    assert len(txtable._read_manifest(path, 1)["files"]) == 1
     got = {r["k"]: r["tag"] for r in txtable.read_snapshot(spark, path).collect()}
     assert got == {1: "old", 2: "new", 3: "old", 4: "new"}
     # vacuum keeping only the latest drops v0's manifest and files
@@ -117,6 +122,19 @@ def test_optimize_compacts_transactionally(spark, tmp_path):
     # row content unchanged; old version still readable (time travel)
     assert txtable.read_snapshot(spark, path, 1).count() == 1000
     assert txtable.read_snapshot(spark, path, 0).count() == 1000
+
+
+def test_data_files_are_zstd(spark, tmp_path):
+    path = str(tmp_path / "t")
+    txtable.commit(spark, path, _mk(spark, 50, "a"), "create", None)
+    codecs = {
+        md.row_group(g).column(c).compression
+        for f in txtable.referenced_files(path)
+        for md in [pq.read_metadata(os.path.join(path, f))]
+        for g in range(md.num_row_groups)
+        for c in range(md.num_columns)
+    }
+    assert codecs == {"ZSTD"}
 
 
 def _race_after_read(monkeypatch, spark, path, races):
