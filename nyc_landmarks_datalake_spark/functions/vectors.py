@@ -52,6 +52,22 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / F.greatest(norm(a) * norm(b), F.lit(COSINE_DENOM_FLOOR))
 
 
+def cent_scored(emb: Column) -> Column:
+    """(cos, -c_id) structs of ``emb`` against each centroid of the
+    attached ``cents`` array of (c_id, c_emb) structs, so ``array_max``
+    picks the nearest centroid with ties to the smallest c_id. One
+    transform lambda regardless of the centroid count: inlining each
+    centroid as a plan literal multiplies the codegen by k and falls out
+    of whole-stage codegen (measured 7x on q_ivf_topk)."""
+    return F.transform(
+        F.col("cents"),
+        lambda c: F.struct(
+            cosine(emb, c["c_emb"]).alias("cos"),
+            (-c["c_id"]).alias("neg_id"),
+        ),
+    )
+
+
 def dot_sql(a: str, b: str) -> str:
     """DuckDB equivalent of :func:`dot` (force float64 operands)."""
     return f"list_dot_product(({a})::DOUBLE[], ({b})::DOUBLE[])"

@@ -46,7 +46,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.functions.numeric import davg, davg_sql
-from nyc_landmarks_datalake_spark.functions.vectors import cosine, cosine_sql
+from nyc_landmarks_datalake_spark.functions.vectors import cent_scored, cosine, cosine_sql
 from nyc_landmarks_datalake_spark.operators.dedup import (
     capped_bucket_pairs,
     capped_pair_ctes_sql,
@@ -66,23 +66,10 @@ KM_ITERS = 2
 SEM_THRESHOLD = 0.4
 
 
-def _cent_scored(emb: Column) -> Column:
-    """(cos, -c_id) structs of ``emb`` vs the attached ``cents`` array —
-    one transform lambda regardless of k (inlined per-centroid literals
-    fall out of whole-stage codegen; measured 7x on q_ivf_topk)."""
-    return F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            cosine(emb, c["c_emb"]).alias("cos"),
-            (-c["c_id"]).alias("neg_id"),
-        ),
-    )
-
-
 def _best(emb: Column) -> Column:
     """Struct(cos, neg_id) of the nearest centroid: max cosine, ties to
     the smallest c_id — identical to ORDER BY cos DESC, c_id LIMIT 1."""
-    return F.array_max(_cent_scored(emb))
+    return F.array_max(cent_scored(emb))
 
 
 def _as_cent_array(cents: DataFrame) -> DataFrame:

@@ -1029,42 +1029,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def read_media_dir(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Ingest a directory of media files as a multimodal table via
-    Spark's built-in ``binaryFile`` source: payload bytes + path-derived
-    kind/format metadata, no Python in the scan. At 100 TB this is the
-    bronze tier for images/audio/video — the source supports predicate
-    pushdown on (path, modificationTime, length), so planning filters
-    (e.g. length < 100MB, extension match) never read payload bytes."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    raw = reader.load(path)
-    ext = F.lower(F.element_at(F.split(F.col("path"), r"\."), -1))
-    kind = (
-        F.when(ext.isin("png", "jpg", "jpeg", "gif"), "image")
-        .when(ext.isin("wav", "mp3", "flac"), "audio")
-        .when(ext.isin("mp4", "avi", "mkv"), "video")
-        .otherwise("other")
-    )
-    return raw.select(
-        F.abs(F.xxhash64("path")).alias("media_id"),
-        kind.alias("kind"),
-        F.col("content").alias("payload"),
-        F.struct(
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("sample_rate"),
-            F.lit(None).cast("int").alias("n_frames"),
-            ext.alias("format"),
-        ).alias("meta"),
-        F.col("path"),
-        F.col("length").alias("n_bytes"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Driver-checked twins of the metadata-only media plans. The media
 # table synthesizes deterministically from range(N) (kind/meta are pure

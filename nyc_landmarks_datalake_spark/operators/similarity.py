@@ -27,7 +27,12 @@ from nyc_landmarks_datalake_spark.functions.numeric import (
     dprod_sum_sql,
     dsum_sql,
 )
-from nyc_landmarks_datalake_spark.functions.vectors import cosine, cosine_sql, dot_sql
+from nyc_landmarks_datalake_spark.functions.vectors import (
+    cent_scored,
+    cosine,
+    cosine_sql,
+    dot_sql,
+)
 from nyc_landmarks_datalake_spark.operators.dedup import (
     capped_bucket_pairs,
     capped_pair_ctes_sql,
@@ -223,20 +228,6 @@ NPROBE = 2
 IVF_TOP_K = 3
 
 
-def _cent_scored(emb: Column) -> Column:
-    """Per-centroid (cos, -c_id) structs for one vector against the
-    attached ``cents`` array — ONE transform lambda regardless of
-    centroid count (inlining centroids as plan literals multiplies the
-    codegen by n_centroids and falls out of whole-stage codegen)."""
-    return F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            cosine(emb, c["c_emb"]).alias("cos"),
-            (-c["c_id"]).alias("neg_id"),
-        ),
-    )
-
-
 @query(
     "q_ivf_topk",
     sql=f"""
@@ -305,7 +296,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "embedding",
-            (-F.array_max(_cent_scored(F.col("embedding")))["neg_id"]).alias("c_id"),
+            (-F.array_max(cent_scored(F.col("embedding")))["neg_id"]).alias("c_id"),
         )
     )
     # Probe cells per query: top-NPROBE centroids by the same ordering.
@@ -318,7 +309,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_emb",
             F.explode(
                 F.slice(
-                    F.reverse(F.array_sort(_cent_scored(F.col("q_emb")))),
+                    F.reverse(F.array_sort(cent_scored(F.col("q_emb")))),
                     1,
                     NPROBE,
                 )

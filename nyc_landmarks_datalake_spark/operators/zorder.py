@@ -15,9 +15,11 @@ the corpus by Morton prefix (the file assignment a z-order write would
 produce) yields per-bucket min/max envelopes on BOTH dimensions whose
 tightness the oracle recomputes exactly.
 
-Scale: the Morton code is one map-side projection; the write is one
-range exchange (same cost as any sorted write). Skipping at read time
-is free — parquet stats already exist, z-order just makes them tight.
+Scale: the Morton code is one map-side projection and the envelopes
+one partial aggregate. The package writes no z-ordered files; such a
+write would add one range exchange on the code (the cost of any sorted
+write). Skipping at read time is free — parquet stats already exist,
+z-order just makes them tight.
 """
 
 from __future__ import annotations
@@ -59,27 +61,6 @@ def morton2_sql(x: str, y: str, bits: int = Z_BITS) -> str:
         terms.append(f"(((({x}) >> {i}) & 1) << {2 * i})")
         terms.append(f"(((({y}) >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    n_files: int = 32,
-    bits: int = Z_BITS,
-) -> None:
-    """Write ``df`` z-ordered on two int columns: range-partition by the
-    Morton code (one exchange), sort within partitions so row groups
-    inherit tight stats, drop the helper column on write."""
-    x, y = (F.col(c).bitwiseAND(F.lit((1 << bits) - 1)) for c in cols)
-    keyed = df.withColumn("__z", morton2(x, y, bits))
-    (
-        keyed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 @query(

@@ -1,14 +1,13 @@
 """Process-lifetime scratch directories for zones that outlive a call.
 
 The census table, the partitioned and DPP zones, the bucketed tables,
-the transaction-log scenario, the source round-trip dirs and the
-transformWithState replay stage data under ``tempfile.mkdtemp`` roots
-that must OUTLIVE the lazy DataFrames read back from them (the caller
-collects the result later). ``mkdtemp`` dirs do not die at process exit
-though, so this module registers every such root and removes them all
-in ONE ``atexit`` hook. The other streaming replays do not need it:
-``streaming.guard.replay`` materializes their result and removes their
-staging itself."""
+the transaction-log scenario and the source round-trip dirs stage data
+under ``tempfile.mkdtemp`` roots that must OUTLIVE the lazy DataFrames
+read back from them (the caller collects the result later). ``mkdtemp``
+dirs do not die at process exit though, so this module registers every
+such root and removes them all in ONE ``atexit`` hook. Streaming
+replays do not need it: ``streaming.guard.replay`` materializes their
+result and removes their staging itself."""
 
 from __future__ import annotations
 

@@ -37,12 +37,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor (region
-# is 5 rows, nation 25 — fixed size regardless of sf). customer/supplier
-# grow with sf but stay broadcastable to ~sf100; Catalyst's size-based
-# threshold decides beyond that.
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:

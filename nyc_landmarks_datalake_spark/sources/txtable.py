@@ -47,8 +47,9 @@ referenced by no manifest — invisible to every reader; ``vacuum``
 removes them once another commit has taken their version. A writer
 dying during publish leaves either no manifest (nothing happened) or a
 complete one (commit happened): ``link`` is atomic, and manifests are
-staged write-fsync-rename so a torn JSON is never visible under
-``_txlog``.
+staged write-fsync-link so a torn JSON is never visible under
+``_txlog``. The ``_txlog`` directory is fsynced after the link, so a
+commit its writer saw succeed is still there after a crash.
 
 Scale posture: commits are O(1) driver-side metadata (one small JSON);
 data stays distributed parquet with normal pushdown/pruning. The
@@ -118,6 +119,13 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(f)
 
 
+def _latest_manifest(path: str) -> dict:
+    v = current_version(path)
+    if v is None:
+        raise FileNotFoundError(f"no committed version at {path}")
+    return _read_manifest(path, v)
+
+
 def _stage_data(df: DataFrame, path: str, version: int) -> list[str]:
     """Write df as immutable parquet files under data/, return their
     table-relative paths. Files are namespaced by target version + a
@@ -134,9 +142,13 @@ def _stage_data(df: DataFrame, path: str, version: int) -> list[str]:
 
 def _publish(path: str, version: int, manifest: dict) -> None:
     """Atomically publish a manifest as <version>.json, failing if the
-    version exists (optimistic concurrency)."""
-    os.makedirs(_txlog_dir(path), exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=_txlog_dir(path), suffix=".tmp")
+    version exists (optimistic concurrency). The ``_txlog`` directory is
+    fsynced after the link, so a commit its writer saw succeed survives
+    a crash: the link is a directory entry, which the file's own fsync
+    does not make durable."""
+    log = _txlog_dir(path)
+    os.makedirs(log, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=log, suffix=".tmp")
     try:
         with os.fdopen(fd, "w") as f:
             json.dump(manifest, f)
@@ -150,6 +162,11 @@ def _publish(path: str, version: int, manifest: dict) -> None:
             ) from e
     finally:
         os.unlink(tmp)
+    dfd = os.open(log, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
 
 
 def commit(
@@ -187,11 +204,20 @@ def read_snapshot(
     """Read the table at ``version`` (default: latest). Time travel is
     free: every manifest is a full snapshot. The reader takes the
     manifest's schema, so building it starts no Spark job (see the
-    module docstring); an empty file list reads as zero rows."""
-    v = current_version(path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    m = _read_manifest(path, v)
+    module docstring); an empty file list reads as zero rows.
+
+    A vacuum may unlink the manifest just resolved as the latest (a
+    newer commit made it old) before it is opened; the latest version
+    is then resolved once more. An explicit ``version`` that vacuum
+    dropped raises ``FileNotFoundError``: time travel never returns
+    another version."""
+    if version is not None:
+        m = _read_manifest(path, version)
+    else:
+        try:
+            m = _latest_manifest(path)
+        except FileNotFoundError:
+            m = _latest_manifest(path)
     return spark.read.schema(T.StructType.fromJson(m["schema"])).parquet(
         *[os.path.join(path, f) for f in m["files"]]
     )

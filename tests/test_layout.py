@@ -153,10 +153,8 @@ def test_ivf_cell_layout_partition_pruning(spark, sf_small, tmp_path):
     a post-scan filter over all cells)."""
     from pyspark.sql import functions as F
 
-    from nyc_landmarks_datalake_spark.operators.similarity import (
-        CENTROID_MOD,
-        _cent_scored,
-    )
+    from nyc_landmarks_datalake_spark.functions.vectors import cent_scored
+    from nyc_landmarks_datalake_spark.operators.similarity import CENTROID_MOD
 
     emb = table(spark, sf_small, "embeddings")
     cent = emb.filter(F.col("vec_id") % CENTROID_MOD == 0).select(
@@ -168,7 +166,7 @@ def test_ivf_cell_layout_partition_pruning(spark, sf_small, tmp_path):
     assign = emb.crossJoin(F.broadcast(cent_arr)).select(
         "vec_id",
         "embedding",
-        (-F.array_max(_cent_scored(F.col("embedding")))["neg_id"]).alias("c_id"),
+        (-F.array_max(cent_scored(F.col("embedding")))["neg_id"]).alias("c_id"),
     )
     dest = str(tmp_path / "ivf_corpus")
     assign.write.partitionBy("c_id").parquet(dest)
@@ -186,46 +184,6 @@ def test_ivf_cell_layout_partition_pruning(spark, sf_small, tmp_path):
     probed_rows = probed.count()
     all_rows = spark.read.parquet(dest).count()
     assert 0 < probed_rows < all_rows
-
-
-def test_zorder_write_tightens_cross_dim_stats(spark, sf_small, tmp_path):
-    """Files from a z-ordered write must have (much) tighter envelopes
-    on the SECOND dimension than a linear sort on the first — that
-    envelope is exactly what parquet stats-based skipping prunes with."""
-    from pyspark.sql import functions as F
-
-    from nyc_landmarks_datalake_spark.operators.zorder import Z_BITS, zorder_write
-    from nyc_landmarks_datalake_spark.sources.catalog import table
-
-    orders = table(spark, sf_small, "orders").select(
-        (F.col("o_custkey") % (1 << Z_BITS)).alias("zx"),
-        (F.col("o_orderkey") % (1 << Z_BITS)).alias("zy"),
-    )
-
-    zpath, lpath = str(tmp_path / "zord"), str(tmp_path / "linear")
-    zorder_write(orders, zpath, ("zx", "zy"), n_files=8)
-    (
-        orders.repartitionByRange(8, "zx")
-        .sortWithinPartitions("zx")
-        .write.mode("overwrite")
-        .parquet(lpath)
-    )
-
-    def per_file_y_span(path: str) -> float:
-        df = (
-            spark.read.parquet(path)
-            .withColumn("f", F.input_file_name())
-            .groupBy("f")
-            .agg((F.max("zy") - F.min("zy")).alias("span"), F.count("*").alias("n"))
-            .collect()
-        )
-        spans = [r.span for r in df if r.n > 1]
-        return sum(spans) / len(spans)
-
-    z_span, l_span = per_file_y_span(zpath), per_file_y_span(lpath)
-    # linear layout leaves zy unsorted inside each file → span ~ full
-    # domain; z-order must cut the average y-envelope at least in half
-    assert z_span < 0.5 * l_span, (z_span, l_span)
 
 
 def test_compaction_census_survives_reinvocation(spark, sf_small):

@@ -8,7 +8,6 @@ import hashlib
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.operators.multimodal import (
     FEATURE_DIM,
@@ -119,29 +118,6 @@ def test_decode_image_spark_path(spark):
     for r in rows.values():
         assert (r["width"], r["height"], r["channels"]) == (1, 1, 3)
         assert (r["ch0_sum"], r["ch1_sum"], r["ch2_sum"]) == (200, 100, 50)
-
-
-def test_read_media_dir_binary_source(spark, tmp_path):
-    from nyc_landmarks_datalake_spark.operators.multimodal import (
-        extract_features,
-        read_media_dir,
-    )
-
-    media = tmp_path / "media"
-    media.mkdir()
-    (media / "a.png").write_bytes(b"\x89PNG fake image bytes")
-    (media / "b.wav").write_bytes(b"RIFF fake audio bytes!")
-    (media / "c.txt").write_bytes(b"not media")
-    df = read_media_dir(spark, str(media))
-    rows = {r["meta"]["format"]: r for r in df.collect()}
-    assert rows["png"]["kind"] == "image" and rows["wav"]["kind"] == "audio"
-    assert rows["txt"]["kind"] == "other"
-    assert bytes(rows["png"]["payload"]).startswith(b"\x89PNG")
-    # payload flows straight into the Arrow featurizer
-    feats = extract_features(df, "media_id", "payload").collect()
-    assert len(feats) == 3 and all(len(f["features"]) == 8 for f in feats)
-    # glob filter prunes at the source
-    assert read_media_dir(spark, str(media), glob="*.png").count() == 1
 
 
 def test_decode_png_roundtrip_all_filters():

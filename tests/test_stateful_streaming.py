@@ -112,33 +112,3 @@ def test_stream_dedup_suppresses_across_batches(spark):
     got = sorted(r.k for r in out.select("k").collect())
     assert got == list(range(8)), got
 
-
-def test_tws_user_stats_matches_batch_or_skips(spark, sf_small):
-    """transformWithStateInPandas replay equals the batch GROUP BY —
-    skipped where the TWS protobuf transport is absent (sandbox seam
-    documented in streaming/tws.py)."""
-    import pytest
-
-    from nyc_landmarks_datalake_spark.streaming import tws
-
-    if not tws.tws_available():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            tws.replay_user_stats(spark, None)
-        pytest.skip("google.protobuf absent — TWS runner cannot start here")
-
-    from pyspark.sql import functions as F
-
-    from nyc_landmarks_datalake_spark.sources.catalog import table
-
-    events = table(spark, sf_small, "events").select(
-        "user_id",
-        F.floor(F.col("value") * F.lit(1e6)).cast("long").alias("value_micros"),
-    )
-    got = tws.replay_user_stats(spark, events)
-    want = events.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.sum("value_micros").alias("total_value_micros"),
-        F.min("value_micros").alias("min_value_micros"),
-        F.max("value_micros").alias("max_value_micros"),
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))

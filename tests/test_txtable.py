@@ -87,6 +87,55 @@ def test_vacuum_spares_a_writer_in_flight(spark, tmp_path):
     assert deleted == []
 
 
+def test_publish_fsyncs_the_txlog_dir_after_the_link(tmp_path, monkeypatch):
+    """A published manifest is durable: the ``_txlog`` directory is
+    fsynced after the link that publishes it. The link is a directory
+    entry, which the fsync of the manifest file itself does not cover."""
+    path = str(tmp_path / "t")
+    os.makedirs(txtable._txlog_dir(path))
+    log_ino = os.stat(txtable._txlog_dir(path)).st_ino
+    events = []
+    real_link, real_fsync = os.link, os.fsync
+
+    def link(src, dst):
+        real_link(src, dst)
+        events.append("link")
+
+    def fsync(fd):
+        real_fsync(fd)
+        events.append("fsync_txlog" if os.fstat(fd).st_ino == log_ino else "fsync")
+
+    monkeypatch.setattr(os, "link", link)
+    monkeypatch.setattr(os, "fsync", fsync)
+    txtable._publish(path, 0, {"version": 0, "files": []})
+    assert "link" in events
+    assert "fsync_txlog" in events[events.index("link") + 1 :], events
+
+
+def test_read_snapshot_resolves_latest_again_after_vacuum(
+    spark, tmp_path, monkeypatch
+):
+    """A latest-version read whose resolved manifest a vacuum removed
+    before it was opened resolves the latest version again; time travel
+    to a vacuumed version still raises."""
+    path = str(tmp_path / "t")
+    txtable.commit(spark, path, _typed(spark, 3, "a"), "create", None)
+    new = _typed(spark, 5, "b")
+    txtable.commit(spark, path, new, "overwrite", 0)
+    txtable.vacuum(path, keep_versions=1)
+    real, calls = txtable.current_version, []
+
+    def stale_first(p):
+        calls.append(p)
+        return 0 if len(calls) == 1 else real(p)
+
+    monkeypatch.setattr(txtable, "current_version", stale_first)
+    assert _rows(txtable.read_snapshot(spark, path)) == _rows(new)
+    assert len(calls) == 2
+    with pytest.raises(FileNotFoundError):
+        txtable.read_snapshot(spark, path, 0)
+
+
 def test_merge_upsert_tx_roundtrip(spark, tmp_path):
     path = str(tmp_path / "t")
     base = spark.createDataFrame(
