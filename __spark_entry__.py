@@ -127,6 +127,24 @@ REVERIFY: frozenset[str] = frozenset(
         "q_stream_join_windowed",
         "q_stream_ingest_dedup",
         "q_stream_mv_upsert",
+        # copied query scaffolds are written once: the purchase-graph
+        # pairs and two-way edges, the co-purchase edges, the drift
+        # census, the one fixed-point ln chain (renamed chain columns in
+        # the q_psi_drift and q_link_prediction oracles) and the GIF
+        # walk / image format dispatch (hash-identical at sf0.001 and
+        # sf0.01, same plan audit counts).
+        "q_pagerank_purchases",
+        "q_bfs_hops",
+        "q_degree_distribution",
+        "q_psi_drift",
+        "q_js_drift",
+        "q_kl_drift",
+        "q_image_decode_stats",
+        "q_png_decode_stats",
+        "q_gif_decode_stats",
+        "q_jpeg_decode_stats",
+        "q_image_resize_stats",
+        "q_gif_frame_sample",
     }
 )
 

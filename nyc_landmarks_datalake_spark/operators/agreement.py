@@ -12,7 +12,7 @@ including for negative coefficients.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.operators.textops import STOPWORDS
@@ -348,8 +348,7 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Every step is BIGINT multiply + truncating integer division — the two
 # engines produce the SAME psi_e12 by construction (≈6 significant
 # digits vs the float PSI; the float value is never computed). Since
-# (p-q) and ln(p/q) always share sign, each term is |p-q|·ln(hi/lo) ≥ 0
-# and the r < 1 branch never exists.
+# (p-q) and ln(p/q) always share sign, each term is |p-q|·ln(hi/lo) ≥ 0.
 #
 # Scale posture: two corpus passes (one 2-value min/max agg broadcast
 # back to derive the window split, one hash agg onto (event_type, bin,
@@ -367,16 +366,20 @@ PSI_BIN_WIDTH = 50
 _LN2_PPM = 693_147
 #: psi_e12 > 0.2 * 1e12 → the conventional "significant drift" alarm
 PSI_ALARM_E12 = 200_000_000_000
+#: the (div, shl) tokens of each engine for the fixed-point chains:
+#: truncating integer division and a format string for ``1 << k``
+_SPARK_INT = ("div", "shiftleft(CAST(1 AS BIGINT), {k})")
+_DUCK_INT = ("//", "(CAST(1 AS BIGINT) << {k})")
 
 
 def psi_frac_exprs(div: str) -> list[tuple[str, str]]:
     """Laplace-smoothed window fractions in ppm, floored at 1 ppm, from
     a census row (ref_c, cur_c, ref_n, cur_n); ``div`` is the truncating
     integer-division token (Spark ``div`` / DuckDB ``//``). Shared by
-    the Spark plans and the DuckDB oracles of q_psi_drift / q_js_drift
-    so the clamp semantics cannot diverge. The floor matters from
-    ~1e6 rows/window upward: (0+1)·1e6 // (n+B) == 0 there, and a 0
-    fraction reaches the ln chain as a division by zero."""
+    the Spark plans and the DuckDB oracles of the drift family so the
+    clamp semantics cannot diverge. The floor matters from ~1e6
+    rows/window upward: (0+1)·1e6 // (n+B) == 0 there, and a 0 fraction
+    reaches the ln chain as a division by zero."""
     return [
         (
             "p_ppm",
@@ -389,43 +392,64 @@ def psi_frac_exprs(div: str) -> list[tuple[str, str]]:
     ]
 
 
-def _psi_trajectory(div: str, shl: str) -> list[tuple[str, str]]:
-    """The shared fixed-point (name, expression) chain from (p_ppm,
-    q_ppm) to the per-bin PSI contribution; ``div`` is the truncating
-    integer division token (Spark ``div`` / DuckDB ``//``), ``shl``
-    a format string for ``1 << k``."""
+def _lnfp_steps(
+    prefix: str, num: str, den: str, div: str, shl: str
+) -> list[tuple[str, str]]:
+    """The one fixed-point ln chain: signed ln(num/den) (ppm in, ppm
+    out) as a (name, expression) chain ending in ``{prefix}_ln`` =
+    sign(num-den) · ln(max/min). Range reduction by the bit length of
+    r = max/min, then the atanh series of the mantissa (see the PSI
+    block comment); ``div`` is the truncating integer division token
+    (Spark ``div`` / DuckDB ``//``), ``shl`` a format string for
+    ``1 << k``. Used verbatim by both engines for the drift family and
+    for link prediction's Adamic-Adar weights."""
+    p = prefix
     return [
-        ("hi", "GREATEST(p_ppm, q_ppm)"),
-        ("lo", "LEAST(p_ppm, q_ppm)"),
-        ("r_ppm", f"(hi * 1000000) {div} lo"),
-        ("k", f"length(bin(r_ppm {div} 1000000)) - 1"),
-        ("m_ppm", f"r_ppm {div} {shl.format(k='k')}"),
-        ("z", f"((m_ppm - 1000000) * 1000000) {div} (m_ppm + 1000000)"),
-        ("z2", f"(z * z) {div} 1000000"),
-        ("z3", f"(z2 * z) {div} 1000000"),
-        ("z4", f"(z2 * z2) {div} 1000000"),
-        ("z5", f"(z4 * z) {div} 1000000"),
-        ("z7", f"(z4 * z3) {div} 1000000"),
-        ("z9", f"((z4 * z4) {div} 1000000 * z) {div} 1000000"),
+        (f"{p}_hi", f"GREATEST({num}, {den})"),
+        (f"{p}_lo", f"LEAST({num}, {den})"),
+        (f"{p}_sg", f"CASE WHEN {num} >= {den} THEN 1 ELSE -1 END"),
+        (f"{p}_r", f"({p}_hi * 1000000) {div} {p}_lo"),
+        (f"{p}_k", f"length(bin({p}_r {div} 1000000)) - 1"),
+        (f"{p}_m", f"{p}_r {div} {shl.format(k=f'{p}_k')}"),
+        (f"{p}_z", f"(({p}_m - 1000000) * 1000000) {div} ({p}_m + 1000000)"),
+        (f"{p}_z2", f"({p}_z * {p}_z) {div} 1000000"),
+        (f"{p}_z3", f"({p}_z2 * {p}_z) {div} 1000000"),
+        (f"{p}_z4", f"({p}_z2 * {p}_z2) {div} 1000000"),
+        (f"{p}_z5", f"({p}_z4 * {p}_z) {div} 1000000"),
+        (f"{p}_z7", f"({p}_z4 * {p}_z3) {div} 1000000"),
         (
-            "ln_r_ppm",
-            f"k * {_LN2_PPM}"
-            f" + 2 * (z + z3 {div} 3 + z5 {div} 5 + z7 {div} 7 + z9 {div} 9)",
+            f"{p}_z9",
+            f"(({p}_z4 * {p}_z4) {div} 1000000 * {p}_z) {div} 1000000",
         ),
-        ("contrib_e12", "(hi - lo) * ln_r_ppm"),
+        (
+            f"{p}_ln",
+            f"{p}_sg * ({p}_k * {_LN2_PPM}"
+            f" + 2 * ({p}_z + {p}_z3 {div} 3 + {p}_z5 {div} 5"
+            f" + {p}_z7 {div} 7 + {p}_z9 {div} 9))",
+        ),
     ]
 
 
-def _psi_oracle() -> str:
-    steps = psi_frac_exprs("//") + _psi_trajectory(
-        "//", "(CAST(1 AS BIGINT) << {k})"
-    )
-    # one CTE per step keeps the reference factor 1 (no inlining blowup)
+def _psi_trajectory(div: str, shl: str) -> list[tuple[str, str]]:
+    """(p_ppm, q_ppm) → the per-bin PSI contribution ``contrib_e12`` =
+    (p - q) · ln(p/q), which is |p - q| · ln(hi/lo) (e12 fixed point)."""
+    steps = _lnfp_steps("pq", "p_ppm", "q_ppm", div, shl)
+    steps.append(("contrib_e12", "(p_ppm - q_ppm) * pq_ln"))
+    return steps
+
+
+def _drift_oracle(prefix: str, steps: list[tuple[str, str]], aggs: str) -> str:
+    """DuckDB mirror of :func:`_drift_frame`: the census CTEs, one CTE
+    per fraction and ``steps`` entry (named ``{prefix}_{name}``; one CTE
+    per step keeps the reference factor 1, no inlining blowup), then
+    the per-type ``aggs`` next to the window sizes."""
     step_ctes = []
     prev = "psi_frac"
-    for name, expr in steps:
-        step_ctes.append(f"psi_{name} AS (SELECT *, {expr} AS {name} FROM {prev})")
-        prev = f"psi_{name}"
+    for name, expr in psi_frac_exprs("//") + steps:
+        step_ctes.append(
+            f"{prefix}_{name} AS (SELECT *, {expr} AS {name} FROM {prev})"
+        )
+        prev = f"{prefix}_{name}"
     joined = ",\n".join(step_ctes)
     return f"""
     WITH psi_span AS (
@@ -471,18 +495,23 @@ def _psi_oracle() -> str:
     {joined}
     SELECT event_type,
            MAX(ref_n) AS n_ref, MAX(cur_n) AS n_cur,
-           CAST(SUM(contrib_e12) AS BIGINT) AS psi_e12,
-           CAST(SUM(contrib_e12) AS BIGINT) > {PSI_ALARM_E12} AS drift_alarm
+           {aggs}
     FROM {prev}
     GROUP BY event_type
     """
 
 
-@query("q_psi_drift", sql=_psi_oracle())
-def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type PSI between the first and second half of the
-    observed event window, over fixed value bins — integer-exact
-    (fixed-point ln, identical trajectory both engines)."""
+def _drift_frame(
+    spark: SparkSession,
+    sf_dir: str,
+    steps: list[tuple[str, str]],
+    *aggs: Column,
+) -> DataFrame:
+    """The drift family's Spark plan: per event type, value-bin counts
+    of the reference (first) and current (second) half of the observed
+    event window, every bin present; the smoothed fractions and
+    ``steps`` as columns; then ``aggs`` per type next to the window
+    sizes (n_ref, n_cur)."""
     ev = table(spark, sf_dir, "events").select("event_type", "ts", "value")
     span = ev.agg(
         F.expr("CAST(MIN(unix_micros(ts)) AS BIGINT)").alias("t0"),
@@ -514,27 +543,41 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.expr(f"sequence(0, {PSI_BINS - 1})")).alias("bin"),
         )
     )
-    cnt = (
-        spine.join(cnt0, ["event_type", "bin"], "left")
-        .select(
-            "event_type",
-            "bin",
-            F.coalesce("ref_c", F.lit(0)).alias("ref_c"),
-            F.coalesce("cur_c", F.lit(0)).alias("cur_c"),
-        )
+    cnt = spine.join(cnt0, ["event_type", "bin"], "left").select(
+        "event_type",
+        "bin",
+        F.coalesce("ref_c", F.lit(0)).alias("ref_c"),
+        F.coalesce("cur_c", F.lit(0)).alias("cur_c"),
     )
     tot = cnt.groupBy("event_type").agg(
         F.sum("ref_c").cast("long").alias("ref_n"),
         F.sum("cur_c").cast("long").alias("cur_n"),
     )
     out = cnt.join(F.broadcast(tot), "event_type")
-    for name, expr in psi_frac_exprs("div") + _psi_trajectory(
-        "div", "shiftleft(CAST(1 AS BIGINT), {k})"
-    ):
+    for name, expr in psi_frac_exprs("div") + steps:
         out = out.withColumn(name, F.expr(expr))
     return out.groupBy("event_type").agg(
-        F.max("ref_n").alias("n_ref"),
-        F.max("cur_n").alias("n_cur"),
+        F.max("ref_n").alias("n_ref"), F.max("cur_n").alias("n_cur"), *aggs
+    )
+
+
+@query(
+    "q_psi_drift",
+    sql=_drift_oracle(
+        "psi",
+        _psi_trajectory(*_DUCK_INT),
+        f"""CAST(SUM(contrib_e12) AS BIGINT) AS psi_e12,
+           CAST(SUM(contrib_e12) AS BIGINT) > {PSI_ALARM_E12} AS drift_alarm""",
+    ),
+)
+def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event-type PSI between the first and second half of the
+    observed event window, over fixed value bins — integer-exact
+    (fixed-point ln, identical trajectory both engines)."""
+    return _drift_frame(
+        spark,
+        sf_dir,
+        _psi_trajectory(*_SPARK_INT),
         F.sum("contrib_e12").cast("long").alias("psi_e12"),
         (F.sum("contrib_e12").cast("long") > F.lit(PSI_ALARM_E12)).alias(
             "drift_alarm"
@@ -547,50 +590,14 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PSI over the SAME fixed-bin census: JS(p, q) = (KL(p||m) + KL(q||m))/2
 # with m = (p+q)/2, always in [0, ln 2]. Where PSI's terms pair
 # (p-q) with ln(p/q) (always same sign), the KL terms p·ln(2p/(p+q))
-# are individually signed — so this operator generalizes the r13
-# fixed-point ln to a SIGNED ratio chain (sign from the num/den
-# comparison, magnitude via the same bit-length range reduction + atanh
-# series). Every step stays BIGINT multiply + truncating division,
-# identical text in both engines.
+# are individually signed — the signed ln chain (_lnfp_steps) carries
+# the sign from the num/den comparison. Every step stays BIGINT
+# multiply + truncating division, identical text in both engines.
 #
 # Scale posture identical to q_psi_drift: the corpus contributes two
 # passes; the two ln chains and the divergence sum run on the
 # types × bins census.
 # ---------------------------------------------------------------------------
-def _lnfp_steps(
-    prefix: str, num: str, den: str, div: str, shl: str
-) -> list[tuple[str, str]]:
-    """Signed fixed-point ln(num/den) (ppm in, ppm out) as a (name,
-    expression) chain; emits ``{prefix}_ln`` = sign(num-den) ·
-    ln(max/min). Same trajectory as :func:`_psi_trajectory` with the
-    sign made explicit so callers can weight signed KL terms."""
-    p = prefix
-    return [
-        (f"{p}_hi", f"GREATEST({num}, {den})"),
-        (f"{p}_lo", f"LEAST({num}, {den})"),
-        (f"{p}_sg", f"CASE WHEN {num} >= {den} THEN 1 ELSE -1 END"),
-        (f"{p}_r", f"({p}_hi * 1000000) {div} {p}_lo"),
-        (f"{p}_k", f"length(bin({p}_r {div} 1000000)) - 1"),
-        (f"{p}_m", f"{p}_r {div} {shl.format(k=f'{p}_k')}"),
-        (f"{p}_z", f"(({p}_m - 1000000) * 1000000) {div} ({p}_m + 1000000)"),
-        (f"{p}_z2", f"({p}_z * {p}_z) {div} 1000000"),
-        (f"{p}_z3", f"({p}_z2 * {p}_z) {div} 1000000"),
-        (f"{p}_z4", f"({p}_z2 * {p}_z2) {div} 1000000"),
-        (f"{p}_z5", f"({p}_z4 * {p}_z) {div} 1000000"),
-        (f"{p}_z7", f"({p}_z4 * {p}_z3) {div} 1000000"),
-        (
-            f"{p}_z9",
-            f"(({p}_z4 * {p}_z4) {div} 1000000 * {p}_z) {div} 1000000",
-        ),
-        (
-            f"{p}_ln",
-            f"{p}_sg * ({p}_k * {_LN2_PPM}"
-            f" + 2 * ({p}_z + {p}_z3 {div} 3 + {p}_z5 {div} 5"
-            f" + {p}_z7 {div} 7 + {p}_z9 {div} 9))",
-        ),
-    ]
-
-
 def _js_trajectory(div: str, shl: str) -> list[tuple[str, str]]:
     """(p_ppm, q_ppm) → per-bin 2·JS contribution (e12 fixed point)."""
     steps = _lnfp_steps("jp", "2 * p_ppm", "p_ppm + q_ppm", div, shl)
@@ -599,122 +606,23 @@ def _js_trajectory(div: str, shl: str) -> list[tuple[str, str]]:
     return steps
 
 
-def _js_oracle() -> str:
-    steps = psi_frac_exprs("//") + _js_trajectory(
-        "//", "(CAST(1 AS BIGINT) << {k})"
-    )
-    step_ctes = []
-    prev = "psi_frac"
-    for name, expr in steps:
-        step_ctes.append(
-            f"js_{name} AS (SELECT *, {expr} AS {name} FROM {prev})"
-        )
-        prev = f"js_{name}"
-    joined = ",\n".join(step_ctes)
-    return f"""
-    WITH psi_span AS (
-        SELECT CAST(MIN(epoch_us(ts)) AS BIGINT) AS t0,
-               CAST(MAX(epoch_us(ts)) AS BIGINT) AS t1
-        FROM events
+@query(
+    "q_js_drift",
+    sql=_drift_oracle(
+        "js",
+        _js_trajectory(*_DUCK_INT),
+        "CAST(SUM(contrib2_e12) // 2 AS BIGINT) AS js_e12",
     ),
-    psi_binned AS (
-        SELECT event_type,
-               LEAST({PSI_BINS - 1}, GREATEST(0,
-                   CAST(FLOOR(value / {PSI_BIN_WIDTH}.0) AS INT))) AS bin,
-               CAST(epoch_us(ts) AS BIGINT) * 2 < t0 + t1 AS is_ref
-        FROM events, psi_span
-    ),
-    psi_cnt0 AS (
-        SELECT event_type, bin,
-               CAST(COALESCE(SUM(CASE WHEN is_ref THEN 1 END), 0) AS BIGINT)
-                   AS ref_c,
-               CAST(COALESCE(SUM(CASE WHEN NOT is_ref THEN 1 END), 0)
-                    AS BIGINT) AS cur_c
-        FROM psi_binned GROUP BY 1, 2
-    ),
-    psi_spine AS (
-        SELECT event_type, b.bin
-        FROM (SELECT DISTINCT event_type FROM psi_cnt0),
-             (SELECT unnest(range({PSI_BINS})) AS bin) b
-    ),
-    psi_cnt AS (
-        SELECT s.event_type, s.bin,
-               COALESCE(c.ref_c, 0) AS ref_c, COALESCE(c.cur_c, 0) AS cur_c
-        FROM psi_spine s LEFT JOIN psi_cnt0 c
-          ON c.event_type = s.event_type AND c.bin = s.bin
-    ),
-    psi_tot AS (
-        SELECT event_type, CAST(SUM(ref_c) AS BIGINT) AS ref_n,
-               CAST(SUM(cur_c) AS BIGINT) AS cur_n
-        FROM psi_cnt GROUP BY 1
-    ),
-    psi_frac AS (
-        SELECT c.event_type, c.bin, c.ref_c, c.cur_c, t.ref_n, t.cur_n
-        FROM psi_cnt c JOIN psi_tot t USING (event_type)
-    ),
-    {joined}
-    SELECT event_type,
-           MAX(ref_n) AS n_ref, MAX(cur_n) AS n_cur,
-           CAST(SUM(contrib2_e12) // 2 AS BIGINT) AS js_e12
-    FROM {prev}
-    GROUP BY event_type
-    """
-
-
-@query("q_js_drift", sql=_js_oracle())
+)
 def q_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type Jensen-Shannon divergence between the first and
     second half of the observed event window over the same fixed-bin
     census as q_psi_drift — signed fixed-point ln chains, integer-exact
     cross-engine, bounded by ln 2."""
-    ev = table(spark, sf_dir, "events").select("event_type", "ts", "value")
-    span = ev.agg(
-        F.expr("CAST(MIN(unix_micros(ts)) AS BIGINT)").alias("t0"),
-        F.expr("CAST(MAX(unix_micros(ts)) AS BIGINT)").alias("t1"),
-    )
-    binned = ev.crossJoin(F.broadcast(span)).select(
-        "event_type",
-        F.expr(
-            f"LEAST({PSI_BINS - 1}, GREATEST(0,"
-            f" CAST(FLOOR(value / {PSI_BIN_WIDTH}.0) AS INT)))"
-        ).alias("bin"),
-        F.expr("CAST(unix_micros(ts) AS BIGINT) * 2 < t0 + t1").alias("is_ref"),
-    )
-    cnt0 = binned.groupBy("event_type", "bin").agg(
-        F.expr(
-            "CAST(COALESCE(SUM(CASE WHEN is_ref THEN 1 END), 0) AS BIGINT)"
-        ).alias("ref_c"),
-        F.expr(
-            "CAST(COALESCE(SUM(CASE WHEN NOT is_ref THEN 1 END), 0)"
-            " AS BIGINT)"
-        ).alias("cur_c"),
-    ).localCheckpoint(eager=False)  # census; spine + counts branch
-    spine = (
-        cnt0.select("event_type")
-        .distinct()
-        .select(
-            "event_type",
-            F.explode(F.expr(f"sequence(0, {PSI_BINS - 1})")).alias("bin"),
-        )
-    )
-    cnt = spine.join(cnt0, ["event_type", "bin"], "left").select(
-        "event_type",
-        "bin",
-        F.coalesce("ref_c", F.lit(0)).alias("ref_c"),
-        F.coalesce("cur_c", F.lit(0)).alias("cur_c"),
-    )
-    tot = cnt.groupBy("event_type").agg(
-        F.sum("ref_c").cast("long").alias("ref_n"),
-        F.sum("cur_c").cast("long").alias("cur_n"),
-    )
-    out = cnt.join(F.broadcast(tot), "event_type")
-    for name, expr in psi_frac_exprs("div") + _js_trajectory(
-        "div", "shiftleft(CAST(1 AS BIGINT), {k})"
-    ):
-        out = out.withColumn(name, F.expr(expr))
-    return out.groupBy("event_type").agg(
-        F.max("ref_n").alias("n_ref"),
-        F.max("cur_n").alias("n_cur"),
+    return _drift_frame(
+        spark,
+        sf_dir,
+        _js_trajectory(*_SPARK_INT),
         F.expr("CAST(SUM(contrib2_e12) div 2 AS BIGINT)").alias("js_e12"),
     )
 
@@ -746,70 +654,15 @@ def _kl_trajectory(div: str, shl: str) -> list[tuple[str, str]]:
     return steps
 
 
-def _kl_oracle() -> str:
-    steps = psi_frac_exprs("//") + _kl_trajectory(
-        "//", "(CAST(1 AS BIGINT) << {k})"
-    )
-    step_ctes = []
-    prev = "psi_frac"
-    for name, expr in steps:
-        step_ctes.append(
-            f"kl_{name} AS (SELECT *, {expr} AS {name} FROM {prev})"
-        )
-        prev = f"kl_{name}"
-    joined = ",\n".join(step_ctes)
-    return f"""
-    WITH psi_span AS (
-        SELECT CAST(MIN(epoch_us(ts)) AS BIGINT) AS t0,
-               CAST(MAX(epoch_us(ts)) AS BIGINT) AS t1
-        FROM events
+@query(
+    "q_kl_drift",
+    sql=_drift_oracle(
+        "kl",
+        _kl_trajectory(*_DUCK_INT),
+        """CAST(SUM(kl_fwd_e12) AS BIGINT) AS kl_cur_ref_e12,
+           CAST(SUM(kl_rev_e12) AS BIGINT) AS kl_ref_cur_e12""",
     ),
-    psi_binned AS (
-        SELECT event_type,
-               LEAST({PSI_BINS - 1}, GREATEST(0,
-                   CAST(FLOOR(value / {PSI_BIN_WIDTH}.0) AS INT))) AS bin,
-               CAST(epoch_us(ts) AS BIGINT) * 2 < t0 + t1 AS is_ref
-        FROM events, psi_span
-    ),
-    psi_cnt0 AS (
-        SELECT event_type, bin,
-               CAST(COALESCE(SUM(CASE WHEN is_ref THEN 1 END), 0) AS BIGINT)
-                   AS ref_c,
-               CAST(COALESCE(SUM(CASE WHEN NOT is_ref THEN 1 END), 0)
-                    AS BIGINT) AS cur_c
-        FROM psi_binned GROUP BY 1, 2
-    ),
-    psi_spine AS (
-        SELECT event_type, b.bin
-        FROM (SELECT DISTINCT event_type FROM psi_cnt0),
-             (SELECT unnest(range({PSI_BINS})) AS bin) b
-    ),
-    psi_cnt AS (
-        SELECT s.event_type, s.bin,
-               COALESCE(c.ref_c, 0) AS ref_c, COALESCE(c.cur_c, 0) AS cur_c
-        FROM psi_spine s LEFT JOIN psi_cnt0 c
-          ON c.event_type = s.event_type AND c.bin = s.bin
-    ),
-    psi_tot AS (
-        SELECT event_type, CAST(SUM(ref_c) AS BIGINT) AS ref_n,
-               CAST(SUM(cur_c) AS BIGINT) AS cur_n
-        FROM psi_cnt GROUP BY 1
-    ),
-    psi_frac AS (
-        SELECT c.event_type, c.bin, c.ref_c, c.cur_c, t.ref_n, t.cur_n
-        FROM psi_cnt c JOIN psi_tot t USING (event_type)
-    ),
-    {joined}
-    SELECT event_type,
-           MAX(ref_n) AS n_ref, MAX(cur_n) AS n_cur,
-           CAST(SUM(kl_fwd_e12) AS BIGINT) AS kl_cur_ref_e12,
-           CAST(SUM(kl_rev_e12) AS BIGINT) AS kl_ref_cur_e12
-    FROM {prev}
-    GROUP BY event_type
-    """
-
-
-@query("q_kl_drift", sql=_kl_oracle())
+)
 def q_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type directional Kullback-Leibler divergences between
     the first and second half of the observed event window over the
@@ -817,54 +670,10 @@ def q_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (drift surprise), kl_ref_cur_e12 the reverse — signed fixed-point
     ln chains, integer-exact cross-engine; their sum is PSI by
     definition (pinned in tests)."""
-    ev = table(spark, sf_dir, "events").select("event_type", "ts", "value")
-    span = ev.agg(
-        F.expr("CAST(MIN(unix_micros(ts)) AS BIGINT)").alias("t0"),
-        F.expr("CAST(MAX(unix_micros(ts)) AS BIGINT)").alias("t1"),
-    )
-    binned = ev.crossJoin(F.broadcast(span)).select(
-        "event_type",
-        F.expr(
-            f"LEAST({PSI_BINS - 1}, GREATEST(0,"
-            f" CAST(FLOOR(value / {PSI_BIN_WIDTH}.0) AS INT)))"
-        ).alias("bin"),
-        F.expr("CAST(unix_micros(ts) AS BIGINT) * 2 < t0 + t1").alias("is_ref"),
-    )
-    cnt0 = binned.groupBy("event_type", "bin").agg(
-        F.expr(
-            "CAST(COALESCE(SUM(CASE WHEN is_ref THEN 1 END), 0) AS BIGINT)"
-        ).alias("ref_c"),
-        F.expr(
-            "CAST(COALESCE(SUM(CASE WHEN NOT is_ref THEN 1 END), 0)"
-            " AS BIGINT)"
-        ).alias("cur_c"),
-    ).localCheckpoint(eager=False)  # census; spine + counts branch
-    spine = (
-        cnt0.select("event_type")
-        .distinct()
-        .select(
-            "event_type",
-            F.explode(F.expr(f"sequence(0, {PSI_BINS - 1})")).alias("bin"),
-        )
-    )
-    cnt = spine.join(cnt0, ["event_type", "bin"], "left").select(
-        "event_type",
-        "bin",
-        F.coalesce("ref_c", F.lit(0)).alias("ref_c"),
-        F.coalesce("cur_c", F.lit(0)).alias("cur_c"),
-    )
-    tot = cnt.groupBy("event_type").agg(
-        F.sum("ref_c").cast("long").alias("ref_n"),
-        F.sum("cur_c").cast("long").alias("cur_n"),
-    )
-    out = cnt.join(F.broadcast(tot), "event_type")
-    for name, expr in psi_frac_exprs("div") + _kl_trajectory(
-        "div", "shiftleft(CAST(1 AS BIGINT), {k})"
-    ):
-        out = out.withColumn(name, F.expr(expr))
-    return out.groupBy("event_type").agg(
-        F.max("ref_n").alias("n_ref"),
-        F.max("cur_n").alias("n_cur"),
+    return _drift_frame(
+        spark,
+        sf_dir,
+        _kl_trajectory(*_SPARK_INT),
         F.expr("CAST(SUM(kl_fwd_e12) AS BIGINT)").alias("kl_cur_ref_e12"),
         F.expr("CAST(SUM(kl_rev_e12) AS BIGINT)").alias("kl_ref_cur_e12"),
     )

@@ -35,7 +35,11 @@ from nyc_landmarks_datalake_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from nyc_landmarks_datalake_spark.operators.agreement import _LN2_PPM
+from nyc_landmarks_datalake_spark.operators.agreement import (
+    _DUCK_INT,
+    _SPARK_INT,
+    _lnfp_steps,
+)
 from nyc_landmarks_datalake_spark.operators.dedup import (
     EXACT_DUP_EDGES_SQL,
     LSH_PAIR_CTES,
@@ -161,9 +165,11 @@ def _dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh.unionByName(exact)
 
 
-#: edge CTEs shared by the two clustering consumers (expects
-#: LSH_PAIR_CTES before it in the WITH list).
-_EDGE_CTES = f"""exact_edges AS ({EXACT_DUP_EDGES_SQL}),
+#: the oracle prelude of every dup-clustering query: LSH pairs ∪ exact
+#: edges as a two-way edge list, then the recursive min-label
+#: reachability ``reach`` (doc, lbl) over it
+_REACH_CTES = f"""WITH RECURSIVE {LSH_PAIR_CTES},
+    exact_edges AS ({EXACT_DUP_EDGES_SQL}),
     all_pairs AS (
         SELECT doc1, doc2 FROM lsh_pairs
         UNION ALL
@@ -173,21 +179,20 @@ _EDGE_CTES = f"""exact_edges AS ({EXACT_DUP_EDGES_SQL}),
         SELECT doc1 AS src, doc2 AS dst FROM all_pairs
         UNION ALL
         SELECT doc2 AS src, doc1 AS dst FROM all_pairs
-    )"""
-
-
-@query(
-    "q_dup_clusters",
-    sql=f"""
-    WITH RECURSIVE {LSH_PAIR_CTES},
-    {_EDGE_CTES},
+    ),
     verts AS (SELECT DISTINCT src AS doc FROM edges),
     reach AS (
         SELECT doc, doc AS lbl FROM verts
         UNION
         SELECT e.dst AS doc, r.lbl
         FROM reach r JOIN edges e ON e.src = r.doc
-    )
+    )"""
+
+
+@query(
+    "q_dup_clusters",
+    sql=f"""
+    {_REACH_CTES}
     SELECT doc AS doc_id, MIN(lbl) AS cluster_id
     FROM reach GROUP BY doc
     """,
@@ -206,15 +211,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_apply",
     sql=f"""
-    WITH RECURSIVE {LSH_PAIR_CTES},
-    {_EDGE_CTES},
-    verts AS (SELECT DISTINCT src AS doc FROM edges),
-    reach AS (
-        SELECT doc, doc AS lbl FROM verts
-        UNION
-        SELECT e.dst AS doc, r.lbl
-        FROM reach r JOIN edges e ON e.src = r.doc
-    ),
+    {_REACH_CTES},
     clusters AS (
         SELECT doc, MIN(lbl) AS cluster_id FROM reach GROUP BY doc
     ),
@@ -271,18 +268,52 @@ PR_ITERS = 2
 PR_SUPP_OFFSET = 10_000_000
 PR_MASS = 10**12  # total initial rank in 1e-12 fixed-point units
 
+#: DuckDB body of the distinct (customer, supplier) purchase pairs; each
+#: oracle wraps it in its own CTE header (name, MATERIALIZED or not)
+_PAIRS_SQL = """SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
+        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey"""
+
+
+def _two_way_sql(pairs: str) -> str:
+    """DuckDB body of the two-way (src, dst) edge list over the (c, s)
+    rows of the CTE ``pairs``, suppliers offset by PR_SUPP_OFFSET."""
+    return f"""SELECT c AS src, s + {PR_SUPP_OFFSET} AS dst FROM {pairs}
+        UNION ALL
+        SELECT s + {PR_SUPP_OFFSET} AS src, c AS dst FROM {pairs}"""
+
+
+def _purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (c, s) = (customer, supplier) pairs linked by a lineitem
+    of one of the customer's orders."""
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
+        .distinct()
+    )
+
+
+def _two_way(pairs: DataFrame) -> DataFrame:
+    """(c, s) pairs → the bipartite graph's (src, dst) edges in both
+    directions, suppliers offset by PR_SUPP_OFFSET."""
+    return pairs.select(
+        F.col("c").alias("src"), (F.col("s") + PR_SUPP_OFFSET).alias("dst")
+    ).unionAll(
+        pairs.select(
+            (F.col("s") + PR_SUPP_OFFSET).alias("src"), F.col("c").alias("dst")
+        )
+    )
+
 
 def _pagerank_sql() -> str:
     """DuckDB mirror: CTE chain pr0 → pr1 → ... → pr{PR_ITERS}."""
     ctes = [
         f"""pe0 AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        {_PAIRS_SQL}
     ),
     pedges AS (
-        SELECT c AS src, s + {PR_SUPP_OFFSET} AS dst FROM pe0
-        UNION ALL
-        SELECT s + {PR_SUPP_OFFSET} AS src, c AS dst FROM pe0
+        {_two_way_sql("pe0")}
     ),
     pdeg AS (SELECT src, COUNT(*) AS deg FROM pedges GROUP BY 1),
     pn AS (SELECT COUNT(*) AS n_nodes FROM pdeg),
@@ -314,22 +345,7 @@ def _pagerank_sql() -> str:
     """,
 )
 def q_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = (
-        e0.select(F.col("c").alias("src"), (F.col("s") + PR_SUPP_OFFSET).alias("dst"))
-        .unionAll(
-            e0.select(
-                (F.col("s") + PR_SUPP_OFFSET).alias("src"), F.col("c").alias("dst")
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
+    edges = _two_way(_purchase_pairs(spark, sf_dir)).localCheckpoint(eager=False)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     pr = (
@@ -619,13 +635,10 @@ BFS_NATION = 7  # GERMANY in the TPC-H nation fixture
 def _bfs_sql() -> str:
     ctes = [
         f"""bfs_e0 AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        {_PAIRS_SQL}
     ),
     bfs_edges AS (
-        SELECT c AS src, s + {PR_SUPP_OFFSET} AS dst FROM bfs_e0
-        UNION ALL
-        SELECT s + {PR_SUPP_OFFSET} AS src, c AS dst FROM bfs_e0
+        {_two_way_sql("bfs_e0")}
     ),
     bfs_d0 AS (
         SELECT c_custkey AS node, 0 AS dist
@@ -657,23 +670,8 @@ def _bfs_sql() -> str:
 )
 def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hop-distance census from GERMANY customers over purchase edges."""
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = (
-        e0.select(F.col("c").alias("src"), (F.col("s") + PR_SUPP_OFFSET).alias("dst"))
-        .unionAll(
-            e0.select(
-                (F.col("s") + PR_SUPP_OFFSET).alias("src"), F.col("c").alias("dst")
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
+    edges = _two_way(_purchase_pairs(spark, sf_dir)).localCheckpoint(eager=False)
     dist = cust.filter(F.col("c_nationkey") == BFS_NATION).select(
         F.col("c_custkey").alias("node"), F.lit(0).alias("dist")
     )
@@ -719,17 +717,7 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-purchase graph degree histogram (floor-log2 buckets)."""
     # per-node degree from the undirected incidence (the same
     # tri_both/tri_deg relation the oracle's CTE chain uses)
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
+    und = copurchase_und(spark, sf_dir)
     both = und.select("u", "v").unionAll(
         und.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -757,15 +745,7 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_soft_dedup_weights",
     sql=f"""
-    WITH RECURSIVE {LSH_PAIR_CTES},
-    {_EDGE_CTES},
-    verts AS (SELECT DISTINCT src AS doc FROM edges),
-    reach AS (
-        SELECT doc, doc AS lbl FROM verts
-        UNION
-        SELECT e.dst AS doc, r.lbl
-        FROM reach r JOIN edges e ON e.src = r.doc
-    ),
+    {_REACH_CTES},
     clusters AS (
         SELECT doc, MIN(lbl) AS cluster_id FROM reach GROUP BY doc
     ),
@@ -891,13 +871,10 @@ def kcore_step_sql(prev: str, edges: str = "kedges") -> str:
 def _kcore_sql() -> str:
     ctes = [
         f"""ke0 AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        {_PAIRS_SQL}
     ),
     kedges AS MATERIALIZED (
-        SELECT c AS src, s + {PR_SUPP_OFFSET} AS dst FROM ke0
-        UNION ALL
-        SELECT s + {PR_SUPP_OFFSET} AS src, c AS dst FROM ke0
+        {_two_way_sql("ke0")}
     ),
     kc0 AS MATERIALIZED (
         SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS core
@@ -1000,21 +977,7 @@ def coreness(
 def q_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coreness of every customer/supplier vertex in the purchase
     graph (suppliers offset by PR_SUPP_OFFSET), alongside degree."""
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = e0.select(
-        F.col("c").alias("src"), (F.col("s") + PR_SUPP_OFFSET).alias("dst")
-    ).unionAll(
-        e0.select(
-            (F.col("s") + PR_SUPP_OFFSET).alias("src"), F.col("c").alias("dst")
-        )
-    )
-    return coreness(edges).select(
+    return coreness(_two_way(_purchase_pairs(spark, sf_dir))).select(
         "node", "degree", F.col("core").alias("coreness")
     )
 
@@ -1127,8 +1090,7 @@ def _lpa_sql() -> str:
     # same three relations as separate temp tables.
     ctes = [
         f"""llp AS MATERIALIZED (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        {_PAIRS_SQL}
     ),
     llc AS MATERIALIZED (
         SELECT p.c, p.s, cu.c_nationkey AS nat
@@ -1140,9 +1102,7 @@ def _lpa_sql() -> str:
           ON su.s_suppkey = llc.s AND su.s_nationkey = llc.nat
     ),
     ledges AS MATERIALIZED (
-        SELECT c AS src, s + {PR_SUPP_OFFSET} AS dst FROM ll0
-        UNION ALL
-        SELECT s + {PR_SUPP_OFFSET} AS src, c AS dst FROM ll0
+        {_two_way_sql("ll0")}
     ),
     lp0 AS MATERIALIZED (
         SELECT DISTINCT src AS node, CAST(src AS BIGINT) AS lbl FROM ledges
@@ -1299,29 +1259,16 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic semi-synchronous label-propagation communities of
     the same-nation (domestic) purchase graph — customers ↔ suppliers
     sharing a nation, suppliers offset by PR_SUPP_OFFSET."""
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     cu = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     su = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    pairs = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
+    pairs = _purchase_pairs(spark, sf_dir)
     e0 = (
         pairs.join(cu, pairs.c == cu.c_custkey)
         .join(F.broadcast(su), pairs.s == su.s_suppkey)
         .filter(F.col("c_nationkey") == F.col("s_nationkey"))
         .select("c", "s")
     )
-    edges = e0.select(
-        F.col("c").alias("src"), (F.col("s") + PR_SUPP_OFFSET).alias("dst")
-    ).unionAll(
-        e0.select(
-            (F.col("s") + PR_SUPP_OFFSET).alias("src"), F.col("c").alias("dst")
-        )
-    )
-    return lpa_communities(edges).select(
+    return lpa_communities(_two_way(e0)).select(
         "node", F.col("lbl").alias("community")
     )
 
@@ -1382,13 +1329,10 @@ def hc_step_sql(prev: str, k: int, edges: str = "hedges") -> str:
 def _hc_sql() -> str:
     ctes = [
         f"""he0 AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        {_PAIRS_SQL}
     ),
     hedges AS MATERIALIZED (
-        SELECT c AS src, s + {PR_SUPP_OFFSET} AS dst FROM he0
-        UNION ALL
-        SELECT s + {PR_SUPP_OFFSET} AS src, c AS dst FROM he0
+        {_two_way_sql("he0")}
     ),
     hpiv AS MATERIALIZED (
         SELECT node,
@@ -1568,21 +1512,7 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot-sampled harmonic closeness of every purchase-graph vertex:
     Σ over the HC_PIVOTS md5-chosen pivots of 1e6 // d(pivot, node),
     plus how many pivots reached it."""
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = e0.select(
-        F.col("c").alias("src"), (F.col("s") + PR_SUPP_OFFSET).alias("dst")
-    ).unionAll(
-        e0.select(
-            (F.col("s") + PR_SUPP_OFFSET).alias("src"), F.col("c").alias("dst")
-        )
-    )
-    return harmonic_sketch(edges)
+    return harmonic_sketch(_two_way(_purchase_pairs(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -1636,13 +1566,10 @@ def ce_step_sql(prev: str, k: int, edges: str = "cedges") -> str:
 def _ce_sql() -> str:
     ctes = [
         f"""ce0 AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        {_PAIRS_SQL}
     ),
     cedges AS MATERIALIZED (
-        SELECT c AS src, s + {PR_SUPP_OFFSET} AS dst FROM ce0
-        UNION ALL
-        SELECT s + {PR_SUPP_OFFSET} AS src, c AS dst FROM ce0
+        {_two_way_sql("ce0")}
     ),
     cpiv AS MATERIALIZED (
         SELECT node,
@@ -1726,21 +1653,7 @@ def q_closeness_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase-graph vertex over the same HC_PIVOTS md5-chosen pivots as
     q_harmonic_centrality: Σ distance and max distance to the reaching
     pivots, plus closeness_ppm = n_reached·1e6 // dist_sum."""
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = e0.select(
-        F.col("c").alias("src"), (F.col("s") + PR_SUPP_OFFSET).alias("dst")
-    ).unionAll(
-        e0.select(
-            (F.col("s") + PR_SUPP_OFFSET).alias("src"), F.col("c").alias("dst")
-        )
-    )
-    return closeness_sketch(edges)
+    return closeness_sketch(_two_way(_purchase_pairs(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -1862,21 +1775,7 @@ def q_distance_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     per distance k, how many (pivot, node) pairs sit at exactly k and
     the cumulative ppm — effective diameter = first distance with
     cum_ppm ≥ 900000."""
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = e0.select(
-        F.col("c").alias("src"), (F.col("s") + PR_SUPP_OFFSET).alias("dst")
-    ).unionAll(
-        e0.select(
-            (F.col("s") + PR_SUPP_OFFSET).alias("src"), F.col("c").alias("dst")
-        )
-    )
-    return distance_profile(edges)
+    return distance_profile(_two_way(_purchase_pairs(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -1950,13 +1849,10 @@ def bw_bwd_step_sql(prev: str, k: int, edges: str = "bedges") -> str:
 def _bw_sql() -> str:
     ctes = [
         f"""be0 AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        {_PAIRS_SQL}
     ),
     bedges AS MATERIALIZED (
-        SELECT c AS src, s + {PR_SUPP_OFFSET} AS dst FROM be0
-        UNION ALL
-        SELECT s + {PR_SUPP_OFFSET} AS src, c AS dst FROM be0
+        {_two_way_sql("be0")}
     ),
     bnodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM bedges),
     bpiv AS MATERIALIZED (
@@ -2139,21 +2035,7 @@ def betweenness_sketch(
 def q_betweenness_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot-sampled Brandes betweenness (ppm, ordered-pair convention)
     of every purchase-graph vertex from BW_PIVOTS md5-chosen sources."""
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = e0.select(
-        F.col("c").alias("src"), (F.col("s") + PR_SUPP_OFFSET).alias("dst")
-    ).unionAll(
-        e0.select(
-            (F.col("s") + PR_SUPP_OFFSET).alias("src"), F.col("c").alias("dst")
-        )
-    )
-    return betweenness_sketch(edges)
+    return betweenness_sketch(_two_way(_purchase_pairs(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -2175,7 +2057,7 @@ def q_betweenness_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Exactness: 1/ln(deg) is transcendental, so the Adamic-Adar weight
 # uses the SAME bit-length range-reduction + atanh-series fixed-point
-# ln as the PSI/JS/KL drift family (agreement._psi_trajectory) — both
+# ln as the PSI/JS/KL drift family (agreement._lnfp_steps) — both
 # engines compute identical integers by construction. The
 # resource-allocation and Jaccard scores are plain truncating integer
 # divisions; preferential attachment is an exact product.
@@ -2206,25 +2088,11 @@ def lp_weight_steps(div: str, shl: str) -> list[tuple[str, str]]:
     1e12 // deg. Shared verbatim by the Spark plan and the DuckDB
     oracle (the kcore/LPA/PSI shared-step discipline); ``div`` is the
     truncating integer-division token, ``shl`` a format string for
-    ``1 << k``. ln in ppm: range-reduce by k = floor(log2(deg)) via
-    bit length, mantissa m ∈ [1, 2) through the atanh series
-    ln(m) = 2(z + z³/3 + z⁵/5 + z⁷/7 + z⁹/9), z = (m-1)/(m+1)."""
-    return [
-        ("kk", "length(bin(degw)) - 1"),
-        ("m_ppm", f"(degw * 1000000) {div} {shl.format(k='kk')}"),
-        ("z", f"((m_ppm - 1000000) * 1000000) {div} (m_ppm + 1000000)"),
-        ("z2", f"(z * z) {div} 1000000"),
-        ("z3", f"(z2 * z) {div} 1000000"),
-        ("z4", f"(z2 * z2) {div} 1000000"),
-        ("z5", f"(z4 * z) {div} 1000000"),
-        ("z7", f"(z4 * z3) {div} 1000000"),
-        ("z9", f"((z4 * z4) {div} 1000000 * z) {div} 1000000"),
-        (
-            "ln_deg_ppm",
-            f"kk * {_LN2_PPM}"
-            f" + 2 * (z + z3 {div} 3 + z5 {div} 5 + z7 {div} 7 + z9 {div} 9)",
-        ),
-        ("aa_w_e6", f"1000000000000 {div} ln_deg_ppm"),
+    ``1 << k``. ln in ppm is the drift family's fixed-point chain
+    (``agreement._lnfp_steps``) of ln(degw / 1): its ratio is exactly
+    degw·1e6, so its range reduction is k = floor(log2(deg))."""
+    return _lnfp_steps("deg", "degw", "1", div, shl) + [
+        ("aa_w_e6", f"1000000000000 {div} deg_ln"),
         ("ra_w_e12", f"1000000000000 {div} degw"),
     ]
 
@@ -2235,7 +2103,7 @@ def lp_base_ctes() -> str:
     committed whole-space oracle and the chunked native-scale verifier,
     which materializes lp_adjw/tri_und/tri_deg ONCE as temp tables and
     runs :func:`lp_tail_sql` per chunk over them."""
-    steps = lp_weight_steps("//", "(CAST(1 AS BIGINT) << {k})")
+    steps = lp_weight_steps(*_DUCK_INT)
     step_ctes = []
     prev = "lp_wts0"
     for name, expr in steps:
@@ -2369,9 +2237,7 @@ def link_prediction_frame(
         .localCheckpoint(eager=False)
     )
     wts = deg.select(F.col("u").alias("w"), F.col("deg").alias("degw"))
-    for name, expr in lp_weight_steps(
-        "div", "shiftleft(CAST(1 AS BIGINT), {k})"
-    ):
+    for name, expr in lp_weight_steps(*_SPARK_INT):
         wts = wts.withColumn(name, F.expr(expr))
     adjw = (
         both.select(F.col("u").alias("w"), F.col("v").alias("n"))

@@ -437,148 +437,16 @@ def _lzw_decode(min_code_size: int, data: bytes, max_out: int) -> bytes:
     return bytes(out)
 
 
-def decode_gif(payload: bytes) -> tuple[int, int, int, "object"]:
-    """REAL image decode for non-interlaced GIF87a/89a (first frame):
-    logical-screen + image descriptors, global/local color table,
-    sub-block reassembly, and a from-scratch LZW decompressor
-    (:func:`_lzw_decode`) — pure stdlib + numpy, matching the
-    netpbm/PNG decoders' (width, height, channels, pixels) contract
-    with palette indices expanded to RGB. Interlaced images and
-    truncated streams raise descriptive errors."""
-    import struct
-
-    import numpy as np
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError(f"not a GIF payload: magic={payload[:6]!r}")
-    if len(payload) < 13:
-        raise ValueError("truncated GIF header")
-    _w, _h, packed, _bg, _ar = struct.unpack("<HHBBB", payload[6:13])
-    i = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        if len(payload) - i < 3 * n:
-            raise ValueError("truncated GIF global color table")
-        gct = np.frombuffer(payload[i : i + 3 * n], dtype=np.uint8).reshape(n, 3)
-        i += 3 * n
-    while i < len(payload):
-        block = payload[i]
-        i += 1
-        if block == 0x21:  # extension: label + sub-blocks
-            i += 1
-            while i < len(payload) and payload[i]:
-                i += payload[i] + 1
-            i += 1
-        elif block == 0x2C:  # image descriptor
-            _left, _top, w, h, ipacked = struct.unpack(
-                "<HHHHB", payload[i : i + 9]
-            )
-            i += 9
-            if ipacked & 0x40:
-                raise ValueError("interlaced GIF unsupported")
-            ct = gct
-            if ipacked & 0x80:
-                n = 2 << (ipacked & 0x07)
-                if len(payload) - i < 3 * n:
-                    raise ValueError("truncated GIF local color table")
-                ct = np.frombuffer(
-                    payload[i : i + 3 * n], dtype=np.uint8
-                ).reshape(n, 3)
-                i += 3 * n
-            if ct is None:
-                raise ValueError("GIF image has no color table")
-            if i >= len(payload):
-                raise ValueError("truncated GIF image data")
-            min_code_size = payload[i]
-            i += 1
-            lzw = bytearray()
-            while i < len(payload) and payload[i]:
-                size = payload[i]
-                lzw += payload[i + 1 : i + 1 + size]
-                i += size + 1
-            i += 1
-            idx = _lzw_decode(min_code_size, bytes(lzw), w * h)
-            if len(idx) < w * h:
-                raise ValueError(
-                    f"short GIF raster: want {w * h} pixels, have {len(idx)}"
-                )
-            indices = np.frombuffer(idx[: w * h], dtype=np.uint8)
-            if int(indices.max(initial=0)) >= ct.shape[0]:
-                raise ValueError("GIF pixel index outside color table")
-            pixels = ct[indices].reshape(h, w, 3)
-            return w, h, 3, pixels
-        elif block == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-    raise ValueError("GIF contains no image data")
-
-
-def encode_gif(indices: "object", palette: "object") -> bytes:
-    """Minimal GIF89a encoder (fixture builder for the decode path):
-    (height, width) uint8 palette indices + (n, 3) palette → single
-    non-interlaced frame. The LZW stream emits a clear code before
-    every pixel code, so the dictionary never grows and every code is
-    min_code_size+1 bits — maximally simple, fully spec-conformant."""
-    import struct
-
-    import numpy as np
-
-    idx = np.asarray(indices, dtype=np.uint8)
-    pal = np.asarray(palette, dtype=np.uint8)
-    h, w = idx.shape
-    bits = max(2, int(pal.shape[0] - 1).bit_length())
-    n = 1 << bits
-    table = np.zeros((n, 3), dtype=np.uint8)
-    table[: pal.shape[0]] = pal
-    clear, end = n, n + 1
-    code_size = bits + 1
-    # pack [clear, p0, clear, p1, ..., end] LSB-first
-    acc = 0
-    acc_bits = 0
-    stream = bytearray()
-    codes: list[int] = []
-    for p in idx.reshape(-1):
-        codes += [clear, int(p)]
-    codes.append(end)
-    for c in codes:
-        acc |= c << acc_bits
-        acc_bits += code_size
-        while acc_bits >= 8:
-            stream.append(acc & 0xFF)
-            acc >>= 8
-            acc_bits -= 8
-    if acc_bits:
-        stream.append(acc & 0xFF)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (bits - 1), 0, 0)
-    out += table.tobytes()
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    out.append(bits)  # LZW min code size
-    for off in range(0, len(stream), 255):
-        chunk = stream[off : off + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-def decode_gif_frames(payload: bytes) -> tuple[int, int, int, list]:
-    """REAL multi-frame GIF decode: every image descriptor in the
-    stream, composited onto the logical screen in order.
-
-    Returns ``(screen_w, screen_h, 3, frames)`` where each frame is the
-    full (screen_h, screen_w, 3) uint8 SCREEN after pasting that
-    descriptor's (possibly sub-rect) raster at its (left, top) — i.e.
-    "do not dispose" animation semantics, the composition a frame-
-    sampling pipeline actually wants. Background starts black;
-    graphics-control extensions (delays/transparency/disposal modes
-    2-3) are skipped like every other extension — deliberately out of
-    scope, documented here rather than half-implemented. Shares
-    :func:`_lzw_decode` with the single-frame :func:`decode_gif`
-    (which returns the first descriptor's own rect, not the screen).
-    """
+def _gif_walk(payload: bytes) -> tuple[int, int, Iterator]:
+    """The container walk of a non-interlaced GIF87a/89a that both GIF
+    decoders share: checks the header and reads the global color table
+    eagerly, then returns ``(screen_w, screen_h, images)``, where
+    ``images`` lazily yields ``(left, top, rgb)`` per image descriptor:
+    the descriptor's own (h, w, 3) uint8 rect, its sub-blocks
+    reassembled, LZW-decompressed (:func:`_lzw_decode`) and expanded
+    through the local or global color table. Extensions are skipped.
+    Interlaced images, rects outside the logical screen and truncated
+    or malformed streams raise ``ValueError``."""
     import struct
 
     import numpy as np
@@ -596,67 +464,118 @@ def decode_gif_frames(payload: bytes) -> tuple[int, int, int, list]:
             raise ValueError("truncated GIF global color table")
         gct = np.frombuffer(payload[i : i + 3 * n], dtype=np.uint8).reshape(n, 3)
         i += 3 * n
+
+    def images(i: int) -> Iterator:
+        while i < len(payload):
+            block = payload[i]
+            i += 1
+            if block == 0x21:  # extension: label + sub-blocks
+                i += 1
+                while i < len(payload) and payload[i]:
+                    i += payload[i] + 1
+                i += 1
+            elif block == 0x2C:  # image descriptor
+                if len(payload) - i < 9:
+                    raise ValueError("truncated GIF image descriptor")
+                left, top, w, h, ipacked = struct.unpack(
+                    "<HHHHB", payload[i : i + 9]
+                )
+                i += 9
+                if ipacked & 0x40:
+                    raise ValueError("interlaced GIF unsupported")
+                if left + w > sw or top + h > sh:
+                    raise ValueError(
+                        f"GIF frame rect {w}x{h}+{left}+{top} exceeds "
+                        f"{sw}x{sh} logical screen"
+                    )
+                ct = gct
+                if ipacked & 0x80:
+                    n = 2 << (ipacked & 0x07)
+                    if len(payload) - i < 3 * n:
+                        raise ValueError("truncated GIF local color table")
+                    ct = np.frombuffer(
+                        payload[i : i + 3 * n], dtype=np.uint8
+                    ).reshape(n, 3)
+                    i += 3 * n
+                if ct is None:
+                    raise ValueError("GIF image has no color table")
+                if i >= len(payload):
+                    raise ValueError("truncated GIF image data")
+                min_code_size = payload[i]
+                i += 1
+                lzw = bytearray()
+                while i < len(payload) and payload[i]:
+                    size = payload[i]
+                    lzw += payload[i + 1 : i + 1 + size]
+                    i += size + 1
+                i += 1
+                idx = _lzw_decode(min_code_size, bytes(lzw), w * h)
+                if len(idx) < w * h:
+                    raise ValueError(
+                        f"short GIF raster: want {w * h} pixels, have {len(idx)}"
+                    )
+                indices = np.frombuffer(idx[: w * h], dtype=np.uint8)
+                if int(indices.max(initial=0)) >= ct.shape[0]:
+                    raise ValueError("GIF pixel index outside color table")
+                yield left, top, ct[indices].reshape(h, w, 3)
+            elif block == 0x3B:  # trailer
+                return
+            else:
+                raise ValueError(f"unknown GIF block 0x{block:02x}")
+
+    return sw, sh, images(i)
+
+
+def decode_gif(payload: bytes) -> tuple[int, int, int, "object"]:
+    """REAL image decode for non-interlaced GIF87a/89a (first frame):
+    the first image descriptor's own rect from :func:`_gif_walk` —
+    pure stdlib + numpy, matching the netpbm/PNG decoders' (width,
+    height, channels, pixels) contract with palette indices expanded
+    to RGB. Interlaced images and truncated streams raise descriptive
+    errors."""
+    _sw, _sh, images = _gif_walk(payload)
+    for _left, _top, pixels in images:
+        h, w = pixels.shape[:2]
+        return w, h, 3, pixels
+    raise ValueError("GIF contains no image data")
+
+
+def encode_gif(indices: "object", palette: "object") -> bytes:
+    """Minimal GIF89a encoder (fixture builder for the decode path):
+    (height, width) uint8 palette indices + (n, 3) palette → single
+    non-interlaced frame covering the logical screen, written by
+    :func:`encode_gif_animated`."""
+    import numpy as np
+
+    idx = np.asarray(indices, dtype=np.uint8)
+    h, w = idx.shape
+    return encode_gif_animated((w, h), [(idx, 0, 0)], palette)
+
+
+def decode_gif_frames(payload: bytes) -> tuple[int, int, int, list]:
+    """REAL multi-frame GIF decode: every image descriptor in the
+    stream, composited onto the logical screen in order.
+
+    Returns ``(screen_w, screen_h, 3, frames)`` where each frame is the
+    full (screen_h, screen_w, 3) uint8 SCREEN after pasting that
+    descriptor's (possibly sub-rect) raster at its (left, top) — i.e.
+    "do not dispose" animation semantics, the composition a frame-
+    sampling pipeline actually wants. Background starts black;
+    graphics-control extensions (delays/transparency/disposal modes
+    2-3) are skipped like every other extension — deliberately out of
+    scope, documented here rather than half-implemented. Shares
+    :func:`_gif_walk` with the single-frame :func:`decode_gif`
+    (which returns the first descriptor's own rect, not the screen).
+    """
+    import numpy as np
+
+    sw, sh, images = _gif_walk(payload)
     screen = np.zeros((sh, sw, 3), dtype=np.uint8)
     frames: list = []
-    while i < len(payload):
-        block = payload[i]
-        i += 1
-        if block == 0x21:  # extension: label + sub-blocks
-            i += 1
-            while i < len(payload) and payload[i]:
-                i += payload[i] + 1
-            i += 1
-        elif block == 0x2C:  # image descriptor
-            if len(payload) - i < 9:
-                raise ValueError("truncated GIF image descriptor")
-            left, top, w, h, ipacked = struct.unpack(
-                "<HHHHB", payload[i : i + 9]
-            )
-            i += 9
-            if ipacked & 0x40:
-                raise ValueError("interlaced GIF unsupported")
-            if left + w > sw or top + h > sh:
-                raise ValueError(
-                    f"GIF frame rect {w}x{h}+{left}+{top} exceeds "
-                    f"{sw}x{sh} logical screen"
-                )
-            ct = gct
-            if ipacked & 0x80:
-                n = 2 << (ipacked & 0x07)
-                if len(payload) - i < 3 * n:
-                    raise ValueError("truncated GIF local color table")
-                ct = np.frombuffer(
-                    payload[i : i + 3 * n], dtype=np.uint8
-                ).reshape(n, 3)
-                i += 3 * n
-            if ct is None:
-                raise ValueError("GIF image has no color table")
-            if i >= len(payload):
-                raise ValueError("truncated GIF image data")
-            min_code_size = payload[i]
-            i += 1
-            lzw = bytearray()
-            while i < len(payload) and payload[i]:
-                size = payload[i]
-                lzw += payload[i + 1 : i + 1 + size]
-                i += size + 1
-            i += 1
-            idx = _lzw_decode(min_code_size, bytes(lzw), w * h)
-            if len(idx) < w * h:
-                raise ValueError(
-                    f"short GIF raster: want {w * h} pixels, have {len(idx)}"
-                )
-            indices = np.frombuffer(idx[: w * h], dtype=np.uint8)
-            if int(indices.max(initial=0)) >= ct.shape[0]:
-                raise ValueError("GIF pixel index outside color table")
-            screen[top : top + h, left : left + w] = ct[indices].reshape(
-                h, w, 3
-            )
-            frames.append(screen.copy())
-        elif block == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
+    for left, top, pixels in images:
+        h, w = pixels.shape[:2]
+        screen[top : top + h, left : left + w] = pixels
+        frames.append(screen.copy())
     if not frames:
         raise ValueError("GIF contains no image data")
     return sw, sh, 3, frames
@@ -669,8 +588,10 @@ def encode_gif_animated(
 ) -> bytes:
     """Animated-GIF fixture builder: one image descriptor per frame,
     each ``(indices, left, top)`` pasted at its offset on the logical
-    screen (``indices`` a (h, w) uint8 array). Same clear-code LZW
-    form as :func:`encode_gif`; a shared global color table."""
+    screen (``indices`` a (h, w) uint8 array), and a shared global
+    color table. The LZW stream emits a clear code before every pixel
+    code, so the dictionary never grows and every code is
+    min_code_size+1 bits — maximally simple, fully spec-conformant."""
     import struct
 
     import numpy as np
@@ -698,6 +619,7 @@ def encode_gif_animated(
             raise ValueError(
                 f"frame rect {w}x{h}+{left}+{top} exceeds screen {sw}x{sh}"
             )
+        # pack [clear, p0, clear, p1, ..., end] LSB-first
         acc = 0
         acc_bits = 0
         stream = bytearray()
@@ -839,20 +761,36 @@ def decode_audio(
     return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
 
 
-def decode_image(df: DataFrame, *, id_col: str = "media_id", payload_col: str = "payload") -> DataFrame:
-    """Image decode over a binary column via Arrow-batched mapInPandas:
-    REAL for binary netpbm payloads (:func:`decode_netpbm` — pure
-    numpy) and for non-interlaced 8-bit PNG (:func:`decode_png` —
-    stdlib zlib + numpy unfiltering); PIL-gated for the remaining
-    compressed formats (jpeg et al. — the library is absent in this
-    container; that seam stays explicit per the task spec). Column
-    params are keyword-only so a positional payload name can never
-    silently bind as the id column. Emits per-image dimensions and
-    integer per-channel sums —
-    the stats a downstream dedup/quality stage actually consumes, and
-    integer-exact so the whole Python path sits under the oracle gate
-    (q_image_decode_stats). Zero shuffle: decode is embarrassingly
-    parallel, one Arrow batch per task in flight."""
+def _decode_any(payload: bytes) -> tuple[int, int, int, "object"]:
+    """(width, height, channels, pixels) of one image payload, routed by
+    its magic bytes to the netpbm, PNG, GIF or JPEG decoder. Any other
+    format is the real-library seam: it needs Pillow, which is not a
+    dependency, and raises ``NotImplementedError``."""
+    if payload[:2] in (b"P5", b"P6"):
+        return decode_netpbm(payload)
+    if payload[:8] == _PNG_SIG:
+        return decode_png(payload)
+    if payload[:6] in (b"GIF87a", b"GIF89a"):
+        return decode_gif(payload)
+    if payload[:2] == b"\xFF\xD8":
+        from nyc_landmarks_datalake_spark.operators.jpeg import decode_jpeg
+
+        return decode_jpeg(payload)
+    try:
+        import PIL.Image  # noqa: F401
+    except ImportError as e:
+        raise NotImplementedError(
+            "decode of formats beyond netpbm/PNG/GIF/JPEG/WAV "
+            "requires Pillow, which is not installed"
+        ) from e
+    raise NotImplementedError("PIL wiring lands with the library")
+
+
+def _image_stats(df: DataFrame, id_col: str, payload_col: str, fn) -> DataFrame:
+    """Per payload, ``fn(*decoded)`` → (width, height, channels, pixels)
+    emitted as (id, width, height, channels, ch0..2 sums): integer
+    per-channel sums, 0 for channels the image lacks. Arrow-batched
+    mapInPandas, zero shuffle, one Arrow batch per task in flight."""
     out_schema = T.StructType(
         [
             T.StructField(id_col, df.schema[id_col].dataType),
@@ -869,28 +807,7 @@ def decode_image(df: DataFrame, *, id_col: str = "media_id", payload_col: str = 
         for pdf in batches:
             rows = []
             for pid, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                if payload[:2] in (b"P5", b"P6"):
-                    w, h, c, px = decode_netpbm(payload)
-                elif payload[:8] == _PNG_SIG:
-                    w, h, c, px = decode_png(payload)
-                elif payload[:6] in (b"GIF87a", b"GIF89a"):
-                    w, h, c, px = decode_gif(payload)
-                elif payload[:2] == b"\xFF\xD8":
-                    from nyc_landmarks_datalake_spark.operators.jpeg import (
-                        decode_jpeg,
-                    )
-
-                    w, h, c, px = decode_jpeg(payload)
-                else:  # unknown formats: real-library seam
-                    try:
-                        import PIL.Image  # noqa: F401
-                    except ImportError as e:
-                        raise NotImplementedError(
-                            "decode of formats beyond netpbm/PNG/GIF/JPEG/WAV "
-                            "requires Pillow; absent in this container"
-                        ) from e
-                    raise NotImplementedError("PIL wiring lands with the library")
+                w, h, c, px = fn(*_decode_any(bytes(payload)))
                 sums = px.reshape(-1, c).sum(axis=0, dtype="int64")
                 rows.append(
                     (pid, w, h, c, int(sums[0]),
@@ -902,6 +819,23 @@ def decode_image(df: DataFrame, *, id_col: str = "media_id", payload_col: str = 
     return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
 
 
+def decode_image(df: DataFrame, *, id_col: str = "media_id", payload_col: str = "payload") -> DataFrame:
+    """Image decode over a binary column via Arrow-batched mapInPandas:
+    REAL for binary netpbm payloads (:func:`decode_netpbm` — pure
+    numpy), non-interlaced 8-bit PNG (:func:`decode_png` — stdlib zlib
+    + numpy unfiltering), GIF and baseline JPEG; PIL-gated for the
+    remaining compressed formats (Pillow is not a dependency; the seam
+    stays explicit). Column
+    params are keyword-only so a positional payload name can never
+    silently bind as the id column. Emits per-image dimensions and
+    integer per-channel sums —
+    the stats a downstream dedup/quality stage actually consumes, and
+    integer-exact so the whole Python path sits under the oracle gate
+    (q_image_decode_stats). Zero shuffle: decode is embarrassingly
+    parallel, one Arrow batch per task in flight."""
+    return _image_stats(df, id_col, payload_col, lambda w, h, c, px: (w, h, c, px))
+
+
 def resize_image(
     df: DataFrame,
     target_w: int,
@@ -911,7 +845,8 @@ def resize_image(
     payload_col: str = "payload",
 ) -> DataFrame:
     """REAL pixel resize (nearest-neighbor) over decodable payloads via
-    Arrow-batched mapInPandas: decode (netpbm/PNG/GIF/JPEG), index-map
+    Arrow-batched mapInPandas: decode (same format routing as
+    :func:`decode_image`), index-map
     src pixel (ty*h div th, tx*w div tw) per target pixel, emit target
     dims + integer channel sums of the RESIZED image. Nearest-neighbor
     is pure integer index arithmetic, so the DuckDB oracle can
@@ -919,47 +854,12 @@ def resize_image(
     (q_image_resize_stats). Zero shuffle; embarrassingly parallel."""
     import numpy as np
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("ch0_sum", T.LongType()),
-            T.StructField("ch1_sum", T.LongType()),
-            T.StructField("ch2_sum", T.LongType()),
-        ]
-    )
+    def nearest(w: int, h: int, c: int, px: "object") -> tuple:
+        ys = (np.arange(target_h, dtype=np.int64) * h) // target_h
+        xs = (np.arange(target_w, dtype=np.int64) * w) // target_w
+        return target_w, target_h, c, px[np.ix_(ys, xs)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for pid, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                if payload[:2] in (b"P5", b"P6"):
-                    w, h, c, px = decode_netpbm(payload)
-                elif payload[:8] == _PNG_SIG:
-                    w, h, c, px = decode_png(payload)
-                elif payload[:6] in (b"GIF87a", b"GIF89a"):
-                    w, h, c, px = decode_gif(payload)
-                else:
-                    from nyc_landmarks_datalake_spark.operators.jpeg import (
-                        decode_jpeg,
-                    )
-
-                    w, h, c, px = decode_jpeg(payload)
-                ys = (np.arange(target_h, dtype=np.int64) * h) // target_h
-                xs = (np.arange(target_w, dtype=np.int64) * w) // target_w
-                resized = px[np.ix_(ys, xs)]
-                sums = resized.reshape(-1, c).sum(axis=0, dtype="int64")
-                rows.append(
-                    (pid, target_w, target_h, c, int(sums[0]),
-                     int(sums[1]) if c > 1 else 0,
-                     int(sums[2]) if c > 2 else 0)
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    return _image_stats(df, id_col, payload_col, nearest)
 
 
 def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
@@ -1265,6 +1165,35 @@ def q_image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resize_image(images, 4, 3, id_col="doc_id")
 
 
+def _encoded(raw: DataFrame, col: str, encode_one) -> DataFrame:
+    """(doc_id, payload) fixture images: ``encode_one`` of the bytes in
+    ``col`` of each (doc_id, ``col``) row of ``raw``, built inside
+    mapInPandas, one Arrow batch per task."""
+    enc_schema = T.StructType(
+        [
+            T.StructField("doc_id", raw.schema["doc_id"].dataType),
+            T.StructField("payload", T.BinaryType()),
+        ]
+    )
+
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [encode_one(bytes(r)) for r in pdf[col]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    return raw.mapInPandas(encode, schema=enc_schema)
+
+
+def _fixture_palette() -> "object":
+    """The GIF fixtures' 256-entry palette: entry i = (i, 2i, 3i) mod 256."""
+    import numpy as np
+
+    i = np.arange(256, dtype=np.int64)
+    return np.stack([i % 256, (2 * i) % 256, (3 * i) % 256], axis=1).astype(
+        np.uint8
+    )
+
+
 # ---------------------------------------------------------------------------
 # Oracle-checked REAL JPEG decode: a genuine baseline JPEG per document
 # — 16x16 grayscale built from four FLAT 8x8 blocks whose values are
@@ -1298,28 +1227,15 @@ def q_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = compute_table(spark, sf_dir, "documents")
     raw = docs.select("doc_id", F.unhex(F.md5(F.col("text"))).alias("h16"))
 
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", raw.schema["doc_id"].dataType),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def four_flat_blocks(b: bytes) -> bytes:
+        img = np.zeros((16, 16), dtype=np.uint8)
+        img[:8, :8] = b[0]
+        img[:8, 8:] = b[1]
+        img[8:, :8] = b[2]
+        img[8:, 8:] = b[3]
+        return encode_jpeg(img)
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for hbytes in pdf["h16"]:
-                b = bytes(hbytes)[:4]
-                img = np.zeros((16, 16), dtype=np.uint8)
-                img[:8, :8] = b[0]
-                img[:8, 8:] = b[1]
-                img[8:, :8] = b[2]
-                img[8:, 8:] = b[3]
-                payloads.append(encode_jpeg(img))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    images = raw.mapInPandas(encode, schema=enc_schema)
-    return decode_image(images, id_col="doc_id")
+    return decode_image(_encoded(raw, "h16", four_flat_blocks), id_col="doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1363,38 +1279,14 @@ def q_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.col("text")), F.md5(F.concat(F.col("text"), F.lit("a")))
     )
     raw = docs.select("doc_id", F.unhex(idx_hex).alias("raster"))
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", raw.schema["doc_id"].dataType),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
     n = _GIF_W * _GIF_H
-    pal = np.stack(
-        [
-            np.arange(256, dtype=np.int64) % 256,
-            (2 * np.arange(256, dtype=np.int64)) % 256,
-            (3 * np.arange(256, dtype=np.int64)) % 256,
-        ],
-        axis=1,
-    ).astype(np.uint8)
+    pal = _fixture_palette()
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_gif(
-                    np.frombuffer(bytes(r)[:n], dtype=np.uint8).reshape(
-                        _GIF_H, _GIF_W
-                    ),
-                    pal,
-                )
-                for r in pdf["raster"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def gif(r: bytes) -> bytes:
+        idx = np.frombuffer(r[:n], dtype=np.uint8).reshape(_GIF_H, _GIF_W)
+        return encode_gif(idx, pal)
 
-    images = raw.mapInPandas(encode, schema=enc_schema)
-    return decode_image(images, id_col="doc_id")
+    return decode_image(_encoded(raw, "raster", gif), id_col="doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1476,14 +1368,7 @@ def q_gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     npx = _GIFAN_W * _GIFAN_H
-    pal = np.stack(
-        [
-            np.arange(256, dtype=np.int64) % 256,
-            (2 * np.arange(256, dtype=np.int64)) % 256,
-            (3 * np.arange(256, dtype=np.int64)) % 256,
-        ],
-        axis=1,
-    ).astype(np.uint8)
+    pal = _fixture_palette()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1572,31 +1457,14 @@ def q_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.md5(F.concat(F.col("text"), F.lit(s))) for s in "abcd"],
     )
     raw = docs.select("doc_id", F.unhex(raster_hex).alias("raster"))
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("doc_id", raw.schema["doc_id"].dataType),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
     n = _PNG_W * _PNG_H * 3
     filters = list(range(5))  # one scanline per filter type
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_png(
-                    np.frombuffer(bytes(r)[:n], dtype=np.uint8).reshape(
-                        _PNG_H, _PNG_W, 3
-                    ),
-                    filters=filters,
-                )
-                for r in pdf["raster"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def png(r: bytes) -> bytes:
+        px = np.frombuffer(r[:n], dtype=np.uint8).reshape(_PNG_H, _PNG_W, 3)
+        return encode_png(px, filters=filters)
 
-    images = raw.mapInPandas(encode, schema=enc_schema)
-    return decode_image(images, id_col="doc_id")
+    return decode_image(_encoded(raw, "raster", png), id_col="doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1630,7 +1498,9 @@ def phash_images(
     df: DataFrame, *, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """binary image payload → 60-bit average-hash via real decode
-    inside mapInPandas. Same format routing as decode_image."""
+    inside mapInPandas. Same format routing as decode_image: netpbm,
+    PNG, GIF and JPEG decode; any other format raises
+    ``NotImplementedError`` (it needs Pillow)."""
     import numpy as np
 
     out_schema = T.StructType(
@@ -1644,19 +1514,7 @@ def phash_images(
         for pdf in batches:
             rows = []
             for pid, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                if payload[:2] in (b"P5", b"P6"):
-                    _w, _h, c, px = decode_netpbm(payload)
-                elif payload[:8] == _PNG_SIG:
-                    _w, _h, c, px = decode_png(payload)
-                elif payload[:6] in (b"GIF87a", b"GIF89a"):
-                    _w, _h, c, px = decode_gif(payload)
-                else:
-                    from nyc_landmarks_datalake_spark.operators.jpeg import (
-                        decode_jpeg,
-                    )
-
-                    _w, _h, c, px = decode_jpeg(payload)
+                _w, _h, c, px = _decode_any(bytes(payload))
                 flat = px.reshape(-1, c).astype(np.int64)
                 if c > 1:  # luma fold for color inputs (fixture is gray)
                     flat = flat.sum(axis=1) // c

@@ -227,12 +227,18 @@ def rewrite(spark: SparkSession, path: str, operation: str, fn) -> int:
     """Commit ``fn(latest snapshot)`` as the next version. When a racer
     publishes that version first, re-run ``fn`` on the racer's snapshot
     and try again (Delta's rebase), up to ``MAX_ATTEMPTS`` attempts in
-    all. Staged files of a lost attempt are orphans until vacuumed."""
+    all. A base version that a vacuum dropped after a newer commit is a
+    lost race too: the attempt resolves the latest version again. Staged
+    files of a lost attempt are orphans until vacuumed."""
     for _ in range(MAX_ATTEMPTS):
         base_v = current_version(path)
         if base_v is None:
             raise FileNotFoundError(f"no committed version at {path}")
-        snap = fn(read_snapshot(spark, path, base_v))
+        try:
+            base = read_snapshot(spark, path, base_v)
+        except FileNotFoundError:
+            continue
+        snap = fn(base)
         try:
             return commit(spark, path, snap, operation, base_v)
         except CommitConflict:
@@ -311,8 +317,16 @@ def streaming_upsert_sink(
 def history(path: str) -> list[dict]:
     """Every manifest of the table, in version order (the read side of
     Delta's DESCRIBE HISTORY): version, parent, operation, schema and
-    data files of each commit that ``vacuum`` has not dropped."""
-    return [_read_manifest(path, v) for v in _versions(path)]
+    data files of each commit that ``vacuum`` has not dropped. A
+    manifest that a concurrent vacuum unlinks between the listing and
+    its read is left out."""
+    manifests = []
+    for v in _versions(path):
+        try:
+            manifests.append(_read_manifest(path, v))
+        except FileNotFoundError:
+            continue
+    return manifests
 
 
 def referenced_files(path: str) -> set[str]:

@@ -14,6 +14,8 @@ from nyc_landmarks_datalake_spark.operators.multimodal import (
     decode_image,
     extract_features,
     frame_sample,
+    phash_images,
+    resize_image,
     resize_plan,
     synthesize_media,
 )
@@ -68,15 +70,24 @@ def test_resize_plan_bounds(spark):
         assert r["target_width"] > 0 and r["target_height"] > 0
 
 
-def test_decode_non_netpbm_raises(spark):
-    # synthesize_media payloads are md5 hex text, not netpbm — the
-    # compressed-format path needs PIL (absent), surfaced at execution
+@pytest.mark.parametrize(
+    "decode",
+    [
+        pytest.param(decode_image, id="decode_image"),
+        pytest.param(lambda m: resize_image(m, 4, 3), id="resize_image"),
+        pytest.param(lambda m: phash_images(m, id_col="media_id"), id="phash_images"),
+    ],
+)
+def test_decode_non_netpbm_raises(spark, decode):
+    # synthesize_media payloads are md5 hex text, not an image format —
+    # every decoding path routes an unknown format to the PIL seam
+    # (absent), surfaced at execution, never to a format-specific decoder
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PythonException
 
     media = synthesize_media(spark, 3)
     with pytest.raises((PythonException, Py4JJavaError), match="Pillow|NotImplemented"):
-        decode_image(media).collect()
+        decode(media).collect()
 
 
 def test_decode_netpbm_real_roundtrip():
@@ -427,20 +438,22 @@ def test_decode_gif_frames_composition():
     with pytest.raises(ValueError, match="256"):
         encode_gif_animated((8, 6), [(f0, 0, 0)], np.zeros((257, 3), np.uint8))
     # payload ending mid image-descriptor is the same ValueError
-    # contract as every other malformed-GIF case (not struct.error)
+    # contract as every other malformed-GIF case (not struct.error),
+    # for both decoders
     # header = 6 (sig) + 7 (LSD) + 768 (256-entry GCT); first image
     # descriptor block starts right after — keep its 0x2c marker plus
     # 4 of the 9 descriptor bytes
     trunc = payload[: 13 + 768 + 5]
     assert trunc[13 + 768] == 0x2C
-    with pytest.raises(ValueError, match="truncated GIF image descriptor"):
-        decode_gif_frames(trunc)
     # ...and ending exactly AFTER the full 9-byte descriptor (before
     # the LZW min-code-size byte) must also be ValueError, not
     # IndexError — the adjacent truncation point
     trunc2 = payload[: 13 + 768 + 10]
-    with pytest.raises(ValueError, match="truncated GIF image data"):
-        decode_gif_frames(trunc2)
+    for decode in (decode_gif, decode_gif_frames):
+        with pytest.raises(ValueError, match="truncated GIF image descriptor"):
+            decode(trunc)
+        with pytest.raises(ValueError, match="truncated GIF image data"):
+            decode(trunc2)
 
 
 @given(

@@ -136,6 +136,49 @@ def test_read_snapshot_resolves_latest_again_after_vacuum(
         txtable.read_snapshot(spark, path, 0)
 
 
+def test_rewrite_rebases_past_a_vacuumed_base(spark, tmp_path, monkeypatch):
+    """A rewrite whose resolved base version a vacuum dropped after a
+    newer commit resolves the latest version again and commits on top
+    of it, counting the lost read as one of its attempts."""
+    path = str(tmp_path / "t")
+    txtable.commit(spark, path, _mk(spark, 3, "a"), "create", None)
+    txtable.commit(spark, path, _mk(spark, 4, "b"), "overwrite", 0)
+    txtable.commit(spark, path, _mk(spark, 5, "c"), "overwrite", 1)
+    txtable.vacuum(path, keep_versions=1)
+    real, calls = txtable.current_version, []
+
+    def stale_first(p):
+        calls.append(p)
+        return 0 if len(calls) == 1 else real(p)
+
+    monkeypatch.setattr(txtable, "current_version", stale_first)
+    added = spark.createDataFrame([(50, "added")], "k BIGINT, tag STRING")
+    v = txtable.rewrite(spark, path, "rewrite", lambda s: s.unionByName(added))
+    monkeypatch.undo()
+    assert v == 3
+    got = {r["k"]: r["tag"] for r in txtable.read_snapshot(spark, path).collect()}
+    assert got == {**{k: "c" for k in range(5)}, 50: "added"}
+    # a base that is gone on every attempt exhausts MAX_ATTEMPTS
+    monkeypatch.setattr(txtable, "current_version", lambda p: 0)
+    with pytest.raises(txtable.CommitConflict):
+        txtable.rewrite(spark, path, "rewrite", lambda s: s)
+
+
+def test_history_skips_a_manifest_vacuumed_after_listing(tmp_path, monkeypatch):
+    """history() lists _txlog, then opens each manifest: one that a
+    concurrent vacuum unlinked in between is left out, not raised."""
+    path = str(tmp_path / "t")
+    for v in range(3):
+        txtable._publish(
+            path, v, {"version": v, "parent": v - 1 if v else None,
+                      "operation": "op", "files": []}
+        )
+    listed = txtable._versions(path)
+    os.unlink(txtable._manifest_path(path, 0))  # vacuum after the listing
+    monkeypatch.setattr(txtable, "_versions", lambda p: listed)
+    assert [m["version"] for m in txtable.history(path)] == [1, 2]
+
+
 def test_merge_upsert_tx_roundtrip(spark, tmp_path):
     path = str(tmp_path / "t")
     base = spark.createDataFrame(

@@ -8,6 +8,11 @@ one-liner instead of an ad-hoc scratch script each round:
     python tools/parity_sweep.py --sf-dir .sfnative10 \
         --only 'q_dedup*,q_ivf_topk' --out /tmp/sweep_sf10_dedup.json
 
+``--dump-oracles PATH`` writes every registered oracle SQL text, with
+whitespace runs collapsed to one space, as a sorted JSON object and
+exits without starting Spark. Dumps of two checkouts compare with one
+``diff``: a refactor that must keep the oracles unchanged shows none.
+
 Emits one line per query (ok/FAIL + wall seconds, Spark and oracle
 separately) and a JSON summary. Exit code 0 iff every selected query
 passed.
@@ -56,14 +61,33 @@ def main() -> int:
         help="run and time only the Spark side (no oracle, no compare) — "
         "for scale points where the DuckDB oracle is intractable",
     )
+    ap.add_argument(
+        "--dump-oracles",
+        default=None,
+        metavar="PATH",
+        help="write the whitespace-normalized oracle SQL of every query "
+        "as JSON to PATH and exit",
+    )
     args = ap.parse_args()
+
+    from nyc_landmarks_datalake_spark import registry
+
+    registry.load_all()
+    if args.dump_oracles:
+        with open(args.dump_oracles, "w") as f:
+            json.dump(
+                {n: " ".join(sql.split()) for n, sql in registry.ORACLE.items()},
+                f,
+                indent=1,
+                sort_keys=True,
+            )
+            f.write("\n")
+        return 0
 
     from pyspark.sql import SparkSession
 
-    from nyc_landmarks_datalake_spark import registry
     from oracle_harness import compare, duckdb_conn
 
-    registry.load_all()
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("parity_sweep")
