@@ -145,6 +145,27 @@ REVERIFY: frozenset[str] = frozenset(
         "q_jpeg_decode_stats",
         "q_image_resize_stats",
         "q_gif_frame_sample",
+        # the text-pipeline scaffolds are written once too: the capped
+        # inverted index and its oracle CTEs, the kept-set verification
+        # join, the band structs, the classifier's training loop, scorer,
+        # confusion census and oracle CTE builders, the shared label pass
+        # of DSIR and the bigram-LM oracle CTEs (oracle texts unchanged
+        # after whitespace normalization; hash-identical at sf0.001 and
+        # sf0.01). The LSH, domain-cascade and stream-ingest consumers
+        # are listed above already.
+        "q_dedup_ngram_jaccard",
+        "q_dedup_jaccard_wide",
+        "q_dedup_containment",
+        "q_quality_clf_train",
+        "q_quality_clf_apply",
+        "q_quality_clf_eval",
+        "q_quality_clf_model_select",
+        "q_quality_clf_cv",
+        "q_clf_calibration",
+        "q_dsir_importance",
+        "q_dsir_select_topk",
+        "q_ngram_lm_score",
+        "q_perplexity_buckets",
     }
 )
 

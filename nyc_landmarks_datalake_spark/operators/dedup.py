@@ -346,15 +346,53 @@ def shingled(docs: DataFrame, materialize: bool = False) -> DataFrame:
     return sh.localCheckpoint(eager=False) if materialize else sh
 
 
-_SHINGLED_DUCK = f"""
-    SELECT doc_id, {_SH_DUCK} AS shingles
+def _shingled_duck(n: int) -> str:
+    """DuckDB mirror of the n-word shingle frame (doc_id, shingles)."""
+    return f"""
+    SELECT doc_id, {sh_duck_expr(n)} AS shingles
     FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
 """
+
+
+_SHINGLED_DUCK = _shingled_duck(3)
 
 
 # ---------------------------------------------------------------------------
 # n-gram Jaccard near-dup via inverted-index join.
 # ---------------------------------------------------------------------------
+def _capped_common_counts(sh: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFrame:
+    """(doc1, n1, doc2, n2, n_common) for every doc pair sharing a
+    shingle of document frequency in [2, max_df]: the capped inverted
+    index over a materialized shingle frame. Postings carry each doc's
+    FULL shingle count, so no sizes-join is needed; pairs expand in
+    place per shingle and one shuffle per pair counts the common ones."""
+    from pyspark.sql import Window
+
+    inv = sh.select(
+        F.struct(F.col("doc_id"), F.size("shingles").alias("n_sh")).alias("m"),
+        F.explode("shingles").alias("shingle"),
+    )
+    # df is counted by a WINDOW over the postings (spill-safe sort)
+    # BEFORE any membership collects: a stop-word-like shingle with 10^7
+    # postings on a 100 TB corpus is filtered row-wise and never
+    # materializes as one aggregation-buffer array. The window and the
+    # groupBy hash on the same key, so the exchange is reused.
+    w_sh = Window.partitionBy("shingle")
+    buckets = (
+        inv.withColumn("__df", F.count(F.lit(1)).over(w_sh))
+        .filter((F.col("__df") > 1) & (F.col("__df") <= max_df))
+        .groupBy("shingle")
+        .agg(F.array_sort(F.collect_list("m")).alias("ms"))
+    )
+    pairs = buckets.select(F.explode(F.expr(_all_pairs_expr("ms"))).alias("p"))
+    return pairs.groupBy(
+        F.col("p.a.doc_id").alias("doc1"),
+        F.col("p.a.n_sh").alias("n1"),
+        F.col("p.b.doc_id").alias("doc2"),
+        F.col("p.b.n_sh").alias("n2"),
+    ).agg(F.count(F.lit(1)).alias("n_common"))
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
@@ -378,33 +416,9 @@ def ngram_jaccard_pairs(
     (e.g. the LSH recall census, which feeds BOTH pair generators from
     one shingle frame) pass it in instead of checkpointing the most
     expensive intermediate twice."""
-    from pyspark.sql import Window
-
     if sh is None:
         sh = shingled(docs, materialize=True)
-    inv = sh.select(
-        F.struct(F.col("doc_id"), F.size("shingles").alias("n_sh")).alias("m"),
-        F.explode("shingles").alias("shingle"),
-    )
-    # df is counted by a WINDOW over the postings (spill-safe sort)
-    # BEFORE any membership collects: a stop-word-like shingle with 10^7
-    # postings on a 100 TB corpus is filtered row-wise and never
-    # materializes as one aggregation-buffer array. The window and the
-    # groupBy hash on the same key, so the exchange is reused.
-    w_sh = Window.partitionBy("shingle")
-    buckets = (
-        inv.withColumn("__df", F.count(F.lit(1)).over(w_sh))
-        .filter((F.col("__df") > 1) & (F.col("__df") <= max_df))
-        .groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("m")).alias("ms"))
-    )
-    pairs = buckets.select(F.explode(F.expr(_all_pairs_expr("ms"))).alias("p"))
-    counted = pairs.groupBy(
-        F.col("p.a.doc_id").alias("doc1"),
-        F.col("p.a.n_sh").alias("n1"),
-        F.col("p.b.doc_id").alias("doc2"),
-        F.col("p.b.n_sh").alias("n2"),
-    ).agg(F.count(F.lit(1)).alias("n_common"))
+    counted = _capped_common_counts(sh, max_df)
     jaccard = F.col("n_common") * F.lit(1.0) / (
         F.col("n1") + F.col("n2") - F.col("n_common")
     )
@@ -413,32 +427,49 @@ def ngram_jaccard_pairs(
     )
 
 
-@query(
-    "q_dedup_ngram_jaccard",
-    sql=f"""
-    WITH sh AS ({_SHINGLED_DUCK}),
-    inv0 AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
+#: DuckDB mirror of :func:`_capped_common_counts` over a CTE ``sh``:
+#: the postings ``inv`` of shingles with df in [2, MAX_SHINGLE_DF], and
+#: the pair-count SELECT (doc1, doc2, n_common) over them.
+_INV_CTES = f"""inv0 AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     keep AS (
         SELECT shingle FROM inv0
         GROUP BY shingle
         HAVING COUNT(*) BETWEEN 2 AND {MAX_SHINGLE_DF}
     ),
-    inv AS (SELECT inv0.* FROM inv0 JOIN keep USING (shingle)),
-    pairs AS (
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2,
-               COUNT(*) AS n_common
+    inv AS (SELECT inv0.* FROM inv0 JOIN keep USING (shingle))"""
+_COMMON_COUNTS_SQL = """
+        SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS n_common
         FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY 1, 2
-    )
-    SELECT doc1, doc2,
-           (n_common * 1.0) /
-           (len(s1.shingles) + len(s2.shingles) - n_common) AS jaccard
+    """
+#: the capped Jaccard of a counted pair joined to both docs' ``sh`` rows
+_JACCARD_DUCK = (
+    "(n_common * 1.0) / (len(s1.shingles) + len(s2.shingles) - n_common)"
+)
+
+
+def _inv_index_sql(sh_sql: str, cols: str, score: str, threshold: float) -> str:
+    """Oracle of an inverted-index near-dup pass: the counted pairs over
+    shingle frame ``sh_sql``, joined to both docs' shingle sets, emitting
+    doc1, doc2 and ``cols`` where ``score`` >= ``threshold``."""
+    return f"""
+    WITH sh AS ({sh_sql}),
+    {_INV_CTES},
+    pairs AS ({_COMMON_COUNTS_SQL})
+    SELECT doc1, doc2, {cols}
     FROM pairs
     JOIN sh s1 ON s1.doc_id = doc1
     JOIN sh s2 ON s2.doc_id = doc2
-    WHERE (n_common * 1.0) /
-          (len(s1.shingles) + len(s2.shingles) - n_common) >= {JACCARD_THRESHOLD}
-    """,
+    WHERE {score} >= {threshold}
+    """
+
+
+@query(
+    "q_dedup_ngram_jaccard",
+    sql=_inv_index_sql(
+        _SHINGLED_DUCK, f"{_JACCARD_DUCK} AS jaccard", _JACCARD_DUCK,
+        JACCARD_THRESHOLD,
+    ),
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(compute_table(spark, sf_dir, "documents"))
@@ -457,44 +488,26 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 SHINGLE_WIDE = 7
 
 
-@query(
-    "q_dedup_jaccard_wide",
-    sql=f"""
-    WITH sh AS (
-        SELECT doc_id, CASE WHEN len(toks) >= 7 THEN list_distinct(list_transform(range(1, len(toks)-7+2), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5] || ' ' || toks[i+6])) ELSE [array_to_string(toks, ' ')] END AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-    ),
-    inv0 AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    keep AS (
-        SELECT shingle FROM inv0
-        GROUP BY shingle
-        HAVING COUNT(*) BETWEEN 2 AND {MAX_SHINGLE_DF}
-    ),
-    inv AS (SELECT inv0.* FROM inv0 JOIN keep USING (shingle)),
-    pairs AS (
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2,
-               COUNT(*) AS n_common
-        FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT doc1, doc2,
-           (n_common * 1.0) /
-           (len(s1.shingles) + len(s2.shingles) - n_common) AS jaccard
-    FROM pairs
-    JOIN sh s1 ON s1.doc_id = doc1
-    JOIN sh s2 ON s2.doc_id = doc2
-    WHERE (n_common * 1.0) /
-          (len(s1.shingles) + len(s2.shingles) - n_common) >= {JACCARD_THRESHOLD}
-    """,
-)
-def q_dedup_jaccard_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = compute_table(spark, sf_dir, "documents")
-    wide = (
+def _wide_shingled(docs: DataFrame) -> DataFrame:
+    """doc_id + distinct SHINGLE_WIDE-word shingle array, lazily
+    checkpointed (it feeds the inverted index's explode)."""
+    return (
         docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
         .select("doc_id", F.expr(sh_spark_expr(SHINGLE_WIDE)).alias("shingles"))
         .localCheckpoint(eager=False)
     )
-    return ngram_jaccard_pairs(docs, sh=wide)
+
+
+@query(
+    "q_dedup_jaccard_wide",
+    sql=_inv_index_sql(
+        _shingled_duck(SHINGLE_WIDE), f"{_JACCARD_DUCK} AS jaccard",
+        _JACCARD_DUCK, JACCARD_THRESHOLD,
+    ),
+)
+def q_dedup_jaccard_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = compute_table(spark, sf_dir, "documents")
+    return ngram_jaccard_pairs(docs, sh=_wide_shingled(docs))
 
 
 # --- MinHash ----------------------------------------------------------------
@@ -560,12 +573,46 @@ def _band_hash_spark(j: int) -> Column:
     return F.md5(F.concat_ws(",", *[c.cast("string") for c in sig_slice]))
 
 
+def _band_structs() -> Column:
+    """Array of the BANDS (band_id, band_hash) structs of a minhash
+    signature row — exploded, never self-joined (a bands self-join would
+    duplicate the signature subtree into every branch)."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("band_id"), _band_hash_spark(j).alias("band_hash")
+            )
+            for j in range(BANDS)
+        ]
+    )
+
+
 def _band_hash_sql(j: int) -> str:
     cols = ", ".join(
         f"CAST(sig_{i:02d} AS VARCHAR)"
         for i in range(j * ROWS_PER_BAND, (j + 1) * ROWS_PER_BAND)
     )
     return f"md5(concat_ws(',', {cols}))"
+
+
+def _kept_ctes_sql(p: str) -> str:
+    """DuckDB mirror of :func:`_kept_sets` over the shingle CTE
+    ``{p}sh``: the hot-shingle list ``{p}hot`` (df > MAX_SHINGLE_DF) and
+    the per-doc (doc_id, n_sh, kept) sets ``{p}shk``."""
+    return f"""{p}hot AS (
+        SELECT coalesce(list(shingle), []) AS hot_shingles FROM (
+            SELECT shingle
+            FROM (SELECT doc_id, unnest(shingles) AS shingle FROM {p}sh)
+            GROUP BY shingle
+            HAVING COUNT(*) > {MAX_SHINGLE_DF}
+        )
+    ),
+    {p}shk AS (
+        SELECT doc_id, len(shingles) AS n_sh,
+               list_filter(shingles,
+                           s -> NOT list_contains({p}hot.hot_shingles, s)) AS kept
+        FROM {p}sh CROSS JOIN {p}hot
+    )"""
 
 
 #: CTE-list fragment for the LSH pair pipeline, reusable by downstream
@@ -591,20 +638,7 @@ LSH_PAIR_CTES = f"""sh AS ({_SHINGLED_DUCK}),
     cand AS (
         SELECT DISTINCT p.a AS doc1, p.b AS doc2 FROM bb_pairs
     ),
-    hot AS (
-        SELECT coalesce(list(shingle), []) AS hot_shingles FROM (
-            SELECT shingle
-            FROM (SELECT doc_id, unnest(shingles) AS shingle FROM sh)
-            GROUP BY shingle
-            HAVING COUNT(*) > {MAX_SHINGLE_DF}
-        )
-    ),
-    shk AS (
-        SELECT doc_id, len(shingles) AS n_sh,
-               list_filter(shingles,
-                           s -> NOT list_contains(hot.hot_shingles, s)) AS kept
-        FROM sh CROSS JOIN hot
-    ),
+    {_kept_ctes_sql("")},
     lsh_pairs AS (
         SELECT doc1, doc2,
                (len(list_intersect(s1.kept, s2.kept)) * 1.0) /
@@ -630,15 +664,7 @@ def _lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
     the row_number/self-join chain path, never a collect). Shared by the
     dedup path and the calibration diagnostic so banding changes can
     never desynchronize them."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_id"), _band_hash_spark(j).alias("band_hash")
-            )
-            for j in range(BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("b")).select(
+    bands = sig.select("doc_id", F.explode(_band_structs()).alias("b")).select(
         "doc_id",
         F.col("b.band_id").alias("band_id"),
         F.col("b.band_hash").alias("band_hash"),
@@ -691,24 +717,10 @@ def _kept_sets(sh: DataFrame) -> DataFrame:
     )
 
 
-def lsh_verified_pairs(sh: DataFrame) -> DataFrame:
-    """Verified MinHash-LSH near-dup pairs from a PRE-MATERIALIZED
-    shingle frame (pass ``shingled(docs, materialize=True)``).
-
-    Signatures are computed ONCE map-side; candidates expand inside
-    member-capped band buckets; verification uses the df-capped Jaccard
-    shared with the exact n-gram path (common shingles counted over
-    df <= MAX_SHINGLE_DF only, via array_except against the broadcast
-    hot-shingle set; denominators full-size). One definition of
-    "near-dup >= threshold" engine-wide — and any verified pair has a
-    retained common shingle, so lsh_pairs ⊆ exact pairs by
-    construction (the census row proves it)."""
-    sig = (
-        _with_xs(sh)
-        .select("doc_id", *_minhash_cols())
-        .localCheckpoint(eager=False)
-    )
-    cand = _lsh_candidate_pairs(sig)
+def _with_kept_sets(pairs: DataFrame, sh: DataFrame) -> tuple[DataFrame, Column]:
+    """``pairs`` (doc1, doc2, ...) joined to both docs' :func:`_kept_sets`
+    rows (d1, n1, k1 / d2, n2, k2), and the pair's df-capped common
+    shingle count over them. Callers apply their own threshold."""
     shk = _kept_sets(sh)
     s1 = shk.select(
         F.col("doc_id").alias("d1"),
@@ -720,13 +732,33 @@ def lsh_verified_pairs(sh: DataFrame) -> DataFrame:
         F.col("n_sh").alias("n2"),
         F.col("kept").alias("k2"),
     )
-    n_common = F.size(F.array_intersect(F.col("k1"), F.col("k2")))
+    joined = pairs.join(s1, F.col("doc1") == F.col("d1")).join(
+        s2, F.col("doc2") == F.col("d2")
+    )
+    return joined, F.size(F.array_intersect(F.col("k1"), F.col("k2")))
+
+
+def lsh_verified_pairs(sh: DataFrame) -> DataFrame:
+    """Verified MinHash-LSH near-dup pairs from a PRE-MATERIALIZED
+    shingle frame (pass ``shingled(docs, materialize=True)``).
+
+    Signatures are computed ONCE map-side; candidates expand inside
+    member-capped band buckets; verification uses the df-capped Jaccard
+    shared with the exact n-gram path (common shingles counted over
+    df <= MAX_SHINGLE_DF only, via :func:`_with_kept_sets`;
+    denominators full-size). One definition of "near-dup >= threshold"
+    engine-wide — and any verified pair has a retained common shingle,
+    so lsh_pairs ⊆ exact pairs by construction (the census row proves
+    it)."""
+    sig = (
+        _with_xs(sh)
+        .select("doc_id", *_minhash_cols())
+        .localCheckpoint(eager=False)
+    )
+    joined, n_common = _with_kept_sets(_lsh_candidate_pairs(sig), sh)
     jaccard = n_common * F.lit(1.0) / (F.col("n1") + F.col("n2") - n_common)
-    return (
-        cand.join(s1, F.col("doc1") == F.col("d1"))
-        .join(s2, F.col("doc2") == F.col("d2"))
-        .filter(jaccard >= JACCARD_THRESHOLD)
-        .select("doc1", "doc2", jaccard.alias("jaccard"))
+    return joined.filter(jaccard >= JACCARD_THRESHOLD).select(
+        "doc1", "doc2", jaccard.alias("jaccard")
     )
 
 
@@ -983,25 +1015,21 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = _lsh_candidate_pairs(sig)
     a = sig.select(
-        F.col("doc_id").alias("d1"),
+        F.col("doc_id").alias("g1"),
         *[F.col(f"sig_{i:02d}").alias(f"a_{i:02d}") for i in range(NUM_HASHES)],
     )
     b = sig.select(
-        F.col("doc_id").alias("d2"),
+        F.col("doc_id").alias("g2"),
         *[F.col(f"sig_{i:02d}").alias(f"b_{i:02d}") for i in range(NUM_HASHES)],
     )
     s1 = sh.select(F.col("doc_id").alias("e1"), F.col("shingles").alias("sh1"))
     s2 = sh.select(F.col("doc_id").alias("e2"), F.col("shingles").alias("sh2"))
-    shk = _kept_sets(sh)
-    k1 = shk.select(
-        F.col("doc_id").alias("f1"),
-        F.col("n_sh").alias("kn1"),
-        F.col("kept").alias("kk1"),
-    )
-    k2 = shk.select(
-        F.col("doc_id").alias("f2"),
-        F.col("n_sh").alias("kn2"),
-        F.col("kept").alias("kk2"),
+    joined, n_kc = _with_kept_sets(
+        cand.join(a, F.col("doc1") == F.col("g1"))
+        .join(b, F.col("doc2") == F.col("g2"))
+        .join(s1, F.col("doc1") == F.col("e1"))
+        .join(s2, F.col("doc2") == F.col("e2")),
+        sh,
     )
     est = (
         sum(
@@ -1014,22 +1042,13 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         F.size(F.array_intersect(F.col("sh1"), F.col("sh2"))) * F.lit(1.0)
     ) / F.size(F.array_union(F.col("sh1"), F.col("sh2")))
-    n_kc = F.size(F.array_intersect(F.col("kk1"), F.col("kk2")))
-    capped = n_kc * F.lit(1.0) / (F.col("kn1") + F.col("kn2") - n_kc)
-    return (
-        cand.join(a, F.col("doc1") == F.col("d1"))
-        .join(b, F.col("doc2") == F.col("d2"))
-        .join(s1, F.col("doc1") == F.col("e1"))
-        .join(s2, F.col("doc2") == F.col("e2"))
-        .join(k1, F.col("doc1") == F.col("f1"))
-        .join(k2, F.col("doc2") == F.col("f2"))
-        .select(
-            "doc1",
-            "doc2",
-            est.alias("est_jaccard"),
-            exact.alias("exact_jaccard"),
-            capped.alias("capped_jaccard"),
-        )
+    capped = n_kc * F.lit(1.0) / (F.col("n1") + F.col("n2") - n_kc)
+    return joined.select(
+        "doc1",
+        "doc2",
+        est.alias("est_jaccard"),
+        exact.alias("exact_jaccard"),
+        capped.alias("capped_jaccard"),
     )
 
 
@@ -1050,24 +1069,12 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_lsh_recall_census",
     sql=f"""
     WITH {LSH_PAIR_CTES},
-    inv0 AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    keep AS (
-        SELECT shingle FROM inv0
-        GROUP BY shingle
-        HAVING COUNT(*) BETWEEN 2 AND {MAX_SHINGLE_DF}
-    ),
-    inv AS (SELECT inv0.* FROM inv0 JOIN keep USING (shingle)),
+    {_INV_CTES},
     exact_pairs AS (
-        SELECT doc1, doc2 FROM (
-            SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS n_common
-            FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ) p
+        SELECT doc1, doc2 FROM ({_COMMON_COUNTS_SQL}) p
         JOIN sh s1 ON s1.doc_id = p.doc1
         JOIN sh s2 ON s2.doc_id = p.doc2
-        WHERE (n_common * 1.0) /
-              (len(s1.shingles) + len(s2.shingles) - n_common)
-              >= {JACCARD_THRESHOLD}
+        WHERE {_JACCARD_DUCK} >= {JACCARD_THRESHOLD}
     ),
     l AS (SELECT doc1, doc2 FROM lsh_pairs)
     SELECT
@@ -1109,42 +1116,26 @@ def q_lsh_recall_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verbatim-embedded in a long one scores |A∩B|/min(|A|,|B|) ~ 1 while
 # its Jaccard stays low (the union is dominated by the long doc) — so
 # quote-expansion / boilerplate-wrapping duplicates are invisible to
-# the symmetric pass. Same capped inverted-index machinery as
-# q_dedup_jaccard_wide (7-gram shingles, df cap before pair
-# expansion); only the final normalization differs.
+# the symmetric pass. Same capped inverted index as the Jaccard passes
+# (_capped_common_counts / _inv_index_sql over the SHINGLE_WIDE frame,
+# df cap before pair expansion); only the final normalization differs.
 # ---------------------------------------------------------------------------
 CONTAINMENT_THRESHOLD = 0.9
 
 
+_CONTAINMENT_DUCK = (
+    "(n_common * 1.0) / least(len(s1.shingles), len(s2.shingles))"
+)
+
+
 @query(
     "q_dedup_containment",
-    sql=f"""
-    WITH sh AS (
-        SELECT doc_id, CASE WHEN len(toks) >= 7 THEN list_distinct(list_transform(range(1, len(toks)-7+2), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' || toks[i+4] || ' ' || toks[i+5] || ' ' || toks[i+6])) ELSE [array_to_string(toks, ' ')] END AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+    sql=_inv_index_sql(
+        _shingled_duck(SHINGLE_WIDE),
+        f"CAST(n_common AS BIGINT) AS n_common, {_CONTAINMENT_DUCK} AS containment",
+        _CONTAINMENT_DUCK,
+        CONTAINMENT_THRESHOLD,
     ),
-    inv0 AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    keep AS (
-        SELECT shingle FROM inv0
-        GROUP BY shingle
-        HAVING COUNT(*) BETWEEN 2 AND {MAX_SHINGLE_DF}
-    ),
-    inv AS (SELECT inv0.* FROM inv0 JOIN keep USING (shingle)),
-    pairs AS (
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS n_common
-        FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT doc1, doc2,
-           CAST(n_common AS BIGINT) AS n_common,
-           (n_common * 1.0) / least(len(s1.shingles), len(s2.shingles))
-               AS containment
-    FROM pairs
-    JOIN sh s1 ON s1.doc_id = doc1
-    JOIN sh s2 ON s2.doc_id = doc2
-    WHERE (n_common * 1.0) / least(len(s1.shingles), len(s2.shingles))
-          >= {CONTAINMENT_THRESHOLD}
-    """,
 )
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-superset pairs by shingle containment (>= 0.9).
@@ -1162,34 +1153,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the top-df shingles routed through a frequency-bucketed join
     instead of raising the cap.
     """
-    from pyspark.sql import Window as _W
-
     docs = compute_table(spark, sf_dir, "documents")
-    sh = (
-        docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-        .select(
-            "doc_id", F.expr(sh_spark_expr(SHINGLE_WIDE)).alias("shingles")
-        )
-        .localCheckpoint(eager=False)
-    )
-    inv = sh.select(
-        F.struct(F.col("doc_id"), F.size("shingles").alias("n_sh")).alias("m"),
-        F.explode("shingles").alias("shingle"),
-    )
-    w_sh = _W.partitionBy("shingle")
-    buckets = (
-        inv.withColumn("__df", F.count(F.lit(1)).over(w_sh))
-        .filter((F.col("__df") > 1) & (F.col("__df") <= MAX_SHINGLE_DF))
-        .groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("m")).alias("ms"))
-    )
-    pairs = buckets.select(F.explode(F.expr(_all_pairs_expr("ms"))).alias("p"))
-    counted = pairs.groupBy(
-        F.col("p.a.doc_id").alias("doc1"),
-        F.col("p.a.n_sh").alias("n1"),
-        F.col("p.b.doc_id").alias("doc2"),
-        F.col("p.b.n_sh").alias("n2"),
-    ).agg(F.count(F.lit(1)).alias("n_common"))
+    counted = _capped_common_counts(_wide_shingled(docs))
     containment = F.col("n_common") * F.lit(1.0) / F.least(
         F.col("n1"), F.col("n2")
     )
@@ -1267,20 +1232,7 @@ def domain_dedup_ctes_sql(src: str) -> str:
                p.a.doc_id AS doc1, p.b.doc_id AS doc2
         FROM dd_pairs
     ),
-    dhot AS (
-        SELECT coalesce(list(shingle), []) AS hot_shingles FROM (
-            SELECT shingle
-            FROM (SELECT doc_id, unnest(shingles) AS shingle FROM dsh)
-            GROUP BY shingle
-            HAVING COUNT(*) > {MAX_SHINGLE_DF}
-        )
-    ),
-    dshk AS (
-        SELECT doc_id, len(shingles) AS n_sh,
-               list_filter(shingles,
-                           s -> NOT list_contains(dhot.hot_shingles, s)) AS kept
-        FROM dsh CROSS JOIN dhot
-    ),
+    {_kept_ctes_sql("d")},
     dver AS (
         SELECT c.source, c.doc1, c.doc2
         FROM dcand c
@@ -1313,15 +1265,7 @@ def domain_dedup_edges(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
         .localCheckpoint(eager=False)
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_id"), _band_hash_spark(j).alias("band_hash")
-            )
-            for j in range(BANDS)
-        ]
-    )
-    bands = sig.select("mem", "source", F.explode(band_structs).alias("b")).select(
+    bands = sig.select("mem", "source", F.explode(_band_structs()).alias("b")).select(
         "mem",
         "source",
         F.col("b.band_id").alias("band_id"),
@@ -1339,28 +1283,12 @@ def domain_dedup_edges(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    shk = _kept_sets(sh)
-    s1 = shk.select(
-        F.col("doc_id").alias("d1"),
-        F.col("n_sh").alias("n1"),
-        F.col("kept").alias("k1"),
-    )
-    s2 = shk.select(
-        F.col("doc_id").alias("d2"),
-        F.col("n_sh").alias("n2"),
-        F.col("kept").alias("k2"),
-    )
-    n_common = F.size(F.array_intersect(F.col("k1"), F.col("k2")))
-    ver = (
-        cand.join(s1, F.col("doc1") == F.col("d1"))
-        .join(s2, F.col("doc2") == F.col("d2"))
-        .filter(
-            F.lit(1_000_000).cast("long") * n_common
-            >= _domain_thr_ppm_spark(F.col("source"))
-            * (F.col("n1") + F.col("n2") - n_common)
-        )
-        .select("source", "doc1", "doc2")
-    )
+    joined, n_common = _with_kept_sets(cand, sh)
+    ver = joined.filter(
+        F.lit(1_000_000).cast("long") * n_common
+        >= _domain_thr_ppm_spark(F.col("source"))
+        * (F.col("n1") + F.col("n2") - n_common)
+    ).select("source", "doc1", "doc2")
     return cand, ver
 
 

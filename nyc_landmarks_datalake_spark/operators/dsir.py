@@ -37,14 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_landmarks_datalake_spark.operators.quality_clf import (
-    _GRAMS,
-    _GRAMS_SQL,
-    _LABEL,
-    _LABEL_SQL,
-)
+from nyc_landmarks_datalake_spark.operators.quality_clf import _lab_ctes, _labeled
 from nyc_landmarks_datalake_spark.registry import query
-from nyc_landmarks_datalake_spark.sources.catalog import compute_table
 
 #: hashed bucket space for the n-gram importance model
 K_DSIR = 1024
@@ -56,21 +50,7 @@ _B_SQL = f"(('0x' || substr(md5(g), 1, 15))::BIGINT) % {K_DSIR}"
 
 def dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, y, importance) for every document."""
-    docs = compute_table(spark, sf_dir, "documents")
-    lab = (
-        docs.select(
-            "doc_id",
-            "lang",
-            F.expr("filter(split(text, ' '), w -> w != '')").alias("toks"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.expr(_LABEL).cast("long").alias("y"),
-            F.expr(_GRAMS).alias("grams"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    lab = _labeled(spark, sf_dir)
     inst = lab.select("y", F.explode("grams").alias("g")).select(
         "y", F.expr(_B).alias("b")
     )
@@ -118,17 +98,7 @@ def dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scored_ctes() -> str:
-    return f"""WITH base AS (
-        SELECT doc_id, lang,
-               list_filter(string_split(text, ' '), w -> w != '') AS toks
-        FROM documents
-    ),
-    lab AS (
-        SELECT doc_id, lang,
-               CAST({_LABEL_SQL} AS BIGINT) AS y,
-               {_GRAMS_SQL} AS grams
-        FROM base
-    ),
+    return f"""WITH {_lab_ctes()},
     inst AS (
         SELECT doc_id, y, {_B_SQL} AS b
         FROM (SELECT doc_id, y, unnest(grams) AS g FROM lab)

@@ -40,7 +40,9 @@ agg. Nothing in the loop rescans text.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Iterator
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.operators.textops import STOPWORDS
@@ -93,20 +95,14 @@ _LABEL_SQL = (
 )
 
 
-def _lab_feat(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(labels+grams, hashed feature counts) — the single text pass.
-
-    ``lab`` carries (doc_id, lang, y, grams); ``feat`` is the compact
-    (doc_id, y, b, x) relation every iteration reuses. Both are
-    lazily checkpointed: lab because ``feat`` explodes its computed
-    array (GenerateExec re-evaluates its child — the repo-wide trap),
-    feat because six plan references would otherwise recompute the
-    corpus pass.
-    """
+def _labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, lang, y, grams) — the single text pass, shared with
+    :mod:`dsir`: non-empty tokens, the integer label and the
+    unigram+bigram array. Lazily checkpointed because every consumer
+    explodes its computed gram array (GenerateExec re-evaluates its
+    child — the repo-wide trap)."""
     docs = compute_table(spark, sf_dir, "documents")
-    lab = (
+    return (
         docs.select(
             "doc_id",
             "lang",
@@ -120,6 +116,16 @@ def _lab_feat(
         )
         .localCheckpoint(eager=False)
     )
+
+
+def _lab_feat(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(:func:`_labeled`, hashed feature counts): ``feat`` is the
+    compact (doc_id, y, b, x) relation every iteration reuses, lazily
+    checkpointed because six plan references would otherwise recompute
+    the corpus pass."""
+    lab = _labeled(spark, sf_dir)
     feat = (
         lab.select("doc_id", "y", F.explode("grams").alias("g"))
         .select("doc_id", "y", F.expr(_BUCKET).alias("b"))
@@ -130,17 +136,49 @@ def _lab_feat(
     return lab, feat
 
 
-#: deterministic cross-engine holdout: doc is TEST iff its md5-derived
-#: id hash falls in fold 0 of N_FOLDS
+def _lab_ctes(mat: str = "") -> str:
+    """DuckDB mirror of :func:`_labeled`: CTEs ``base`` and ``lab``.
+    ``mat="MATERIALIZED "`` pins them in a statement that reads them
+    many times."""
+    return f"""base AS {mat}(
+        SELECT doc_id, lang,
+               list_filter(string_split(text, ' '), w -> w != '') AS toks
+        FROM documents
+    ),
+    lab AS {mat}(
+        SELECT doc_id, lang,
+               CAST({_LABEL_SQL} AS BIGINT) AS y,
+               {_GRAMS_SQL} AS grams
+        FROM base
+    )"""
+
+
+def _feat_ctes(mat: str = "") -> str:
+    """DuckDB mirror of :func:`_lab_feat`: :func:`_lab_ctes` plus the
+    feature relation ``feat``."""
+    return f"""{_lab_ctes(mat)},
+    feat AS {mat}(
+        SELECT doc_id, y, {_BUCKET_SQL} AS b,
+               CAST(COUNT(*) AS BIGINT) AS x
+        FROM (SELECT doc_id, y, unnest(grams) AS g FROM lab)
+        GROUP BY 1, 2, 3
+    )"""
+
+
+#: deterministic cross-engine folds: a doc's fold is its md5-derived id
+#: hash mod N_FOLDS; fold 0 is the holdout (TEST) of the single-split
+#: queries
 N_FOLDS = 5
-_IS_TEST = (
+_FOLD = (
     "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10)"
-    f" as bigint) % {N_FOLDS} = 0"
+    f" as bigint) % {N_FOLDS}"
 )
-_IS_TEST_SQL = (
+_FOLD_SQL = (
     "(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT)"
-    f" % {N_FOLDS} = 0"
+    f" % {N_FOLDS}"
 )
+_IS_TEST = f"{_FOLD} = 0"
+_IS_TEST_SQL = f"{_FOLD_SQL} = 0"
 
 
 def clf_chain(
@@ -160,19 +198,21 @@ def clf_chain(
     lab, feat = _lab_feat(spark, sf_dir)
     if train_only:
         feat = feat.filter(F.expr(f"NOT ({_IS_TEST})"))
-    return lab, feat, _train_iters(spark, feat)
+    *_, w = _epochs(spark, feat)
+    return lab, feat, w
 
 
-def _train_iters(
-    spark: SparkSession, feat: DataFrame, n_iters: int = N_ITERS
-) -> DataFrame:
-    """The batch-perceptron iteration loop over a (doc_id, y, b, x)
-    feature relation; returns the K-row (b, w) weight vector."""
+def _epochs(
+    spark: SparkSession, feat: DataFrame, n_epochs: int = N_ITERS
+) -> Iterator[DataFrame]:
+    """The batch-perceptron loop over a (doc_id, y, b, x) feature
+    relation: yields the K-row (b, w) weight vector after each of
+    ``n_epochs`` epochs."""
     w = spark.range(K_BUCKETS).select(
         F.col("id").cast("long").alias("b"),
         F.lit(0).cast("long").alias("w"),
     )
-    for _ in range(n_iters):
+    for _ in range(n_epochs):
         scores = (
             feat.join(F.broadcast(w), "b")
             .groupBy("doc_id", "y")
@@ -194,7 +234,39 @@ def _train_iters(
             )
             .localCheckpoint(eager=True)
         )
-    return w
+        yield w
+
+
+def _train_ctes(feat: str, n_epochs: int, sfx: str = "") -> str:
+    """DuckDB mirror of :func:`_epochs` over the feature CTE ``feat``:
+    ``w{sfx}0`` (zeros), then per epoch k the scores ``s{sfx}{k}``,
+    misclassified docs ``m{sfx}{k}``, gradient ``g{sfx}{k}`` and
+    weights ``w{sfx}{k}``."""
+    stages = [
+        f"""w{sfx}0 AS (
+        SELECT CAST(b AS BIGINT) AS b, CAST(0 AS BIGINT) AS w
+        FROM range(0, {K_BUCKETS}) t(b)
+    )"""
+    ]
+    for k in range(1, n_epochs + 1):
+        p, g, w = f"w{sfx}{k - 1}", f"g{sfx}{k}", f"w{sfx}{k}"
+        stages.append(f"""s{sfx}{k} AS (
+        SELECT f.doc_id, f.y, CAST(SUM(f.x * w.w) AS BIGINT) AS score
+        FROM {feat} f JOIN {p} w USING (b)
+        GROUP BY 1, 2
+    ),
+    m{sfx}{k} AS (SELECT doc_id FROM s{sfx}{k} WHERE y * score <= 0),
+    {g} AS (
+        SELECT b, CAST(SUM(y * x) AS BIGINT) AS g
+        FROM {feat}
+        WHERE doc_id IN (SELECT doc_id FROM m{sfx}{k})
+        GROUP BY 1
+    ),
+    {w} AS (
+        SELECT {p}.b, CAST({p}.w + COALESCE({g}.g, 0) AS BIGINT) AS w
+        FROM {p} LEFT JOIN {g} USING (b)
+    )""")
+    return ",\n    ".join(stages)
 
 
 def _chain_ctes(train_where: str = "TRUE", n_iters: int = N_ITERS) -> str:
@@ -203,49 +275,79 @@ def _chain_ctes(train_where: str = "TRUE", n_iters: int = N_ITERS) -> str:
     ``train_where`` filters the feature relation the gradient passes
     see (the eval query's holdout split); the default keeps the full
     corpus. ``n_iters`` unrolls more epochs (model selection)."""
-    stages = [
-        f"""base AS (
-        SELECT doc_id, lang,
-               list_filter(string_split(text, ' '), w -> w != '') AS toks
-        FROM documents
-    ),
-    lab AS (
-        SELECT doc_id, lang,
-               CAST({_LABEL_SQL} AS BIGINT) AS y,
-               {_GRAMS_SQL} AS grams
-        FROM base
-    ),
-    feat AS (
-        SELECT doc_id, y, {_BUCKET_SQL} AS b,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM (SELECT doc_id, y, unnest(grams) AS g FROM lab)
-        GROUP BY 1, 2, 3
-    ),
+    return f"""WITH {_feat_ctes()},
     tfeat AS (SELECT * FROM feat WHERE {train_where}),
-    w0 AS (
-        SELECT CAST(b AS BIGINT) AS b, CAST(0 AS BIGINT) AS w
-        FROM range(0, {K_BUCKETS}) t(b)
-    )"""
-    ]
-    for k in range(1, n_iters + 1):
-        p = k - 1
-        stages.append(f"""s{k} AS (
-        SELECT f.doc_id, f.y, CAST(SUM(f.x * w.w) AS BIGINT) AS score
-        FROM tfeat f JOIN w{p} w USING (b)
-        GROUP BY 1, 2
+    {_train_ctes("tfeat", n_iters)}"""
+
+
+def _scored(lab: DataFrame, w: DataFrame, *cols: str) -> DataFrame:
+    """``cols`` of ``lab`` plus each doc's integer ``score`` under the
+    K-row weights ``w``. Map-side and zero-shuffle: ``w`` folds to a
+    one-row bucket→weight map (broadcast scalar attach, the repo's
+    crossJoin(broadcast(<tiny aggregate>)) pattern) and each document
+    scores itself with one ``aggregate`` fold over its gram array —
+    per-instance weight sum ≡ Σ_b w_b·count_b."""
+    wmap = w.agg(
+        F.map_from_entries(
+            F.collect_list(F.struct(F.col("b"), F.col("w")))
+        ).alias("wmap")
+    )
+    return lab.crossJoin(F.broadcast(wmap)).select(
+        *cols,
+        F.expr(
+            f"aggregate(grams, 0L, (acc, g) -> acc + coalesce(wmap[{_BUCKET}], 0L))"
+        ).alias("score"),
+    )
+
+
+def _score_ctes(w: str, src: str = "lab", sfx: str = "") -> str:
+    """DuckDB mirror of :func:`_scored`: the gram instances
+    ``inst{sfx}`` of ``src`` (``lab``, optionally with a WHERE) and
+    their per-doc weight sums ``sc{sfx}`` under the weight CTE ``w``.
+    A doc with no gram in ``w`` has no ``sc`` row; readers COALESCE
+    its score to 0."""
+    return f"""inst{sfx} AS (
+        SELECT doc_id, {_BUCKET_SQL} AS b
+        FROM (SELECT doc_id, unnest(grams) AS g FROM {src})
     ),
-    m{k} AS (SELECT doc_id FROM s{k} WHERE y * score <= 0),
-    g{k} AS (
-        SELECT b, CAST(SUM(y * x) AS BIGINT) AS g
-        FROM tfeat
-        WHERE doc_id IN (SELECT doc_id FROM m{k})
+    sc{sfx} AS (
+        SELECT i.doc_id, CAST(SUM(w.w) AS BIGINT) AS score
+        FROM inst{sfx} i JOIN {w} w USING (b)
         GROUP BY 1
-    ),
-    w{k} AS (
-        SELECT w{p}.b, CAST(w{p}.w + COALESCE(g{k}.g, 0) AS BIGINT) AS w
-        FROM w{p} LEFT JOIN g{k} USING (b)
-    )""")
-    return "WITH " + ",\n    ".join(stages)
+    )"""
+
+
+def _confusion_aggs() -> list[Column]:
+    """Census of a scored (y, score) holdout: n_test, the confusion
+    matrix of label (y = 1) vs prediction (score > 0), and integer
+    accuracy ppm."""
+    good = F.col("y") == 1
+    pred = F.col("score") > 0
+    return [
+        F.count(F.lit(1)).cast("long").alias("n_test"),
+        F.sum((good & pred).cast("long")).cast("long").alias("tp"),
+        F.sum(((~good) & pred).cast("long")).cast("long").alias("fp"),
+        F.sum(((~good) & (~pred)).cast("long")).cast("long").alias("tn"),
+        F.sum((good & (~pred)).cast("long")).cast("long").alias("fn"),
+        F.expr(
+            "CAST(SUM(CASE WHEN (y = 1) = (score > 0) THEN 1 ELSE 0 END)"
+            " * 1000000 div COUNT(*) AS BIGINT)"
+        ).alias("accuracy_ppm"),
+    ]
+
+
+#: DuckDB mirror of :func:`_confusion_aggs`
+_CONFUSION_SQL = """CAST(COUNT(*) AS BIGINT) AS n_test,
+           CAST(SUM(CASE WHEN y = 1 AND score > 0 THEN 1 ELSE 0 END)
+                AS BIGINT) AS tp,
+           CAST(SUM(CASE WHEN y = -1 AND score > 0 THEN 1 ELSE 0 END)
+                AS BIGINT) AS fp,
+           CAST(SUM(CASE WHEN y = -1 AND score <= 0 THEN 1 ELSE 0 END)
+                AS BIGINT) AS tn,
+           CAST(SUM(CASE WHEN y = 1 AND score <= 0 THEN 1 ELSE 0 END)
+                AS BIGINT) AS fn,
+           CAST(SUM(CASE WHEN (y = 1) = (score > 0) THEN 1 ELSE 0 END)
+                * 1000000 // COUNT(*) AS BIGINT) AS accuracy_ppm"""
 
 
 def _train_oracle_sql() -> str:
@@ -269,15 +371,7 @@ def _apply_oracle_sql() -> str:
     return (
         _chain_ctes()
         + f""",
-    inst AS (
-        SELECT doc_id, {_BUCKET_SQL} AS b
-        FROM (SELECT doc_id, unnest(grams) AS g FROM lab)
-    ),
-    sc AS (
-        SELECT i.doc_id, CAST(SUM(w.w) AS BIGINT) AS score
-        FROM inst i JOIN w{N_ITERS} w USING (b)
-        GROUP BY 1
-    ),
+    {_score_ctes(f"w{N_ITERS}")},
     fin AS (
         SELECT l.lang, l.y, COALESCE(sc.score, 0) AS score
         FROM lab l LEFT JOIN sc USING (doc_id)
@@ -298,25 +392,10 @@ def q_quality_clf_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score the corpus with the learned vector and census per lang:
     docs, heuristic-good, classifier-good, summed integer scores.
 
-    The scorer is map-side and zero-shuffle: the K-row vector folds to
-    a one-row bucket→weight map (broadcast scalar attach, the repo's
-    crossJoin(broadcast(<tiny aggregate>)) pattern) and each document
-    scores itself with one ``aggregate`` fold over its gram array —
-    per-instance weight sum ≡ Σ_b w_b·count_b. Only the final per-lang
-    census shuffles (5 groups)."""
+    The scorer is :func:`_scored`'s map-side, zero-shuffle fold; only
+    the final per-lang census shuffles (5 groups)."""
     lab, _feat, w = clf_chain(spark, sf_dir)
-    wmap = w.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("b"), F.col("w")))
-        ).alias("wmap")
-    )
-    scored = lab.crossJoin(F.broadcast(wmap)).select(
-        "lang",
-        "y",
-        F.expr(
-            f"aggregate(grams, 0L, (acc, g) -> acc + coalesce(wmap[{_BUCKET}], 0L))"
-        ).alias("score"),
-    )
+    scored = _scored(lab, w, "lang", "y")
     return scored.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.when(F.col("y") == 1, 1).otherwise(0))
@@ -333,33 +412,13 @@ def _eval_oracle_sql() -> str:
     return (
         _chain_ctes(train_where=f"NOT ({_IS_TEST_SQL})")
         + f""",
-    inst AS (
-        SELECT doc_id, {_BUCKET_SQL} AS b
-        FROM (SELECT doc_id, unnest(grams) AS g FROM lab
-              WHERE {_IS_TEST_SQL})
-    ),
-    sc AS (
-        SELECT i.doc_id, CAST(SUM(w.w) AS BIGINT) AS score
-        FROM inst i JOIN w{N_ITERS} w USING (b)
-        GROUP BY 1
-    ),
+    {_score_ctes(f"w{N_ITERS}", f"lab WHERE {_IS_TEST_SQL}")},
     fin AS (
         SELECT l.lang, l.y, COALESCE(sc.score, 0) AS score
         FROM lab l LEFT JOIN sc USING (doc_id)
         WHERE {_IS_TEST_SQL}
     )
-    SELECT lang,
-           CAST(COUNT(*) AS BIGINT) AS n_test,
-           CAST(SUM(CASE WHEN y = 1 AND score > 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS tp,
-           CAST(SUM(CASE WHEN y = -1 AND score > 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS fp,
-           CAST(SUM(CASE WHEN y = -1 AND score <= 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS tn,
-           CAST(SUM(CASE WHEN y = 1 AND score <= 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS fn,
-           CAST(SUM(CASE WHEN (y = 1) = (score > 0) THEN 1 ELSE 0 END)
-                * 1000000 // COUNT(*) AS BIGINT) AS accuracy_ppm
+    SELECT lang, {_CONFUSION_SQL}
     FROM fin GROUP BY 1"""
     )
 
@@ -376,35 +435,10 @@ def q_quality_clf_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     holdout protocol adds zero corpus passes; scoring reuses the
     zero-shuffle broadcast-map fold."""
     lab, _feat, w = clf_chain(spark, sf_dir, train_only=True)
-    wmap = w.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("b"), F.col("w")))
-        ).alias("wmap")
-    )
-    scored = (
-        lab.filter(F.expr(_IS_TEST))
-        .crossJoin(F.broadcast(wmap))
-        .select(
-            "lang",
-            "y",
-            F.expr(
-                f"aggregate(grams, 0L,"
-                f" (acc, g) -> acc + coalesce(wmap[{_BUCKET}], 0L))"
-            ).alias("score"),
-        )
-    )
-    good = F.col("y") == 1
-    pred = F.col("score") > 0
-    return scored.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_test"),
-        F.sum((good & pred).cast("long")).cast("long").alias("tp"),
-        F.sum(((~good) & pred).cast("long")).cast("long").alias("fp"),
-        F.sum(((~good) & (~pred)).cast("long")).cast("long").alias("tn"),
-        F.sum((good & (~pred)).cast("long")).cast("long").alias("fn"),
-        F.expr(
-            "CAST(SUM(CASE WHEN (y = 1) = (score > 0) THEN 1 ELSE 0 END)"
-            " * 1000000 div COUNT(*) AS BIGINT)"
-        ).alias("accuracy_ppm"),
+    return (
+        _scored(lab.filter(F.expr(_IS_TEST)), w, "lang", "y")
+        .groupBy("lang")
+        .agg(*_confusion_aggs())
     )
 
 
@@ -425,35 +459,7 @@ def clf_epoch_weights(
     """(lab, [w_1 .. w_N_EPOCHS]) trained on the md5 train fold."""
     lab, feat = _lab_feat(spark, sf_dir)
     tfeat = feat.filter(F.expr(f"NOT ({_IS_TEST})"))
-    w = spark.range(K_BUCKETS).select(
-        F.col("id").cast("long").alias("b"),
-        F.lit(0).cast("long").alias("w"),
-    )
-    ws: list[DataFrame] = []
-    for _ in range(N_EPOCHS):
-        scores = (
-            tfeat.join(F.broadcast(w), "b")
-            .groupBy("doc_id", "y")
-            .agg(F.sum(F.col("x") * F.col("w")).cast("long").alias("score"))
-        )
-        mis = scores.filter(F.col("y") * F.col("score") <= 0).select("doc_id")
-        grad = (
-            tfeat.join(mis, "doc_id", "left_semi")
-            .groupBy("b")
-            .agg(F.sum(F.col("y") * F.col("x")).cast("long").alias("g"))
-        )
-        w = (
-            w.join(grad, "b", "left")
-            .select(
-                "b",
-                (F.col("w") + F.coalesce(F.col("g"), F.lit(0)))
-                .cast("long")
-                .alias("w"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        ws.append(w)
-    return lab, ws
+    return lab, list(_epochs(spark, tfeat, N_EPOCHS))
 
 
 def _model_select_oracle_sql() -> str:
@@ -462,16 +468,7 @@ def _model_select_oracle_sql() -> str:
     )
     evals = []
     for e in range(1, N_EPOCHS + 1):
-        evals.append(f"""inst{e} AS (
-        SELECT doc_id, {_BUCKET_SQL} AS b
-        FROM (SELECT doc_id, unnest(grams) AS g FROM lab
-              WHERE {_IS_TEST_SQL})
-    ),
-    sc{e} AS (
-        SELECT i.doc_id, CAST(SUM(w.w) AS BIGINT) AS score
-        FROM inst{e} i JOIN w{e} w USING (b)
-        GROUP BY 1
-    ),
+        evals.append(f"""{_score_ctes(f"w{e}", f"lab WHERE {_IS_TEST_SQL}", str(e))},
     acc{e} AS (
         SELECT CAST({e} AS BIGINT) AS epoch,
                CAST(SUM(CASE WHEN (l.y = 1) = (COALESCE(sc.score, 0) > 0)
@@ -516,20 +513,8 @@ def q_quality_clf_model_select(
     test = lab.filter(F.expr(_IS_TEST)).localCheckpoint(eager=False)
     per_epoch = []
     for e, w in enumerate(ws, start=1):
-        wmap = w.agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("b"), F.col("w")))
-            ).alias("wmap")
-        )
         acc = (
-            test.crossJoin(F.broadcast(wmap))
-            .select(
-                "y",
-                F.expr(
-                    f"aggregate(grams, 0L,"
-                    f" (acc, g) -> acc + coalesce(wmap[{_BUCKET}], 0L))"
-                ).alias("score"),
-            )
+            _scored(test, w, "y")
             .agg(
                 F.lit(e).cast("long").alias("epoch"),
                 F.sum(
@@ -562,39 +547,11 @@ def q_quality_clf_model_select(
     )
 
 
-# ---------------------------------------------------------------------------
-# K-fold cross-validation: the robustness protocol a single holdout
-# (q_quality_clf_eval) can't give. Each of the N_FOLDS md5-derived
-# folds takes a turn as the holdout; the other four train a fresh
-# N_ITERS perceptron; the per-fold confusion matrix + integer accuracy
-# ppm land in one result. One text pass builds the feature relation —
-# every fold's train/test split is a FILTER on the compact (doc, y,
-# b, x) relation, never a corpus rescan, so at 100 TB this costs one
-# scan plus N_FOLDS * N_ITERS vocabulary-relation joins.
-# ---------------------------------------------------------------------------
-_FOLD = (
-    "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10)"
-    f" as bigint) % {N_FOLDS}"
-)
-_FOLD_SQL = (
-    "(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT)"
-    f" % {N_FOLDS}"
-)
-
-
 def _calibration_oracle_sql() -> str:
     return (
         _chain_ctes()
         + f""",
-    inst AS (
-        SELECT doc_id, {_BUCKET_SQL} AS b
-        FROM (SELECT doc_id, unnest(grams) AS g FROM lab)
-    ),
-    sc AS (
-        SELECT i.doc_id, CAST(SUM(w.w) AS BIGINT) AS score
-        FROM inst i JOIN w{N_ITERS} w USING (b)
-        GROUP BY 1
-    ),
+    {_score_ctes(f"w{N_ITERS}")},
     scored AS (
         SELECT l.doc_id, l.y, COALESCE(sc.score, 0) AS score
         FROM lab l LEFT JOIN sc USING (doc_id)
@@ -630,23 +587,8 @@ def q_clf_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     lab, _feat, w = clf_chain(spark, sf_dir)
-    wmap = w.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("b"), F.col("w")))
-        ).alias("wmap")
-    )
-    scored = (
-        lab.crossJoin(F.broadcast(wmap))
-        .select(
-            "doc_id",
-            "y",
-            F.expr(
-                f"aggregate(grams, 0L,"
-                f" (acc, g) -> acc + coalesce(wmap[{_BUCKET}], 0L))"
-            ).alias("score"),
-        )
-        .localCheckpoint(eager=False)  # rank pass + count share it
-    )
+    # the rank pass and the count share the scored relation
+    scored = _scored(lab, w, "doc_id", "y").localCheckpoint(eager=False)
     n = scored.agg(F.count(F.lit(1)).cast("long").alias("n"))
     ranked = distributed_row_number(
         scored, ["score", "doc_id"], rn_col="rn"
@@ -673,6 +615,32 @@ def q_clf_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# K-fold cross-validation: the robustness protocol a single holdout
+# (q_quality_clf_eval) can't give. Each of the N_FOLDS md5-derived
+# folds takes a turn as the holdout; the other four train a fresh
+# N_ITERS perceptron; the per-fold confusion matrix + integer accuracy
+# ppm land in one result. One text pass builds the feature relation —
+# every fold's train/test split is a FILTER on the compact (doc, y,
+# b, x) relation, never a corpus rescan, so at 100 TB this costs one
+# scan plus N_FOLDS * N_ITERS vocabulary-relation joins.
+# ---------------------------------------------------------------------------
+def _fold_census_sql(j: int) -> str:
+    """Fold ``j``'s census row over its holdout, scored by ``sc{j}``."""
+    return f"""
+    SELECT CAST({j} AS BIGINT) AS fold, {_CONFUSION_SQL}
+    FROM (
+        SELECT l.y, COALESCE(sc.score, 0) AS score
+        FROM lab l LEFT JOIN sc{j} sc USING (doc_id)
+        WHERE {_FOLD_SQL} = {j}
+    )"""
+
+
+def _fold_score_ctes(j: int, w: str) -> str:
+    """:func:`_score_ctes` ``inst{j}``/``sc{j}`` of fold ``j``'s holdout."""
+    return _score_ctes(w, f"lab WHERE {_FOLD_SQL} = {j}", str(j))
+
+
 def cv_fold_oracle_sql(j: int) -> str:
     """Single-fold CV oracle (fold j's row only) — the bounded-footprint
     decomposition verify_sf10_tail runs at sf10, where the 5-fold
@@ -680,34 +648,8 @@ def cv_fold_oracle_sql(j: int) -> str:
     :func:`_cv_oracle_sql`, one fold."""
     return (
         _chain_ctes(train_where=f"{_FOLD_SQL} != {j}")
-        + f""",
-    inst AS (
-        SELECT doc_id, {_BUCKET_SQL} AS b
-        FROM (SELECT doc_id, unnest(grams) AS g FROM lab
-              WHERE {_FOLD_SQL} = {j})
-    ),
-    sc AS (
-        SELECT i.doc_id, CAST(SUM(w.w) AS BIGINT) AS score
-        FROM inst i JOIN w{N_ITERS} w USING (b)
-        GROUP BY 1
-    )
-    SELECT CAST({j} AS BIGINT) AS fold,
-           CAST(COUNT(*) AS BIGINT) AS n_test,
-           CAST(SUM(CASE WHEN y = 1 AND score > 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS tp,
-           CAST(SUM(CASE WHEN y = -1 AND score > 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS fp,
-           CAST(SUM(CASE WHEN y = -1 AND score <= 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS tn,
-           CAST(SUM(CASE WHEN y = 1 AND score <= 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS fn,
-           CAST(SUM(CASE WHEN (y = 1) = (score > 0) THEN 1 ELSE 0 END)
-                * 1000000 // COUNT(*) AS BIGINT) AS accuracy_ppm
-    FROM (
-        SELECT l.y, COALESCE(sc.score, 0) AS score
-        FROM lab l LEFT JOIN sc USING (doc_id)
-        WHERE {_FOLD_SQL} = {j}
-    )"""
+        + f",\n    {_fold_score_ctes(j, f'w{N_ITERS}')}"
+        + _fold_census_sql(j)
     )
 
 
@@ -715,88 +657,20 @@ def _cv_oracle_sql() -> str:
     # Own header (vs _chain_ctes) because every fold references feat:
     # AS MATERIALIZED stops DuckDB re-inlining the corpus pass
     # N_FOLDS * (2 * N_ITERS) times (the wordpiece.py lesson).
-    stages = [
-        f"""base AS MATERIALIZED (
-        SELECT doc_id, lang,
-               list_filter(string_split(text, ' '), w -> w != '') AS toks
-        FROM documents
-    ),
-    lab AS MATERIALIZED (
-        SELECT doc_id, lang,
-               CAST({_LABEL_SQL} AS BIGINT) AS y,
-               {_GRAMS_SQL} AS grams
-        FROM base
-    ),
-    feat AS MATERIALIZED (
-        SELECT doc_id, y, {_BUCKET_SQL} AS b,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM (SELECT doc_id, y, unnest(grams) AS g FROM lab)
-        GROUP BY 1, 2, 3
-    )"""
-    ]
-    fins = []
+    stages = [_feat_ctes("MATERIALIZED ")]
     for j in range(N_FOLDS):
         stages.append(f"""tf{j} AS MATERIALIZED (
         SELECT * FROM feat WHERE {_FOLD_SQL} != {j}
     ),
-    w{j}x0 AS (
-        SELECT CAST(b AS BIGINT) AS b, CAST(0 AS BIGINT) AS w
-        FROM range(0, {K_BUCKETS}) t(b)
+    {_train_ctes(f"tf{j}", N_ITERS, f"{j}x")},
+    {_fold_score_ctes(j, f"w{j}x{N_ITERS}")},
+    fin{j} AS ({_fold_census_sql(j)}
     )""")
-        for k in range(1, N_ITERS + 1):
-            p = k - 1
-            stages.append(f"""s{j}x{k} AS (
-        SELECT f.doc_id, f.y, CAST(SUM(f.x * w.w) AS BIGINT) AS score
-        FROM tf{j} f JOIN w{j}x{p} w USING (b)
-        GROUP BY 1, 2
-    ),
-    m{j}x{k} AS (SELECT doc_id FROM s{j}x{k} WHERE y * score <= 0),
-    g{j}x{k} AS (
-        SELECT b, CAST(SUM(y * x) AS BIGINT) AS g
-        FROM tf{j}
-        WHERE doc_id IN (SELECT doc_id FROM m{j}x{k})
-        GROUP BY 1
-    ),
-    w{j}x{k} AS (
-        SELECT w{j}x{p}.b, CAST(w{j}x{p}.w + COALESCE(g{j}x{k}.g, 0)
-               AS BIGINT) AS w
-        FROM w{j}x{p} LEFT JOIN g{j}x{k} USING (b)
-    )""")
-        stages.append(f"""inst{j} AS (
-        SELECT doc_id, {_BUCKET_SQL} AS b
-        FROM (SELECT doc_id, unnest(grams) AS g FROM lab
-              WHERE {_FOLD_SQL} = {j})
-    ),
-    sc{j} AS (
-        SELECT i.doc_id, CAST(SUM(w.w) AS BIGINT) AS score
-        FROM inst{j} i JOIN w{j}x{N_ITERS} w USING (b)
-        GROUP BY 1
-    ),
-    fin{j} AS (
-        SELECT CAST({j} AS BIGINT) AS fold,
-               CAST(COUNT(*) AS BIGINT) AS n_test,
-               CAST(SUM(CASE WHEN y = 1 AND score > 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS tp,
-               CAST(SUM(CASE WHEN y = -1 AND score > 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS fp,
-               CAST(SUM(CASE WHEN y = -1 AND score <= 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS tn,
-               CAST(SUM(CASE WHEN y = 1 AND score <= 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS fn,
-               CAST(SUM(CASE WHEN (y = 1) = (score > 0) THEN 1 ELSE 0 END)
-                    * 1000000 // COUNT(*) AS BIGINT) AS accuracy_ppm
-        FROM (
-            SELECT l.y, COALESCE(sc.score, 0) AS score
-            FROM lab l LEFT JOIN sc{j} sc USING (doc_id)
-            WHERE {_FOLD_SQL} = {j}
-        )
-    )""")
-        fins.append(f"SELECT * FROM fin{j}")
     return (
         "WITH "
         + ",\n    ".join(stages)
         + "\n    "
-        + " UNION ALL ".join(fins)
+        + " UNION ALL ".join(f"SELECT * FROM fin{j}" for j in range(N_FOLDS))
     )
 
 
@@ -812,39 +686,9 @@ def q_quality_clf_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab, feat = _lab_feat(spark, sf_dir)
     per_fold = []
     for j in range(N_FOLDS):
-        w = _train_iters(spark, feat.filter(F.expr(f"({_FOLD}) != {j}")))
-        wmap = w.agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("b"), F.col("w")))
-            ).alias("wmap")
-        )
-        scored = (
-            lab.filter(F.expr(f"({_FOLD}) = {j}"))
-            .crossJoin(F.broadcast(wmap))
-            .select(
-                "y",
-                F.expr(
-                    f"aggregate(grams, 0L,"
-                    f" (acc, g) -> acc + coalesce(wmap[{_BUCKET}], 0L))"
-                ).alias("score"),
-            )
-        )
-        good = F.col("y") == 1
-        pred = F.col("score") > 0
+        *_, w = _epochs(spark, feat.filter(F.expr(f"({_FOLD}) != {j}")))
+        scored = _scored(lab.filter(F.expr(f"({_FOLD}) = {j}")), w, "y")
         per_fold.append(
-            scored.agg(
-                F.lit(j).cast("long").alias("fold"),
-                F.count(F.lit(1)).cast("long").alias("n_test"),
-                F.sum((good & pred).cast("long")).cast("long").alias("tp"),
-                F.sum(((~good) & pred).cast("long")).cast("long").alias("fp"),
-                F.sum(((~good) & (~pred)).cast("long"))
-                .cast("long")
-                .alias("tn"),
-                F.sum((good & (~pred)).cast("long")).cast("long").alias("fn"),
-                F.expr(
-                    "CAST(SUM(CASE WHEN (y = 1) = (score > 0)"
-                    " THEN 1 ELSE 0 END) * 1000000 div COUNT(*) AS BIGINT)"
-                ).alias("accuracy_ppm"),
-            )
+            scored.agg(F.lit(j).cast("long").alias("fold"), *_confusion_aggs())
         )
     return reduce(DataFrame.unionByName, per_fold)

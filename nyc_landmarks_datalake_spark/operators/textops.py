@@ -415,10 +415,10 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 LM_SCALE = 1_000_000
 
 
-@query(
-    "q_ngram_lm_score",
-    sql=f"""
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+#: DuckDB mirror of :func:`_lm_scores` up to its per-bigram fixed-point
+#: ``terms`` (doc_id, term), shared by both LM oracles
+_LM_TERMS_CTES = f"""
+    t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
     bi AS (
         SELECT doc_id,
                unnest(list_transform(range(1, len(toks)),
@@ -435,7 +435,13 @@ LM_SCALE = 1_000_000
         FROM bi
         JOIN c2 USING (bg)
         JOIN c1 ON c1.w = string_split(bi.bg, ' ')[1]
-    )
+    )"""
+
+
+@query(
+    "q_ngram_lm_score",
+    sql=f"""
+    WITH {_LM_TERMS_CTES}
     SELECT doc_id, COUNT(*) AS n_bigrams,
            CAST(SUM(term) // COUNT(*) AS BIGINT) AS lm_avg_score
     FROM terms GROUP BY 1
@@ -492,24 +498,7 @@ def _lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # no LM score and are excluded (documented, same in the oracle).
 # ---------------------------------------------------------------------------
 _PPLX_BUCKETS_SQL = f"""
-WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-bi AS (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(toks)),
-                                 i -> toks[i] || ' ' || toks[i + 1])) AS bg
-    FROM t
-),
-c1 AS (
-    SELECT w, COUNT(*) AS c FROM (SELECT unnest(toks) AS w FROM t)
-    GROUP BY 1
-),
-c2 AS (SELECT bg, COUNT(*) AS c FROM bi GROUP BY 1),
-terms AS (
-    SELECT bi.doc_id, {LM_SCALE} * c2.c // c1.c AS term
-    FROM bi
-    JOIN c2 USING (bg)
-    JOIN c1 ON c1.w = string_split(bi.bg, ' ')[1]
-),
+WITH {_LM_TERMS_CTES},
 scores AS (
     SELECT doc_id, CAST(SUM(term) // COUNT(*) AS BIGINT) AS lm_avg_score
     FROM terms GROUP BY 1

@@ -344,14 +344,22 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
     latest one seen on entry may belong to a writer in flight, which
     could still publish it, so it is kept (Delta's VACUUM likewise
     spares files a running writer may commit); once that version is
-    taken, a dir nothing references is an orphan. Returns deleted
-    parquet paths."""
+    taken, a dir nothing references is an orphan. A manifest or dir
+    that a concurrent vacuum removed after this one listed it is
+    skipped; any other error raises. Returns deleted parquet paths."""
     import shutil
+
+    def gone_ok(_func, _path, exc_info) -> None:
+        if not issubclass(exc_info[0], FileNotFoundError):
+            raise exc_info[1]
 
     vs = _versions(path)
     latest = vs[-1] if vs else -1
     for v in vs[:-keep_versions] if keep_versions else vs:
-        os.unlink(_manifest_path(path, v))
+        try:
+            os.unlink(_manifest_path(path, v))
+        except FileNotFoundError:
+            continue
     live_dirs = {os.path.dirname(f) for f in referenced_files(path)}
     deleted: list[str] = []
     data_root = os.path.join(path, "data")
@@ -360,10 +368,12 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
         if rel_dir in live_dirs or int(sub.split("-")[0]) > latest:
             continue
         full_dir = os.path.join(data_root, sub)
+        try:
+            names = sorted(os.listdir(full_dir))
+        except FileNotFoundError:
+            continue
         deleted.extend(
-            os.path.join(rel_dir, n)
-            for n in sorted(os.listdir(full_dir))
-            if n.endswith(".parquet")
+            os.path.join(rel_dir, n) for n in names if n.endswith(".parquet")
         )
-        shutil.rmtree(full_dir)
+        shutil.rmtree(full_dir, onerror=gone_ok)
     return deleted

@@ -46,9 +46,8 @@ def _band_keys(docs: DataFrame) -> DataFrame:
     banding (dedup.BANDS x ROWS_PER_BAND over 3-shingles), one row per
     band per document."""
     from nyc_landmarks_datalake_spark.operators.dedup import (
-        BANDS,
         _SH_SPARK,
-        _band_hash_spark,
+        _band_structs,
         _minhash_cols,
         _with_xs,
     )
@@ -57,17 +56,8 @@ def _band_keys(docs: DataFrame) -> DataFrame:
         "doc_id", "source", F.split(F.col("text"), " ").alias("toks")
     ).select("doc_id", "source", F.expr(_SH_SPARK).alias("shingles"))
     sig = _with_xs(sh).select("doc_id", "source", *_minhash_cols())
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_id"),
-                _band_hash_spark(j).alias("band_hash"),
-            )
-            for j in range(BANDS)
-        ]
-    )
     return sig.select(
-        "doc_id", "source", F.explode(band_structs).alias("b")
+        "doc_id", "source", F.explode(_band_structs()).alias("b")
     ).select("doc_id", "source", F.col("b.band_id"), F.col("b.band_hash"))
 
 

@@ -4,6 +4,7 @@ concurrency, crash invisibility, time travel, vacuum."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyarrow.parquet as pq
 import pytest
@@ -177,6 +178,48 @@ def test_history_skips_a_manifest_vacuumed_after_listing(tmp_path, monkeypatch):
     os.unlink(txtable._manifest_path(path, 0))  # vacuum after the listing
     monkeypatch.setattr(txtable, "_versions", lambda p: listed)
     assert [m["version"] for m in txtable.history(path)] == [1, 2]
+
+
+def test_vacuum_skips_what_a_racing_vacuum_removed(tmp_path, monkeypatch):
+    """A vacuum works from listings a concurrent vacuum can make stale:
+    a manifest, an orphan dir or an orphan dir's files already gone are
+    skipped, not raised; any other error still raises."""
+    path = str(tmp_path / "t")
+    for v in range(3):
+        txtable._publish(
+            path, v, {"version": v, "parent": v - 1 if v else None,
+                      "operation": "op", "files": []}
+        )
+    data_root = os.path.join(path, "data")
+    for sub in ("00000000-a", "00000001-b"):  # orphans of v0 and v1
+        os.makedirs(os.path.join(data_root, sub))
+        open(os.path.join(data_root, sub, "part-0.parquet"), "w").close()
+    listed = txtable._versions(path)
+    os.unlink(txtable._manifest_path(path, 0))  # the racer dropped v0
+    monkeypatch.setattr(txtable, "_versions", lambda p: listed)
+    real_listdir = os.listdir
+
+    def stale_listdir(p):
+        names = real_listdir(p)
+        if p == data_root:  # the racer already removed 00000000-z ...
+            return names + ["00000000-z"]
+        if p.endswith("00000001-b"):  # ... and removes -b under us
+            shutil.rmtree(p)
+        return names
+
+    monkeypatch.setattr(os, "listdir", stale_listdir)
+    deleted = txtable.vacuum(path, keep_versions=1)
+    monkeypatch.undo()
+    assert os.path.join("data", "00000000-a", "part-0.parquet") in deleted
+    assert txtable._versions(path) == [2]
+    assert os.listdir(data_root) == []
+
+    def denied(p):
+        raise PermissionError(p)
+
+    monkeypatch.setattr(os, "unlink", denied)
+    with pytest.raises(PermissionError):
+        txtable.vacuum(path, keep_versions=0)
 
 
 def test_merge_upsert_tx_roundtrip(spark, tmp_path):

@@ -570,24 +570,16 @@ def main() -> int:
         # ERRORS instead of OOMing the host (the r11 fullouter lesson).
         from nyc_landmarks_datalake_spark.operators.graph import (
             KCORE_ORACLE_ITERS,
-            PR_SUPP_OFFSET,
+            _PAIRS_SQL,
+            _two_way_sql,
             kcore_step_sql,
         )
 
         con.execute(f"SET memory_limit='{args.duckdb_mem}'")
         con.execute("SET temp_directory='/tmp/duckdb_spill_kcore'")
         t0 = time.time()
-        con.execute(
-            "CREATE TEMP TABLE vt_ke0 AS "
-            "SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s "
-            "FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey"
-        )
-        con.execute(
-            "CREATE TEMP TABLE vt_kedges AS "
-            f"SELECT c AS src, s + {PR_SUPP_OFFSET} AS dst FROM vt_ke0 "
-            "UNION ALL "
-            f"SELECT s + {PR_SUPP_OFFSET} AS src, c AS dst FROM vt_ke0"
-        )
+        con.execute(f"CREATE TEMP TABLE vt_ke0 AS {_PAIRS_SQL}")
+        con.execute(f"CREATE TEMP TABLE vt_kedges AS {_two_way_sql('vt_ke0')}")
         con.execute(
             "CREATE TEMP TABLE vt_kc0 AS "
             "SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS core "
@@ -641,7 +633,8 @@ def main() -> int:
         # the Spark loop's.
         from nyc_landmarks_datalake_spark.operators.graph import (
             LPA_MAX_SUPERSTEPS,
-            PR_SUPP_OFFSET,
+            _PAIRS_SQL,
+            _two_way_sql,
             lpa_step_sql,
         )
 
@@ -653,11 +646,7 @@ def main() -> int:
         # the pair relation so the optimizer can never pick the
         # customer ⋈ supplier ON nationkey order (~6e9 rows at sf10 —
         # the r15 blowup; see graph._lpa_sql)
-        con.execute(
-            "CREATE TEMP TABLE vt_llp AS "
-            "SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s "
-            "FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey"
-        )
+        con.execute(f"CREATE TEMP TABLE vt_llp AS {_PAIRS_SQL}")
         con.execute(
             "CREATE TEMP TABLE vt_llc AS "
             "SELECT p.c, p.s, cu.c_nationkey AS nat "
@@ -670,12 +659,7 @@ def main() -> int:
             "ON su.s_suppkey = llc.s AND su.s_nationkey = llc.nat"
         )
         con.execute("DROP TABLE vt_llp; DROP TABLE vt_llc")
-        con.execute(
-            "CREATE TEMP TABLE vt_ledges AS "
-            f"SELECT c AS src, s + {PR_SUPP_OFFSET} AS dst FROM vt_ll0 "
-            "UNION ALL "
-            f"SELECT s + {PR_SUPP_OFFSET} AS src, c AS dst FROM vt_ll0"
-        )
+        con.execute(f"CREATE TEMP TABLE vt_ledges AS {_two_way_sql('vt_ll0')}")
         con.execute(
             "CREATE TEMP TABLE vt_lp0 AS "
             "SELECT DISTINCT src AS node, CAST(src AS BIGINT) AS lbl "
@@ -852,7 +836,8 @@ def main() -> int:
             BW_PIVOTS,
             HC_MAX_ROUNDS,
             HC_PIVOTS,
-            PR_SUPP_OFFSET,
+            _PAIRS_SQL,
+            _two_way_sql,
             bw_bwd_step_sql,
             bw_fwd_step_sql,
             ce_step_sql,
@@ -865,17 +850,8 @@ def main() -> int:
         con.execute(f"SET memory_limit='{args.duckdb_mem}'")
         con.execute("SET temp_directory='/tmp/duckdb_spill_cent'")
         t0 = time.time()
-        con.execute(
-            "CREATE TEMP TABLE vt_ce0 AS "
-            "SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s "
-            "FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey"
-        )
-        con.execute(
-            "CREATE TEMP TABLE vt_cedges AS "
-            f"SELECT c AS src, s + {PR_SUPP_OFFSET} AS dst FROM vt_ce0 "
-            "UNION ALL "
-            f"SELECT s + {PR_SUPP_OFFSET} AS src, c AS dst FROM vt_ce0"
-        )
+        con.execute(f"CREATE TEMP TABLE vt_ce0 AS {_PAIRS_SQL}")
+        con.execute(f"CREATE TEMP TABLE vt_cedges AS {_two_way_sql('vt_ce0')}")
         con.execute(
             "CREATE TEMP TABLE vt_cnodes AS "
             "SELECT DISTINCT src AS node FROM vt_cedges"
