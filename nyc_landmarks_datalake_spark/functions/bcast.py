@@ -1,4 +1,4 @@
-"""Size-guarded broadcast hints (the LP_BCAST_EDGES pattern).
+"""Size-guarded broadcast hints.
 
 Several operators force a broadcast hint because a ``localCheckpoint``
 upstream erases the statistics that would let Catalyst pick the
@@ -20,8 +20,6 @@ plan).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,8 +27,8 @@ from pyspark.sql import functions as F
 #: narrow build sides (8–64 B/row framed: ids, degrees, hashes —
 #: 20M rows ≈ 160 MB–1.3 GB, inside guide-§3.1 comfort and far under
 #: the 8 GB / 512M-row hard cap). Sites whose rows carry wide payloads
-#: pass an explicit lower limit. Env-overridable for A/B runs.
-BCAST_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_BCAST_MAX_ROWS", 20_000_000))
+#: pass an explicit lower limit.
+BCAST_MAX_ROWS = 20_000_000
 
 
 def bcast_if(

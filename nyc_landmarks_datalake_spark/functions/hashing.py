@@ -33,14 +33,15 @@ def md5_long_sql(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 
 
-def minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
+def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for h_i(x) = (a_i*x + b_i) mod p.
 
-    Plain LCG; a_i forced odd and nonzero. Pure Python on the driver —
-    the constants are baked into both engines' plans as literals.
+    Plain LCG seeded with 42; a_i forced odd and nonzero. Pure Python on
+    the driver — the constants are baked into both engines' plans as
+    literals.
     """
     coeffs = []
-    state = seed
+    state = 42
     for _ in range(num_hashes):
         state = (1103515245 * state + 12345) % MERSENNE_P
         a = state | 1

@@ -109,13 +109,12 @@ def dprod_sum_sql(x: str, y: str) -> str:
     )
 
 
-def dstddev(col: Column, checked: bool = False) -> Column:
+def dstddev(col: Column) -> Column:
     """Deterministic sample stddev from exact sums (float64 derivation).
-    Inherits dprod_sum's |v| < 10^12 operand bound (PROD_OPERAND_BOUND);
-    ``checked=True`` passes the per-row guard through."""
+    Inherits dprod_sum's |v| < 10^12 operand bound (PROD_OPERAND_BOUND)."""
     n = F.count(col).cast("double")
     sx = dsum(col)
-    sx2 = dprod_sum(col, col, checked=checked)
+    sx2 = dprod_sum(col, col)
     return F.sqrt((sx2 - sx * sx / n) / (n - F.lit(1.0)))
 
 
@@ -126,15 +125,14 @@ def dstddev_sql(expr: str) -> str:
     return f"sqrt(({sx2} - {sx} * {sx} / {n}) / ({n} - 1.0))"
 
 
-def dcorr(x: Column, y: Column, checked: bool = False) -> Column:
+def dcorr(x: Column, y: Column) -> Column:
     """Deterministic Pearson correlation from exact sums.
-    Inherits dprod_sum's |v| < 10^12 operand bound (PROD_OPERAND_BOUND);
-    ``checked=True`` passes the per-row guard through."""
+    Inherits dprod_sum's |v| < 10^12 operand bound (PROD_OPERAND_BOUND)."""
     n = F.count(x).cast("double")
     sx, sy = dsum(x), dsum(y)
-    sxx = dprod_sum(x, x, checked=checked)
-    syy = dprod_sum(y, y, checked=checked)
-    sxy = dprod_sum(x, y, checked=checked)
+    sxx = dprod_sum(x, x)
+    syy = dprod_sum(y, y)
+    sxy = dprod_sum(x, y)
     return (n * sxy - sx * sy) / (
         F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)
     )

@@ -139,7 +139,7 @@ def stream_ingest(
     )
 
 
-def massage_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
+def massage_lines(lines: DataFrame) -> DataFrame:
     """Byte-compat replica of the reference's de-facto line transform
     (handleCSVIngest, CSVIngest.java:60-86): strip every double-quote
     (:65), strip the literal 'MULTIPOLYGON ' token and trim (:67),
@@ -147,11 +147,10 @@ def massage_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     (:71-81) is dead code there — line.contains("MULTIPOLYGON") is
     always false by :71 — so it is intentionally NOT applied here.
     """
-    c = F.col(value_col)
-    c = F.regexp_replace(c, '"', "")
+    c = F.regexp_replace(F.col("value"), '"', "")
     c = F.trim(F.regexp_replace(c, "MULTIPOLYGON ", ""))
     c = F.regexp_replace(c, _BLOCK, "")
-    return lines.withColumn(value_col, c)
+    return lines.withColumn("value", c)
 
 
 def ingest_compat(
@@ -180,10 +179,9 @@ def normalize_key_col(col):
     return F.url_decode(F.regexp_replace(col, r"\+", " "))
 
 
-def sidecar_for(csv_path: str, schemas_dir: str | None = None) -> str:
+def sidecar_for(csv_path: str) -> str:
     """schemas/<basename>.json convention (the reference's SCHEMA_LOCATION
     object-tag indirection, CSVIngest.java:88-100, collapsed to a path
     convention)."""
     base = os.path.splitext(os.path.basename(csv_path))[0]
-    d = schemas_dir or os.path.join(os.path.dirname(csv_path), "schemas")
-    return os.path.join(d, f"{base}.json")
+    return os.path.join(os.path.dirname(csv_path), "schemas", f"{base}.json")

@@ -94,35 +94,28 @@ def _all_pairs_sql(col: str) -> str:
     )
 
 
-def pair_expand_expr(col: str, cap: int = MAX_BAND_BUCKET) -> str:
+def pair_expand_expr(col: str) -> str:
     """Spark SQL expression: ordered member pairs from a sorted bucket
-    array ``col`` — all pairs up to ``cap`` members, consecutive-chain
-    pairs beyond (see MAX_BAND_BUCKET). Fields named ``a``/``b``.
-
-    The chain branch is guarded on size >= 2: sequence(0, size-2) on a
-    1-element array would yield the DESCENDING sequence [0, -1] and emit
-    a bogus struct(col[0], col[-1]) — unreachable from the capped
-    call sites (all filter size > 1, cap >= 2) but the helper is public
-    with an arbitrary ``cap``. The DuckDB mirror's range(1, 1) is
-    naturally empty and needs no guard."""
+    array ``col`` — all pairs up to MAX_BAND_BUCKET members,
+    consecutive-chain pairs beyond. Fields named ``a``/``b``."""
     chain = (
         f"transform(sequence(0, size({col}) - 2), "
         f"i -> struct({col}[i] AS a, {col}[i + 1] AS b))"
     )
     return (
-        f"CASE WHEN size({col}) <= {cap} OR size({col}) < 2 "
+        f"CASE WHEN size({col}) <= {MAX_BAND_BUCKET} "
         f"THEN {_all_pairs_expr(col)} ELSE {chain} END"
     )
 
 
-def pair_expand_sql(col: str, cap: int = MAX_BAND_BUCKET) -> str:
+def pair_expand_sql(col: str) -> str:
     """DuckDB mirror of :func:`pair_expand_expr` (1-based lambdas)."""
     chain = (
         f"list_transform(range(1, len({col})), "
         f"i -> {{'a': {col}[i], 'b': {col}[i+1]}})"
     )
     return (
-        f"CASE WHEN len({col}) <= {cap} OR len({col}) < 2 "
+        f"CASE WHEN len({col}) <= {MAX_BAND_BUCKET} "
         f"THEN {_all_pairs_sql(col)} ELSE {chain} END"
     )
 
@@ -201,7 +194,6 @@ def capped_pair_ctes_sql(
     bucket_cols: list[str],
     m_sql: str,
     k_sql: str | None = None,
-    cap: int = MAX_BAND_BUCKET,
 ) -> str:
     """DuckDB mirror of :func:`capped_bucket_pairs`: CTE fragments
     ``{prefix}cnt/{prefix}small/{prefix}big/{prefix}chain/{prefix}pairs``
@@ -215,14 +207,14 @@ def capped_pair_ctes_sql(
     {prefix}small AS (
         SELECT unnest({_all_pairs_sql('__ms')}) AS p FROM (
             SELECT {bc}, list_sort(list({m_sql})) AS __ms
-            FROM {prefix}cnt WHERE __n BETWEEN 2 AND {cap}
+            FROM {prefix}cnt WHERE __n BETWEEN 2 AND {MAX_BAND_BUCKET}
             GROUP BY {bc}
         )
     ),
     {prefix}big AS (
         SELECT {bc}, {m_sql} AS __m,
                row_number() OVER (PARTITION BY {bc} ORDER BY {order}) AS rn
-        FROM {prefix}cnt WHERE __n > {cap}
+        FROM {prefix}cnt WHERE __n > {MAX_BAND_BUCKET}
     ),
     {prefix}chain AS (
         SELECT CASE WHEN x.__m < y.__m THEN {{'a': x.__m, 'b': y.__m}}

@@ -103,22 +103,20 @@ def spatial_grid_join(
     points: DataFrame,
     boxes: DataFrame,
     cell: int,
-    point_id: str = "point_id",
-    box_id: str = "box_id",
 ) -> DataFrame:
     """(point_id, x, y) ⋈ (box_id, xmin, ymin, xmax, ymax) →
     containment pairs, grid-bucketed on integer coordinates
     (non-negative; inclusive bounds). One shuffle per side on
     (cx, cy); no cartesian anywhere."""
     pts = points.select(
-        point_id,
+        "point_id",
         "x",
         "y",
         F.expr(f"x DIV {cell}").alias("cx"),
         F.expr(f"y DIV {cell}").alias("cy"),
     )
     cells = boxes.select(
-        box_id,
+        "box_id",
         "xmin",
         "ymin",
         "xmax",
@@ -138,7 +136,7 @@ def spatial_grid_join(
             F.col("x").between(F.col("xmin"), F.col("xmax"))
             & F.col("y").between(F.col("ymin"), F.col("ymax"))
         )
-        .select(point_id, box_id, "x", "y")
+        .select("point_id", "box_id", "x", "y")
     )
 
 

@@ -25,11 +25,10 @@ algorithm a full value-level parity check rather than a rows-only one.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nyc_landmarks_datalake_spark.functions import bcast
 from nyc_landmarks_datalake_spark.functions.bcast import bcast_if
 from nyc_landmarks_datalake_spark.functions.hashing import (
     md5_long,
@@ -58,7 +57,6 @@ AUTO_JUMP_AFTER = 3
 
 def connected_components(
     pairs: DataFrame,
-    max_iters: int = MAX_ITERS,
     algorithm: str = "plain",
     stats: dict | None = None,
 ) -> DataFrame:
@@ -98,9 +96,8 @@ def connected_components(
         .withColumn("lbl", F.col("doc"))
         .localCheckpoint()
     )
-    changed = 0  # max_iters=0 skips the loop; 0 suppresses the warning
     changed_per_round: list[int] = []
-    for it in range(max_iters):
+    for it in range(MAX_ITERS):
         jumping = algorithm == "jump" or (
             algorithm == "auto" and it >= AUTO_JUMP_AFTER
         )
@@ -137,14 +134,14 @@ def connected_components(
         if changed == 0:
             break
     else:
-        # the loop exhausted max_iters with labels still moving —
+        # the loop exhausted MAX_ITERS with labels still moving —
         # components wider than the iteration budget would come back
         # split. Surface it instead of returning silently-wrong labels.
         if changed:
             warnings.warn(
-                f"connected_components did not converge in {max_iters} "
+                f"connected_components did not converge in {MAX_ITERS} "
                 f"iterations ({changed} labels still changing); raise "
-                "max_iters or use algorithm='jump' for long-chain graphs",
+                "MAX_ITERS or use algorithm='jump' for long-chain graphs",
                 RuntimeWarning,
                 stacklevel=2,
             )
@@ -1712,7 +1709,6 @@ def distance_profile(
     edges: DataFrame,
     n_pivots: int = HC_PIVOTS,
     max_rounds: int = HC_MAX_ROUNDS,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Directed (src, dst) edge list (both directions present) →
     (distance, n_pairs, cum_pairs, cum_ppm): the pivot-sampled
@@ -1745,7 +1741,6 @@ def distance_profile(
         "distance distribution",
         n_pivots,
         max_rounds,
-        stats,
         on_grow=_record_round,
     )
     dd0 = reduce(lambda a, b: a.unionAll(b), cum_rows)
@@ -2072,13 +2067,6 @@ def q_betweenness_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the knob to turn first at native scale.
 # ---------------------------------------------------------------------------
 LP_TOPK = 50
-#: directed-edge-count ceiling for broadcasting the wedge join's b-side
-#: adjacency (~16 B/row framed: 20M edges ≈ 320 MB — inside the
-#: guide-§3.1 comfort zone, far under the 8 GB broadcast cap). Below it
-#: the Θ(Σ deg²) wedge rows never shuffle (they are born partitioned by
-#: u); above it (e.g. the 120M-directed-edge sf10 native graph) the
-#: wedge rows shuffle exactly once. Env-overridable for A/B runs.
-LP_BCAST_EDGES = int(os.environ.get("SPARK_GRAFT_LP_BCAST_EDGES", 20_000_000))
 
 
 def lp_weight_steps(div: str, shl: str) -> list[tuple[str, str]]:
@@ -2177,11 +2165,7 @@ def _lp_agg_partitions(spark: SparkSession) -> int:
     at sf0.1 vs the session default of 32 shuffle partitions). Scale
     with available slots (4× parallelism keeps per-task hash-agg state
     small enough to stay in memory) rather than a constant tuned to
-    either local mode or a cluster; env-overridable for native-scale
-    runs where wedge volume, not slot count, should size it."""
-    env = os.environ.get("SPARK_GRAFT_LP_AGG_PARTS")
-    if env:
-        return int(env)
+    either local mode or a cluster."""
     return max(64, spark.sparkContext.defaultParallelism * 4)
 
 
@@ -2200,9 +2184,9 @@ def link_prediction_frame(
 
     - **The Θ(Σ deg²) wedge rows never cross an exchange.** When the
       directed adjacency is small enough to broadcast (E ≤
-      LP_BCAST_EDGES; data-driven — one count on the already-
-      checkpointed edge list), the a-side adjacency is repartitioned by
-      ``n`` (the candidate ``u``) and the wedge join is a map-side
+      ``bcast.BCAST_MAX_ROWS``, ~16 B/row framed; data-driven — one
+      count on the already-checkpointed edge list), the a-side
+      adjacency is repartitioned by ``n`` (the candidate ``u``) and the wedge join is a map-side
       broadcast hash join, so wedges are BORN partitioned by ``u`` —
       hashpartitioning(u) satisfies the (u, v) aggregation's clustering
       requirement and Catalyst plans one co-partitioned hash aggregate
@@ -2218,9 +2202,11 @@ def link_prediction_frame(
       sort-merge-joining it (localCheckpoint leaves UnknownPartitioning
       + no stats, so the planner could never pick the broadcast
       itself): E-row build side vs an exchange + full sort of the ~100M
-      candidate rows. In the chunked native path the edge side is
+      candidate rows. The hint goes through ``bcast_if`` on the edge
+      list's count, so an edge list over ``BCAST_MAX_ROWS`` degrades to
+      a shuffle anti-join. In the chunked native path the edge side is
       pre-filtered to ``u % C == c`` — exact, since every candidate
-      already satisfies it — keeping the per-chunk broadcast ~E/C.
+      already satisfies it — keeping the per-chunk build side ~E/C.
     - The two degree joins moved BELOW the top-K: ``deg_u``/``deg_v``
       feed only output columns (jaccard_ppm, pa), never the
       (aa_e6, u, v) sort key, so joining them after
@@ -2251,14 +2237,14 @@ def link_prediction_frame(
         a = adjw.filter(F.col("n") % n_chunks == c).alias("a")
         # every candidate pair has u % C == c, so edges outside the
         # chunk can never match the anti-join — filtering them first
-        # is exact and keeps the per-chunk broadcast at ~E/C rows
+        # is exact and keeps the per-chunk build side at ~E/C rows
         anti_edges = und.filter(F.col("u") % n_chunks == c)
     # the directed edge count decides the wedge-join strategy (the same
     # runtime-size decision AQE would make if the checkpoint kept
     # stats); und is already materialized, so the count is one cheap
     # pass over cached blocks
-    n_directed = 2 * und.count()
-    if n_directed <= LP_BCAST_EDGES:
+    n_und = und.count()
+    if 2 * n_und <= bcast.BCAST_MAX_ROWS:
         # zero-shuffle wedges: a-side pre-partitioned by n (= candidate
         # u), b-side adjacency broadcast — the join is map-side and its
         # output already satisfies the aggregation's distribution
@@ -2298,14 +2284,8 @@ def link_prediction_frame(
                 F.sum(F.col("ra_w_e12")).cast("long").alias("ra_e12"),
             )
         )
-    # broadcast the anti-join build side only when it is provably
-    # bounded: chunk-filtered (~E/C rows) or the whole edge list under
-    # LP_BCAST_EDGES (r16 ADVICE: the unchunked hint was unconditional
-    # — the full E-row list at native scale must degrade to a shuffle
-    # anti-join, not bypass the 8 GB broadcast cap)
-    if chunk is not None or n_directed <= LP_BCAST_EDGES:
-        anti_edges = F.broadcast(anti_edges)
-    cand = pairs.join(anti_edges, ["u", "v"], "left_anti")
+    # the chunk filter keeps ~E/C rows, but only und's count bounds them
+    cand = pairs.join(bcast_if(anti_edges, n_und), ["u", "v"], "left_anti")
     top = cand.orderBy(F.desc("aa_e6"), "u", "v").limit(LP_TOPK)
     du = deg.select("u", F.col("deg").alias("deg_u"))
     dv = deg.select(F.col("u").alias("v"), F.col("deg").alias("deg_v"))

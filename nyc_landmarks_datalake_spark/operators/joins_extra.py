@@ -99,17 +99,16 @@ def salted_join(
     small: DataFrame,
     big_key: str,
     small_key: str,
-    n_salt: int = SALT_BUCKETS,
 ) -> DataFrame:
     """Skew-safe equi-join: big side gets a deterministic salt derived
     from a high-cardinality sibling column (pmod of a row hash), small
-    side is replicated n_salt times; join on (key, salt). Deterministic —
+    side is replicated SALT_BUCKETS times; join on (key, salt). Deterministic —
     no rand() — so retries/speculative tasks see identical data."""
     big_salted = big.withColumn(
         "__salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salt)),
+        F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(SALT_BUCKETS)),
     )
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))).alias("__salt")
+    salts = F.explode(F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1))).alias("__salt")
     small_rep = small.select("*", salts).withColumn(
         "__salt", F.col("__salt").cast("bigint")
     )

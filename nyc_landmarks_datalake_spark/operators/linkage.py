@@ -64,8 +64,6 @@ T_NONMATCH_INV = 10
 #: division can never overflow BIGINT even when every u clamps to 1
 ODDS_CAP_PPM = 1_000_000_000_000_000
 
-_FIELDS = ("name", "segment", "nation", "acctbal")
-
 #: row gate for the forced gamma attribute broadcasts: ~64 B/row framed
 #: (id + name + seg + nat + bal) keeps the build side near 500 MB —
 #: wider rows than the default bcast gate assumes, hence the lower cap
@@ -365,10 +363,10 @@ def _prod_duck(prefix: str, vals: str) -> str:
     )
 
 
-def linkage_score_sql(census: str = "census", w: str = "w") -> str:
+def linkage_score_sql(w: str = "w") -> str:
     """The gamma-census → scored-pattern tail (<= 16 rows of wide
-    decimal arithmetic), over any relations with the census / weights
-    schemas. Shared verbatim between the committed single-statement
+    decimal arithmetic), over the ``census`` relation and any relation
+    ``w`` with the weights schema. Shared verbatim between the committed single-statement
     oracle (CTE names) and the native-scale chunked verifier (temp
     tables)."""
     return f"""
@@ -376,7 +374,7 @@ sc AS (
     SELECT g1, g2, g3, g4, n_pairs, n_true_pairs, sample_pair,
            {_prod_duck("num", "m")},
            {_prod_duck("den", "u")}
-    FROM {census}, {w}
+    FROM census, {w}
 )
 SELECT concat(CASE WHEN g1 = 1 THEN 'A' ELSE 'D' END,
               CASE WHEN g2 = 1 THEN 'A' ELSE 'D' END,

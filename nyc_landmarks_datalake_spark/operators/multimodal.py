@@ -54,25 +54,6 @@ from nyc_landmarks_datalake_spark.sources.catalog import compute_table, table
 
 FEATURE_DIM = 8
 
-MEDIA_META = T.StructType(
-    [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("format", T.StringType()),
-    ]
-)
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", MEDIA_META),
-    ]
-)
-
 
 def synthesize_media(spark: SparkSession, n: int = 100) -> DataFrame:
     """Deterministic fake media table (no media libs in the container):
@@ -102,17 +83,15 @@ def synthesize_media(spark: SparkSession, n: int = 100) -> DataFrame:
     )
 
 
-def _md5_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
+def _md5_features(payload: bytes) -> list[float]:
     """Deterministic fake featurizer: consecutive md5 hex byte-pairs,
     scaled to [0, 1]. Stands in for a real encoder; bit-reproducible in
     any engine (the DuckDB oracle recomputes it in SQL)."""
     digest = hashlib.md5(payload).hexdigest()
-    return [int(digest[2 * j : 2 * j + 2], 16) / 255.0 for j in range(dim)]
+    return [int(digest[2 * j : 2 * j + 2], 16) / 255.0 for j in range(FEATURE_DIM)]
 
 
-def extract_features(
-    df: DataFrame, id_col: str, payload_col: str, dim: int = FEATURE_DIM
-) -> DataFrame:
+def extract_features(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """binary payload → float feature vector via Arrow-batched mapInPandas."""
     out_schema = T.StructType(
         [
@@ -128,7 +107,7 @@ def extract_features(
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
-                    "features": [ _md5_features(bytes(p), dim) for p in payloads ],
+                    "features": [ _md5_features(bytes(p)) for p in payloads ],
                     "n_bytes": [len(bytes(p)) for p in payloads],
                 }
             )
@@ -726,9 +705,7 @@ def encode_wav(
     return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
 
-def decode_audio(
-    df: DataFrame, *, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
+def decode_audio(df: DataFrame, *, id_col: str = "media_id") -> DataFrame:
     """Audio decode over a binary column via Arrow-batched mapInPandas:
     REAL for RIFF/WAVE PCM (:func:`decode_wav`); other codecs would sit
     behind the same real-library seam as compressed images. Emits
@@ -750,7 +727,7 @@ def decode_audio(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for pid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for pid, payload in zip(pdf[id_col], pdf["payload"]):
                 rate, ch, n, samples = decode_wav(bytes(payload))
                 s64 = samples[:, 0].astype("int64")
                 rows.append(
@@ -758,7 +735,7 @@ def decode_audio(
                 )
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    return df.select(id_col, "payload").mapInPandas(run, schema=out_schema)
 
 
 def _decode_any(payload: bytes) -> tuple[int, int, int, "object"]:
@@ -786,7 +763,7 @@ def _decode_any(payload: bytes) -> tuple[int, int, int, "object"]:
     raise NotImplementedError("PIL wiring lands with the library")
 
 
-def _image_stats(df: DataFrame, id_col: str, payload_col: str, fn) -> DataFrame:
+def _image_stats(df: DataFrame, id_col: str, fn) -> DataFrame:
     """Per payload, ``fn(*decoded)`` → (width, height, channels, pixels)
     emitted as (id, width, height, channels, ch0..2 sums): integer
     per-channel sums, 0 for channels the image lacks. Arrow-batched
@@ -806,7 +783,7 @@ def _image_stats(df: DataFrame, id_col: str, payload_col: str, fn) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for pid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for pid, payload in zip(pdf[id_col], pdf["payload"]):
                 w, h, c, px = fn(*_decode_any(bytes(payload)))
                 sums = px.reshape(-1, c).sum(axis=0, dtype="int64")
                 rows.append(
@@ -816,24 +793,23 @@ def _image_stats(df: DataFrame, id_col: str, payload_col: str, fn) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    return df.select(id_col, "payload").mapInPandas(run, schema=out_schema)
 
 
-def decode_image(df: DataFrame, *, id_col: str = "media_id", payload_col: str = "payload") -> DataFrame:
+def decode_image(df: DataFrame, *, id_col: str = "media_id") -> DataFrame:
     """Image decode over a binary column via Arrow-batched mapInPandas:
     REAL for binary netpbm payloads (:func:`decode_netpbm` — pure
     numpy), non-interlaced 8-bit PNG (:func:`decode_png` — stdlib zlib
     + numpy unfiltering), GIF and baseline JPEG; PIL-gated for the
     remaining compressed formats (Pillow is not a dependency; the seam
-    stays explicit). Column
-    params are keyword-only so a positional payload name can never
-    silently bind as the id column. Emits per-image dimensions and
-    integer per-channel sums —
+    stays explicit). Reads the ``payload`` column; ``id_col`` is
+    keyword-only so a positional name can never silently bind as it.
+    Emits per-image dimensions and integer per-channel sums —
     the stats a downstream dedup/quality stage actually consumes, and
     integer-exact so the whole Python path sits under the oracle gate
     (q_image_decode_stats). Zero shuffle: decode is embarrassingly
     parallel, one Arrow batch per task in flight."""
-    return _image_stats(df, id_col, payload_col, lambda w, h, c, px: (w, h, c, px))
+    return _image_stats(df, id_col, lambda w, h, c, px: (w, h, c, px))
 
 
 def resize_image(
@@ -842,7 +818,6 @@ def resize_image(
     target_h: int,
     *,
     id_col: str = "media_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """REAL pixel resize (nearest-neighbor) over decodable payloads via
     Arrow-batched mapInPandas: decode (same format routing as
@@ -859,11 +834,11 @@ def resize_image(
         xs = (np.arange(target_w, dtype=np.int64) * w) // target_w
         return target_w, target_h, c, px[np.ix_(ys, xs)]
 
-    return _image_stats(df, id_col, payload_col, nearest)
+    return _image_stats(df, id_col, nearest)
 
 
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: explodes frame indexes 0, n, 2n, ...
+def frame_sample(df: DataFrame) -> DataFrame:
+    """Video frame-sampling *plan*: explodes frame indexes 0, 10, 20, ...
     from metadata without touching payload bytes (planning stays
     metadata-only; the per-frame decode would join back by media_id)."""
     return (
@@ -874,19 +849,19 @@ def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
                 F.sequence(
                     F.lit(0),
                     F.col("meta.n_frames") - 1,
-                    F.lit(every_n),
+                    F.lit(10),
                 )
             ).alias("frame_idx"),
         )
     )
 
 
-def resize_plan(df: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize as metadata transform (aspect-preserving target dims);
-    payload re-encode is the stubbed decoder's job."""
+def resize_plan(df: DataFrame) -> DataFrame:
+    """Resize as metadata transform (aspect-preserving target dims, longest
+    side at most 256); payload re-encode is the stubbed decoder's job."""
     scale = F.least(
         F.lit(1.0),
-        F.lit(max_side)
+        F.lit(256)
         / F.greatest(F.col("meta.width"), F.col("meta.height")).cast("double"),
     )
     return df.select(
@@ -963,7 +938,7 @@ _MEDIA_N = 100
 def q_media_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = synthesize_media(spark, _MEDIA_N)
     return (
-        frame_sample(media, every_n=10)
+        frame_sample(media)
         .groupBy("media_id")
         .agg(
             F.count(F.lit(1)).alias("n_sampled"),
@@ -992,7 +967,7 @@ def q_media_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_media_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return resize_plan(synthesize_media(spark, _MEDIA_N), max_side=256)
+    return resize_plan(synthesize_media(spark, _MEDIA_N))
 
 
 # ---------------------------------------------------------------------------
@@ -1056,12 +1031,12 @@ def q_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WAV_N = 40  # mono PCM16 frames → 80 raw bytes = 5 md5 digests
 
 
-def _wav_header(n_frames: int, channels: int = 1, rate: int = 16000) -> bytes:
+def _wav_header(n_frames: int) -> bytes:
+    """Header of a mono 16 kHz PCM16 file of ``n_frames`` frames."""
     import struct
 
-    raw_len = n_frames * channels * 2
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * channels * 2,
-                      channels * 2, 16)
+    raw_len = n_frames * 2
+    fmt = struct.pack("<HHIIHH", 1, 1, 16000, 16000 * 2, 2, 16)
     chunks = (
         b"WAVE"
         + b"fmt " + struct.pack("<I", len(fmt)) + fmt
@@ -1494,9 +1469,7 @@ PHASH_GROUP = 4
 PHASH_PERTURB = 9
 
 
-def phash_images(
-    df: DataFrame, *, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
+def phash_images(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     """binary image payload → 60-bit average-hash via real decode
     inside mapInPandas. Same format routing as decode_image: netpbm,
     PNG, GIF and JPEG decode; any other format raises
@@ -1513,7 +1486,7 @@ def phash_images(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for pid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for pid, payload in zip(pdf[id_col], pdf["payload"]):
                 _w, _h, c, px = _decode_any(bytes(payload))
                 flat = px.reshape(-1, c).astype(np.int64)
                 if c > 1:  # luma fold for color inputs (fixture is gray)
@@ -1528,7 +1501,7 @@ def phash_images(
                 rows.append((pid, ph))
             yield pd.DataFrame(rows, columns=[id_col, "phash"])
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    return df.select(id_col, "payload").mapInPandas(run, schema=out_schema)
 
 
 def _phash_fixture(docs: DataFrame) -> DataFrame:

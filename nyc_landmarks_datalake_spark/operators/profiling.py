@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from nyc_landmarks_datalake_spark.functions.numeric import (
     davg,
@@ -25,9 +24,6 @@ from nyc_landmarks_datalake_spark.functions.numeric import (
 )
 from nyc_landmarks_datalake_spark.registry import query
 from nyc_landmarks_datalake_spark.sources.catalog import table
-
-_NUMERIC = (T.IntegerType, T.LongType, T.DoubleType, T.FloatType, T.ShortType)
-
 
 def profile(df: DataFrame) -> DataFrame:
     """One-pass per-column profile → long-format DataFrame

@@ -12,8 +12,8 @@ the boolean is TRUE. A Spark estimate drifting outside its bound
 therefore turns the driver row red — a real independent accuracy check,
 not rows-only. Raw estimates remain covered by tests/test_sketches.py.
 
-Scale: the PRODUCTION path is :func:`approx_distinct_counts` /
-:func:`approx_percentiles` with ``parity=False`` (the default) — the
+Scale: the PRODUCTION path is :func:`approx_distinct_counts` with
+``parity=False`` (the default) and :func:`approx_percentiles` — the
 sketch alone, no exact companions. Exact distinct counts shuffle every
 distinct value, while HLL++ partial-aggregates a fixed ~1.5 KB sketch
 per group, making 100 TB distinct-counting a map-side problem; the
@@ -50,7 +50,6 @@ def approx_distinct_counts(
     df: DataFrame,
     group_cols: Sequence[str],
     value_cols: Sequence[str],
-    rsd: float = HLL_RSD,
     parity: bool = False,
 ) -> DataFrame:
     """Per-group HLL++ distinct counts — ``approx_<col>`` per value col.
@@ -61,7 +60,7 @@ def approx_distinct_counts(
     ``countDistinct`` companions and ``n_rows`` in the same aggregate so
     the sketch can be judged against ground truth at test scale."""
     aggs = [
-        F.approx_count_distinct(c, rsd=rsd).alias(f"approx_{c}")
+        F.approx_count_distinct(c, rsd=HLL_RSD).alias(f"approx_{c}")
         for c in value_cols
     ]
     if parity:
@@ -71,13 +70,9 @@ def approx_distinct_counts(
 
 
 def approx_percentiles(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-    quantiles: Sequence[float] = (0.5, 0.95),
-    accuracy: int = PCT_ACCURACY,
+    df: DataFrame, group_cols: Sequence[str], value_col: str
 ) -> DataFrame:
-    """Per-group GK-sketch percentiles — ``p<pct>`` per quantile.
+    """Per-group GK-sketch percentiles ``p50`` and ``p95``.
 
     Production path: one aggregation over bounded per-group sketch
     state, nothing exact rides along. Rank verification against the
@@ -85,10 +80,10 @@ def approx_percentiles(
     not a production cost."""
     return df.groupBy(*group_cols).agg(
         *[
-            F.percentile_approx(value_col, q, accuracy).alias(
+            F.percentile_approx(value_col, q, PCT_ACCURACY).alias(
                 f"p{int(round(q * 100))}"
             )
-            for q in quantiles
+            for q in (0.5, 0.95)
         ]
     )
 
@@ -144,9 +139,7 @@ def q_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity check's cost, not the production path's (which is
     :func:`approx_percentiles` alone)."""
     orders = table(spark, sf_dir, "orders")
-    approx = approx_percentiles(
-        orders, ["o_orderpriority"], "o_totalprice", (0.5, 0.95)
-    )
+    approx = approx_percentiles(orders, ["o_orderpriority"], "o_totalprice")
     joined = orders.join(F.broadcast(approx), "o_orderpriority")
     ranked = joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -33,11 +33,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
-def encode_avi(
-    frames: list[bytes], width: int, height: int, fps: int = 10
-) -> bytes:
-    """Minimal MJPEG AVI: LIST hdrl (avih + strl(strh+strf)) + LIST
-    movi of '00dc' JPEG chunks, even-padded per RIFF."""
+def encode_avi(frames: list[bytes], width: int, height: int) -> bytes:
+    """Minimal 10 fps MJPEG AVI: LIST hdrl (avih + strl(strh+strf)) +
+    LIST movi of '00dc' JPEG chunks, even-padded per RIFF."""
 
     def chunk(fourcc: bytes, payload: bytes) -> bytes:
         pad = b"\x00" if len(payload) % 2 else b""
@@ -49,7 +47,7 @@ def encode_avi(
     n = len(frames)
     avih = struct.pack(
         "<14I",
-        1_000_000 // fps,  # dwMicroSecPerFrame
+        1_000_000 // 10,  # dwMicroSecPerFrame
         0, 0, 0x10,        # maxBytesPerSec, padding, flags (HASINDEX off)
         n, 0, 1, 0,        # totalFrames, initialFrames, streams, bufSize
         width, height,
@@ -57,7 +55,7 @@ def encode_avi(
     )
     strh = (
         b"vids" + b"MJPG"
-        + struct.pack("<10I", 0, 0, 0, 1, fps, 0, n, 0, 0xFFFFFFFF, 0)[:40]
+        + struct.pack("<10I", 0, 0, 0, 1, 10, 0, n, 0, 0xFFFFFFFF, 0)[:40]
         + struct.pack("<4H", 0, 0, width, height)
     )
     strf = struct.pack(
@@ -113,22 +111,17 @@ def decode_avi(payload: bytes) -> tuple[int, int, int, list[bytes]]:
     return declared, width, height, frames
 
 
-def decode_video(
-    df: DataFrame,
-    *,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    frame_stride: int = 2,
-) -> DataFrame:
-    """REAL MJPEG/AVI decode + every-``frame_stride``-th frame sampling
-    over a binary column, Arrow-batched. Per video: dimensions, frame
-    counts (container vs header cross-checked), the pixel sum over ALL
-    decoded frames, and the sum over the SAMPLED frames."""
+def decode_video(df: DataFrame) -> DataFrame:
+    """REAL MJPEG/AVI decode + every-other-frame sampling over the
+    ``payload`` column of (doc_id, payload), Arrow-batched. Per video:
+    dimensions, frame counts (container vs header cross-checked), the
+    pixel sum over ALL decoded frames, and the sum over the SAMPLED
+    frames."""
     from nyc_landmarks_datalake_spark.operators.jpeg import decode_jpeg
 
     out_schema = T.StructType(
         [
-            T.StructField(id_col, df.schema[id_col].dataType),
+            T.StructField("doc_id", df.schema["doc_id"].dataType),
             T.StructField("width", T.IntegerType()),
             T.StructField("height", T.IntegerType()),
             T.StructField("n_frames", T.LongType()),
@@ -142,7 +135,7 @@ def decode_video(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for mid, payload in zip(pdf["doc_id"], pdf["payload"]):
                 declared, w, h, frames = decode_avi(payload)
                 total = 0
                 sampled = 0
@@ -153,7 +146,7 @@ def decode_video(
                     fw, fh = dw, dh
                     s = int(np.sum(px, dtype=np.int64))
                     total += s
-                    if i % frame_stride == 0:
+                    if i % 2 == 0:
                         sampled += s
                         n_sampled += 1
                 rows.append(
@@ -243,7 +236,7 @@ def _register() -> None:
                 )
 
         videos = raw.mapInPandas(encode, schema=enc_schema)
-        return decode_video(videos, id_col="doc_id", frame_stride=2)
+        return decode_video(videos)
 
 
 _register()

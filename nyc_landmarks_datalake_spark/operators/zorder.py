@@ -38,12 +38,12 @@ Z_BITS = 10
 Z_PREFIX_BITS = 6
 
 
-def morton2(x: Column, y: Column, bits: int = Z_BITS) -> Column:
-    """Interleave the low ``bits`` of two non-negative int columns:
+def morton2(x: Column, y: Column) -> Column:
+    """Interleave the low ``Z_BITS`` of two non-negative int columns:
     bit i of x → bit 2i, bit i of y → bit 2i+1. Pure codegen (shifts
     and masks), no UDF."""
     out = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(Z_BITS):
         out = (
             out
             + F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i)
@@ -52,12 +52,12 @@ def morton2(x: Column, y: Column, bits: int = Z_BITS) -> Column:
     return out
 
 
-def morton2_sql(x: str, y: str, bits: int = Z_BITS) -> str:
+def morton2_sql(x: str, y: str) -> str:
     """DuckDB mirror of :func:`morton2` (same shift/mask terms)."""
     # each shift term fully parenthesized: SQL '+' binds TIGHTER than
     # '<<', so unparenthesized terms joined with + cascade the shifts
     terms = []
-    for i in range(bits):
+    for i in range(Z_BITS):
         terms.append(f"(((({x}) >> {i}) & 1) << {2 * i})")
         terms.append(f"(((({y}) >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"

@@ -27,16 +27,13 @@ def ingest_landmarks(
     csv_path: str,
     sidecar_path: str,
     silver_dir: str,
-    geometry_mode: str = "encode",
 ) -> DataFrame:
     """Ingest the CSV into ``silver_dir`` and read it back with the schema
     just written, partition keys last (the order a partitioned read
     gives), so the read-back infers nothing from the files. The written
     schema carries the sidecar's ``partition_key`` flags as field
     metadata, so the sidecar is not loaded twice."""
-    written = ingest_csv(
-        spark, csv_path, sidecar_path, silver_dir, geometry_mode=geometry_mode
-    )
+    written = ingest_csv(spark, csv_path, sidecar_path, silver_dir)
     pkeys = partition_keys(written.schema)
     fields = [f for f in written.schema if f.name not in pkeys]
     schema = T.StructType(fields + [written.schema[k] for k in pkeys])

@@ -344,9 +344,10 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
     latest one seen on entry may belong to a writer in flight, which
     could still publish it, so it is kept (Delta's VACUUM likewise
     spares files a running writer may commit); once that version is
-    taken, a dir nothing references is an orphan. A manifest or dir
-    that a concurrent vacuum removed after this one listed it is
-    skipped; any other error raises. Returns deleted parquet paths."""
+    taken, a dir nothing references is an orphan. A manifest, dir or
+    file that a concurrent vacuum removed after this one listed it is
+    skipped; any other error raises. Returns the parquet paths this call
+    deleted, so racing vacuums never both count a file."""
     import shutil
 
     def gone_ok(_func, _path, exc_info) -> None:
@@ -372,8 +373,13 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
             names = sorted(os.listdir(full_dir))
         except FileNotFoundError:
             continue
-        deleted.extend(
-            os.path.join(rel_dir, n) for n in names if n.endswith(".parquet")
-        )
+        for n in names:
+            if not n.endswith(".parquet"):
+                continue
+            try:
+                os.unlink(os.path.join(full_dir, n))
+            except FileNotFoundError:
+                continue
+            deleted.append(os.path.join(rel_dir, n))
         shutil.rmtree(full_dir, onerror=gone_ok)
     return deleted

@@ -39,24 +39,17 @@ from nyc_landmarks_datalake_spark.streaming.guard import (
 )
 
 
-def replay_stream_dedup(
-    spark, rows: DataFrame, keys: list[str], n_source_files: int = 4
-) -> DataFrame:
+def replay_stream_dedup(spark, rows: DataFrame, keys: list[str]) -> DataFrame:
     """Replay ``rows`` file-by-file through streaming
     ``dropDuplicates(keys)``; return everything emitted."""
     base = tempfile.mkdtemp(prefix="stream_dedup_")
-    src = stage(rows, os.path.join(base, "src"), n_source_files)
+    src = stage(rows, os.path.join(base, "src"), 4)
     stream = file_stream(replay_session(spark), src, rows.schema)
     return replay(spark, stream.dropDuplicates(keys), base, "stream_dedup")
 
 
 def replay_stream_dedup_watermarked(
-    spark,
-    rows: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    delay: str = "3650 days",
-    n_source_files: int = 4,
+    spark, rows: DataFrame, keys: list[str]
 ) -> DataFrame:
     """Replay through ``withWatermark + dropDuplicatesWithinWatermark``
     — the bounded-state production form of streaming dedup (state for a
@@ -64,7 +57,7 @@ def replay_stream_dedup_watermarked(
     unbounded stream holds only a watermark-window of keys, not the full
     key history that plain ``dropDuplicates`` accumulates).
 
-    The registered query picks ``delay`` longer than the staged data's
+    The 3650-day delay is longer than the staged data's
     event-time span, so no state is evicted mid-replay and the emitted
     set is EXACTLY the distinct key set — which is what makes the
     operator oracle-checkable bit-exactly while still executing the
@@ -74,9 +67,9 @@ def replay_stream_dedup_watermarked(
     columns under arrival-order nondeterminism (same reasoning as
     replay_stream_dedup's key-only projection)."""
     base = tempfile.mkdtemp(prefix="stream_dedup_wm_")
-    src = stage(rows, os.path.join(base, "src"), n_source_files)
+    src = stage(rows, os.path.join(base, "src"), 4)
     stream = file_stream(replay_session(spark), src, rows.schema)
-    deduped = stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(keys)
+    deduped = stream.withWatermark("ts", "3650 days").dropDuplicatesWithinWatermark(keys)
     return replay(spark, deduped, base, "stream_dedup")
 
 

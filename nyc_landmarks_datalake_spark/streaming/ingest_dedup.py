@@ -61,11 +61,7 @@ def _band_keys(docs: DataFrame) -> DataFrame:
     ).select("doc_id", "source", F.col("b.band_id"), F.col("b.band_hash"))
 
 
-def replay_stream_ingest_dedup(
-    spark,
-    docs: DataFrame,
-    n_source_files: int = 3,
-) -> DataFrame:
+def replay_stream_ingest_dedup(spark, docs: DataFrame) -> DataFrame:
     """Stage ``docs`` (doc_id, source, text) and replay them micro-batch
     by micro-batch through the ingest-dedup loop; return one row per
     document: (doc_id, source, is_dup).
@@ -93,7 +89,7 @@ def replay_stream_ingest_dedup(
     # files; stamping strictly increasing mtimes makes the file source
     # (which orders its listing by modification time) replay them in
     # range order.
-    staged.repartitionByRange(n_source_files, "doc_id").write.mode(
+    staged.repartitionByRange(3, "doc_id").write.mode(
         "overwrite"
     ).parquet(src)
     import time as _time

@@ -91,13 +91,11 @@ def mv_sink(sess, tbl: str):
     return sink
 
 
-def replay_stream_mv_upsert(
-    spark, events: DataFrame, n_source_files: int = 3
-) -> DataFrame:
+def replay_stream_mv_upsert(spark, events: DataFrame) -> DataFrame:
     """Replay the feed through the per-batch delta→read→add→commit loop
     and return the final MV snapshot (read with the CALLER's session)."""
     base = tempfile.mkdtemp(prefix="stream_mv_")
-    src = stage(events, os.path.join(base, "events"), n_source_files)
+    src = stage(events, os.path.join(base, "events"), 3)
     tbl = os.path.join(base, "mv")
     sess = replay_session(spark)
     stream = file_stream(sess, src, events.schema)

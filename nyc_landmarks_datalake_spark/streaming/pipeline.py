@@ -20,21 +20,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_counts(
-    events: DataFrame,
-    window_duration: str = "15 minutes",
-    watermark: str = "30 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Tumbling (or sliding) event-time window aggregation with a
-    watermark: rows later than the watermark are dropped."""
+def windowed_counts(events: DataFrame, slide: str | None = None) -> DataFrame:
+    """15-minute tumbling (or sliding) event-time window aggregation with
+    a 30-minute watermark: rows later than the watermark are dropped."""
     win = (
-        F.window("ts", window_duration, slide)
+        F.window("ts", "15 minutes", slide)
         if slide
-        else F.window("ts", window_duration)
+        else F.window("ts", "15 minutes")
     )
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "30 minutes")
         .groupBy(win.alias("w"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
         .select(
@@ -47,13 +42,9 @@ def windowed_counts(
     )
 
 
-def stream_dedup(
-    events: DataFrame, keys: list[str] | None = None, watermark: str = "30 minutes"
-) -> DataFrame:
-    """Streaming exact dedup: state bounded by the watermark (duplicates
-    arriving later than the watermark are not suppressed — the standard
-    state/size tradeoff)."""
-    return events.withWatermark("ts", watermark).dropDuplicates(
-        (keys or ["event_id"]) + ["ts"]
-    )
+def stream_dedup(events: DataFrame) -> DataFrame:
+    """Streaming exact dedup on (``event_id``, ``ts``): state bounded by a
+    30-minute watermark (duplicates arriving later than the watermark
+    are not suppressed — the standard state/size tradeoff)."""
+    return events.withWatermark("ts", "30 minutes").dropDuplicates(["event_id", "ts"])
 

@@ -3,13 +3,12 @@
 The built-in streaming ops (windows, sessions, dropDuplicates) cover the
 standard cases; this is the escape hatch for arbitrary per-key state —
 here a running per-user profile (event count, value sum, last-seen ts)
-maintained across micro-batches with a processing-time timeout evicting
-idle keys.
+maintained across micro-batches.
 
 Scale: state lives in the state store partitioned by key (one shuffle to
-co-locate); per-key state is a fixed-size tuple, and the timeout bounds
-total state to active keys — the same posture that keeps watermarked
-windows feasible on unbounded streams.
+co-locate); per-key state is a fixed-size tuple. Nothing evicts it: a
+pending processing-time timeout keeps an availableNow query alive after
+its data is drained, so the finite replays here run with NoTimeout.
 """
 
 from __future__ import annotations
@@ -48,53 +47,33 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _make_update_profile(evict_idle_ms: int | None):
-    def _update_profile(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, total, last_us = state.get if state.exists else (0, 0.0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            last_us = max(last_us, int(pdf["ts"].astype("int64").max()) // 1000)
-        state.update((n, total, last_us))
-        if evict_idle_ms is not None:
-            state.setTimeoutDuration(evict_idle_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "last_ts_us": [last_us],
-            }
-        )
-
-    return _update_profile
-
-
-def user_profiles(events: DataFrame, evict_idle_ms: int | None = None) -> DataFrame:
-    """Streaming per-user running profile (count/sum/last-seen).
-
-    ``evict_idle_ms`` enables processing-time state eviction for
-    continuous production streams. Leave None for availableNow /
-    batch-catchup runs: a pending processing-time timeout keeps the
-    query alive after the data is drained (it schedules further batches
-    to service future timeouts), so availableNow would never terminate.
-    """
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if evict_idle_ms is not None
-        else GroupStateTimeout.NoTimeout
+def _update_profile(
+    key, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    n, total, last_us = state.get if state.exists else (0, 0.0, 0)
+    for pdf in pdfs:
+        n += len(pdf)
+        total += float(pdf["value"].sum())
+        last_us = max(last_us, int(pdf["ts"].astype("int64").max()) // 1000)
+    state.update((n, total, last_us))
+    yield pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "n_events": [n],
+            "total_value": [total],
+            "last_ts_us": [last_us],
+        }
     )
+
+
+def user_profiles(events: DataFrame) -> DataFrame:
+    """Streaming per-user running profile (count/sum/last-seen)."""
     return events.groupBy("user_id").applyInPandasWithState(
-        _make_update_profile(evict_idle_ms),
+        _update_profile,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -155,9 +134,7 @@ def user_profiles_exact(events: DataFrame) -> DataFrame:
     )
 
 
-def replay_user_profiles(
-    spark, events: DataFrame, n_source_files: int = 4
-) -> DataFrame:
+def replay_user_profiles(spark, events: DataFrame) -> DataFrame:
     """Replay :func:`user_profiles_exact` over ``events`` and return the
     final per-user profiles. In update mode a user re-emits with
     strictly growing ``n_events`` whenever a batch touches it, so the
@@ -165,7 +142,7 @@ def replay_user_profiles(
     from nyc_landmarks_datalake_spark.operators.merge import keep_latest
 
     base = tempfile.mkdtemp(prefix="stateful_profiles_")
-    src = stage(events, os.path.join(base, "src"), n_source_files)
+    src = stage(events, os.path.join(base, "src"), 4)
     stream = file_stream(replay_session(spark), src, events.schema)
     emitted = replay(
         spark, user_profiles_exact(stream), base, "stateful_profiles", mode="update"

@@ -153,7 +153,6 @@ def replay_stream_static_join(
     stream_rows: DataFrame,
     static_dim: DataFrame,
     on,
-    n_source_files: int = 3,
 ) -> DataFrame:
     """Replay ``stream_rows`` joined against the static (batch)
     dimension — the per-micro-batch enrichment pattern. The static side
@@ -162,7 +161,7 @@ def replay_stream_static_join(
     order, which is what makes the replay oracle-checkable. It keeps no
     streaming state, so it streams on the caller's session."""
     base = tempfile.mkdtemp(prefix="stream_static_")
-    src = stage(stream_rows, os.path.join(base, "src"), n_source_files)
+    src = stage(stream_rows, os.path.join(base, "src"), 3)
     joined = file_stream(spark, src, stream_rows.schema).join(static_dim, on)
     return replay(spark, joined, base, "stream_static")
 

@@ -40,13 +40,12 @@ def replay_stream_agg(
     rows: DataFrame,
     group_cols: list[Column],
     zone: str,
-    n_source_files: int = 3,
 ) -> DataFrame:
     """Replay ``rows`` (must carry ``value``) through a streaming
     ``groupBy(*group_cols)`` count + decimal-sum aggregate; return the
     final complete-mode snapshot."""
     base = tempfile.mkdtemp(prefix=f"{zone}_")
-    src = stage(rows, os.path.join(base, "src"), n_source_files)
+    src = stage(rows, os.path.join(base, "src"), 3)
     stream = file_stream(replay_session(spark), src, rows.schema)
     agg = stream.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -60,7 +59,6 @@ def replay_stream_tumbling_agg(
     rows: DataFrame,
     window: str = "1 hour",
     slide: str | None = None,
-    n_source_files: int = 3,
 ) -> DataFrame:
     """Replay ``rows`` (ts, event_type, value) through a streaming
     (sliding-)window aggregate; returns the final complete snapshot."""
@@ -72,7 +70,6 @@ def replay_stream_tumbling_agg(
             F.col("event_type"),
         ],
         zone="stream_window",
-        n_source_files=n_source_files,
     )
 
 

@@ -25,7 +25,6 @@ def _force_over_threshold(monkeypatch) -> None:
     """Push every r17 gate below any real row count."""
     monkeypatch.setattr(bcast_mod, "BCAST_MAX_ROWS", 0)
     monkeypatch.setattr(linkage_mod, "_GAMMA_BCAST_ROWS", 0)
-    monkeypatch.setattr(graph_mod, "LP_BCAST_EDGES", 0)
 
 
 @pytest.mark.parametrize(
@@ -57,6 +56,33 @@ def test_over_threshold_actually_degrades_to_shuffle_join(
         df._jdf.queryExecution(), "formatted"
     )
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+
+
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _join_nodes(plan: str, join_type: str) -> list[str]:
+    """Operator names of the formatted plan's joins of ``join_type``."""
+    return [
+        node.split("\n", 1)[0]
+        for node in plan.split("\n(")
+        if f"Join type: {join_type}" in node
+    ]
+
+
+def test_chunked_link_prediction_anti_join_is_gated(spark, sf_small, monkeypatch):
+    """The chunk filter keeps about E/C edges, but only the edge list's
+    count bounds them: over the gate the chunked anti-join must plan as a
+    shuffle join and still return the same rows."""
+    ref = _rows(graph_mod.link_prediction_frame(spark, sf_small, chunk=(1, 3)))
+    _force_over_threshold(monkeypatch)
+    df = graph_mod.link_prediction_frame(spark, sf_small, chunk=(1, 3))
+    anti = _join_nodes(_plan(df), "LeftAnti")
+    assert anti and not any("Broadcast" in node for node in anti), anti
+    assert _rows(df) == ref
 
 
 def test_under_threshold_keeps_broadcast(spark, sf_small):

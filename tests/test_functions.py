@@ -6,6 +6,7 @@ import hashlib
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from nyc_landmarks_datalake_spark.functions.hashing import (
@@ -13,6 +14,7 @@ from nyc_landmarks_datalake_spark.functions.hashing import (
     md5_long,
     minhash_coeffs,
 )
+from nyc_landmarks_datalake_spark.functions.numeric import dprod_sum
 from nyc_landmarks_datalake_spark.functions.vectors import cosine, dot, norm
 
 
@@ -33,6 +35,18 @@ def test_minhash_coeffs_deterministic_and_valid():
     for ai, bi in a:
         assert 0 < ai < MERSENNE_P and ai % 2 == 1
         assert 0 <= bi < MERSENNE_P
+
+
+def test_dprod_sum_checked_fails_loud_past_the_operand_bound(spark):
+    """In range, the checked form sums the same products; an operand at
+    PROD_OPERAND_BOUND raises an error naming the guard instead."""
+    ok = spark.createDataFrame([(1.5, 2.0), (3.25, -4.0)], "x double, y double")
+    for checked in (False, True):
+        got = ok.agg(dprod_sum(F.col("x"), F.col("y"), checked=checked)).first()[0]
+        assert got == -10.0
+    bad = spark.createDataFrame([(1e12, 1.0)], "x double, y double")
+    with pytest.raises(Exception, match="out of decimal"):
+        bad.agg(dprod_sum(F.col("x"), F.col("y"), checked=True)).collect()
 
 
 def test_vector_ops_match_numpy(spark):

@@ -47,7 +47,7 @@ def test_extract_features_matches_reference_impl(spark):
 
 def test_frame_sample_metadata_only(spark):
     media = synthesize_media(spark, 30)
-    sampled = frame_sample(media, every_n=10)
+    sampled = frame_sample(media)
     rows = sampled.collect()
     assert all(r["frame_idx"] % 10 == 0 for r in rows)
     by_id = {}
@@ -64,7 +64,7 @@ def test_frame_sample_metadata_only(spark):
 
 def test_resize_plan_bounds(spark):
     media = synthesize_media(spark, 40)
-    rows = resize_plan(media, max_side=256).collect()
+    rows = resize_plan(media).collect()
     for r in rows:
         assert max(r["target_width"], r["target_height"]) <= 256
         assert r["target_width"] > 0 and r["target_height"] > 0

@@ -125,23 +125,27 @@ def test_pair_expand_both_branches_match_duckdb(spark):
     import duckdb
 
     from nyc_landmarks_datalake_spark.operators.dedup import (
+        MAX_BAND_BUCKET,
         pair_expand_expr,
         pair_expand_sql,
     )
 
-    # cap=4 exercises the all-pairs branch on the 3-member bucket and
-    # the chain branch on the 6-member one, in both engines.
+    # a bucket of MAX_BAND_BUCKET members expands all pairs, one member
+    # more takes the chain branch, in both engines.
+    full = list(range(0, 2 * MAX_BAND_BUCKET, 2))
+    over = list(range(0, 2 * MAX_BAND_BUCKET + 2, 2))
     for ids, want in [
         ([3, 7, 9], {(3, 7), (3, 9), (7, 9)}),
-        ([1, 2, 4, 6, 8, 9], {(1, 2), (2, 4), (4, 6), (6, 8), (8, 9)}),
+        (full, {(a, b) for i, a in enumerate(full) for b in full[i + 1 :]}),
+        (over, set(zip(over, over[1:]))),
     ]:
         sdf = spark.createDataFrame([(ids,)], ["ids"]).selectExpr(
-            f"inline({pair_expand_expr('ids', cap=4)})"
+            f"inline({pair_expand_expr('ids')})"
         )
         got_spark = {(r.a, r.b) for r in sdf.collect()}
         odf = duckdb.sql(
             f"SELECT p.a AS a, p.b AS b FROM (SELECT unnest("
-            f"{pair_expand_sql('ids', cap=4)}) AS p "
+            f"{pair_expand_sql('ids')}) AS p "
             f"FROM (SELECT {ids} AS ids))"
         ).fetchall()
         assert got_spark == want

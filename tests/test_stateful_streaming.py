@@ -108,7 +108,7 @@ def test_stream_dedup_suppresses_across_batches(spark):
             (F.col("id") % 2).cast("string").alias("tag"),
         )
     )
-    out = replay_stream_dedup(spark, rows, ["k"], n_source_files=4)
+    out = replay_stream_dedup(spark, rows, ["k"])
     got = sorted(r.k for r in out.select("k").collect())
     assert got == list(range(8)), got
 

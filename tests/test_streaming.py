@@ -239,9 +239,7 @@ def test_late_data_dropped_across_checkpointed_restarts(spark, tmp_path):
     def run_once():
         q = (
             windowed_counts(
-                spark.readStream.schema(schema).parquet(str(src / "*")),
-                window_duration="15 minutes",
-                watermark="30 minutes",
+                spark.readStream.schema(schema).parquet(str(src / "*"))
             )
             .writeStream.format("parquet")
             .option("path", sink)
@@ -307,9 +305,7 @@ def test_replay_sliding_window_equals_oracle_checked_twin(spark, sf_small, tmp_p
     got = (
         _run_stream_to_memory(
             spark,
-            windowed_counts(
-                stream, window_duration="15 minutes", slide="5 minutes"
-            ),
+            windowed_counts(stream, slide="5 minutes"),
             "replay_slide",
             output_mode="complete",
         )
@@ -476,7 +472,7 @@ def test_stream_ingest_dedup_crosses_batch_boundaries(spark):
     docs = spark.createDataFrame(rows, "doc_id LONG, source STRING, text STRING")
     got = {
         r["doc_id"]: r["is_dup"]
-        for r in replay_stream_ingest_dedup(spark, docs, n_source_files=3).collect()
+        for r in replay_stream_ingest_dedup(spark, docs).collect()
     }
     assert len(got) == len(rows)
     assert got[0] is False  # pioneer keeps its bucket

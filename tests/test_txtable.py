@@ -211,6 +211,7 @@ def test_vacuum_skips_what_a_racing_vacuum_removed(tmp_path, monkeypatch):
     deleted = txtable.vacuum(path, keep_versions=1)
     monkeypatch.undo()
     assert os.path.join("data", "00000000-a", "part-0.parquet") in deleted
+    assert os.path.join("data", "00000001-b", "part-0.parquet") not in deleted
     assert txtable._versions(path) == [2]
     assert os.listdir(data_root) == []
 
@@ -435,7 +436,7 @@ def test_stream_mv_upsert_versions_and_idempotence(spark, sf_small, tmp_path):
         return {r.user_id: (r.n_events, r.sum_event_ids) for r in df.collect()}
 
     w = by_user(want)
-    assert by_user(replay_stream_mv_upsert(spark, ev, n_source_files=3)) == w
+    assert by_user(replay_stream_mv_upsert(spark, ev)) == w
 
     tbl = str(tmp_path / "mv")
     sink = mv_sink(spark, tbl)

@@ -816,7 +816,7 @@ def main() -> int:
                 "q_record_linkage",
                 "WITH census AS (SELECT g1, g2, g3, g4, n_pairs,"
                 " n_true_pairs, sample_pair FROM vt_lmerged),\n"
-                + linkage_score_sql(census="census", w="vt_lw"),
+                + linkage_score_sql(w="vt_lw"),
             )
         if "linkweights" in checks:
             check(
